@@ -1655,14 +1655,13 @@ def bpe_encode(
 
         for pdf in it:
             out = {
-                "doc_id": [],
+                "doc_id": pdf["doc_id"],
                 "n_ws_tokens": [],
                 "n_bpe_symbols": [],
                 "encoded_md5": [],
             }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                out["doc_id"].append(doc_id)
-                if text is None:
+            for text in pdf["text"]:
+                if not isinstance(text, str):  # NULL (None or NaN)
                     out["n_ws_tokens"].append(None)
                     out["n_bpe_symbols"].append(None)
                     out["encoded_md5"].append(None)
@@ -1691,8 +1690,8 @@ def bpe_encode(
 
     return docs.select("doc_id", "text").mapInPandas(
         enc,
-        "doc_id long, n_ws_tokens long, n_bpe_symbols long, "
-        "encoded_md5 string",
+        f"doc_id {docs.schema['doc_id'].dataType.simpleString()}, "
+        "n_ws_tokens long, n_bpe_symbols long, encoded_md5 string",
     )
 
 

@@ -72,19 +72,45 @@ def get_shuffle_partitions(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def host_cores() -> int:
+    """CPUs this process may run on (``nproc``), at least 1."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # not Linux
+        return os.cpu_count() or 1
+
+
+def host_driver_memory() -> str:
+    """Half the host's available memory as a driver heap, between 1 GB
+    and 16 GB, so a local driver never asks for more heap than the box
+    can back (the OS would kill it rather than Spark failing cleanly)."""
+    try:
+        with open("/proc/meminfo") as f:
+            avail_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration, ValueError):
+        avail_kb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 1024
+    return f"{max(1024, min(16384, avail_kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "omop_dump_to_parquet_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession with engine defaults."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Build (or reuse) a local SparkSession with engine defaults.
+
+    Cores and driver heap follow the host unless ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_DRIVER_MEM`` (or ``cores``) say otherwise."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     shuffle_partitions = shuffle_partitions or cores
+    memory = os.environ.get("SPARK_DRIVER_MEM") or host_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -2,13 +2,40 @@
 
 The reference's output product is a directory of sharded Parquet files
 (``dump_table.py:156-157,221-233``); this module is the read side of
-that product plus the driver fixture tables. Reads are plain
+that product plus the fixture tables. Reads are
 ``spark.read.parquet`` so Catalyst applies predicate pushdown, column
 pruning, and (on partitioned layouts) partition pruning — visible as
 ``PushedFilters``/``ReadSchema`` in ``.explain("formatted")``.
+
+Schema memo. A plain ``spark.read.parquet`` runs a Spark job
+(``SchemaMergeUtils.mergeSchemasInParallel``) to infer the schema from
+the footers, on every call, even when one session reads the same lake
+table again and again. ``table()`` and ``read_lake()`` therefore keep,
+per SparkSession (weakly keyed, so the memo goes when the session
+object does), one ``(confs, fingerprint, schema)`` entry per path. A
+remembered schema is reused, via ``spark.read.schema(schema)
+.parquet(path)``, which lists the files but runs no job, only when
+all of these hold:
+
+* the same session;
+* the same values of the confs that change what inference returns
+  (``_INFERENCE_CONFS`` plus ``read_lake``'s ``merge_schema``);
+* the same leaf-file listing: the sorted (path, length, modification
+  time) of the files the new DataFrame's own file index listed. The
+  check reads the listing the DataFrame will scan, so nothing can
+  change between the check and the read.
+
+Otherwise, or when the listing cannot be read (another plan shape, an
+internal API change), the read falls back to plain inference and
+never raises on the memo's account. Limit: an in-place rewrite that
+keeps a file's length and its millisecond modification time is not
+detected — the same assumption Spark's own file-status cache makes.
 """
 
 from __future__ import annotations
+
+import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,6 +59,73 @@ FIXTURE_TABLES = (
 #: so it gets no hard hint: `spark.sql.autoBroadcastJoinThreshold` /
 #: AQE decide per-run whether it still fits.
 BROADCAST_DIMS = frozenset({"region", "nation"})
+
+#: Session confs that change the schema Parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+#: session -> {paths: (confs, fingerprint, schema)}. An entry is one
+#: tuple, replaced whole, so a concurrent reader sees an old or a new
+#: entry, never a mix; a lost race costs one more inference.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+# One ``FileStatus.toString()`` per leaf file, e.g.
+# ``LocatedFileStatus{path=file:/a/x.parquet; isDirectory=false;
+# length=27156; ...; modification_time=1792208801303; ...}``.
+_FILE_STATUS = re.compile(
+    r"\w*FileStatus\{path=(.*); isDirectory=false; length=(\d+);"
+    r".*?; modification_time=(\d+);"
+)
+
+
+def _fingerprint(df: DataFrame) -> tuple | None:
+    """Sorted (path, length, mtime) of the leaf files ``df``'s own file
+    index listed, or None when the plan is not a plain file relation.
+
+    The listing crosses py4j as one string (a file path cannot hold a
+    NUL), so the cost does not grow with py4j round trips per file."""
+    try:
+        relation = df._jdf.queryExecution().analyzed().relation()
+        listing = relation.location().allFiles().mkString("\u0000")
+    except Exception:
+        return None
+    entries = []
+    for status in listing.split("\0") if listing else ():
+        m = _FILE_STATUS.match(status)
+        if m is None:
+            return None
+        entries.append((m.group(1), int(m.group(2)), int(m.group(3))))
+    return tuple(sorted(entries))
+
+
+def _read(
+    spark: SparkSession, paths: tuple[str, ...], merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)``, minus the schema-inference job
+    when this session already inferred the schema of the same listing
+    under the same confs (see the module docstring)."""
+    confs = (merge_schema, *(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    memo = _SCHEMAS.setdefault(spark, {})
+    entry = memo.get(paths)
+    if entry is not None and entry[0] == confs:
+        df = spark.read.schema(entry[2]).parquet(*paths)
+        if _fingerprint(df) == entry[1]:
+            return df
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    df = reader.parquet(*paths)
+    fingerprint = _fingerprint(df)
+    if fingerprint is not None:
+        memo[paths] = (confs, fingerprint, df.schema)
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -57,7 +151,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the streaming twin ``streaming/stream_queries._events_stream``),
     never at call sites — every operator assumes this contract.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read(spark, (f"{sf_dir}/{name}.parquet",))
     dtypes = dict(df.dtypes)
     if name == "events" and dtypes.get("ts") == "bigint":
         from pyspark.sql import functions as F
@@ -131,7 +225,4 @@ def read_lake(
     mid-migration, then compact (``sinks/compact.py``) back to one
     schema.
     """
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*paths)
+    return _read(spark, paths, merge_schema)

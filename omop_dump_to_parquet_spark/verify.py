@@ -122,18 +122,22 @@ def verify_parquet(
 ) -> VerifyReport:
     """Check count conservation + schema stability + shard sizing.
 
-    Two modes, same report shape:
+    Both modes check the same footer-level facts — per-file row
+    counts, the schema and shard sizing — and neither decodes column
+    data, so neither is a readability check: a file whose data pages
+    are corrupt but whose footer is intact passes either way (only a
+    query that reads the column, e.g. ``sum(length(c))``, fails).
 
     - ``fast=True`` — per-file counts from footer metadata only
       (``_footer_row_counts``), matching the reference's
-      metadata-level verification. No row data is read.
-    - ``fast=False`` (default) — per-file counts from a
-      ``groupBy(input_file_name())`` row-iteration pass, which doubles
-      as a READABILITY check: every row must actually decode. Zero-row
-      shards produce no rows for the groupBy to see, so the file list
-      is reconciled against a Hadoop-FileSystem recursive listing
-      (scheme-agnostic: file, hdfs, s3a, …) — they count as 0-row
-      files instead of silently vanishing from the report.
+      metadata-level verification.
+    - ``fast=False`` (default) — per-file counts from a Spark
+      ``groupBy(input_file_name())`` count; the count reads no column
+      pages. Zero-row shards produce no rows for the groupBy to see,
+      so the file list is reconciled against a Hadoop-FileSystem
+      recursive listing (scheme-agnostic: file, hdfs, s3a, …) — they
+      count as 0-row files instead of silently vanishing from the
+      report.
     """
     back = spark.read.parquet(path)
     if fast:

@@ -46,7 +46,7 @@ def main() -> None:
     from omop_dump_to_parquet_spark.operators import dedup as D
     from omop_dump_to_parquet_spark.session import get_spark
 
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     real = (

@@ -43,7 +43,7 @@ def main() -> None:
     from omop_dump_to_parquet_spark.sources.parquet import table
 
     load_catalog()
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     root = os.path.join(os.path.dirname(__file__), "..", ".scale")
 

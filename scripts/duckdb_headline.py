@@ -4,7 +4,8 @@
 
 Runs the ORACLE SQL of every headline catalog query (bench.py's
 HEADLINE list — the byte-identical answers the differential gate
-pins) on DuckDB with 32 threads against the same sf0.1 parquet, with
+pins) on DuckDB with one thread per host CPU (or SPARK_GRAFT_CPUS)
+against the same sf0.1 parquet, with
 the same median-of-REPS methodology as bench.py, so each round's
 BENCH artifact can be read against a SAME-DAY baseline number
 instead of a stale one (host speed drifts round to round; r7's box
@@ -28,12 +29,13 @@ import duckdb  # noqa: E402
 from _duck import create_views  # noqa: E402
 from bench import HEADLINE  # noqa: E402
 from omop_dump_to_parquet_spark import load_catalog  # noqa: E402
+from omop_dump_to_parquet_spark.session import host_cores  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    threads = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    threads = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     _, oracles = load_catalog()
 
     con = duckdb.connect()

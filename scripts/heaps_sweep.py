@@ -58,7 +58,7 @@ def main() -> None:
             )
 
     queries, _ = load_catalog()
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     ratio = Fraction("0.6")
 

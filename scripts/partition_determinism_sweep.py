@@ -40,7 +40,7 @@ def main() -> int:
     )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark()  # cores: env SPARK_GRAFT_CPUS or the fleet default
+    spark = get_spark()  # cores: env SPARK_GRAFT_CPUS or the host
     spark.sparkContext.setLogLevel("ERROR")
     queries, _ = load_catalog()
 

@@ -133,7 +133,7 @@ def main() -> None:
     from scale_rehearsal import _d13_candidate_counts
 
     queries, _ = load_catalog()
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     gc = spark.sparkContext._jvm.System.gc
     root = os.path.join(os.path.dirname(__file__), "..", ".scale")

@@ -70,7 +70,7 @@ def main() -> None:
     from omop_dump_to_parquet_spark.session import get_spark
     from omop_dump_to_parquet_spark.sources.parquet import table
 
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     gc = spark.sparkContext._jvm.System.gc
     root = os.path.join(os.path.dirname(__file__), "..", ".scale")

@@ -30,7 +30,7 @@ def main() -> int:
         "/root/testdata/sf0.01",
         "/root/testdata/sf0.1",
     ]
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     from _duck import create_views
 

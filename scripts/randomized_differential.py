@@ -39,7 +39,7 @@ def main() -> int:
     from omop_dump_to_parquet_spark.session import get_spark
 
     seeds = [int(s) for s in sys.argv[1:]] or [1, 2, 3]
-    # cores resolve inside get_spark (env SPARK_GRAFT_CPUS or 32) —
+    # cores resolve inside get_spark (env SPARK_GRAFT_CPUS or the host) —
     # one default for the whole fleet, not per-script copies (r10)
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")

@@ -200,7 +200,7 @@ def main() -> None:
 
     root = os.path.join(os.path.dirname(__file__), "..", ".scale")
     queries, _ = load_catalog()
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     results: dict[str, dict] = {op: {"scales": {}} for op in OPS}

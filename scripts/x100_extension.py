@@ -86,7 +86,7 @@ def main() -> None:
         sys.exit(f"unknown ops: {sorted(unknown)}")
 
     queries, _ = load_catalog()
-    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     root = os.path.join(os.path.dirname(__file__), "..", ".scale")
 

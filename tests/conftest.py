@@ -12,7 +12,7 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", cores=8, shuffle_partitions=8)
+    spark = get_spark("tests", shuffle_partitions=8)
     yield spark
 
 

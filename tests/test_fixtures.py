@@ -168,3 +168,101 @@ def test_unrolled_oracle_fanout_bounds():
             f"{sf}: max doc {max_tokens} tokens exceeds t19's "
             f"4095-token oracle unroll — raise the bound"
         )
+
+
+# -- schema memo: a repeated read of an unchanged path runs no job, and
+#    any change to the listing or to an inference conf re-infers.
+
+
+def _jobs(spark, fn, group):
+    """Run ``fn`` under a job group; return (its value, the jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        value = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return value, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_memo_repeat_read_runs_no_job(spark, sf_small):
+    first = table(spark, sf_small, "lineitem")
+    again, jobs = _jobs(spark, lambda: table(spark, sf_small, "lineitem"), "memo-repeat")
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def test_memo_first_read_is_plain_inference(spark, tmp_path):
+    from omop_dump_to_parquet_spark.sources.parquet import read_lake
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).selectExpr("id", "cast(id as string) AS s").write.parquet(path)
+    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-first")
+    assert jobs > 0
+    assert got.schema == spark.read.parquet(path).schema
+    assert read_lake(spark, path).schema == spark.read.parquet(path).schema
+
+
+def test_memo_spark_overwrite_and_append_reinfer(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(4).selectExpr("id AS a").write.parquet(path)
+    assert table(spark, str(tmp_path), "t").columns == ["a"]
+
+    spark.range(3).selectExpr("id AS a", "'x' AS b").write.mode("overwrite").parquet(path)
+    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-overwrite")
+    assert jobs > 0
+    assert got.columns == ["a", "b"] and got.count() == 3
+
+    spark.range(10, 12).selectExpr("id AS a", "'y' AS b").write.mode("append").parquet(path)
+    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-append")
+    assert jobs > 0
+    assert sorted(r.a for r in got.collect()) == [0, 1, 2, 10, 11]
+
+
+def test_memo_pyarrow_inplace_rewrite_reinfers(spark, tmp_path):
+    """A single-file table (the shape of the shipped fixture tables) rewritten
+    in place by pyarrow: new length and mtime, so the memo misses."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert table(spark, str(tmp_path), "t").collect() == [(1,), (2,)]
+
+    pq.write_table(pa.table({"a": ["p", "q", "r"], "b": [1.5, 2.5, 3.5]}), path)
+    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-rewrite")
+    assert jobs > 0
+    assert got.dtypes == [("a", "string"), ("b", "double")]
+    assert [r.a for r in got.collect()] == ["p", "q", "r"]
+
+
+def test_memo_nanos_as_long_toggle_reinfers(spark, sf_small, tmp_path):
+    """``spark.sql.legacy.parquet.nanosAsLong`` changes what inference
+    returns, so toggling it must re-infer: on the events fixture (same
+    schema either way, but a job runs), and on a TIMESTAMP(NANOS) copy
+    of it, which reads as canonical ``timestamp`` with the conf on and
+    must fail loudly with it off instead of reusing the bigint schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    events = pq.read_table(f"{sf_small}/events.parquet")
+    nanos = events.set_column(
+        events.schema.get_field_index("ts"), "ts", events["ts"].cast(pa.timestamp("ns", tz="UTC"))
+    )
+    pq.write_table(nanos, str(tmp_path / "events.parquet"))
+    assert dict(table(spark, sf_small, "events").dtypes)["ts"] == "timestamp"
+    assert dict(table(spark, str(tmp_path), "events").dtypes)["ts"] == "timestamp"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got, jobs = _jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos")
+        assert jobs > 0
+        assert got.schema == table(spark, sf_small, "events").schema
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL|Illegal Parquet type"):
+            table(spark, str(tmp_path), "events")
+    finally:
+        spark.conf.set(key, before)
+    _, jobs = _jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos-back")
+    assert jobs > 0

@@ -344,3 +344,21 @@ def test_t23_encode_matches_python_bpe_application(spark, sf_small):
         for r in T.t23_bpe_encode(spark, sf_small).collect()
     }
     assert got == want
+
+
+def test_bpe_encode_keeps_input_doc_id_type_and_nulls(spark, sf_small):
+    """The encode's doc_id column takes its type from the input (an
+    ``int`` key comes back ``int``, not widened to ``long``), NULL text
+    yields NULL metrics, and the metrics equal the ``long``-keyed
+    encode's."""
+    docs = table(spark, sf_small, "documents").select("doc_id", "text")
+    merges = T.learn_bpe_merges(docs)
+    narrow = docs.select(F.col("doc_id").cast("int").alias("doc_id"), "text").union(
+        spark.createDataFrame([(-1, None)], "doc_id int, text string")
+    )
+    got = T.bpe_encode(narrow, merges)
+    assert dict(got.dtypes)["doc_id"] == "int"
+    rows = {r["doc_id"]: tuple(r)[1:] for r in got.collect()}
+    assert rows.pop(-1) == (None, None, None)
+    want = {r["doc_id"]: tuple(r)[1:] for r in T.bpe_encode(docs, merges).collect()}
+    assert rows == want and len(rows) > 0
