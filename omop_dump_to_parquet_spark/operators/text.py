@@ -8,16 +8,22 @@ fingerprinting.
 (§2.2), mandated by the north-star brief for the LLM-data-pipeline
 surface.
 
-All of these are map-side-only column expressions (no shuffle except
+Most of these are map-side-only column expressions (no shuffle except
 the final optional aggregation), i.e. they scale linearly and stay
 inside whole-stage codegen — the correct shape for a 100 TB corpus
-profiling pass. No per-row Python UDFs anywhere; the one Arrow
-mapInPandas kernel is t25's HTML extraction (regex-per-document
-markup removal — the documented escape hatch, same doctrine as
-d15's MinHash kernel and the m-family decoders).
+profiling pass. No per-row Python UDFs anywhere; three operators run
+Arrow mapInPandas kernels (per-batch, not per-row): t18's
+``local_candidates`` (per-batch heavy-hitter counting), t23's
+``bpe_encode`` (the merge table applied as ``str.replace``) and t25's
+HTML extraction (regex-per-document markup removal) — the same
+doctrine as d15's MinHash kernel and the m-family decoders. t22/t23's
+merge learning runs on the driver over a bounded vocabulary collect.
 """
 
 from __future__ import annotations
+
+import collections
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -1345,16 +1351,16 @@ def t21_context_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (Sennrich et al., the byte-pair-encoding vocabulary learner every
 # LLM tokenizer starts from). Words start as character sequences;
 # each iteration counts adjacent pairs weighted by corpus word
-# frequency, picks argmax (count desc, then (left, right) lexical —
-# a total order both engines share on ASCII), and applies the merge
-# left-to-right non-overlapping to every word.
+# frequency, picks argmax (count desc, then (left, right) in
+# code-point order — the UTF-8 byte order DuckDB sorts strings in),
+# and applies the merge left-to-right non-overlapping to every word.
 #
-# The merge application trick that keeps BOTH engines lambda-free
-# and lockstep: a word's symbols are held as a double-space-joined
-# string with single-space sentinels ('  a  b  c  '), so merging
-# pair (l, r) is EXACTLY one literal replace(' l  r ', ' lr ') —
-# replace() scans left-to-right non-overlapping in Spark (Java
-# String semantics) and DuckDB alike, the double-space delimiter
+# The merge application trick that keeps the learner, the encode
+# kernel and the oracle lockstep: a word's symbols are held as a
+# double-space-joined string with single-space sentinels
+# ('  a  b  c  '), so merging pair (l, r) is EXACTLY one literal
+# replace(' l  r ', ' lr ') — replace() scans left-to-right
+# non-overlapping in Python and DuckDB alike, the double-space delimiter
 # makes matches symbol-boundary-safe ('ab c' can't match pair
 # (b, c)), and consecutive merge sites work because each match
 # consumes one space of each flanking double space, leaving the
@@ -1362,19 +1368,20 @@ def t21_context_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # overlap '  a  a  a  ' with (a, a) → '  aa  a  ' — verified
 # against a pure-Python BPE reference in tests).
 #
-# Scale: the corpus is scanned ONCE (the vocab groupBy — the only
-# corpus-sized shuffle, partial-agged map-side); every iteration
-# thereafter works on the Heaps-sublinear vocabulary (~|V| rows):
-# pair counting shuffles |V| rows, the argmax is ONE collected row
-# per iteration (bounded driver state, the s07 centroid pattern —
-# the winning pair is data the next iteration's plan literal needs,
-# so it must visit the driver), and the merge is a map-side string
-# replace. localCheckpoint per iteration truncates the iterative
-# lineage (the graph.py pattern). Reference has no text surface
-# (SURVEY §2.2); [EXT] per §2.3.
+# Scale: the corpus is scanned ONCE, on Spark — the vocabulary
+# groupBy, the only step that grows with the corpus (partial-agged
+# map-side). The Heaps-sublinear vocabulary (~|V| rows) is collected
+# once, bounded by BPE_MAX_VOCAB (a larger vocabulary fails loud,
+# the st11 bounded-collect pattern), and the merges are learned on
+# the driver as in Sennrich et al.'s learner: pair counts are built
+# once, and after each merge only the words containing the merged
+# pattern are recounted. Learning costs the vocabulary's jobs only,
+# whatever `iters` is. Reference has no text surface (SURVEY §2.2);
+# [EXT] per §2.3.
 # ---------------------------------------------------------------------------
 
 BPE_ITERS = 3
+BPE_MAX_VOCAB = 1_000_000  # distinct words collected to the driver
 
 
 def _t22_oracle(iters: int = BPE_ITERS) -> str:
@@ -1422,95 +1429,82 @@ sym0 AS (
 T22_ORACLE = _t22_oracle()
 
 
-def learn_bpe_merges(
-    docs: DataFrame, iters: int = BPE_ITERS
+def _symbols(word: str) -> str:
+    """``'  a  b  c  '``: one symbol per code point, double-space
+    delimited, byte-identical to the oracle's ``sym0`` rep."""
+    return "  " + "  ".join(word) + "  "
+
+
+def _learn_merges(
+    vocab: Iterable[tuple[str, int]], iters: int
 ) -> list[tuple[int, str, str, str, int]]:
-    """The t22 learning loop, factored so t23 (encode) applies the
-    SAME learned table. Returns [(iteration, left, right, merged,
-    pair_count)] — bounded driver state, one row per iteration."""
-    vocab = (
-        docs.select(F.explode(tokens("text")).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wc"))
-    )
-    # '  a  b  c  ' — double-space delimited, single-space sentinels,
-    # DOUBLE leading/trailing space: byte-identical to the oracle's
-    # sym0 ('  ' || array_to_string(...) || '  ').  A single leading
-    # space was equivalent (every ' l  r ' pattern has single-space
-    # flanks and outputs are trim/split-normalized) but the code,
-    # the comments, and the oracle disagreed on which form was the
-    # invariant — now they are the same string (r14 advice).
-    sym = vocab.select(
-        "wc",
-        F.concat(
-            # (?s): Java-regex '.' skips line terminators by default,
-            # so without DOTALL a newline inside a word would fuse to
-            # its neighbor while the oracle's string_split(word, '')
-            # still splits it — a silent cross-engine divergence
-            # (r13 review). Fixture text has no newlines; this makes
-            # the encoding total over ALL characters anyway.
-            F.lit("  "), F.regexp_replace("word", "(?s)(.)", "$1  ")
-        ).alias("rep"),
-    ).localCheckpoint(eager=False)
+    """Learn ``iters`` merges from ``(word, count)`` pairs on the driver.
+
+    Each word is held as its ``_symbols`` string and a merge is the
+    literal ``str.replace(' l  r ', ' lr ')`` the oracle and
+    ``bpe_encode`` apply. Pair counts are built once; after
+    each merge only the words containing the merged pattern are
+    recounted (Sennrich et al.'s incremental update). The argmax order
+    (count desc, left, right) compares ``str`` by code point, which is
+    the UTF-8 byte order Spark and DuckDB sort strings in."""
+    words = [(_symbols(w), wc) for w, wc in vocab]
+    counts: collections.Counter[tuple[str, str]] = collections.Counter()
+
+    def add(rep: str, wc: int) -> None:
+        syms = rep.strip(" ").split("  ")
+        for pair in zip(syms, syms[1:]):
+            counts[pair] += wc
+            if not counts[pair]:
+                del counts[pair]
+
+    for rep, wc in words:
+        add(rep, wc)
 
     merges: list[tuple[int, str, str, str, int]] = []
     for i in range(1, iters + 1):
-        lst = F.split(F.trim(F.col("rep")), "  ")
-        fanned = (
-            sym.select("wc", lst.alias("lst"))
-            .filter(F.size("lst") > 1)
-            .select(
-                "wc",
-                "lst",
-                # Spark's sequence() auto-steps DOWN when start>stop,
-                # so single-symbol words are filtered out above
-                # rather than guarded here.
-                F.explode(
-                    F.sequence(F.lit(1), F.size("lst") - 1)
-                ).alias("j"),
-            )
-        )
-        top = (
-            fanned.select(
-                F.element_at("lst", F.col("j")).alias("l"),
-                F.element_at("lst", F.col("j") + 1).alias("r"),
-                "wc",
-            )
-            .groupBy("l", "r")
-            .agg(F.sum("wc").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), "l", "r")
-            .limit(1)
-            .collect()  # bounded driver state: ONE row per iter
-        )
-        if not top:
+        if not counts:
             # every word fully merged before `iters` ran out — fail
-            # loud (the repo's contract) rather than IndexError: the
-            # oracle unrolls exactly `iters` layers, so returning
-            # fewer merges would silently diverge from it.
+            # loud: the oracle unrolls exactly `iters` layers, so
+            # returning fewer merges would silently diverge from it.
             raise ValueError(
                 f"BPE learning exhausted all adjacent pairs at "
                 f"iteration {i} of {iters}; lower `iters` to at most "
                 f"{i - 1} for this corpus"
             )
-        best = top[0]
-        merges.append(
-            (i, best["l"], best["r"], best["l"] + best["r"], int(best["cnt"]))
-        )
-        sym = sym.withColumn(
-            "rep",
-            F.replace(
-                F.col("rep"),
-                F.lit(f" {best['l']}  {best['r']} "),
-                F.lit(f" {best['l']}{best['r']} "),
-            ),
-        ).localCheckpoint(eager=False)  # truncate iterative lineage
-        # lazy (r17, guide §5): the NEXT iteration's pair-count collect
-        # is the action that materializes this checkpoint — one Spark
-        # job per iteration instead of two, and the LAST iteration's
-        # merge pass (whose symbol table no caller reads) is never
-        # computed at all. Identical merges: the collect still sees
-        # the fully-applied replace.
+        (lft, rgt), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((i, lft, rgt, lft + rgt, cnt))
+        pat, sub = f" {lft}  {rgt} ", f" {lft}{rgt} "
+        for k, (rep, wc) in enumerate(words):
+            if pat in rep:
+                add(rep, -wc)
+                rep = rep.replace(pat, sub)
+                add(rep, wc)
+                words[k] = (rep, wc)
     return merges
+
+
+def learn_bpe_merges(
+    docs: DataFrame, iters: int = BPE_ITERS
+) -> list[tuple[int, str, str, str, int]]:
+    """The t22 learner, factored so t23 (encode) applies the SAME
+    learned table. Counts the vocabulary on Spark, collects it once
+    (at most ``BPE_MAX_VOCAB`` words) and learns on the driver.
+    Returns [(iteration, left, right, merged, pair_count)]."""
+    vocab = (
+        docs.select(F.explode(tokens("text")).alias("word"))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("wc"))
+        .limit(BPE_MAX_VOCAB + 1)
+        .collect()
+    )
+    if len(vocab) > BPE_MAX_VOCAB:
+        raise ValueError(
+            f"BPE learning: the corpus vocabulary exceeds "
+            f"BPE_MAX_VOCAB={BPE_MAX_VOCAB} distinct words; the merge "
+            f"table is learned on the driver from the collected "
+            f"vocabulary"
+        )
+    return _learn_merges(vocab, iters)
 
 
 @query("t22_bpe_merges", oracle=T22_ORACLE)
@@ -1563,8 +1557,9 @@ def t22_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # '|', plus a free driver-side check that no learned merge symbol
 # contains '|'.
 #
-# Scale: learning = t22 (one corpus scan + Heaps-vocab iterations);
-# encoding = one additional map-side scan at scan parallelism. At
+# Scale: learning = t22 (one corpus scan + one bounded vocabulary
+# collect, merges learned on the driver); encoding = one additional
+# map-side scan at scan parallelism. At
 # 100 TB the encode pass is embarrassingly parallel and
 # sink-streamable; the Arrow kernel amortizes its per-task setup over
 # every batch in the partition (guide §4.5).
@@ -1621,13 +1616,12 @@ def bpe_encode(
     kernel — per doc, the same boundary rendering as the former
     expression chain (' a  b  |  c  d  ', built by joining each word's
     codepoints with '  ': Python str iteration walks codepoints
-    exactly like the learner's '(?s)(.)' regex and the oracle's
+    exactly like the learner's ``_symbols`` and the oracle's
     string_split), then each merge as ``str.replace`` (left-to-right
     non-overlapping — Java ``replace`` semantics), then
     ``hashlib.md5`` over UTF-8 (≡ Spark ``md5``). BYTE-IDENTICAL to
-    the r16 expression chain — asserted row-for-row at sf0.1 before
-    the switch (scripts/r17_ab_bpe.py: 'encode equality: True', 5000
-    rows) and still md5-pinned by the t23 oracle. Same-session paired
+    the r16 expression chain (tests/test_bpe.py compares the two row
+    for row) and md5-pinned by the t23 oracle. Same-session paired
     A/B: 0.736s → 0.639s median (the per-char regexp_replace capture
     group was the expression chain's cost). NULL text yields NULL
     metrics exactly like the former chain (size(NULL)/md5(NULL)).

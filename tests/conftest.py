@@ -10,6 +10,17 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 
+def count_jobs(spark, fn, group):
+    """Run ``fn`` under a job group; return (its value, the jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        value = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return value, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     spark = get_spark("tests", shuffle_partitions=8)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import SF_MEDIUM, SF_SMALL
+from conftest import SF_MEDIUM, SF_SMALL, count_jobs
 from omop_dump_to_parquet_spark.sources.parquet import FIXTURE_TABLES, table
 
 # Canonical post-``table()`` dtypes. A set means "any of these is
@@ -174,20 +174,9 @@ def test_unrolled_oracle_fanout_bounds():
 #    any change to the listing or to an inference conf re-infers.
 
 
-def _jobs(spark, fn, group):
-    """Run ``fn`` under a job group; return (its value, the jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        value = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return value, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_memo_repeat_read_runs_no_job(spark, sf_small):
     first = table(spark, sf_small, "lineitem")
-    again, jobs = _jobs(spark, lambda: table(spark, sf_small, "lineitem"), "memo-repeat")
+    again, jobs = count_jobs(spark, lambda: table(spark, sf_small, "lineitem"), "memo-repeat")
     assert jobs == 0
     assert again.schema == first.schema
     assert again.count() == first.count()
@@ -198,7 +187,7 @@ def test_memo_first_read_is_plain_inference(spark, tmp_path):
 
     path = str(tmp_path / "t.parquet")
     spark.range(5).selectExpr("id", "cast(id as string) AS s").write.parquet(path)
-    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-first")
+    got, jobs = count_jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-first")
     assert jobs > 0
     assert got.schema == spark.read.parquet(path).schema
     assert read_lake(spark, path).schema == spark.read.parquet(path).schema
@@ -210,12 +199,12 @@ def test_memo_spark_overwrite_and_append_reinfer(spark, tmp_path):
     assert table(spark, str(tmp_path), "t").columns == ["a"]
 
     spark.range(3).selectExpr("id AS a", "'x' AS b").write.mode("overwrite").parquet(path)
-    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-overwrite")
+    got, jobs = count_jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-overwrite")
     assert jobs > 0
     assert got.columns == ["a", "b"] and got.count() == 3
 
     spark.range(10, 12).selectExpr("id AS a", "'y' AS b").write.mode("append").parquet(path)
-    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-append")
+    got, jobs = count_jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-append")
     assert jobs > 0
     assert sorted(r.a for r in got.collect()) == [0, 1, 2, 10, 11]
 
@@ -231,7 +220,7 @@ def test_memo_pyarrow_inplace_rewrite_reinfers(spark, tmp_path):
     assert table(spark, str(tmp_path), "t").collect() == [(1,), (2,)]
 
     pq.write_table(pa.table({"a": ["p", "q", "r"], "b": [1.5, 2.5, 3.5]}), path)
-    got, jobs = _jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-rewrite")
+    got, jobs = count_jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-rewrite")
     assert jobs > 0
     assert got.dtypes == [("a", "string"), ("b", "double")]
     assert [r.a for r in got.collect()] == ["p", "q", "r"]
@@ -257,12 +246,12 @@ def test_memo_nanos_as_long_toggle_reinfers(spark, sf_small, tmp_path):
     before = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        got, jobs = _jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos")
+        got, jobs = count_jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos")
         assert jobs > 0
         assert got.schema == table(spark, sf_small, "events").schema
         with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL|Illegal Parquet type"):
             table(spark, str(tmp_path), "events")
     finally:
         spark.conf.set(key, before)
-    _, jobs = _jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos-back")
+    _, jobs = count_jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos-back")
     assert jobs > 0

@@ -1,73 +1,8 @@
-"""Regression tests for the r13 self-review findings (applied the
-same round): DOTALL in the BPE symbol encoding, fail-loud BPE merge
-exhaustion, and the shared mixture-target arithmetic.
+"""Regression test for the r13 self-review finding on the shared
+mixture-target arithmetic. (Its BPE findings live in test_bpe.py.)
 """
 
 from __future__ import annotations
-
-import pytest
-
-from omop_dump_to_parquet_spark.operators import text as T
-
-
-def _py_bpe(words: dict[str, int], iters: int):
-    """Reference Sennrich learner (same as test_text_pipeline's)."""
-    import collections
-
-    syms = {w: list(w) for w in words}
-    merges = []
-    for it in range(1, iters + 1):
-        pc = collections.Counter()
-        for w, c in words.items():
-            s = syms[w]
-            for a, b in zip(s, s[1:]):
-                pc[(a, b)] += c
-        (lft, rgt), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((it, lft, rgt, lft + rgt, cnt))
-        for w, s in syms.items():
-            out, k = [], 0
-            while k < len(s):
-                if k + 1 < len(s) and s[k] == lft and s[k + 1] == rgt:
-                    out.append(lft + rgt)
-                    k += 2
-                else:
-                    out.append(s[k])
-                    k += 1
-            syms[w] = out
-    return merges
-
-
-def test_learn_bpe_handles_newline_characters(spark):
-    """Java-regex '.' skips line terminators without (?s): a newline
-    inside a word must still become its own symbol, matching the
-    per-character reference (the r13 review found the encoding was
-    not total over \\n/\\r before the DOTALL fix)."""
-    docs = spark.createDataFrame(
-        [(0, "ab\ncd ab\ncd xy"), (1, "ab\ncd xy xy")],
-        "doc_id long, text string",
-    )
-    got = T.learn_bpe_merges(docs, iters=2)
-    want = _py_bpe(
-        {"ab\ncd": 3, "xy": 3}, iters=2
-    )
-    assert got == want
-    # the winning first pair must involve the newline-adjacent chars
-    # only if the reference says so — and with \n as a real symbol,
-    # ('a','b') / ('b','\n') / ('\n','c') / ('c','d') each count 3
-    assert got[0][1:3] == want[0][1:3]
-
-
-def test_learn_bpe_merge_exhaustion_fails_loud(spark):
-    """When every word is fully merged before `iters` runs out the
-    learner must raise ValueError (the oracle unrolls exactly `iters`
-    layers — silently returning fewer merges would diverge), not die
-    with IndexError on an empty collect."""
-    docs = spark.createDataFrame(
-        [(0, "ab ab a b")], "doc_id long, text string"
-    )
-    # iter 1 merges (a,b)->ab everywhere; iter 2 has no pairs left
-    with pytest.raises(ValueError, match="exhausted all adjacent"):
-        T.learn_bpe_merges(docs, iters=2)
 
 
 def test_mixture_quotas_are_capped_targets():

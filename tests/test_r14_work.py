@@ -1,9 +1,6 @@
-"""Round-14 worklist tests (r13 verdict #4 and #6):
+"""Round-14 worklist tests (r13 verdict #4; the BPE depth-8
+property net lives in test_bpe.py):
 
-* the BPE property net at merge depth ≈8 — randomized corpora
-  (newline-bearing, repeated-char, multi-space) checked THREE ways:
-  learned merges vs the pure-Python Sennrich reference, and both
-  learn and encode vs freshly-unrolled 8-layer DuckDB oracles;
 * p08 / mixture_threshold_draw skew posture: the dominant source
   really is ≥90% of rows, the boundary bucket that reaches the only
   window sort really is sliver-sized, and both quota branches
@@ -14,138 +11,7 @@ from __future__ import annotations
 
 import collections
 
-import duckdb
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-from omop_dump_to_parquet_spark.operators import text as T
-
-
-# --------------------------------------------------------------------------
-# pure-Python Sennrich reference with explicit exhaustion signalling
-# (same algorithm as test_r13_review._py_bpe, returning the iteration
-# at which the pair table went empty instead of crashing on min([]))
-# --------------------------------------------------------------------------
-
-
-def _py_bpe(words: dict[str, int], iters: int):
-    syms = {w: list(w) for w in words}
-    merges = []
-    for it in range(1, iters + 1):
-        pc = collections.Counter()
-        for w, c in words.items():
-            s = syms[w]
-            for a, b in zip(s, s[1:]):
-                pc[(a, b)] += c
-        if not pc:
-            return merges, it  # exhausted AT iteration `it`
-        (lft, rgt), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((it, lft, rgt, lft + rgt, cnt))
-        for w, s in syms.items():
-            out, k = [], 0
-            while k < len(s):
-                if k + 1 < len(s) and s[k] == lft and s[k + 1] == rgt:
-                    out.append(lft + rgt)
-                    k += 2
-                else:
-                    out.append(s[k])
-                    k += 1
-            syms[w] = out
-    return merges, None
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
-def _check_corpus(spark, texts: list[str], iters: int) -> None:
-    """Triple certification of learn+encode at `iters` merge depth."""
-    words = collections.Counter(
-        w for t in texts for w in t.split(" ")
-    )
-    want_merges, exhausted_at = _py_bpe(dict(words), iters)
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    if exhausted_at is not None:
-        with pytest.raises(ValueError, match="exhausted all adjacent"):
-            T.learn_bpe_merges(docs, iters=iters)
-        return
-    got_merges = T.learn_bpe_merges(docs, iters=iters)
-    assert got_merges == want_merges, (texts, got_merges, want_merges)
-
-    pdf = pd.DataFrame(
-        {"doc_id": range(len(texts)), "text": texts}
-    )
-    con = duckdb.connect()
-    con.register("documents", pdf)
-    try:
-        # learn vs a freshly-unrolled `iters`-layer oracle
-        got22 = _normalize(
-            pd.DataFrame(
-                got_merges,
-                columns=[
-                    "iteration", "left_sym", "right_sym",
-                    "merged_sym", "pair_count",
-                ],
-            )
-        )
-        want22 = _normalize(con.sql(T._t22_oracle(iters)).df())
-        pd.testing.assert_frame_equal(got22, want22, check_dtype=False)
-        # encode vs the matching-depth oracle
-        got23 = _normalize(T.bpe_encode(docs, got_merges).toPandas())
-        want23 = _normalize(con.sql(T._t23_oracle(iters)).df())
-        pd.testing.assert_frame_equal(got23, want23, check_dtype=False)
-    finally:
-        con.close()
-
-
-def test_bpe_depth8_on_adversarial_fixed_corpora(spark):
-    """The shapes the r13 fixture never exercised, at depth 8: merged
-    symbols that themselves contain earlier merges (repeated chars),
-    newline symbols, and empty tokens from space runs."""
-    for texts in [
-        # repeated-char words: (a,a)->aa then (aa,a)/(aa,aa) chains —
-        # the replace()-lockstep's non-overlapping scan must match the
-        # reference's left-to-right per-word walk at every depth
-        ["aaaa aaaa aaa aa baab baab", "aaab aaab aaab abba"],
-        # newline-bearing words under DOTALL at depth
-        ["ab\ncd ab\ncd ab\ncd xy\nxy", "ab\ncd xy\nxy zw zw zw"],
-        # empty tokens everywhere: interior runs + leading/trailing
-        ["low  low   lower lower ", " newest  newest newest low"],
-        # astral-plane (surrogate-pair) characters: the encode's
-        # char split must walk codepoints like the learner's '(?s)(.)'
-        # and the oracle's string_split — a UTF-16-unit walk halves 𝕏
-        ["x\U0001d54fy x\U0001d54fy x\U0001d54fy zz\U0001d54f zz\U0001d54f",
-         "abcd abcd abcd x\U0001d54fy efgh efgh"],
-    ]:
-        _check_corpus(spark, texts, iters=8)
-
-
-def test_bpe_depth8_randomized_property(spark):
-    """Hypothesis over random corpora from a small alphabet (incl.
-    newline and space) — merge depth 8, triple-certified."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    @settings(
-        max_examples=6,
-        deadline=None,
-        suppress_health_check=[HealthCheck.too_slow],
-    )
-    @given(
-        st.lists(
-            st.text(alphabet="ab c\n", min_size=0, max_size=40),
-            min_size=1,
-            max_size=3,
-        )
-    )
-    def inner(texts: list[str]) -> None:
-        _check_corpus(spark, texts, iters=8)
-
-    inner()
 
 
 # --------------------------------------------------------------------------

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from omop_dump_to_parquet_spark.operators import dedup as D
 from omop_dump_to_parquet_spark.operators import graph as G
-from omop_dump_to_parquet_spark.operators import text as T
 from omop_dump_to_parquet_spark.sources.parquet import table
 
 
@@ -94,63 +93,6 @@ def test_ranked_tokens_window_nw_matches_sizes_join(spark, sf_small):
         ).collect()
     }
     assert new == old and len(new) > 0
-
-
-def test_bpe_encode_kernel_matches_expression_chain(spark, sf_small):
-    """The r17 mapInPandas encode must be byte-identical to the r16
-    whole-stage-codegen expression chain, row for row (same boundary
-    rendering, same replace semantics, same md5)."""
-    docs = table(spark, sf_small, "documents")
-    merges = T.learn_bpe_merges(docs)
-
-    rep = F.concat(
-        F.lit(" "),
-        F.array_join(
-            F.transform(
-                T.tokens("text"),
-                lambda w: F.rtrim(F.regexp_replace(w, "(?s)(.)", "$1  ")),
-            ),
-            "  |  ",
-        ),
-        F.lit("  "),
-    )
-    for _, lft, rgt, merged, _cnt in merges:
-        rep = F.replace(rep, F.lit(f" {lft}  {rgt} "), F.lit(f" {merged} "))
-    n_ws = F.size(T.tokens("text"))
-    reference = docs.select(
-        "doc_id",
-        n_ws.cast("long").alias("n_ws_tokens"),
-        (F.size(F.split(F.trim(rep), "  ")) - (n_ws - F.lit(1)))
-        .cast("long")
-        .alias("n_bpe_symbols"),
-        F.md5(F.trim(rep)).alias("encoded_md5"),
-    )
-    got = sorted(map(tuple, T.bpe_encode(docs, merges).collect()))
-    want = sorted(map(tuple, reference.collect()))
-    assert got == want and len(got) > 0
-
-
-def test_bpe_encode_kernel_null_text_yields_null_metrics(spark):
-    """NULL text must yield NULL metrics (the expression chain's
-    size(NULL)/md5(NULL) behavior), not a crash."""
-    docs = spark.createDataFrame(
-        [(1, "a b a"), (2, None)], "doc_id long, text string"
-    )
-    rows = {r["doc_id"]: r for r in T.bpe_encode(docs, []).collect()}
-    assert rows[2]["n_ws_tokens"] is None
-    assert rows[2]["n_bpe_symbols"] is None
-    assert rows[2]["encoded_md5"] is None
-    assert rows[1]["encoded_md5"] is not None
-
-
-def test_bpe_encode_kernel_sentinel_guard_raises(spark):
-    """The row-level '|' sentinel guard must still fail loud from
-    inside the kernel."""
-    docs = spark.createDataFrame(
-        [(1, "a | b")], "doc_id long, text string"
-    )
-    with pytest.raises(Exception, match="sentinel"):
-        T.bpe_encode(docs, []).collect()
 
 
 def test_minhash_and_simhash_kernels_drop_null_text(spark):
