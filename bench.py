@@ -222,15 +222,8 @@ def main() -> None:
     from omop_dump_to_parquet_spark.plans import dump_table as run_dump
     from omop_dump_to_parquet_spark.sources.parquet import table
 
-    # Measured split at sf0.1 warm (r6): write ≈1.0s, full readback
-    # verify ≈0.43s, fast (footer-only) verify ≈0.16s. The full
-    # readback is a deliberate stronger-than-reference check (the
-    # reference verifies count+schema from metadata only,
-    # dump_table.py:235-248; fast=True is that parity mode) — every
-    # row must decode, which is the check an ingest pipeline actually
-    # wants before deleting the source. r5's 2.09s was missing the
-    # gc_quiesce the named queries get, so the dump reps inherited
-    # headline-query garbage.
+    # Each rep is one Spark job (the write) plus a footer-only verify
+    # on the driver; gc_quiesce keeps headline-query garbage out of it.
     runs = []
     for _ in range(reps):
         out_dir = tempfile.mkdtemp(prefix="bench_dump_")

@@ -105,8 +105,9 @@ def main(argv: list[str] | None = None) -> int:
     r = result.report
     print(
         f"rows={result.rows_written} files={r.n_files} "
-        f"max_file_rows={r.max_file_rows} "
-        f"count_ok={r.count_matches} schema_ok={r.schema_matches}"
+        f"max_file_rows={r.max_file_rows} bytes={r.total_bytes} "
+        f"count_ok={r.count_matches} schema_ok={r.schema_matches} "
+        f"write_s={result.write_s:.2f} verify_s={result.verify_s:.2f}"
     )
     return 0 if result.ok else 1
 

@@ -6,7 +6,8 @@ Reference ``main`` (``dump_table.py:175-252``):
 
 Spark pipeline:
   read (any source) → optional limit → normalize casts (pinned
-  schema) → sized parquet write → verify (count + schema + sizing).
+  schema) → sized parquet write (the one Spark job) → verify count,
+  schema and sizing from the footers, on the driver.
 
 The buffer/flush machinery (``dump_table.py:207-233``) has no
 counterpart: tasks stream rows straight into the Parquet writer with
@@ -18,6 +19,7 @@ scan of the source.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -32,6 +34,8 @@ from ..verify import VerifyReport, verify_parquet
 class DumpResult:
     rows_written: int
     report: VerifyReport
+    write_s: float
+    verify_s: float
 
     @property
     def ok(self) -> bool:
@@ -61,6 +65,7 @@ def dump_table(
 
     obs = Observation("dump_rows")
     observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    t0 = time.perf_counter()
     write_parquet(
         observed,
         output_path,
@@ -68,7 +73,7 @@ def dump_table(
         num_files=num_files,
     )
     rows_written = int(obs.get["n"])
-
+    t1 = time.perf_counter()
     report = verify_parquet(
         spark,
         output_path,
@@ -76,4 +81,9 @@ def dump_table(
         expected_schema=df.schema,
         max_records_per_file=max_records_per_file,
     )
-    return DumpResult(rows_written=rows_written, report=report)
+    return DumpResult(
+        rows_written=rows_written,
+        report=report,
+        write_s=t1 - t0,
+        verify_s=time.perf_counter() - t1,
+    )

@@ -3,6 +3,8 @@ count conservation, schema stability, shard sizing."""
 
 from __future__ import annotations
 
+from conftest import count_jobs
+
 from omop_dump_to_parquet_spark.plans import dump_table
 from omop_dump_to_parquet_spark.sources.parquet import table
 from omop_dump_to_parquet_spark.verify import count_conserved
@@ -126,33 +128,153 @@ def test_verify_handles_uri_escapable_paths_and_zero_row_shards(
     assert 0 in rep2.per_file_rows.values()
 
 
-def test_verify_fast_footer_mode_matches_full_scan(spark, sf_small, tmp_path):
-    """fast=True reads ONLY parquet footers (the reference's
-    metadata-level verification, dump_table.py:244-246) and must agree
-    file-by-file with the row-iterating mode, including 0-row shards
-    and URI-escapable paths."""
-    from omop_dump_to_parquet_spark.sources.parquet import table
-    from omop_dump_to_parquet_spark.verify import verify_parquet
+def test_verify_footer_counts_match_groupby_scan(spark, sf_small, tmp_path):
+    """Footer row counts agree file by file with a
+    ``groupBy(input_file_name())`` count over the data, under a path
+    with a space; a 0-row shard, which the scan cannot see, is reported
+    with 0 rows."""
+    from pyspark.sql import functions as F
+
+    from omop_dump_to_parquet_spark.verify import _norm_uri, verify_parquet
 
     out = str(tmp_path / "with space" / "orders")
     df = table(spark, sf_small, "orders")
     df.repartition(3).write.parquet(out)
     df.limit(0).coalesce(1).write.mode("append").parquet(out)
 
-    full = verify_parquet(
+    rep = verify_parquet(
         spark, out, expected_count=df.count(), max_records_per_file=10**9
     )
-    fast = verify_parquet(
-        spark,
-        out,
-        expected_count=df.count(),
-        max_records_per_file=10**9,
-        fast=True,
+    scanned = {
+        _norm_uri(r["file"]): r["rows"]
+        for r in spark.read.parquet(out)
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(F.count(F.lit(1)).alias("rows"))
+        .collect()
+    }
+    assert len(scanned) == 3 and all(" " in f for f in scanned), scanned
+    assert rep.n_files == 4
+    assert rep.per_file_rows == {**dict.fromkeys(rep.per_file_rows, 0), **scanned}
+    assert list(rep.per_file_rows.values()).count(0) == 1
+    assert rep.count_matches and rep.sizing_ok
+    assert rep.max_file_rows == max(scanned.values())
+
+
+def test_dump_verifies_nested_non_nullable_columns(spark, tmp_path):
+    """Array, struct and map columns whose nested fields are
+    non-nullable land without loss; the read-back is all-nullable, so
+    the schema check must ignore nullability at every nesting level."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(50).select(
+        "id",
+        F.array(F.lit(1), F.col("id")).alias("arr"),
+        F.struct(F.lit(1).alias("x"), F.col("id").alias("y")).alias("st"),
+        F.create_map(F.lit("k"), F.col("id")).alias("mp"),
     )
-    assert fast.count_matches and full.count_matches
-    assert fast.per_file_rows == full.per_file_rows
-    assert fast.n_files == full.n_files == 4
-    assert fast.sizing_ok and fast.max_file_rows == full.max_file_rows
+    assert df.schema["arr"].dataType.containsNull is False
+    assert df.schema["st"].dataType["x"].nullable is False
+    assert df.schema["mp"].dataType.valueContainsNull is False
+    out = str(tmp_path / "nested")
+    result = dump_table(spark, df, out)
+    assert result.report.schema_matches, result.report
+    assert result.ok and result.rows_written == 50
+    back = {r["id"]: r for r in spark.read.parquet(out).collect()}
+    assert back == {r["id"]: r for r in df.collect()}
+
+
+def test_verify_catches_per_shard_schema_drift(spark, tmp_path):
+    """Two shards disagreeing on ``b``'s type fail the schema check
+    whichever holds the expected type and whichever is listed first."""
+    import glob
+    import shutil
+
+    from omop_dump_to_parquet_spark.verify import verify_parquet
+
+    as_string = spark.createDataFrame([(1, "x")], "a long, b string")
+    as_int = spark.createDataFrame([(2, 7)], "a long, b int")
+    for i, shards in enumerate(((as_string, as_int), (as_int, as_string))):
+        out = tmp_path / f"drift{i}"
+        out.mkdir()
+        for j, shard in enumerate(shards):
+            stage = str(tmp_path / "stage")
+            shard.coalesce(1).write.mode("overwrite").parquet(stage)
+            (landed,) = glob.glob(f"{stage}/*.parquet")
+            shutil.move(landed, out / f"part-{j}.parquet")
+        for expected in (as_string.schema, as_int.schema):
+            rep = verify_parquet(
+                spark, str(out), expected_count=2, expected_schema=expected
+            )
+            assert rep.count_matches and rep.n_files == 2
+            assert rep.schema_matches is False and not rep.ok
+
+
+def test_verify_degenerate_paths(spark, tmp_path):
+    """A directory with no visible Parquet file matches no schema; a
+    missing path raises Hadoop's FileNotFoundException."""
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    from omop_dump_to_parquet_spark.verify import verify_parquet
+
+    schema = spark.createDataFrame([(1,)], "a long").schema
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    rep = verify_parquet(
+        spark, str(empty), expected_count=0, expected_schema=schema
+    )
+    assert rep.n_files == 0 and rep.total_bytes == 0 and rep.count_matches
+    assert rep.schema_matches is False and not rep.ok
+
+    with pytest.raises(Py4JJavaError) as err:
+        verify_parquet(
+            spark, str(tmp_path / "missing"), expected_count=0,
+            expected_schema=schema,
+        )
+    assert (
+        err.value.java_exception.getClass().getName()
+        == "java.io.FileNotFoundException"
+    )
+
+
+def test_dump_of_empty_source(spark, sf_small, tmp_path):
+    src = table(spark, sf_small, "nation").filter("n_nationkey < 0")
+    result = dump_table(spark, src, str(tmp_path / "empty_dump"))
+    assert result.rows_written == 0 and result.report.total_rows == 0
+    assert result.report.schema_matches and result.ok
+
+
+def test_dump_job_budget_and_stage_report(spark, sf_small, tmp_path):
+    """With no repartition, the write is the dump's only Spark job:
+    verification reads footers on the driver. The report sizes the
+    landed files."""
+    import glob
+    import os
+
+    from omop_dump_to_parquet_spark.verify import verify_parquet
+
+    src = table(spark, sf_small, "orders")
+    n = src.count()
+    out = str(tmp_path / "orders_dump")
+    result, jobs = count_jobs(
+        spark, lambda: dump_table(spark, src, out, max_records_per_file=500),
+        "dump_budget",
+    )
+    assert jobs == 1 and result.ok
+    assert result.write_s > 0 and result.verify_s > 0
+    landed = glob.glob(f"{out}/*.parquet")
+    assert result.report.n_files == len(landed) >= 3
+    assert result.report.total_bytes == sum(map(os.path.getsize, landed))
+
+    rep, jobs = count_jobs(
+        spark,
+        lambda: verify_parquet(
+            spark, out, expected_count=n, expected_schema=src.schema
+        ),
+        "verify_budget",
+    )
+    assert jobs == 0 and rep.ok
 
 
 def test_orc_roundtrip_sized_shards(spark, sf_small, tmp_path):
@@ -436,8 +558,5 @@ def test_verify_ignores_hidden_staging_files(spark, sf_small, tmp_path):
     spark.read.parquet(f"{root}/{leaf}").write.parquet(
         f"{root}/.{leaf}.__compact_old"
     )
-    for fast in (False, True):
-        rep = verify_parquet(
-            spark, root, expected_count=docs.count(), fast=fast
-        )
-        assert rep.count_matches, (fast, rep.total_rows)
+    rep = verify_parquet(spark, root, expected_count=docs.count())
+    assert rep.count_matches, rep.total_rows
