@@ -29,4 +29,12 @@ Arrow-batched ``mapInPandas``.
 
 __version__ = "0.1.0"
 
-from .registry import ORACLES, QUERIES, load_catalog  # noqa: F401
+import sys
+
+from pyspark import cloudpickle
+
+# Python workers may not have this package on sys.path, so kernels and
+# the module-level helpers they call are pickled by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+from .registry import ORACLES, QUERIES, load_catalog  # noqa: E402, F401

@@ -1081,7 +1081,7 @@ def simhash_chunks(docs: DataFrame) -> DataFrame:
     n_chunks, n_bits = SIMHASH_CHUNKS, SIMHASH_CHUNK_BITS
 
     def chunk_batches(it):
-        # closure-local (no module refs — verify-skill contract)
+        # worker-side imports; the package itself ships by value
         import hashlib
 
         import numpy as np
@@ -2334,12 +2334,10 @@ def _minhash_kernel(
     ``d04_candidate_pairs``). One definition so the hash family
     cannot drift between the two operators.
 
-    The factory args become closure cells, NOT module globals: the
-    kernel below is pickled BY VALUE to Python workers that do not
-    have this package on sys.path (verify-skill contract) — a
-    module-global reference would make cloudpickle serialize it by
-    reference and fail with ModuleNotFoundError at the first Arrow
-    batch."""
+    The factory args become closure cells. The package is pickled by
+    value, so workers without it on sys.path still run the kernel; a
+    module-level helper the kernel calls must stay pure (no Spark,
+    DataFrame or JVM handles)."""
 
     def minhash_key_batches(it):
         """mapInPandas kernel: (doc_id, text) batches → (doc_id,

@@ -1245,8 +1245,7 @@ def dsir_scores(train: DataFrame, ev: DataFrame) -> DataFrame:
     inputs is where the no-UDF property is worth its constant."""
 
     def bucket_batches(it):
-        # closure-local (workers unpickle without the package on
-        # sys.path); 256 == P11_DIM, pinned by test_p11_dim_matches_t24
+        # 256 == P11_DIM, pinned by test_p11_dim_matches_t24
         import hashlib
 
         md5 = hashlib.md5

@@ -2007,8 +2007,9 @@ def q50_exists_notexists_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bigram expansion with pure SQL list functions, so the Python
 # generator's semantics are differentially checked, not assumed.
 #
-# The UDTF class is CLOSURE-LOCAL: workers unpickle it without the
-# repo on their path (the driver runs queries from an arbitrary cwd).
+# The UDTF class ships to workers by value with the package, so they
+# unpickle it without the repo on their path (the driver runs queries
+# from an arbitrary cwd).
 # ---------------------------------------------------------------------------
 
 Q51_PREFIX_LEN = 16

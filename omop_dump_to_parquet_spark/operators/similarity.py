@@ -1472,7 +1472,7 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{N_QUERIES}..{N_QUERIES + PQ_K - 1}; fixture has {got}"
         )
     sub = EMB_DIM // PQ_M
-    lattice, ugrid = PQ_LATTICE, PQ_UGRID
+    lattice = PQ_LATTICE
     Utr = _pq_unit_lattice_np(
         np.array([r["emb"] for r in seed_rows], dtype=np.float64)
     ).reshape(-1, PQ_M, sub)
@@ -1496,15 +1496,7 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             out = {"query_id": [], "neighbor_id": [], "approx_dist": []}
             if len(pdf):
                 X = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
-                # unit-lattice quantization — inlined (kernels must be
-                # closure-local), byte-for-byte _pq_unit_lattice_np
-                sc_ = _np.abs(X).max(axis=1)
-                sc_[sc_ == 0] = 1.0
-                q8 = _np.rint(X / sc_[:, None] * 127)
-                n8 = _np.sqrt((q8 * q8).sum(axis=1))
-                n8[n8 == 0] = 1.0
-                U = _np.rint(q8 / n8[:, None] * ugrid).astype(_np.int64)
-                U = U.reshape(len(X), m, s)
+                U = _pq_unit_lattice_np(X).reshape(len(X), m, s)
                 # encode: nearest codeword per subspace, exact int64
                 d = ((U[:, :, None, :] * lattice - cbk[None]) ** 2).sum(-1)
                 codes = d.argmin(-1)  # (n, M); first min ⇒ smallest k

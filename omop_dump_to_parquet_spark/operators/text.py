@@ -1641,8 +1641,8 @@ def bpe_encode(
     ]
 
     def enc(it):
-        # closure-local kernel (no module refs — workers may not have
-        # the package on sys.path, the verify-skill contract)
+        # worker-side imports; the package ships by value, so a helper
+        # called here must be pure (no Spark, DataFrame or JVM handles)
         import hashlib
 
         import pandas as pd
@@ -1981,9 +1981,8 @@ def html_wrap(docs: DataFrame) -> DataFrame:
 def html_extract(pages: DataFrame) -> DataFrame:
     """The t25 production kernel (see block comment): boilerplate-
     aware text extraction from (doc_id, html) — returns (doc_id,
-    n_blocks, n_dropped, extracted). Closure-local (no module
-    globals) so workers unpickle it without this package on their
-    path."""
+    n_blocks, n_dropped, extracted). The package ships by value, so
+    workers unpickle it without this package on their path."""
 
     def run(batches):
         import re

@@ -78,177 +78,12 @@ _WINDOW = 50
 # very front regardless of history — changed code must be re-verified
 # before anything else is rotated in.  Clear entries once the next
 # CORRECTNESS artifact shows a clean post-rewrite run.
-# Queries rewritten since their last driver check, pinned to the front
-# of the checked window until the driver re-validates them. s06/d05
-# were pinned in r3 and came back clean (CORRECTNESS_r03) — cleared.
-# r4 pins (d03/d04/d06/q03, post verify_jaccard_pairs + q03 rewrites)
-# all came back green in CORRECTNESS_r04 — cleared.  All eight r5
-# pins (w13, s09, d04, d05, s02, s05, s06, w02) came back green in
-# CORRECTNESS_r05 — cleared.
-# r6 pins, rewritten/upgraded this round:
-#   d04 — cap-aware first-band emission (capped buckets nulled out of
-#         the carried key array); value-identical at fixture scale
-#         (cap never fires) but the plan changed.
-#   w18 — version off-by-one fix (island_id, not island_id+1); plan
-#         AND oracle changed in lockstep.
-#   m07 — explicit floor before integer cast (value-identical on
-#         non-negative n_bytes).
-#   m05 — upgraded rows-only → full differential oracle (integer-
-#         exact aHash threshold, DuckDB recomputes the hash).
-#   s07 — MLlib KMeans → deterministic DataFrame Lloyd with an
-#         unrolled-iteration oracle (upgraded rows-only → full).
-#   m03/m04 — upgraded rows-only → full oracle (the deterministic
-#         fake decode is byte slicing DuckDB reproduces; registered
-#         queries project frames to lossless hex, the m01 convention).
-#   d03/d06/d07/g01 — prefix_filter_candidates gained the PPJoin
-#         position filter (r6): identical output (completeness proven
-#         by property test + full local differential sweep), 6× fewer
-#         raw candidates — rewritten plan, driver must re-check.
-#         (g02/w22/m08/t19/s12 are new ops: zero driver checks sorts
-#         them into the window automatically, no pin needed.)
-#   d10/s04 — scale knobs extracted as parameters (semdedup_prune /
-#         cosine_pair_gemm); registered plans value-identical, pinned
-#         for a fresh driver check anyway.
-# All 13 r6 pins came back green in CORRECTNESS_r06 — cleared, so the
-# four r3-vintage streaming ids (st01-st04, the oldest driver
-# evidence in the catalog) finally rotate into the r7 window.
-# All three r7 pins (d04/s09/q27) came back green in CORRECTNESS_r08
-# — cleared.
-# Both r9 pins (q41/q44, upgraded to the exact+within-ε differential
-# contract) came back green in CORRECTNESS_r09 — cleared, freeing two
-# window slots so the r6-vintage ids (d03/s04/s07/w08/w09) rotate into
-# the r10 window.
-# All nine r10 pins (d13 PassJoin rewrite, t13 DECIMAL-mean upgrade,
-# and the seven review-wave kernel rewrites) came back green in
-# CORRECTNESS_r10 — cleared, freeing the window so the six r7-vintage
-# ids (d01, d02, q03, st03, st04, st05 — the oldest driver evidence
-# in the fleet) rotate into the r11 window.
-# r11 pins — the two ids the r10 advisor wave touched AGAIN this
-# round (plan/oracle changed ⇒ fresh driver evidence, same rule as
-# every prior round):
-#   q31 — oracle's map_total now floors l_quantity before the int
-#         cast, matching the Spark side and the other five columns
-#         (the r10 floor-on-both-sides fix had missed this one
-#         column; value-identical on integral-quantity fixtures).
-#   q48 — both global aggregates and the sketch estimate coalesce to
-#         0 so an EMPTY events input yields the oracle's 0/TRUE
-#         instead of NULL/NULL (value-identical on non-empty input).
-#   s04/d08/d10 — GEMM kernels now fold only the ±1e-9 round-half
-#         boundary sliver instead of every prefilter survivor (the
-#         r11 rehearsal caught the r10 rewrite's pair-sized refine:
-#         d10 3.2s→30.8s at ×10); value-identical, brute-force
-#         equivalence-tested, but the kernel changed.
-#   s13 — localCheckpoint barrier between the K greedy steps stops
-#         CollapseProject's ~5×-per-step expression blowup (flat
-#         ~14s Catalyst analysis+codegen → ~2s); values untouched
-#         (each step is an argmax under a total order), but the
-#         physical plan changed.
-# All six r11 pins (q31, q48, s04, d08, d10, s13) came back green in
-# CORRECTNESS_r11 — cleared, so the ten r8-vintage ids (d04, q13, q20,
-# q23, q25, q28, q29, q30, q33, w02 — the oldest driver evidence in
-# the fleet) rotate into the r12 window.
-# r12 pin (CLEARED in r13): s07's update step was rewritten as a
-#   posexplode → single decimal agg over (cluster, pos) — replacing
-#   the 64-column wide decimal agg whose Catalyst compile constant
-#   dominated sf0.001 — and |c|² is now folded driver-side into the
-#   broadcast centroid row instead of re-folded per assign row.
-#   Values untouched (same arithmetic, same tie-breaks); the physical
-#   plan changed, hence the pin.  (The original r12 comment here
-#   misattributed the change to an s13-style localCheckpoint barrier —
-#   that variant was tried and REJECTED, see SCALING.md; corrected per
-#   the r12 advisor so the audit provenance matches the real diff.)
-#   CORRECTNESS_r12 shows s07_kmeans_clusters green (rows+schema+hash,
-#   err null) — the documented clearing condition — so the pin is
-#   cleared and the seven r9-vintage ids (q22, q24, q26, q32, w01,
-#   w05, w07) rotate into the r13 window.
-# r13 pins — the seven NEW catalog ids this round (d14/p06/p07
-# mid-round; t21/t22, then st10 and t23, added late), pinned for a
-# driver full-oracle pass in their first window:
-#   d14 — SemDeDup over k-means bucketing (the production-path
-#         certification the r12 verdict asked for, #3);
-#   p06/p07 — temperature-weighted source mixture sampling and
-#         epoch upsampling (the data-mixing stage of a training
-#         pipeline, previously absent from the catalog);
-#   t21/t22 — overlapping context-window chunking (the RAG /
-#         long-doc splitter, the complement of t10's packing) and
-#         BPE merge-table learning (tokenizer training — iterative
-#         argmax-pair merges, validated against a pure-Python
-#         Sennrich reference in tests).
-#   st10 — t21's chunker run unchanged under readStream (oracle is
-#         T21's SQL verbatim — the batch≡stream certificate for the
-#         continuously-ingested-corpus path);
-#   t23 — BPE encode with t22's learned table (learn→apply pair;
-#         doc-level '|'-boundary replace encode, map-side).
-# r13 review-fix pins (end-of-round self-review; all value-identical
-# in the local 157/157 sweep after the change):
-#   t22/t23 — the BPE symbol encoding gained (?s) DOTALL (a newline
-#         inside a word is now its own symbol, matching the oracle's
-#         string_split; fixture text has no newlines so values are
-#         untouched, but the regexp literal in the plan changed);
-#   d10 — oracle SQL re-composed through the shared
-#         _semdedup_hits_sql helper (d14 uses the same block);
-#         registered Spark plan untouched, pinned anyway per the r6
-#         value-identical-refactor precedent.
-# All eight r13 pins came back green in CORRECTNESS_r13 (rows+schema+
-# hash, err null) — the documented clearing condition — so they are
-# cleared, rotating the eight r10-vintage ids (d03, st01, st02, w04,
-# w06, w08, w09, w10 — the oldest driver evidence, 3 rounds) into the
-# r14 window.
-# r14 pins — plan-changed or new this round:
-#   t23 — the boundary encoding is rebuilt from the shared token
-#         array (r14 advice, medium: the translate(' '→'|') form
-#         diverged from the oracle on consecutive spaces) and gained
-#         the '|'-sentinel raise_error guard; values identical on the
-#         single-spaced fixture, but the map-side plan changed.
-#   t22 — the symbol string now carries the DOUBLE leading space,
-#         byte-identical to the oracle's sym0 (r14 advice, low);
-#         equivalent arithmetic, changed plan literal.
-#   p08 — NEW: the skew-robust two-pass threshold draw
-#         (mixture_threshold_draw) certified as a catalog id over a
-#         90%-dominant derived source — the p06 window path's 100 TB
-#         posture, previously only unit/equivalence-tested.
-#   p09 — NEW: benchmark decontamination (eval-set n-gram collision
-#         flagging — the pre-training hygiene stage the catalog
-#         lacked; derived eval split, broadcast eval grams, one
-#         corpus shuffle).
-#   st11 — NEW: p09 with the corpus under readStream and the
-#         benchmark static (stateless per-row re-expression via a
-#         one-row broadcast gram array + array_intersect; P09's
-#         oracle verbatim — the decontamination batch≡stream
-#         certificate, st10's pattern).
-# All five r14 pins (t22, t23, p08, p09, st11) came back green in
-# CORRECTNESS_r14 (rows+schema+hash, err null) — the documented
-# clearing condition — so they are cleared, rotating the twelve
-# r11-vintage ids (q01, q02, q03, q07, q08, q10, q11, q12, q31, s04,
-# m01, m02 — the oldest driver evidence, 3 rounds) into the r15
-# window.
-# r15 pins — new ids this round (zero driver checks would sort them
-# into the window anyway; pinned for audit symmetry with prior rounds):
-#   p10 — NEW: p09's decontamination plan at production gram width 8
-#         over a SPARSE (<10%) contamination regime (the r14 scale
-#         rehearsal proved width-3 on Zipf text is degenerate: 99.8%
-#         of docs flagged; GPT-3/PaLM use 8-13-grams precisely so
-#         collisions are meaningful).
-#   t24 — NEW: model-based quality-classifier inference (the
-#         DCLM/FineWeb-Edu stage): hashed n-gram features → broadcast
-#         integer weight vector → logit, pure map-side, full oracle.
-#   p09 — body factored into the shared width-parameterized
-#         `decontaminate` kernel (p10 reuses it); expression-identical
-#         plan and untouched oracle, pinned anyway per the r6/r13
-#         value-identical-refactor precedent.
-#   st12 — NEW: t24's classifier inference run UNCHANGED under
-#         readStream with the model static (one-row broadcast weight
-#         vector; stateless map-side, append mode, T24's oracle
-#         verbatim — the batch≡stream certificate for the
-#         model-based quality-filter stage, st10's pattern).
 _FORCE_IN_WINDOW: tuple[str, ...] = (
-    # r16: the seven r15 pins (p10, t24, p09, st12, d15, st13, p11)
-    # cleared — every one green in CORRECTNESS_r15, the documented
-    # clearing condition — rotating the oldest-evidence ids into the
-    # r16 window. New-in-r16 ids pinned until the next CORRECTNESS
-    # artifact shows them green.
-    "d16_exact_substring_rewrite",
-    "t25_html_extract",
+    "m03_frame_sample",
+    "m09_bmp_decode_resize",
+    "m10_wav_decode_features",
+    "m11_png_decode_roundtrip",
+    "s09_ann_pq",
 )
 
 

@@ -1048,9 +1048,8 @@ def st11_stream_decontamination(
         bc = s.sparkContext.broadcast(eval_grams)
 
         def score(it):
-            # closure-local kernel (no module refs — workers may not
-            # have the package on sys.path): per doc, the distinct
-            # w-gram STRING set intersected with the eval frozenset.
+            # per doc, the distinct w-gram STRING set intersected with
+            # the eval frozenset.
             import numpy as np
             import pandas as pd
 

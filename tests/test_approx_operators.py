@@ -5,6 +5,7 @@ the properties the DuckDB differential gate can't see.
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from omop_dump_to_parquet_spark import load_catalog
@@ -205,8 +206,8 @@ def test_frame_sample_stride_and_sizes(spark, sf_small):
     assert all(r["frame_idx"] % M.FRAME_STRIDE == 0 for r in rows)
     assert all(1 <= r["frame_bytes"] <= M.FRAME_BYTES for r in rows)
     assert all(len(r["frame"]) == r["frame_bytes"] for r in rows)
-    # the kernel inlines _fake_demux (closure-locality); pin the two
-    # implementations against each other so they can't drift
+    # the kernel chunks each payload with _fake_demux; pin its output
+    # to the driver-side call
     doc = table(spark, sf_small, "documents").orderBy("doc_id").first()
     expect = M._fake_demux(doc["text"].encode())[:: M.FRAME_STRIDE]
     got = sorted(
@@ -954,10 +955,10 @@ def test_m09_real_decode_matches_driver_reference(spark, sf_small):
 
 
 def test_wav_decode_kernel_matches_reference(spark):
-    """m10 (r9): the WAV kernel's inlined decoder must match
-    decode_wav_pcm16 on genuine RIFF payloads — including one with
-    an extra odd-sized chunk (the pad-rule trap) — and malformed
-    payloads must raise the contractual ValueError."""
+    """m10 (r9): the WAV kernel's output must match decode_wav_pcm16
+    on genuine RIFF payloads — including one with an extra odd-sized
+    chunk (the pad-rule trap) — and malformed payloads must raise the
+    contractual ValueError, in the kernel too."""
     import struct
 
     import pytest
@@ -1008,6 +1009,12 @@ def test_wav_decode_kernel_matches_reference(spark):
         decode_wav_pcm16(bytes(stereo))
     with pytest.raises(ValueError, match="missing fmt /data chunk"):
         decode_wav_pcm16(payload[:12])
+    # the kernel raises the decoder's detailed message, not a shorter one
+    bad = spark.createDataFrame(
+        [(8, bytes(stereo))], "doc_id long, payload binary"
+    )
+    with pytest.raises(PythonException, match="ch=2"):
+        wav_frame_features(bad).collect()
 
 
 def test_pq_adc_recall_floor_vs_exact(spark, sf_small):
@@ -1072,8 +1079,8 @@ def test_bmp_decode_kernel_matches_reference(spark):
     Arrow kernel. Build genuine BMP payloads — odd width so stride
     padding matters, one bottom-up and one top-down — and pin the
     kernel's output to the driver-side reference decoder + the m04
-    nearest-neighbor arithmetic (also guards the inlined kernel copy
-    against drifting from decode_bmp_gray)."""
+    nearest-neighbor arithmetic; a malformed payload makes the kernel
+    raise decode_bmp_gray's detailed error."""
     import struct
 
     from omop_dump_to_parquet_spark.operators.multimodal import (
@@ -1083,11 +1090,11 @@ def test_bmp_decode_kernel_matches_reference(spark):
         resize_bmp,
     )
 
-    def encode_bmp_gray(w, h, pixels, top_down=False):
+    def encode_bmp_gray(w, h, pixels, top_down=False, clr_used=256):
         stride = (w + 3) & ~3
-        # 8bpp BMPs carry a 256-entry palette; grayscale identity
+        # 8bpp BMPs carry a palette of clr_used entries; grayscale identity
         palette = b"".join(
-            bytes((i, i, i, 0)) for i in range(256)
+            bytes((i, i, i, 0)) for i in range(clr_used)
         )
         data_off = 14 + 40 + len(palette)
         rows = []
@@ -1102,7 +1109,7 @@ def test_bmp_decode_kernel_matches_reference(spark):
             + struct.pack(
                 "<IiiHHIIiiII",
                 40, w, (-h if top_down else h), 1, 8, 0,
-                len(px), 2835, 2835, 256, 0,
+                len(px), 2835, 2835, clr_used, 0,
             )
         )
         return header + palette + px
@@ -1154,6 +1161,13 @@ def test_bmp_decode_kernel_matches_reference(spark):
     # mid-palette)
     with _pytest.raises(ValueError, match="palette"):
         decode_bmp_gray(bytes(encode_bmp_gray(w, h, pixels)[: 14 + 40 + 64]))
+    # out-of-palette index: the kernel raises the decoder's detailed error
+    bad = spark.createDataFrame(
+        [(2, encode_bmp_gray(w, h, pixels, clr_used=16))],
+        "doc_id long, payload binary",
+    )
+    with _pytest.raises(PythonException, match="clr_used=16"):
+        resize_bmp(bad).collect()
 
 
 def test_lsh_capped_path_matches_surviving_band_model(spark):
@@ -1286,11 +1300,11 @@ def test_lsh_auto_mode_picks_winner_and_matches_both(spark):
 
 
 def test_png_decode_kernel_matches_reference(spark):
-    """m11 (r9): the PNG kernel's inlined decoder must match
-    decode_png_gray on genuine payloads whose bytes carry every
-    decoder obligation — all five scanline filters, a split IDAT
-    stream, an ancillary tEXt chunk, real CRC-32s — and malformed
-    payloads must raise the contractual ValueError."""
+    """m11 (r9): the PNG kernel's output must match decode_png_gray on
+    genuine payloads whose bytes carry every decoder obligation — all
+    five scanline filters, a split IDAT stream, an ancillary tEXt
+    chunk, real CRC-32s — and malformed payloads must raise the
+    contractual ValueError, in the kernel too."""
     import zlib
 
     import pytest
@@ -1338,6 +1352,11 @@ def test_png_decode_kernel_matches_reference(spark):
     ).to_bytes(4, "big")
     with pytest.raises(ValueError, match="unsupported PNG variant"):
         decode_png_gray(bytes(rgb))
+    bad = spark.createDataFrame(
+        [(10, bytes(rgb))], "doc_id long, payload binary"
+    )
+    with pytest.raises(PythonException, match="color=2"):
+        png_pixels(bad).collect()
     # IHDR-first rule: signature followed by a valid non-IHDR chunk
     text_chunk = (
         len(b"k\x00v").to_bytes(4, "big")
