@@ -16,7 +16,8 @@ Oracle→Parquet ETL, ``dump_table.py``), generalized into:
   MinHash-LSH, SimHash, n-gram Jaccard, embedding-cosine), similarity
   search, text analysis, multimodal columns.
 - ``functions/`` — reusable column-expression helpers (vector math,
-  text metrics, deterministic-rounding utilities).
+  text metrics, deterministic-rounding utilities) and the row-kernel
+  wrapper ``map_rows``.
 - ``streaming/`` — Structured Streaming variants (windowed and
   session aggregation).
 
@@ -24,7 +25,9 @@ Everything is DataFrame/Catalyst-first: logical plans are declared with
 the public PySpark API and physical strategy is left to Catalyst +
 Tungsten + AQE. Python UDFs appear only where built-ins genuinely
 cannot express the semantics (multimodal decode), and then only as
-Arrow-batched ``mapInPandas``.
+Arrow-batched ``mapInPandas``: per-row kernels through
+``functions.kernels.map_rows``, batch-vectorized NumPy kernels
+directly.
 """
 
 __version__ = "0.1.0"

@@ -1,5 +1,6 @@
 """Multimodal-column operators: opaque ``binary`` payloads with typed
-metadata, decode/feature-extraction via Arrow-batched ``mapInPandas``.
+metadata, decode/feature-extraction via per-payload row kernels that
+``functions.kernels.map_rows`` runs over Arrow batches.
 
 Design (the 100 TB pattern): media lives in Parquet as
 ``binary`` + a metadata struct; all *decisions* (filtering, routing,
@@ -10,9 +11,11 @@ container, so the decode kernel is stubbed behind an import-try with a
 deterministic byte-level fake — the Spark-side plumbing (schema,
 batching, partitioning, UDF signature) is real and tested.
 
-M01 exercises binary construction + metadata extraction with pure
-built-ins; M02 exercises the Arrow decode path end-to-end with a
-deterministic kernel that DuckDB can mirror (so even the Python stage
+Each kernel is a pure module-level function of one payload (plus its
+metadata columns) returning its output rows; the Arrow batch protocol
+lives once, in ``map_rows``. M01 exercises binary construction +
+metadata extraction with pure built-ins; M02 exercises the Arrow
+decode path end-to-end with a deterministic kernel that DuckDB can mirror (so even the Python stage
 gets a differential oracle); M03/M04 are the honest stubs (byte
 slicing in codec position, differentially checked); M09 (8bpp BMP)
 and M10 (RIFF/WAV PCM) are REAL container decoders — pure-bytes
@@ -23,9 +26,14 @@ gating the full encode∘decode∘feature roundtrip.
 
 from __future__ import annotations
 
+import struct
+import zlib
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.kernels import map_rows
 from ..registry import query
 from ..sources.parquet import table
 
@@ -57,17 +65,14 @@ def m01_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M02 — decode / feature-extract via mapInPandas (Arrow batches).
+# M02 — decode / feature-extract via a row kernel (Arrow batches).
 # The "decode" kernel is a deterministic byte-level feature extractor
 # (payload length, first/last byte, checksum of a 16-byte prefix) so
-# the full Python path — Arrow serialization, batch iteration, typed
-# output schema — is differentially tested against a SQL oracle.
-# A real image decoder drops into `_decode_batch` unchanged.
+# the full Python path — Arrow serialization, ``map_rows``' batch
+# iteration, typed output schema — is differentially tested against a
+# SQL oracle.
+# A real image decoder drops into `_payload_features` unchanged.
 # ---------------------------------------------------------------------------
-
-M02_SCHEMA = (
-    "doc_id long, f_len double, f_first double, f_last double, f_sum16 double"
-)
 
 M02_ORACLE = """
 SELECT doc_id,
@@ -84,30 +89,28 @@ def decode_features(df: DataFrame) -> DataFrame:
     """``(doc_id, payload binary)`` → typed feature columns, Arrow-batched.
 
     The package is pickled by value, so Python workers need neither
-    this package on their path nor an addPyFile step. Swap the body
-    for a real codec (``PIL.Image.open(io.BytesIO(b))`` …) when
-    available.
+    this package on their path nor an addPyFile step. Swap
+    ``_payload_features`` for a real codec
+    (``PIL.Image.open(io.BytesIO(b))`` …) when available.
     """
+    return map_rows(
+        df.select("doc_id", "payload"),
+        _payload_features,
+        "f_len double, f_first double, f_last double, f_sum16 double",
+    )
 
-    def run(batches):
-        import pandas as _pd  # worker-side import; stdlib-safe
 
-        for pdf in batches:
-            payloads = pdf["payload"]
-            # empty payloads → 0.0, matching DuckDB's ascii('') = 0 so
-            # the differential oracle agrees on degenerate documents
-            out = _pd.DataFrame(
-                {
-                    "f_len": payloads.map(len).astype("float64"),
-                    "f_first": payloads.map(lambda b: float(b[0]) if b else 0.0),
-                    "f_last": payloads.map(lambda b: float(b[-1]) if b else 0.0),
-                    "f_sum16": payloads.map(lambda b: float(sum(b[:16]) % 256)),
-                }
-            )
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64"))
-            yield out
-
-    return df.mapInPandas(run, schema=M02_SCHEMA)
+def _payload_features(b: bytes) -> list[tuple]:
+    # empty payloads → 0.0, matching DuckDB's ascii('') = 0 so the
+    # differential oracle agrees on degenerate documents
+    return [
+        (
+            float(len(b)),
+            float(b[0]) if b else 0.0,
+            float(b[-1]) if b else 0.0,
+            float(sum(b[:16]) % 256),
+        )
+    ]
 
 
 @query("m02_decode_features", oracle=M02_ORACLE)
@@ -180,25 +183,19 @@ def frame_sample(payloads: DataFrame) -> DataFrame:
     """``(doc_id, payload binary)`` → every ``FRAME_STRIDE``-th
     ``FRAME_BYTES``-sized frame as ``(doc_id, frame_idx, frame_bytes,
     frame binary)`` — the binary API real consumers use."""
-
-    def run(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = _fake_demux(bytes(payload))
-                for idx in range(0, len(frames), FRAME_STRIDE):
-                    rows.append(
-                        (int(doc_id), idx, len(frames[idx]), frames[idx])
-                    )
-            yield _pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_bytes", "frame"]
-            )
-
-    return payloads.mapInPandas(
-        run, schema="doc_id long, frame_idx int, frame_bytes int, frame binary"
+    return map_rows(
+        payloads.select("doc_id", "payload"),
+        _sampled_frames,
+        "frame_idx int, frame_bytes int, frame binary",
     )
+
+
+def _sampled_frames(payload: bytes) -> list[tuple]:
+    frames = _fake_demux(bytes(payload))
+    return [
+        (idx, len(frames[idx]), frames[idx])
+        for idx in range(0, len(frames), FRAME_STRIDE)
+    ]
 
 
 @query("m03_frame_sample", oracle=M03_ORACLE)
@@ -255,35 +252,30 @@ WHERE length(text) // 32 >= 1
 """
 
 
+RESIZED_SCHEMA = "src_w int, src_h int, out_w int, out_h int, resized binary"
+
+
+def _resized(sw: int, sh: int, px: bytes) -> tuple:
+    """Nearest-neighbor resample of a row-major ``sw×sh`` plane to
+    ``TARGET_W×TARGET_H``, as one ``RESIZED_SCHEMA`` row."""
+    tw, th = TARGET_W, TARGET_H
+    out = bytes(
+        px[(y * sh // th) * sw + (x * sw // tw)]
+        for y in range(th)
+        for x in range(tw)
+    )
+    return sw, sh, tw, th, out
+
+
 def resize_frames(frames: DataFrame) -> DataFrame:
     """``(doc_id, payload, src_w, src_h)`` → nearest-neighbor-resized
     ``TARGET_W×TARGET_H`` frames with typed dims — binary API."""
-    tw, th = TARGET_W, TARGET_H
-
-    def run(batches):
-        import pandas as _pd
-
-        rows = []
-        for pdf in batches:
-            for doc_id, payload, sw, sh in zip(
-                pdf["doc_id"], pdf["payload"], pdf["src_w"], pdf["src_h"]
-            ):
-                b = bytes(payload)[: sw * sh]  # the "decoded" frame
-                out = bytes(
-                    b[(y * sh // th) * sw + (x * sw // tw)]
-                    for y in range(th)
-                    for x in range(tw)
-                )
-                rows.append((int(doc_id), int(sw), int(sh), tw, th, out))
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "src_w", "src_h", "out_w", "out_h", "resized"],
-            )
-            rows = []
-
-    return frames.mapInPandas(
-        run,
-        schema="doc_id long, src_w int, src_h int, out_w int, out_h int, resized binary",
+    return map_rows(
+        frames.select("doc_id", "payload", "src_w", "src_h"),
+        lambda payload, sw, sh: [
+            _resized(sw, sh, bytes(payload)[: sw * sh])  # the "decoded" frame
+        ],
+        RESIZED_SCHEMA,
     )
 
 
@@ -321,8 +313,6 @@ def decode_bmp_gray(b: bytes) -> tuple[int, int, bytes]:
     BI_RGB. A PIL/cv2 decode drops in unchanged for compressed
     formats. The ``resize_bmp`` kernel calls it per payload.
     """
-    import struct
-
     if b[:2] != b"BM":
         raise ValueError("not a BMP payload (missing BM magic)")
     if len(b) < 54:  # 14-byte file header + full BITMAPINFOHEADER
@@ -389,34 +379,10 @@ def resize_bmp(payloads: DataFrame) -> DataFrame:
     plan shape (binary in/out through Arrow, dims as typed columns)
     with a REAL decode in the kernel: header parse, stride strip,
     bottom-up row flip."""
-    tw, th = TARGET_W, TARGET_H
-
-    def run(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                sw, sh, px = decode_bmp_gray(bytes(payload))
-                out = bytes(
-                    px[(y * sh // th) * sw + (x * sw // tw)]
-                    for y in range(th)
-                    for x in range(tw)
-                )
-                rows.append((int(doc_id), sw, sh, tw, th, out))
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "src_w", "src_h", "out_w", "out_h", "resized",
-                ],
-            )
-
-    return payloads.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, src_w int, src_h int, out_w int, out_h int, "
-            "resized binary"
-        ),
+    return map_rows(
+        payloads.select("doc_id", "payload"),
+        lambda payload: [_resized(*decode_bmp_gray(bytes(payload)))],
+        RESIZED_SCHEMA,
     )
 
 
@@ -470,41 +436,32 @@ def encode_bmp_frames(docs: DataFrame) -> DataFrame:
     convention). Fixture-encoder role: rows are written BOTTOM-UP
     with stride padding and a 256-entry identity palette, so the
     downstream decoder must do real work to get the pixels back."""
+    return map_rows(docs.select("doc_id", "payload"), _bmp_file, "payload binary")
+
+
+_BMP_PALETTE = b"".join(bytes((i, i, i, 0)) for i in range(256))
+
+
+def _bmp_file(payload: bytes) -> list[tuple]:
+    b = bytes(payload)
     w = BMP_W
-
-    def run(batches):
-        import struct as _struct
-
-        import pandas as _pd
-
-        palette = b"".join(bytes((i, i, i, 0)) for i in range(256))
-        data_off = 14 + 40 + len(palette)
-        stride = (w + 3) & ~3
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                h = len(b) // w
-                if h < 1:
-                    continue
-                px = b"".join(
-                    b[y * w : (y + 1) * w] + b"\x00" * (stride - w)
-                    for y in range(h - 1, -1, -1)  # bottom-up file order
-                )
-                hdr = (
-                    b"BM"
-                    + _struct.pack(
-                        "<IHHI", data_off + len(px), 0, 0, data_off
-                    )
-                    + _struct.pack(
-                        "<IiiHHIIiiII",
-                        40, w, h, 1, 8, 0, len(px), 2835, 2835, 256, 0,
-                    )
-                )
-                rows.append((int(doc_id), hdr + palette + px))
-            yield _pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.mapInPandas(run, schema="doc_id long, payload binary")
+    h = len(b) // w
+    if h < 1:
+        return []
+    data_off = 14 + 40 + len(_BMP_PALETTE)
+    stride = (w + 3) & ~3
+    px = b"".join(
+        b[y * w : (y + 1) * w] + b"\x00" * (stride - w)
+        for y in range(h - 1, -1, -1)  # bottom-up file order
+    )
+    hdr = (
+        b"BM"
+        + struct.pack("<IHHI", data_off + len(px), 0, 0, data_off)
+        + struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 8, 0, len(px), 2835, 2835, 256, 0
+        )
+    )
+    return [(hdr + _BMP_PALETTE + px,)]
 
 
 @query("m09_bmp_decode_resize", oracle=M09_ORACLE)
@@ -528,8 +485,8 @@ def m09_bmp_decode_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # M05 — image near-dup via perceptual hash (aHash) + Hamming banding.
 # The training-data image-dedup pipeline end to end: decode →
-# 8×8-downsample → 64-bit average-hash in ONE Arrow mapInPandas pass
-# (NumPy-vectorized per batch), then everything after the hash is
+# 8×8-downsample → 64-bit average-hash in ONE Arrow pass (a NumPy
+# row kernel per payload), then everything after the hash is
 # JVM-side: the 64-bit fingerprint splits into 4×16-bit bands
 # (pigeonhole ⇒ complete for Hamming ≤ 3, same guarantee as d05's
 # SimHash chunks), band-bucket self-join proposes candidates, and
@@ -563,35 +520,26 @@ def ahash_64(df: DataFrame) -> DataFrame:
     decode to an 8×8 grayscale and emit the 64-bit average-hash
     (bit i = pixel i > mean), stored as a SIGNED long (uint64 view)
     so ANSI mode never sees an overflow."""
+    return map_rows(df.select("doc_id", "payload"), _ahash, "phash long")
 
-    def run(batches):
-        import numpy as _np
-        import pandas as _pd
 
-        for pdf in batches:
-            out_ids, out_hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = _np.frombuffer(bytes(payload), dtype=_np.uint8)
-                if b.size < 64:  # too small to form an 8×8 "image"
-                    b = _np.pad(b, (0, 64 - b.size))
-                # fake decode: truncate to a multiple of 64 and
-                # average each of the 64 equal strides — deterministic
-                # and the same downsample-to-8×8 shape a real decoder
-                # produces. Threshold in INTEGER space: with one
-                # shared stride, px[j] > mean(px) ⟺ cs[j]·64 > Σcs —
-                # exact (no float mean), so the SQL oracle reproduces
-                # every bit from the byte values.
-                n = (b.size // 64) * 64
-                cs = b[:n].reshape(64, -1).astype(_np.int64).sum(axis=1)
-                bits = (cs * 64 > cs.sum()).astype(_np.uint64)
-                h = _np.uint64(0)
-                for i in range(64):
-                    h |= bits[i] << _np.uint64(i)
-                out_ids.append(int(doc_id))
-                out_hashes.append(int(h.astype(_np.int64)))  # signed view
-            yield _pd.DataFrame({"doc_id": out_ids, "phash": out_hashes})
-
-    return df.mapInPandas(run, schema="doc_id long, phash long")
+def _ahash(payload: bytes) -> list[tuple]:
+    b = np.frombuffer(bytes(payload), dtype=np.uint8)
+    if b.size < 64:  # too small to form an 8×8 "image"
+        b = np.pad(b, (0, 64 - b.size))
+    # fake decode: truncate to a multiple of 64 and average each of
+    # the 64 equal strides — deterministic and the same
+    # downsample-to-8×8 shape a real decoder produces. Threshold in
+    # INTEGER space: with one shared stride, px[j] > mean(px) ⟺
+    # cs[j]·64 > Σcs — exact (no float mean), so the SQL oracle
+    # reproduces every bit from the byte values.
+    n = (b.size // 64) * 64
+    cs = b[:n].reshape(64, -1).astype(np.int64).sum(axis=1)
+    bits = (cs * 64 > cs.sum()).astype(np.uint64)
+    h = np.uint64(0)
+    for i in range(64):
+        h |= bits[i] << np.uint64(i)
+    return [(int(h.astype(np.int64)),)]  # signed view
 
 
 # DuckDB recomputes the kernel's aHash bit-for-bit: ord(substr) is
@@ -880,11 +828,11 @@ def m07_augmentation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # each byte lands in ~2 frames, the fan-out a real feature extractor
 # pays.
 #
-# Scale shape: one Arrow mapInPandas pass, NumPy-vectorized per
+# Scale shape: one Arrow pass (``map_rows``), NumPy-vectorized per
 # frame, linear in payload bytes × overlap factor; output is typed
 # integer columns (routing/filtering JVM-side). A real
-# librosa/torchaudio front-end drops into the kernel unchanged —
-# the framing indices and batch plumbing are exactly what it needs.
+# librosa/torchaudio front-end drops into ``_audio_frames`` unchanged
+# — the framing indices are exactly what it needs.
 # ---------------------------------------------------------------------------
 
 M08_FRAME = 256
@@ -928,48 +876,32 @@ def m08_audio_framing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
     )
-    frame, hop = M08_FRAME, M08_HOP  # close over values (worker-safe)
-
-    def run(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = _np.frombuffer(bytes(payload), dtype=_np.uint8).astype(
-                    _np.int64
-                )
-                for idx, off in enumerate(range(0, b.size, hop)):
-                    c = b[off : off + frame]
-                    energy = int(c.sum())
-                    d = c * c.size - energy
-                    rows.append(
-                        (
-                            int(doc_id),
-                            idx,
-                            off,
-                            int(c.size),
-                            energy,
-                            int(c.max()),
-                            int(((d[:-1] * d[1:]) < 0).sum()),
-                        )
-                    )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "off", "flen",
-                    "energy", "peak", "mean_crossings",
-                ],
-            )
-
-    return docs.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, frame_idx int, off int, flen int, "
-            "energy long, peak int, mean_crossings int"
-        ),
+    return map_rows(
+        docs,
+        _audio_frames,
+        "frame_idx int, off int, flen int, energy long, peak int, "
+        "mean_crossings int",
     )
+
+
+def _audio_frames(payload: bytes) -> list[tuple]:
+    b = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
+    rows = []
+    for idx, off in enumerate(range(0, b.size, M08_HOP)):
+        c = b[off : off + M08_FRAME]
+        energy = int(c.sum())
+        d = c * c.size - energy
+        rows.append(
+            (
+                idx,
+                off,
+                int(c.size),
+                energy,
+                int(c.max()),
+                int(((d[:-1] * d[1:]) < 0).sum()),
+            )
+        )
+    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -989,7 +921,7 @@ def m08_audio_framing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zero-crossing feature is live), so an endianness, signedness,
 # chunk-offset, or pad-rule bug hash-fails.
 #
-# Scale shape: identical to m08 — one mapInPandas pass per stage,
+# Scale shape: identical to m08 — one Arrow pass per stage,
 # NumPy-vectorized framing (stride index matrix, no per-sample
 # Python), typed integer output; in production the WAV bytes come
 # from storage and the encoder stage isn't there.
@@ -1035,8 +967,6 @@ def decode_wav_pcm16(b: bytes) -> list[int]:
     file with an extra chunk (the in-plan encoder plants one). The
     ``wav_frame_features`` kernel calls it per payload.
     """
-    import struct
-
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     fmt = data = None
@@ -1074,46 +1004,29 @@ def encode_wav_frames(docs: DataFrame) -> DataFrame:
     over ASCII so sign-sensitive features are live). Fixture-encoder
     role: plants an odd-sized LIST chunk (plus its pad byte) between
     fmt and data so the decoder's chunk walk is exercised."""
+    return map_rows(docs.select("doc_id", "payload"), _wav_file, "payload binary")
 
-    def run(batches):
-        import struct as _struct
 
-        import numpy as _np
-        import pandas as _pd
+_WAV_FMT = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+_WAV_JUNK = b"junkdat"  # 7 bytes: odd size forces the pad rule
 
-        fmt = _struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-        junk = b"junkdat"  # 7 bytes: odd size forces the pad rule
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = _np.frombuffer(bytes(payload), dtype=_np.uint8)
-                pcm = (
-                    (raw.astype(_np.int64) - 96) * 256
-                ).astype("<i2").tobytes()
-                chunks = (
-                    b"fmt "
-                    + len(fmt).to_bytes(4, "little")
-                    + fmt
-                    + b"LIST"
-                    + len(junk).to_bytes(4, "little")
-                    + junk
-                    + b"\x00"  # RIFF pad byte for the odd chunk
-                    + b"data"
-                    + len(pcm).to_bytes(4, "little")
-                    + pcm
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        b"RIFF"
-                        + (4 + len(chunks)).to_bytes(4, "little")
-                        + b"WAVE"
-                        + chunks,
-                    )
-                )
-            yield _pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    return docs.mapInPandas(run, schema="doc_id long, payload binary")
+def _wav_file(payload: bytes) -> list[tuple]:
+    raw = np.frombuffer(bytes(payload), dtype=np.uint8)
+    pcm = ((raw.astype(np.int64) - 96) * 256).astype("<i2").tobytes()
+    chunks = (
+        b"fmt "
+        + len(_WAV_FMT).to_bytes(4, "little")
+        + _WAV_FMT
+        + b"LIST"
+        + len(_WAV_JUNK).to_bytes(4, "little")
+        + _WAV_JUNK
+        + b"\x00"  # RIFF pad byte for the odd chunk
+        + b"data"
+        + len(pcm).to_bytes(4, "little")
+        + pcm
+    )
+    return [(b"RIFF" + (4 + len(chunks)).to_bytes(4, "little") + b"WAVE" + chunks,)]
 
 
 def wav_frame_features(payloads: DataFrame) -> DataFrame:
@@ -1121,55 +1034,34 @@ def wav_frame_features(payloads: DataFrame) -> DataFrame:
     over decoded samples (frame ``WAV_FRAME``, hop ``WAV_HOP``, full
     frames only). The production kernel: real RIFF walk + PCM decode
     (``decode_wav_pcm16``), NumPy stride-index framing."""
-    n, hop = WAV_FRAME, WAV_HOP
-
-    def run(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                s = _np.asarray(
-                    decode_wav_pcm16(bytes(payload)), dtype=_np.int64
-                )
-                if s.size < n:
-                    continue
-                n_frames = (s.size - n) // hop + 1
-                idx = (
-                    _np.arange(n)[None, :]
-                    + hop * _np.arange(n_frames)[:, None]
-                )
-                fr = s[idx]
-                a = _np.abs(fr)
-                zc = ((fr[:, :-1] * fr[:, 1:]) < 0).sum(axis=1)
-                for i in range(n_frames):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            n,
-                            int(a[i].max()),
-                            int(a[i].sum()),
-                            int((fr[i] * fr[i]).sum()),
-                            int(zc[i]),
-                        )
-                    )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "n_samples",
-                    "peak_abs", "sum_abs", "energy", "zero_crossings",
-                ],
-            )
-
-    return payloads.mapInPandas(
-        run,
-        schema=(
-            "doc_id long, frame_idx int, n_samples int, peak_abs int, "
-            "sum_abs long, energy long, zero_crossings int"
-        ),
+    return map_rows(
+        payloads.select("doc_id", "payload"),
+        _wav_frames,
+        "frame_idx int, n_samples int, peak_abs int, sum_abs long, "
+        "energy long, zero_crossings int",
     )
+
+
+def _wav_frames(payload: bytes) -> list[tuple]:
+    n, hop = WAV_FRAME, WAV_HOP
+    s = np.asarray(decode_wav_pcm16(bytes(payload)), dtype=np.int64)
+    if s.size < n:
+        return []
+    n_frames = (s.size - n) // hop + 1
+    fr = s[np.arange(n)[None, :] + hop * np.arange(n_frames)[:, None]]
+    a = np.abs(fr)
+    zc = ((fr[:, :-1] * fr[:, 1:]) < 0).sum(axis=1)
+    return [
+        (
+            i,
+            n,
+            int(a[i].max()),
+            int(a[i].sum()),
+            int((fr[i] * fr[i]).sum()),
+            int(zc[i]),
+        )
+        for i in range(n_frames)
+    ]
 
 
 @query("m10_wav_decode_features", oracle=M10_ORACLE)
@@ -1210,9 +1102,9 @@ def m10_wav_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # touches; the identity oracle tolerates none.)
 #
 # Scale shape: same as m09/m10 — binary in/out through one Arrow
-# mapInPandas pass, dims as typed columns, routing decisions
+# pass per stage, dims as typed columns, routing decisions
 # JVM-side; in production the PNG bytes come from storage and the
-# encoder stage isn't there. zlib is C-speed per batch; the defilter
+# encoder stage isn't there. zlib is C-speed per image; the defilter
 # is a per-byte Python loop, honestly bounded: cost is O(w·h) per
 # image inside the already-Python Arrow stage, and scanline width —
 # not corpus size — bounds the serial inner loop.
@@ -1286,8 +1178,6 @@ def decode_png_gray(b: bytes) -> tuple[int, int, bytes]:
     with an exact-length check, and defilters all five scanline
     filter types. The ``png_pixels`` kernel calls it per payload.
     """
-    import zlib
-
     if len(b) < len(_PNG_SIG) or b[: len(_PNG_SIG)] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos = len(_PNG_SIG)
@@ -1351,114 +1241,80 @@ def encode_png_frames(docs: DataFrame) -> DataFrame:
     across two IDAT chunks, and an ancillary tEXt chunk sits between
     IHDR and the first IDAT — so fixed-offset or single-IDAT decoders
     break, and every chunk carries a genuine CRC-32."""
+    return map_rows(docs.select("doc_id", "payload"), _png_file, "payload binary")
+
+
+def _png_chunk(ctype: bytes, body: bytes) -> bytes:
+    crc = zlib.crc32(ctype + body) & 0xFFFFFFFF
+    return len(body).to_bytes(4, "big") + ctype + body + crc.to_bytes(4, "big")
+
+
+def _png_filter_row(ft: int, line: bytes, prior: bytes) -> bytes:
+    """Apply PNG scanline filter ``ft`` (bpp=1): the inverse of
+    ``_png_defilter``'s per-row step."""
+    w = len(line)
+    if ft == 0:
+        return bytes(line)
+    if ft == 1:
+        return bytes((line[x] - (line[x - 1] if x else 0)) & 0xFF for x in range(w))
+    if ft == 2:
+        return bytes((line[x] - prior[x]) & 0xFF for x in range(w))
+    if ft == 3:
+        return bytes(
+            (line[x] - (((line[x - 1] if x else 0) + prior[x]) >> 1)) & 0xFF
+            for x in range(w)
+        )
+    out = bytearray(w)
+    for x in range(w):
+        a = line[x - 1] if x else 0
+        b_ = prior[x]
+        c = prior[x - 1] if x else 0
+        p = a + b_ - c
+        pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c)
+        pred = a if (pa <= pb and pa <= pc) else (b_ if pb <= pc else c)
+        out[x] = (line[x] - pred) & 0xFF
+    return bytes(out)
+
+
+_PNG_TEXT = _png_chunk(b"tEXt", b"Software\x00spark-graft")
+
+
+def _png_file(payload: bytes) -> list[tuple]:
+    b = bytes(payload)
     w = PNG_W
-
-    def run(batches):
-        import zlib as _zlib
-
-        import pandas as _pd
-
-        def _chunk(ctype: bytes, body: bytes) -> bytes:
-            return (
-                len(body).to_bytes(4, "big")
-                + ctype
-                + body
-                + (_zlib.crc32(ctype + body) & 0xFFFFFFFF).to_bytes(
-                    4, "big"
-                )
-            )
-
-        def _filter_row(ft, line, prior):
-            if ft == 0:
-                return bytes(line)
-            if ft == 1:
-                return bytes(
-                    (line[x] - (line[x - 1] if x else 0)) & 0xFF
-                    for x in range(w)
-                )
-            if ft == 2:
-                return bytes(
-                    (line[x] - prior[x]) & 0xFF for x in range(w)
-                )
-            if ft == 3:
-                return bytes(
-                    (
-                        line[x]
-                        - (((line[x - 1] if x else 0) + prior[x]) >> 1)
-                    )
-                    & 0xFF
-                    for x in range(w)
-                )
-            out = bytearray(w)
-            for x in range(w):
-                a = line[x - 1] if x else 0
-                b_ = prior[x]
-                c = prior[x - 1] if x else 0
-                p = a + b_ - c
-                pa, pb, pc = abs(p - a), abs(p - b_), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (
-                    b_ if pb <= pc else c
-                )
-                out[x] = (line[x] - pred) & 0xFF
-            return bytes(out)
-
-        text_chunk = _chunk(b"tEXt", b"Software\x00spark-graft")
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                h = len(b) // w
-                if h < 1:
-                    continue
-                prior = bytes(w)
-                raw = bytearray()
-                for y in range(h):
-                    line = b[y * w : (y + 1) * w]
-                    ft = y % 5
-                    raw += bytes([ft]) + _filter_row(ft, line, prior)
-                    prior = line
-                comp = _zlib.compress(bytes(raw), 6)
-                cut = min(37, len(comp))  # force the two-IDAT path
-                ihdr = (
-                    w.to_bytes(4, "big")
-                    + h.to_bytes(4, "big")
-                    + bytes([8, 0, 0, 0, 0])
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        _PNG_SIG
-                        + _chunk(b"IHDR", ihdr)
-                        + text_chunk
-                        + _chunk(b"IDAT", comp[:cut])
-                        + _chunk(b"IDAT", comp[cut:])
-                        + _chunk(b"IEND", b""),
-                    )
-                )
-            yield _pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return docs.mapInPandas(run, schema="doc_id long, payload binary")
+    h = len(b) // w
+    if h < 1:
+        return []
+    prior = bytes(w)
+    raw = bytearray()
+    for y in range(h):
+        line = b[y * w : (y + 1) * w]
+        ft = y % 5
+        raw += bytes([ft]) + _png_filter_row(ft, line, prior)
+        prior = line
+    comp = zlib.compress(bytes(raw), 6)
+    cut = min(37, len(comp))  # force the two-IDAT path
+    ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes([8, 0, 0, 0, 0])
+    return [
+        (
+            _PNG_SIG
+            + _png_chunk(b"IHDR", ihdr)
+            + _PNG_TEXT
+            + _png_chunk(b"IDAT", comp[:cut])
+            + _png_chunk(b"IDAT", comp[cut:])
+            + _png_chunk(b"IEND", b""),
+        )
+    ]
 
 
 def png_pixels(payloads: DataFrame) -> DataFrame:
     """``(doc_id, payload: binary PNG)`` → ``(doc_id, src_w, src_h,
     pixels binary)``: the production kernel — chunk walk + CRC verify
     + inflate + defilter (``decode_png_gray``)."""
-
-    def run(batches):
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, px = decode_png_gray(bytes(payload))
-                rows.append((int(doc_id), w, h, px))
-            yield _pd.DataFrame(
-                rows, columns=["doc_id", "src_w", "src_h", "pixels"]
-            )
-
-    return payloads.mapInPandas(
-        run, schema="doc_id long, src_w int, src_h int, pixels binary"
+    return map_rows(
+        payloads.select("doc_id", "payload"),
+        lambda payload: [decode_png_gray(bytes(payload))],
+        "src_w int, src_h int, pixels binary",
     )
 
 

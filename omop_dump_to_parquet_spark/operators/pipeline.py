@@ -23,9 +23,12 @@ Every intermediate is a column expression, not a table.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.kernels import map_rows
 from ..registry import query
 from ..sources.parquet import table
 from .text import (
@@ -1144,7 +1147,7 @@ def p10_decontamination_sparse(
 #
 # with add-one (Laplace) smoothing over P11_DIM hashed buckets, so
 # every bucket's weight is defined. Features and bucketing are t24's
-# VALUES exactly (computed in a vectorized Arrow kernel that is
+# VALUES exactly (computed in a Python row kernel that is
 # value-identical to uni_bigram_feats + md5_bucket — see the
 # dsir_scores docstring and the pinned equality test), which is
 # faithful to the paper: DSIR hashes unigrams+bigrams into a fixed
@@ -1225,6 +1228,19 @@ GROUP BY e.doc_id
 """
 
 
+def _dsir_buckets(text: str) -> list[tuple[list[int]]]:
+    """p11's row kernel: the ``P11_DIM`` hash bucket of every unigram
+    and bigram of ``text`` (top 60 bits of the feature's md5)."""
+    toks = text.split(" ")
+    feats = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+    buckets = [
+        (int.from_bytes(hashlib.md5(f.encode()).digest()[:8], "big") >> 4)
+        % P11_DIM
+        for f in feats
+    ]
+    return [(buckets,)]
+
+
 def dsir_scores(train: DataFrame, ev: DataFrame) -> DataFrame:
     """The p11 kernel (see block comment): DSIR importance scores for
     every ``train`` row against the ``ev`` target distribution.
@@ -1232,43 +1248,22 @@ def dsir_scores(train: DataFrame, ev: DataFrame) -> DataFrame:
     score_nanos). Factored so tests can drive synthetic corpora
     through the exact registered plan.
 
-    Feature bucketing runs in an Arrow mapInPandas kernel rather than
-    the Catalyst expression twin (``text.md5_bucket`` over
-    ``uni_bigram_feats``): the expression path costs ~60 µs per
-    feature (md5 → hex string → substring → conv's BigInteger parse,
-    all allocating, measured at x10), which p11 pays for THREE corpus
-    passes — the kernel's hashlib.md5 + int.from_bytes is ~1 µs and
+    Feature bucketing runs in a Python row kernel (``_dsir_buckets``
+    via ``map_rows``) rather than the Catalyst expression twin
+    (``text.md5_bucket`` over ``uni_bigram_feats``): the expression
+    path costs ~60 µs per feature (md5 → hex string → substring →
+    conv's BigInteger parse, all allocating, measured at x10), which
+    p11 pays for THREE corpus passes — the kernel's hashlib.md5 +
+    int.from_bytes is ~1 µs and
     value-IDENTICAL (first 15 hex chars == top 60 bits of the digest:
     int.from_bytes(digest[:8], 'big') >> 4; equality pinned in
     tests, and the oracle differential re-proves it end-to-end).
     t24 keeps the expression form — one pass over fixture-sized
     inputs is where the no-UDF property is worth its constant."""
 
-    def bucket_batches(it):
-        # 256 == P11_DIM, pinned by test_p11_dim_matches_t24
-        import hashlib
-
-        md5 = hashlib.md5
-
-        def doc_buckets(t: str) -> list[int]:
-            toks = t.split(" ")
-            feats = toks + [
-                f"{a} {b}" for a, b in zip(toks, toks[1:])
-            ]
-            return [
-                (int.from_bytes(md5(f.encode()).digest()[:8], "big") >> 4)
-                % 256
-                for f in feats
-            ]
-
-        for pdf in it:
-            yield pdf.assign(buckets=[doc_buckets(t) for t in pdf["text"]])[
-                ["doc_id", "buckets"]
-            ]
-
     def bucketed(df: DataFrame) -> DataFrame:
-        return df.select("doc_id", "text").mapInPandas(
-            bucket_batches, "doc_id long, buckets array<int>"
+        return map_rows(
+            df.select("doc_id", "text"), _dsir_buckets, "buckets array<int>"
         )
 
     train, ev = bucketed(train), bucketed(ev)

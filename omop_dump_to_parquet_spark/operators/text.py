@@ -12,22 +12,26 @@ Most of these are map-side-only column expressions (no shuffle except
 the final optional aggregation), i.e. they scale linearly and stay
 inside whole-stage codegen — the correct shape for a 100 TB corpus
 profiling pass. No per-row Python UDFs anywhere; three operators run
-Arrow mapInPandas kernels (per-batch, not per-row): t18's
-``local_candidates`` (per-batch heavy-hitter counting), t23's
-``bpe_encode`` (the merge table applied as ``str.replace``) and t25's
-HTML extraction (regex-per-document markup removal) — the same
-doctrine as d15's MinHash kernel and the m-family decoders. t22/t23's
-merge learning runs on the driver over a bounded vocabulary collect.
+Python over Arrow batches: t18's ``local_candidates`` (a batch
+``mapInPandas`` kernel, per-batch heavy-hitter counting), and two row
+kernels run by ``functions.kernels.map_rows`` — t23's ``bpe_encode``
+(the merge table applied as ``str.replace``) and t25's HTML extraction
+(regex-per-document markup removal), the same shape as the m-family
+decoders. t22/t23's merge learning runs on the driver over a bounded
+vocabulary collect.
 """
 
 from __future__ import annotations
 
 import collections
+import hashlib
+import re
 from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.kernels import map_rows
 from ..registry import query
 from ..sources.parquet import table
 
@@ -1612,8 +1616,8 @@ def bpe_encode(
     factored so the property net can drive it at arbitrary merge depth
     (r13 verdict #6). One map-side pass; merges ride the kernel closure.
 
-    r17 (guide §4.2, verdict #3): the encode is a mapInPandas Python
-    kernel — per doc, the same boundary rendering as the former
+    r17 (guide §4.2, verdict #3): the encode is a Python row kernel
+    (``map_rows``) — per doc, the same boundary rendering as the former
     expression chain (' a  b  |  c  d  ', built by joining each word's
     codepoints with '  ': Python str iteration walks codepoints
     exactly like the learner's ``_symbols`` and the oracle's
@@ -1640,51 +1644,30 @@ def bpe_encode(
         for _, lft, rgt, merged, _cnt in merges
     ]
 
-    def enc(it):
-        # worker-side imports; the package ships by value, so a helper
-        # called here must be pure (no Spark, DataFrame or JVM handles)
-        import hashlib
+    def enc(text):
+        if not isinstance(text, str):  # NULL (None or NaN)
+            return [(None, None, None)]
+        if "|" in text:
+            raise RuntimeError(
+                "t23: document text contains the '|' word-boundary "
+                "sentinel; the encode would be ambiguous"
+            )
+        words = text.split(" ")
+        rep = " " + "  |  ".join("  ".join(w) for w in words) + "  "
+        for a, b in pats:
+            rep = rep.replace(a, b)
+        stripped = rep.strip(" ")
+        return [
+            (
+                len(words),
+                len(stripped.split("  ")) - (len(words) - 1),
+                hashlib.md5(stripped.encode("utf-8")).hexdigest(),
+            )
+        ]
 
-        import pandas as pd
-
-        for pdf in it:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "n_ws_tokens": [],
-                "n_bpe_symbols": [],
-                "encoded_md5": [],
-            }
-            for text in pdf["text"]:
-                if not isinstance(text, str):  # NULL (None or NaN)
-                    out["n_ws_tokens"].append(None)
-                    out["n_bpe_symbols"].append(None)
-                    out["encoded_md5"].append(None)
-                    continue
-                if "|" in text:
-                    raise RuntimeError(
-                        "t23: document text contains the '|' "
-                        "word-boundary sentinel; the encode would be "
-                        "ambiguous"
-                    )
-                words = text.split(" ")
-                rep = (
-                    " " + "  |  ".join("  ".join(w) for w in words) + "  "
-                )
-                for a, b in pats:
-                    rep = rep.replace(a, b)
-                stripped = rep.strip(" ")
-                out["n_ws_tokens"].append(len(words))
-                out["n_bpe_symbols"].append(
-                    len(stripped.split("  ")) - (len(words) - 1)
-                )
-                out["encoded_md5"].append(
-                    hashlib.md5(stripped.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "text").mapInPandas(
+    return map_rows(
+        docs.select("doc_id", "text"),
         enc,
-        f"doc_id {docs.schema['doc_id'].dataType.simpleString()}, "
         "n_ws_tokens long, n_bpe_symbols long, encoded_md5 string",
     )
 
@@ -1880,13 +1863,11 @@ def t24_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # entity, or miscounts blocks hash-fails.
 #
 # Scale shape: zero shuffles by construction — scan → encode
-# (Catalyst expressions) → one Arrow mapInPandas pass → project; in
+# (Catalyst expressions) → one Arrow pass (``map_rows``) → project; in
 # production the HTML comes from storage (WARC) and the encoder stage
-# isn't there. The kernel is regex-per-document inside the Arrow
-# batch — the honest cost model for markup removal (C-speed regex
-# engine, bounded by document length, embarrassingly parallel); this
-# and d15's MinHash kernel are the module's two deliberate Arrow
-# escape hatches from the no-Python-UDF rule.
+# isn't there. The kernel is regex-per-document — the honest cost
+# model for markup removal (C-speed regex engine, bounded by document
+# length, embarrassingly parallel).
 # ---------------------------------------------------------------------------
 
 T25_PAR_TOKENS = 12  # tokens per <p>
@@ -1978,71 +1959,56 @@ def html_wrap(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", page.alias("html"))
 
 
+_T25_HEAD = re.compile(r"<head\b[^>]*>.*?</head>", re.S)
+# leaf-block scan: the non-greedy body is correct because the
+# recognized block tags never nest within each other in valid markup
+# of this shape (<article> is not in the set, so its <p> children
+# match individually)
+_T25_BLOCK = re.compile(r"<(p|nav|div|footer)\b[^>]*>(.*?)</\1>", re.S)
+_T25_LINK = re.compile(r"<a\b[^>]*>(.*?)</a>", re.S)
+_T25_TAG = re.compile(r"<[^>]+>")
+# SINGLE-pass entity decode (HTML semantics: the scan resumes after
+# each replacement, so "&#38;amp;" decodes to "&amp;")
+_T25_ENTITY = re.compile(r"&(#\d+|amp|lt|gt|quot|apos|nbsp);")
+_T25_NAMED = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'", "nbsp": " "}
+
+
+def _t25_entity(m: re.Match) -> str:
+    g = m.group(1)
+    return chr(int(g[1:])) if g[0] == "#" else _T25_NAMED[g]
+
+
+def _nonws(s: str) -> int:
+    return sum(1 for ch in s if not ch.isspace())
+
+
+def _t25_extract(html: str) -> list[tuple[int, int, str]]:
+    body = _T25_HEAD.sub("", html)
+    kept, n_blocks, n_dropped = [], 0, 0
+    for m in _T25_BLOCK.finditer(body):
+        content = m.group(2)
+        n_blocks += 1
+        link_chars = _nonws(
+            _T25_ENTITY.sub(_t25_entity, " ".join(_T25_LINK.findall(content)))
+        )
+        text = _T25_ENTITY.sub(_t25_entity, _T25_TAG.sub(" ", content))
+        total = _nonws(text)
+        if total and link_chars / total > T25_LINK_DENSITY:
+            n_dropped += 1
+            continue
+        kept.append(text)
+    return [(n_blocks, n_dropped, " ".join(" ".join(kept).split()))]
+
+
 def html_extract(pages: DataFrame) -> DataFrame:
     """The t25 production kernel (see block comment): boilerplate-
     aware text extraction from (doc_id, html) — returns (doc_id,
     n_blocks, n_dropped, extracted). The package ships by value, so
     workers unpickle it without this package on their path."""
-
-    def run(batches):
-        import re
-
-        head_re = re.compile(r"<head\b[^>]*>.*?</head>", re.S)
-        # leaf-block scan: the non-greedy body is correct because the
-        # recognized block tags never nest within each other in valid
-        # markup of this shape (<article> is not in the set, so its
-        # <p> children match individually)
-        blk_re = re.compile(
-            r"<(p|nav|div|footer)\b[^>]*>(.*?)</\1>", re.S
-        )
-        link_re = re.compile(r"<a\b[^>]*>(.*?)</a>", re.S)
-        tag_re = re.compile(r"<[^>]+>")
-        # SINGLE-pass entity decode (HTML semantics: the scan resumes
-        # after each replacement, so "&#38;amp;" decodes to "&amp;")
-        ent_re = re.compile(r"&(#\d+|amp|lt|gt|quot|apos|nbsp);")
-        named = {
-            "amp": "&",
-            "lt": "<",
-            "gt": ">",
-            "quot": '"',
-            "apos": "'",
-            "nbsp": " ",
-        }
-
-        def ent(m):
-            g = m.group(1)
-            return chr(int(g[1:])) if g[0] == "#" else named[g]
-
-        def nonws(s):
-            return sum(1 for ch in s if not ch.isspace())
-
-        def extract(html):
-            body = head_re.sub("", html)
-            kept, n_blocks, n_dropped = [], 0, 0
-            for m in blk_re.finditer(body):
-                content = m.group(2)
-                n_blocks += 1
-                link_chars = nonws(
-                    ent_re.sub(ent, " ".join(link_re.findall(content)))
-                )
-                text = ent_re.sub(ent, tag_re.sub(" ", content))
-                total = nonws(text)
-                if total and link_chars / total > T25_LINK_DENSITY:
-                    n_dropped += 1
-                    continue
-                kept.append(text)
-            return n_blocks, n_dropped, " ".join(" ".join(kept).split())
-
-        for pdf in batches:
-            res = pdf["html"].map(extract)
-            out = pdf[["doc_id"]].copy()
-            out["n_blocks"] = res.map(lambda r: r[0]).astype("int32")
-            out["n_dropped"] = res.map(lambda r: r[1]).astype("int32")
-            out["extracted"] = res.map(lambda r: r[2])
-            yield out
-
-    return pages.mapInPandas(
-        run, schema="doc_id long, n_blocks int, n_dropped int, extracted string"
+    return map_rows(
+        pages.select("doc_id", "html"),
+        _t25_extract,
+        "n_blocks int, n_dropped int, extracted string",
     )
 
 

@@ -133,23 +133,3 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    max_records_per_file: int = REFERENCE_SIZING["rows_per_file"],
-    partition_by: list[str] | None = None,
-    compression: str = "zstd",
-) -> None:
-    """ORC twin of :func:`write_parquet` — same sized-shard contract
-    (``maxRecordsPerFile``), for deployments standardized on ORC."""
-    writer = (
-        df.write.mode(mode)
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .option("compression", compression)
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)

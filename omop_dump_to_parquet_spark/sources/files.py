@@ -98,23 +98,6 @@ def infer_then_pin(
     return schema, read(spark, path, schema=schema, **options)
 
 
-def read_orc(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    **options: str,
-) -> DataFrame:
-    """Read ORC (bundled native format — same columnar/pushdown
-    contract as parquet; schema travels in the file footer, so the
-    pinning concern of CSV/JSON does not apply)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.orc(path)
-
-
 def read_binary_files(
     spark: SparkSession,
     path: str,

@@ -37,6 +37,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.kernels import map_rows
 from ..registry import query
 from ..sources.parquet import table
 
@@ -962,12 +963,11 @@ def st10_stream_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # certified by running P09's oracle SQL verbatim against the stream
 # output.
 #
-# r16 (guide §4.2/§4.5): the per-row form is now an Arrow
-# mapInPandas kernel with the eval gram set built ONCE on the driver
-# (the benchmark split is ~1% of docs and MBs by construction — the
-# same structural asymmetry p09's banner documents for its
-# broadcast) and constructed as a frozenset once per TASK via the
-# closure. The pre-r16 Catalyst form — per-doc gram-hash array
+# The per-row form is a Python row kernel (``map_rows``) with the
+# eval gram set built ONCE on the driver as a frozenset (the
+# benchmark split is ~1% of docs and MBs by construction — the same
+# structural asymmetry p09's banner documents for its broadcast) and
+# shipped as one Spark broadcast. The former Catalyst form — per-doc gram-hash array
 # (interpreted transform/slice/xxhash64 HOFs) crossJoined with a
 # one-row collect_set array and array_intersect'ed per row — ran the
 # whole corpus side in interpreted expression code: measured 5.0s at
@@ -976,7 +976,7 @@ def st10_stream_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~0.1s for the kernel's Python-set intersection on gram STRINGS
 # (which also deletes the 2⁻⁶⁴ hash-collision caveat — string
 # equality is exact). Scale: throughput = scan rate, zero corpus
-# shuffle, per-task init amortized over every batch in the partition.
+# shuffle, the broadcast loaded once per Python worker.
 # If a "benchmark" ever outgrew driver memory, the stateless shape
 # stops applying and the batch path (or a stateful streaming
 # join+agg in update mode) is the fallback — documented, not needed
@@ -992,10 +992,6 @@ from ..operators.pipeline import P09_ORACLE as _P09_ORACLE
 #: thousands of documents at most; a fixture drift that makes the
 #: "eval split" corpus-sized must fail loud, not OOM the driver.
 ST11_MAX_EVAL_DOCS = 100_000
-
-
-# (r16: the former _p09_gram_hashes Catalyst helper was deleted with
-# st11's kernel rewrite — no other caller remained.)
 
 
 @query("st11_stream_decontamination", oracle=_P09_ORACLE)
@@ -1047,49 +1043,26 @@ def st11_stream_decontamination(
         # Python-side static state).
         bc = s.sparkContext.broadcast(eval_grams)
 
-        def score(it):
-            # per doc, the distinct w-gram STRING set intersected with
-            # the eval frozenset.
-            import numpy as np
-            import pandas as pd
-
-            grams = bc.value
-            for pdf in it:
-                ids, ndg, nc = [], [], []
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                    if text is None:
-                        # NULL text: the pre-r16 Catalyst form dropped
-                        # the row (split(NULL) → no grams, no hit) —
-                        # preserve that tolerance (advisor r16).
-                        continue
-                    ts = text.split(" ")
-                    gs = {
-                        " ".join(ts[i : i + w])
-                        for i in range(len(ts) - w + 1)
-                    }
-                    hits = len(gs & grams)
-                    if hits > 0:
-                        ids.append(doc_id)
-                        ndg.append(len(gs))
-                        nc.append(hits)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.asarray(ids, dtype="int64"),
-                        "n_doc_grams": np.asarray(ndg, dtype="int64"),
-                        "n_contaminated": np.asarray(nc, dtype="int64"),
-                    }
-                )
+        def score(text):
+            # the doc's distinct w-gram STRING set intersected with the
+            # eval frozenset; docs with no hit yield no row
+            if text is None:
+                # NULL text: the pre-r16 Catalyst form dropped the row
+                # (split(NULL) → no grams, no hit) — preserve that
+                # tolerance (advisor r16).
+                return []
+            ts = text.split(" ")
+            gs = {" ".join(ts[i : i + w]) for i in range(len(ts) - w + 1)}
+            hits = len(gs & bc.value)
+            return [(len(gs), hits)] if hits > 0 else []
 
         stream = s.readStream.schema(raw.schema).parquet(
             _stage_documents(sf_dir)
         )
-        return (
-            stream.filter(~is_eval)
-            .select("doc_id", "text")
-            .mapInPandas(
-                score,
-                "doc_id long, n_doc_grams long, n_contaminated long",
-            )
+        return map_rows(
+            stream.filter(~is_eval).select("doc_id", "text"),
+            score,
+            "n_doc_grams long, n_contaminated long",
         )
 
     return _run_to_memory(

@@ -20,13 +20,21 @@ from test_parity import ORACLES, assert_frames_match
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# kernels that call module-level helpers (decoders, demux, PQ lattice)
+# kernels that call module-level helpers (map_rows, row functions,
+# decoders, demux, PQ lattice)
 KERNEL_IDS = (
+    "m02_decode_features",
     "m03_frame_sample",
+    "m04_resize",
+    "m05_image_phash_neardup",
+    "m08_audio_framing",
     "m09_bmp_decode_resize",
     "m10_wav_decode_features",
     "m11_png_decode_roundtrip",
+    "p11_dsir_importance",
     "s09_ann_pq",
+    "t23_bpe_encode",
+    "t25_html_extract",
 )
 
 DRIVER = textwrap.dedent(

@@ -277,30 +277,6 @@ def test_dump_job_budget_and_stage_report(spark, sf_small, tmp_path):
     assert jobs == 0 and rep.ok
 
 
-def test_orc_roundtrip_sized_shards(spark, sf_small, tmp_path):
-    """ORC source/sink: sized shards + identical data back."""
-    from omop_dump_to_parquet_spark.sinks.parquet_sink import write_orc
-    from omop_dump_to_parquet_spark.sources.files import read_orc
-    from omop_dump_to_parquet_spark.sources.parquet import table
-
-    df = table(spark, sf_small, "customer")
-    out = str(tmp_path / "customer_orc")
-    write_orc(df, out, max_records_per_file=40)
-    back = read_orc(spark, out)
-    assert back.count() == df.count()
-    assert back.schema == df.schema
-    assert back.exceptAll(df).count() == 0
-    import glob
-
-    shards = glob.glob(f"{out}/*.orc")
-    assert shards and all(
-        r <= 40
-        for r in [
-            spark.read.orc(s).count() for s in shards
-        ]
-    )
-
-
 def test_binary_file_ingestion_to_multimodal_lake(spark, tmp_path):
     """binaryFile source → m01-shaped lake: one row per raw file,
     bytes + metadata, glob filtering source-side."""

@@ -1,0 +1,220 @@
+"""The row-kernel wrapper ``functions.kernels.map_rows`` and the kernels
+built on it: keys pass through with their own type and NULLs, empty and
+all-dropping inputs give 0 rows with the declared schema, and no other
+``mapInPandas``/``applyInPandas`` call enters the package."""
+
+from __future__ import annotations
+
+import ast
+import collections
+import pathlib
+
+import pytest
+from pyspark.sql.types import DataType
+
+from omop_dump_to_parquet_spark.functions.kernels import map_rows
+from omop_dump_to_parquet_spark.operators import multimodal as M
+from omop_dump_to_parquet_spark.operators import pipeline as P
+from omop_dump_to_parquet_spark.operators import text as T
+
+PACKAGE = pathlib.Path(M.__file__).resolve().parents[1]
+
+PAYLOADS = [
+    b"the quick brown fox jumps over the lazy dog " * 3,
+    bytes(range(97, 123)) * 5,
+    b"abcdefghijklmnopqrstuvwxyz0123456789" * 2,
+]
+HTML = (
+    '<html><head><title>t</title></head><body><nav><a href="/">Home</a>'
+    "</nav><p>&nbsp;first &amp; second</p><p>third &#102;ourth</p>"
+    "</body></html>"
+)
+
+
+def _payloads(spark, key_type, payloads=PAYLOADS):
+    keys = [i if key_type == "long" else f"doc-{i}" for i in range(len(payloads))]
+    return spark.createDataFrame(
+        list(zip(keys, payloads)), f"doc_id {key_type}, payload binary"
+    )
+
+
+def _html(spark, key_type):
+    key = "doc-0" if key_type == "string" else 0
+    return spark.createDataFrame([(key, HTML)], f"doc_id {key_type}, html string")
+
+
+# the public kernels called with (doc_id, payload) or (doc_id, html)
+KEYED = {
+    "decode_features": (_payloads, M.decode_features),
+    "frame_sample": (_payloads, M.frame_sample),
+    "ahash_64": (_payloads, M.ahash_64),
+    "png_pixels∘encode_png_frames": (
+        _payloads,
+        lambda df: M.png_pixels(M.encode_png_frames(df)),
+    ),
+    "wav_frame_features∘encode_wav_frames": (
+        _payloads,
+        lambda df: M.wav_frame_features(M.encode_wav_frames(df)),
+    ),
+    "html_extract": (_html, T.html_extract),
+}
+
+
+@pytest.mark.parametrize("name", sorted(KEYED))
+def test_string_keys_pass_through_unchanged(spark, name):
+    make, kernel = KEYED[name]
+    by_str = kernel(make(spark, "string"))
+    assert dict(by_str.dtypes)["doc_id"] == "string"
+    got = sorted((r["doc_id"], *r[1:]) for r in by_str.collect())
+    want = sorted(
+        (f"doc-{r['doc_id']}", *r[1:]) for r in kernel(make(spark, "long")).collect()
+    )
+    assert got == want and got
+
+
+def test_map_rows_fans_out_and_keeps_null_keys(spark):
+    for key_type, key in (("string", "k"), ("long", 7)):
+        df = spark.createDataFrame(
+            [(key, 2), (None, 1), (key, 0)], f"id {key_type}, n int"
+        )
+        out = map_rows(
+            df, lambda n: [(i, f"x{i}") for i in range(n)], "i int, s string"
+        )
+        assert out.schema == DataType.fromDDL(f"id {key_type}, i int, s string")
+        assert sorted(map(tuple, out.collect()), key=repr) == sorted(
+            [(key, 0, "x0"), (key, 1, "x1"), (None, 0, "x0")], key=repr
+        )
+
+
+_BINARY = "doc_id long, payload binary"
+_SIZED = "doc_id long, payload binary, src_w int, src_h int"
+_RESIZED = "doc_id long, " + M.RESIZED_SCHEMA
+
+# kernel → (input schema, declared output schema)
+EMPTY = {
+    "decode_features": (
+        M.decode_features,
+        _BINARY,
+        "doc_id long, f_len double, f_first double, f_last double, f_sum16 double",
+    ),
+    "frame_sample": (
+        M.frame_sample,
+        _BINARY,
+        "doc_id long, frame_idx int, frame_bytes int, frame binary",
+    ),
+    "resize_frames": (M.resize_frames, _SIZED, _RESIZED),
+    "resize_bmp": (M.resize_bmp, _BINARY, _RESIZED),
+    "encode_bmp_frames": (M.encode_bmp_frames, _BINARY, _BINARY),
+    "ahash_64": (M.ahash_64, _BINARY, "doc_id long, phash long"),
+    "encode_wav_frames": (M.encode_wav_frames, _BINARY, _BINARY),
+    "wav_frame_features": (
+        M.wav_frame_features,
+        _BINARY,
+        "doc_id long, frame_idx int, n_samples int, peak_abs int, "
+        "sum_abs long, energy long, zero_crossings int",
+    ),
+    "encode_png_frames": (M.encode_png_frames, _BINARY, _BINARY),
+    "png_pixels": (
+        M.png_pixels,
+        _BINARY,
+        "doc_id long, src_w int, src_h int, pixels binary",
+    ),
+    "bpe_encode": (
+        lambda df: T.bpe_encode(df, []),
+        "doc_id long, text string",
+        "doc_id long, n_ws_tokens long, n_bpe_symbols long, encoded_md5 string",
+    ),
+    "html_extract": (
+        T.html_extract,
+        "doc_id long, html string",
+        "doc_id long, n_blocks int, n_dropped int, extracted string",
+    ),
+    "dsir_scores": (
+        lambda df: P.dsir_scores(df, df),
+        "doc_id long, text string",
+        "doc_id long, n_feats long, score_nanos long",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(EMPTY))
+def test_empty_input_gives_zero_rows_with_declared_schema(spark, name):
+    kernel, in_ddl, out_ddl = EMPTY[name]
+    out = kernel(spark.createDataFrame([], in_ddl))
+    assert out.collect() == []
+    assert out.schema == DataType.fromDDL(out_ddl)
+
+
+def test_m08_on_empty_documents_table(spark, tmp_path):
+    spark.createDataFrame([], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    out = M.m08_audio_framing(spark, str(tmp_path))
+    assert out.collect() == []
+    assert out.schema == DataType.fromDDL(
+        "doc_id long, frame_idx int, off int, flen int, energy long, "
+        "peak int, mean_crossings int"
+    )
+
+
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        lambda df: M.wav_frame_features(M.encode_wav_frames(df)),
+        M.encode_bmp_frames,
+        M.encode_png_frames,
+    ],
+    ids=["wav_frame_features", "encode_bmp_frames", "encode_png_frames"],
+)
+def test_input_where_every_row_yields_nothing(spark, kernel):
+    # shorter than one WAV frame, one BMP row and one PNG scanline
+    short = _payloads(spark, "long", [b"", b"abc", b"x" * (M.BMP_W - 1)])
+    out = kernel(short)
+    assert out.collect() == [] and dict(out.dtypes)["doc_id"] == "bigint"
+
+
+# (module, enclosing function, method): the batch-vectorized kernels
+# that work on whole NumPy batches, plus the wrapper itself
+ALLOWED_ARROW_CALLS = collections.Counter(
+    [
+        ("functions/kernels.py", "map_rows", "mapInPandas"),
+        ("operators/dedup.py", "simhash_chunks", "mapInPandas"),
+        ("operators/dedup.py", "semdedup_prune_bucketed", "applyInPandas"),
+        ("operators/dedup.py", "minhash_prepared", "mapInPandas"),
+        ("operators/dedup.py", "cross_corpus_neardup.prepared", "mapInPandas"),
+        ("operators/similarity.py", "cosine_pair_gemm", "applyInPandas"),
+        ("operators/similarity.py", "s06_ann_int8", "mapInPandas"),
+        ("operators/similarity.py", "kmeans_bucket_assign._assigned", "mapInPandas"),
+        ("operators/similarity.py", "kmeans_bucket_assign_2level", "applyInPandas"),
+        ("operators/similarity.py", "kmeans_bucket_assign_2level", "mapInPandas"),
+        ("operators/similarity.py", "s09_ann_pq", "mapInPandas"),
+        ("operators/text.py", "t18_heavy_hitters", "mapInPandas"),
+    ]
+)
+
+
+def _arrow_calls():
+    found = collections.Counter()
+
+    def visit(node, path, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = (*scope, child.name)
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("mapInPandas", "applyInPandas")
+            ):
+                found[(path, ".".join(scope), child.func.attr)] += 1
+            visit(child, path, inner)
+
+    for f in sorted(PACKAGE.rglob("*.py")):
+        visit(ast.parse(f.read_text()), f.relative_to(PACKAGE).as_posix(), ())
+    return found
+
+
+def test_arrow_calls_only_in_map_rows_and_batch_kernels():
+    """A per-row kernel goes through ``map_rows``; a direct Arrow call
+    is kept only where the kernel works on whole NumPy batches."""
+    assert _arrow_calls() == ALLOWED_ARROW_CALLS

@@ -223,7 +223,7 @@ def test_p11_target_affinity_mechanism(spark):
 
 
 def test_p11_kernel_buckets_equal_expression_buckets(spark, sf_small):
-    """p11's mapInPandas bucketing must be value-identical to the
+    """p11's row-kernel bucketing must be value-identical to the
     Catalyst expression twin t24 uses (first 15 md5 hex chars == top
     60 bits of the digest) — pinned here feature-by-feature so the
     two can never silently diverge."""
@@ -247,15 +247,10 @@ def test_p11_kernel_buckets_equal_expression_buckets(spark, sf_small):
         ).collect()
     }
 
-    import hashlib
+    from omop_dump_to_parquet_spark.operators.pipeline import _dsir_buckets
 
-    got = {}
-    for r in docs.select("doc_id", "text").collect():
-        toks = r.text.split(" ")
-        feats = toks + [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-        got[r.doc_id] = [
-            (int.from_bytes(hashlib.md5(f.encode()).digest()[:8], "big") >> 4)
-            % P11_DIM
-            for f in feats
-        ]
+    got = {
+        r.doc_id: _dsir_buckets(r.text)[0][0]
+        for r in docs.select("doc_id", "text").collect()
+    }
     assert got == expr
