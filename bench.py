@@ -16,7 +16,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from omop_dump_to_parquet_spark import load_catalog  # noqa: E402
-from omop_dump_to_parquet_spark.session import get_spark  # noqa: E402
+from omop_dump_to_parquet_spark.session import (  # noqa: E402
+    codegen_compilations,
+    get_spark,
+)
 
 HEADLINE = [
     "q01_pricing_summary",  # scan + 8-agg groupBy
@@ -84,8 +87,13 @@ def main() -> None:
         .count()
     )
 
+    # Classes each rep compiled (codegen-cache misses), per id: the
+    # first rep compiles the id's classes, a warm rep should compile 0.
+    compiles: dict[str, list[int]] = {}
+
     def run_once(name: str) -> tuple[float, int]:
         fn = queries[name]
+        c0 = codegen_compilations(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         # Evaluate EVERY output column, not just the row count — a
@@ -96,7 +104,9 @@ def main() -> None:
         from omop_dump_to_parquet_spark.force import forced_count
 
         n = forced_count(df)
-        return time.perf_counter() - t0, n
+        elapsed = time.perf_counter() - t0
+        compiles.setdefault(name, []).append(codegen_compilations(spark) - c0)
+        return elapsed, n
 
     # A single-shot timing on a shared box is load noise, not a plan
     # measurement (observed 6x swings: 15.6s idle vs 91s under
@@ -202,7 +212,9 @@ def main() -> None:
             timings[name] = child["queries"][name]
             try:
                 with open(child_detail) as fh:
-                    raw[name] = json.load(fh)["raw_timings"][name]
+                    child_out = json.load(fh)
+                raw[name] = child_out["raw_timings"][name]
+                compiles[name] = child_out["codegen_compiles"][name]
             finally:
                 os.unlink(child_detail)
             print(
@@ -408,6 +420,7 @@ def main() -> None:
         "reps": reps,
         "secondary": secondary,
         "secondary_raw": secondary_raw,
+        "codegen_compiles": compiles,
         "sf": sf_val,
     }
     # An isolated child (or any targeted run) can redirect its detail

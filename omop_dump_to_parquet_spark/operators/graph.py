@@ -139,9 +139,12 @@ def connected_components(
         # At the fixpoint every edge points member → center and no
         # node is both: u-set ∩ v-set must be empty. Guards against a
         # fingerprint collision between consecutive non-equal rounds
-        # silently ending iteration on a non-star graph.
+        # silently ending iteration on a non-star graph. A full count,
+        # not limit(1): a generated limit names its counter afresh per
+        # call, so each call compiled new classes; at the fixpoint the
+        # intersection is empty, so the count does the same work.
         return (
-            df.select("u").intersect(df.select(F.col("v").alias("u"))).limit(1).count()
+            df.select("u").intersect(df.select(F.col("v").alias("u"))).count()
             == 0
         )
 

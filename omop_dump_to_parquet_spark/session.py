@@ -11,6 +11,21 @@ At 100 TB the same knobs scale: ``spark.sql.shuffle.partitions`` grows
 to ~2-3× total cores, ``spark.sql.files.maxPartitionBytes`` stays at
 128-256 MiB so scan tasks fit executor memory, and AQE re-coalesces
 post-shuffle partitions at runtime regardless of the static setting.
+
+Static confs (read once when the JVM starts) go on ``get_spark``'s
+builder, never in ``RUNTIME_CONFS``: ``apply_runtime_confs`` swallows
+the error Spark raises for a static key, so one put there silently
+does nothing. The generated-code cache is one. Spark keeps the classes
+Janino compiles for each codegen stage, projection and ordering in one
+LRU of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.
+A serving session replays the same plans in a cycle, and an LRU smaller
+than the cycle evicts every class just before its next use: each warm
+query recompiled all of its classes, at ~13 ms each. That was ~145
+classes per warm pass of the benchmark's ``lake-relational`` workload
+and every one of the ~2,700 a catalog pass compiles. ``get_spark``
+sizes the cache to hold the whole catalog, and a warm pass of that
+workload now compiles none. A session the caller built keeps Spark's
+100 entries.
 """
 
 from __future__ import annotations
@@ -31,7 +46,23 @@ RUNTIME_CONFS = {
     # reader rejects; read as long and normalize in sources.parquet
     # (truncation to micros matches DuckDB's ns→us handling).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Name every generated stage class alike instead of after its
+    # codegen stage id. AQE numbers a query's stages in the order they
+    # are re-planned, which varies between runs of the same query, and
+    # a class whose name differs is a different cache entry: identical
+    # code then compiled again. Without the id, one catalog pass at
+    # sf0.001 compiles ~1,700 distinct classes instead of ~2,030.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+#: ``spark.sql.codegen.cache.maxEntries`` for sessions ``get_spark``
+#: builds. One pass over all 168 catalog ids compiles 1,680-1,740
+#: distinct classes at sf0.001, sf0.01 and sf0.1 alike; 4096 keeps more
+#: than 2x headroom. A second pass then compiles 10-20: the classes of
+#: plans AQE shapes differently from run to run. The cost is metaspace,
+#: ~214-218 MB after a catalog pass against ~206 MB with 100 entries.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -56,6 +87,15 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on some builds — keep going
     return spark
+
+
+def codegen_compilations(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far (Spark's
+    ``CodegenMetrics`` compilation-time histogram count). The difference
+    across a call is the number of classes it compiled, i.e. its misses
+    in the generated-code cache."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_shuffle_partitions(spark: SparkSession) -> int:
@@ -112,6 +152,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in RUNTIME_CONFS.items():

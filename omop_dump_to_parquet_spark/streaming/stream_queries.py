@@ -243,7 +243,9 @@ def _run_to_memory(
     batch's rows; watermark eviction can re-emit keys across batches).
     The staging layout guarantees it (one file, no maxFilesPerTrigger)
     — this assertion turns any future violation into a loud error
-    instead of a silent hash mismatch.
+    instead of a silent hash mismatch. An empty source runs no data
+    batch; that passes when the sink is empty too (the answer is 0
+    rows).
     """
     from ..session import apply_runtime_confs
 
@@ -315,7 +317,8 @@ def _run_to_memory(
                 )
         if expect_single_batch:
             n_data_batches = _count_data_batches(q)
-            if n_data_batches != 1:
+            empty_replay = n_data_batches == 0 and clone.table(sink).isEmpty()
+            if n_data_batches != 1 and not empty_replay:
                 raise RuntimeError(
                     f"{prefix}: replay split into {n_data_batches} "
                     "micro-batches; single-batch assumption violated"
