@@ -20,11 +20,12 @@ Scale design (the whole point at 100 TB):
 - bucket-size capping (drop pathologically hot bands) is the standard
   guard and is noted where it applies.
 
-Pure DataFrame/Catalyst expressions throughout — no row-at-a-time
-Python UDFs. The one Python kernel is d15's Arrow-vectorized
-``minhash_key_batches`` (mapInPandas, NumPy), where the measured
-interpreted-HOF alternative was two orders of magnitude slower — the
-documented escape hatch, not the default.
+DataFrame/Catalyst expressions by default, and no row-at-a-time
+Python UDFs. Where the Catalyst form would be an interpreted
+higher-order-function tree, an Arrow-vectorized NumPy batch kernel
+runs instead: ``minhash_key_batches`` (d04, d15, st13; the HOF form
+measured two orders of magnitude slower), ``simhash_chunks`` (d05)
+and ``semdedup_prune_bucketed`` (d10, d14).
 """
 
 from __future__ import annotations
@@ -426,22 +427,20 @@ def d03_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # D04 — MinHash + LSH banding, exact-Jaccard verified.
 #
-# K=126 hash functions (xxhash64 with per-function salt), banded into
-# 21 bands × 6 rows. Candidates = pairs sharing any band signature
-# (pre-pruned by the exact set-size condition); each candidate is then
-# verified with the exact word-set Jaccard, so FALSE POSITIVES are
-# eliminated and the output equals the exact threshold join wherever
-# LSH recall reaches 1 (with these params, P[miss | j=0.9] =
-# (1-0.9⁶)²¹ ≈ 1e-7; the fixture's above-threshold pairs are found
-# exhaustively — validated against D03-style exact enumeration in
-# tests).
+# K=126 MinHash functions, banded into 21 bands × 6 rows. Candidates =
+# pairs sharing any band key (pre-pruned by the exact set-size
+# condition); each candidate is then verified with the exact word-set
+# Jaccard, so FALSE POSITIVES are eliminated and the output equals the
+# exact threshold join wherever LSH recall reaches 1 (with these
+# params, P[miss | j=0.9] = (1-0.9⁶)²¹ ≈ 1e-7; the fixture's
+# above-threshold pairs are found exhaustively — validated against
+# D03-style exact enumeration in tests).
 #
 # Scale: signatures + band keys are computed MAP-SIDE per doc by the
-# shared NumPy kernel (``minhash_prepared`` — r16; formerly an
-# explode + 126-min aggregation, whose exchange the kernel deletes);
-# candidate generation shuffles (band_id, band_hash) — uniform keys;
-# the quadratic step happens only within buckets. Hot buckets
-# (boilerplate corpora) get capped — see MAX_BUCKET below.
+# shared NumPy kernel (``minhash_prepared``); candidate generation
+# shuffles (band, bkey) — uniform keys; the quadratic step happens only
+# within buckets. Hot buckets (boilerplate corpora) get capped — see
+# MAX_BUCKET below.
 # ---------------------------------------------------------------------------
 
 MINHASH_K = 126
@@ -481,415 +480,109 @@ WHERE (CAST(n_common AS DOUBLE) / (sa.nw + sb.nw - n_common)) >= {MINHASH_THRESH
 """
 
 
-def minhash_signatures(docs: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """Per-doc MinHash signature as k columns h0..h{k-1}.
-
-    One exploded-token pass, k parallel MIN aggregates — map-side
-    partial aggregation keeps the shuffle at one row per doc. The
-    per-function salt is a second xxhash64 argument (multi-column
-    hash), not a string concat — measured ~3× cheaper (no per-hash
-    string allocation).
-
-    Rejected: deriving the k functions from two base hashes
-    (hᵢ = h₁ + i·h₂, Broder's 2-universal composition). It computes
-    signatures 10× faster (0.4s vs 4.0s at sf0.1) but the functions
-    are linearly DEPENDENT across i: a token whose (h₁, h₂) are
-    jointly small wins the min for long runs of consecutive i, so
-    rows within a band are correlated, band-collision probability is
-    no longer j^rows, and banding both loses recall (959,577 of
-    964,854 true pairs at sf0.1) and floods buckets with correlated
-    mid-similarity collisions (d04 end-to-end 107s vs 30s).
-    Independent per-i salts are the price of the banding math.
-    """
-    tok = _distinct_tokens(docs)
-    return tok.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("w"))).alias(f"h{i}")
-            for i in range(k)
-        ]
-    )
-
-
-def band_keys(bands: int = LSH_BANDS, rows: int = LSH_ROWS) -> Column:
-    """The per-doc band-key array (xxhash64 over each band's ``rows``
-    signature columns) — THE definition of d04's bucketing, shared by
-    ``lsh_candidate_pairs``, the cap-stress measurement script, and
-    the surviving-band model test so the key recipe cannot silently
-    drift between the operator and its evidence."""
-    return F.array(
-        *[
-            F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
-            for b in range(bands)
-        ]
-    )
-
-
-# dedupe="auto" switches first_band → group_by when the worst band
-# holds more capped keys than this. Measured (CAP_STRESS.json
-# "crossover": 40-copy templates, cap 30, both modes median-of-3):
-# ~break-even at 50 capped keys/band, group_by faster at 200, 4× at
-# 600 — first_band's per-row scan is linear in this count, so 64
-# sits just past the measured indifference zone and well before the
-# cliff.
-AUTO_CAPPED_KEYS_PER_BAND = 64
-
-
 def lsh_candidate_pairs(
-    sigs: DataFrame,
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
-    size_ratio: tuple[int, int] | None = None,
-    max_bucket: int = MAX_BUCKET,
-    dedupe: str = "first_band",
-    auto_capped_keys_per_band: int = AUTO_CAPPED_KEYS_PER_BAND,
-    prekeyed: bool = False,
+    reps: DataFrame, max_bucket: int = MAX_BUCKET
 ) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) sharing ≥1 band.
+    """Distinct candidate pairs (doc_a < doc_b) sharing ≥1 LSH band.
 
-    ``prekeyed=True`` (r17, explicit — was a column-name sniff, advisor
-    r16): ``sigs`` already carries the band-key array as a ``keys``
-    column (the map-side kernel path, ``minhash_prepared``); the
-    default recombines h0..h{k-1} signature columns via
-    :func:`band_keys`. Explicit because a caller whose signature frame
-    coincidentally carried a ``keys`` column would otherwise silently
-    take the wrong path and produce a wrong candidate set.
+    ``reps`` carries (doc_id, nw, keys): the distinct-token count and
+    the band-key array of ``minhash_prepared``. The keys are
+    posexploded into (band, bkey) rows. A bucket holding more than
+    ``max_bucket`` rows is dropped by a broadcast anti-join against
+    the capped-bucket table (a map-side partial count; at most
+    docs·bands/max_bucket rows by pigeonhole). The surviving rows are
+    pinned to the session's shuffle width on (band, bkey)
+    (``pin_expansion_parallelism``) and self-join on (band, bkey,
+    a.doc_id < b.doc_id), both sides reading one exchange; a pair
+    colliding in several bands is emitted once per band and
+    ``distinct()`` folds the copies. Every join condition is a plain
+    comparison, so the join runs in whole-stage codegen.
 
-    ``dedupe`` is the SCALE knob (a parameter, not prose — the d10
-    planes / s04 blocks doctrine), choosing how each pair is emitted
-    exactly once:
-
-    - ``"first_band"`` (default): the carried-key-array formulation
-      below — fastest when duplication is real, but the cap's
-      surviving-band bookkeeping rides a broadcast map whose per-band
-      lists are linearly scanned per banded row (advisor note, r6);
-      fine while capped buckets are few (every measured corpus), a
-      cliff if a corpus ever produces thousands of capped keys per
-      band.
-    - ``"group_by"``: no carried array, no broadcast map at all —
-      capped buckets are dropped with a broadcast ANTI-JOIN against
-      the capped-bucket table (a real hash lookup JVM-side), pairs
-      are emitted once per shared surviving band and deduped by one
-      ``groupBy(doc_a, doc_b)`` exchange. Narrower banded rows
-      (no bands-long array), immune to the cap×first-band
-      interaction by construction (any surviving band emits), and
-      the only state that scales with boilerplate is the capped
-      TABLE, never a per-row scan — the formulation to run when the
-      cap actually fires at scale. Costs the O(dup_factor·|pairs|)
-      dedupe exchange the default exists to avoid (measured 6.5s →
-      3.6s on the dup-dense sf0.1; equality of output asserted in
-      ``test_lsh_capped_path_matches_surviving_band_model``).
-    - ``"auto"`` (r9): probe the capped-bucket table once (a tiny
-      eager aggregate on the same (band, bkey) grouping both modes
-      compute anyway) and pick the measured winner for the regime:
-      ``group_by`` iff the WORST band's capped-key count exceeds
-      ``auto_capped_keys_per_band``, else ``first_band``. The signal
-      is capped keys per band — exactly what first_band's per-row
-      map scan is linear in — and the crossover is measured, not
-      guessed (CAP_STRESS.json "crossover" table: ~break-even at 50
-      capped keys/band, group_by ahead at 200, 4× ahead at 600;
-      first_band ahead on the dup-dense zero-cap bench corpus).
-      The probe is an extra job over the banded subtree; auto-mode
-      callers that cannot afford recomputing signatures should
-      checkpoint ``sigs`` first (the cap_stress harness pattern).
-
-    One pass: the per-doc band signatures are built as an array and
-    EXPLODED (a union of 32 per-band selects would re-evaluate the
-    signature aggregation once per band — measured 25× slower at
-    sf0.1). The hot-bucket cap is a map-side partial count on the
-    same (band, bkey) partitioning the self-join shuffles on (the
-    capped-bucket set is tiny — at most docs·bands/max_bucket
-    entries — and is broadcast back as one map row); the identical
-    a/b subplans then share one exchange via Spark's ReuseExchange.
-
-    Distinctness is FIRST-COLLIDING-BAND emission, not a dedupe
-    shuffle: each banded row carries the doc's full band-key array,
-    and the join keeps a collision at band b only when no band < b
-    also collides — so each pair is emitted exactly once, by
-    construction. The r1-r4 formulation deduped with a
-    ``groupBy(doc_a, doc_b)``: on a dup-dense corpus every pair
-    arrives once PER shared band (measured at sf0.1: 25.2M join
-    emissions for 3.31M distinct pairs), and shuffling + hash-
-    aggregating that dup_factor×|pairs| stream was the dominant cost
-    of the whole query (d04 end-to-end 6.5s → 3.6s warm after the
-    switch; identical candidate set, asserted pairwise in tests).
-    Scale trade, stated: the carried key array widens each banded
-    shuffle row by ``bands`` longs (~(bands+3)/3× bytes on the
-    O(docs·bands) banded table), bought against eliminating the
-    O(dup_factor·|pairs|) dedupe exchange + hash aggregate — the
-    right side of the trade whenever duplication is real, which is
-    exactly when near-dedup is worth running. The earlier-band check
-    runs only on raw collisions (post equi-join probe), never on the
-    full banded table.
-
-    Cap-awareness: the carried array (``skeys``) has CAPPED bands
-    nulled out, so "earliest shared band" means earliest shared
-    SURVIVING band. Checking the raw key array instead would be a
-    silent recall bug: a pair whose first shared band fell in a
-    capped (dropped) bucket but that also shares a later, uncapped
-    band would be suppressed at every band — the groupBy-dedupe
-    formulation emitted it via the later band. The null-safe
-    ``coalesce(= , false)`` makes two capped entries compare
-    not-equal (NULL = NULL → NULL → false), so capped bands can
-    neither emit nor suppress. Property-tested with a bucket-cap
-    model in ``test_first_band_emission_cap_aware``.
-
-    ``size_ratio=(num, den)``: if ``sigs`` carries an ``nw`` column
-    (per-doc distinct-token count), add the set-size necessary
-    condition for Jaccard ≥ num/den to the join:
-    ``den·min(nw) ≥ num·max(nw)`` (j = |∩|/|∪| ≥ t forces
-    |small| ≥ |∩| ≥ t·|∪| ≥ t·|large|). ZERO recall cost by
-    construction, and it prunes mid-similarity band collisions before
-    they reach pair emission — measured 7.6M → 3.3M candidates.
-    Integer num/den keeps the boundary exact (0.9·10 in floats could
-    tip either way on j = 0.9 pairs).
+    The join also carries the set-size necessary condition for
+    Jaccard ≥ MINHASH_THRESHOLD = num/den: ``den·min(nw) ≥
+    num·max(nw)`` (j = |∩|/|∪| ≥ t forces |small| ≥ |∩| ≥ t·|∪| ≥
+    t·|large|). It costs no recall and prunes mid-similarity band
+    collisions before they reach pair emission; integer num/den keeps
+    the boundary exact (0.9·10 in floats could tip either way on
+    j = 0.9 pairs).
     """
-    if dedupe not in ("first_band", "group_by", "auto"):
-        raise ValueError(f"unknown dedupe mode {dedupe!r}")
-    # Both forms produce array<long> keys and share everything
-    # downstream; the signature-column form stays for callers that
-    # build signatures as an aggregate (tests, cap_stress).
-    if prekeyed:
-        if "keys" not in sigs.columns:
-            raise ValueError(
-                "lsh_candidate_pairs(prekeyed=True) requires a 'keys' "
-                "array column (see minhash_prepared)"
-            )
-        keys = F.col("keys")
-    else:
-        keys = band_keys(bands, rows)
-    carry = ["nw"] if size_ratio is not None else []
-    banded = sigs.select("doc_id", *carry, keys.alias("keys")).select(
-        "doc_id", *carry, "keys", F.posexplode("keys").alias("band", "bkey")
+    from fractions import Fraction
+
+    ratio = Fraction(str(MINHASH_THRESHOLD))
+    num, den = ratio.numerator, ratio.denominator
+    banded = reps.select(
+        "doc_id", "nw", F.posexplode("keys").alias("band", "bkey")
     )
-    banded = pin_expansion_parallelism(banded, "band", "bkey")
-    if dedupe == "auto":
-        # one eager probe of the capped-bucket table (rows ≤
-        # docs·bands/max_bucket by pigeonhole — tiny): the worst
-        # band's capped-key count is the quantity first_band's
-        # per-row map scan is linear in, so it IS the mode signal
-        # (measured crossover in CAP_STRESS.json / AUTO_... above)
-        worst = (
-            banded.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket)
-            .groupBy("band")
-            .agg(F.count(F.lit(1)).alias("nk"))
-            .agg(F.max("nk").alias("mx"))
-            .first()["mx"]
-        )
-        dedupe = (
-            "group_by"
-            if (worst or 0) > auto_capped_keys_per_band
-            else "first_band"
-        )
-    if dedupe == "group_by":
-        # Scale-mode: drop capped buckets via broadcast anti-join
-        # (hash lookup, no per-row list scan), emit per surviving
-        # band, dedupe with one exchange. The capped-bucket count
-        # reuses the pinned (band, bkey) exchange like the default.
-        capped_tbl = (
-            banded.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket)
-            .select("band", "bkey")
-        )
-        slim = banded.drop("keys").join(
-            F.broadcast(capped_tbl), ["band", "bkey"], "left_anti"
-        )
-        ga, gb = slim.alias("a"), slim.alias("b")
-        gcond = (
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-        )
-        if size_ratio is not None:
-            num, den = size_ratio
-            gcond = (
-                gcond
-                & (F.col("a.nw") * den >= F.col("b.nw") * num)
-                & (F.col("b.nw") * den >= F.col("a.nw") * num)
-            )
-        return (
-            ga.join(gb, gcond)
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-    # Cap pathologically hot buckets (constant-content guard).
-    # (band, bkey) buckets over max_bucket are collected into ONE
-    # broadcast map row (band → capped keys; ≤ docs·bands/max_bucket
-    # entries by pigeonhole, i.e. a few MB even at 10^10 docs) and
-    # used twice: (1) drop banded rows whose own bucket is capped,
-    # (2) null those bands out of the carried key array so the
-    # first-band check sees only surviving bands. groupBy reuses the
-    # pinned (band, bkey) exchange (partial agg, no extra sort —
-    # cheaper than the old count-window, which sorted every
-    # partition). A global agg always yields exactly one row, so the
-    # broadcast cross join is a no-op multiplier even with zero
-    # capped buckets (empty map).
     capped = (
         banded.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("bucket_n"))
         .filter(F.col("bucket_n") > max_bucket)
-        .groupBy("band")
-        .agg(F.sort_array(F.collect_list("bkey")).alias("capped_keys"))
-        .groupBy()
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("band", "capped_keys"))
-            ).alias("capped_map")
-        )
+        .select("band", "bkey")
     )
-    # Fast path (r7): when NO bucket is capped — the common case; the
-    # cap exists for boilerplate pathologies, and at fixture scale it
-    # never fires — skip the per-row array rewrite entirely (one
-    # cardinality check per row instead of bands × array_contains
-    # scans). When the cap DOES fire, entries at positions PAST the
-    # row's own band are never read (the filter reads position band+1,
-    # the earlier-band check positions 1..band), so the rewrite
-    # short-circuits there: the per-row scan cost is
-    # O(own_band × capped_keys_per_band), half the full-width scan on
-    # average and ~zero for band-0 rows. Remaining scale note: the
-    # surviving scan is linear in each band's capped-key list
-    # (Spark's complex-type lookups are all linear); its size is
-    # bounded by the cap pigeonhole and measured in CAP_STRESS.json —
-    # a corpus that pushes thousands of capped keys per band should
-    # run ``dedupe="group_by"`` instead (anti-join cap, no map scan
-    # at all — the parameterized escape hatch for the advisor's r6
-    # note).
-    no_caps = F.coalesce(F.cardinality("capped_map") == 0, F.lit(True))
-    banded = (
-        banded.crossJoin(F.broadcast(capped))
-        .withColumn(
-            "skeys",
-            F.when(no_caps, F.col("keys")).otherwise(
-                F.transform(
-                    "keys",
-                    lambda k, i: F.when(i > F.col("band"), k)
-                    .when(
-                        F.array_contains(
-                            F.try_element_at(F.col("capped_map"), i), k
-                        ),
-                        F.lit(None),
-                    )
-                    .otherwise(k),
-                )
-            ),
-        )
-        .filter(
-            F.element_at(F.col("skeys"), F.col("band") + 1).isNotNull()
-        )
-        .drop("keys", "capped_map")
+    # The anti-join goes below the pinned repartition: Spark would push
+    # it there anyway, and then a count over the repartitioned rows
+    # would shuffle the banded table a second time, unaggregated.
+    banded = pin_expansion_parallelism(
+        banded.join(F.broadcast(capped), ["band", "bkey"], "left_anti"),
+        "band",
+        "bkey",
     )
-    a = banded.alias("a")
-    b2 = banded.alias("b")
-    # Emit only at the pair's FIRST shared surviving band: bands are
-    # 0-based, key-array positions 1-based; band 0 has no earlier
-    # bands (the WHEN guard also keeps sequence() ascending under
-    # ANSI mode). coalesce(=, false): capped (NULL) entries never
-    # count as an earlier match.
-    #
-    # r16 measurement note (guide §1: measure, don't assume): this
-    # predicate runs once per RAW band collision (25.2M at sf0.1)
-    # inside the join, and the whole subtree executes INTERPRETED
-    # (the self-join condition embeds HOFs, so whole-stage codegen is
-    # off here). An unrolled static OR chain of element_at
-    # comparisons — 20 clauses, ~7 expression nodes each, which the
-    # optimizer De-Morgans into a 23-clause conjunction — measured
-    # 4× SLOWER than this exists() form (candidates 8.6s → 33.7s
-    # median at sf0.1): per-probe tree-walk overhead of ~140
-    # interpreted nodes beats the cost of allocating one small
-    # sequence array + running one tight HOF loop. Kept exists().
-    earlier_band_matches = F.when(F.col("a.band") == 0, F.lit(False)).otherwise(
-        F.exists(
-            F.sequence(F.lit(1), F.col("a.band")),
-            lambda i: F.coalesce(
-                F.element_at(F.col("a.skeys"), i)
-                == F.element_at(F.col("b.skeys"), i),
-                F.lit(False),
-            ),
-        )
-    )
+    a, b = banded.alias("a"), banded.alias("b")
     cond = (
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bkey") == F.col("b.bkey"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
+        & (F.col("a.nw") * den >= F.col("b.nw") * num)
+        & (F.col("b.nw") * den >= F.col("a.nw") * num)
     )
-    if size_ratio is not None:
-        num, den = size_ratio
-        cond = (
-            cond
-            & (F.col("a.nw") * den >= F.col("b.nw") * num)
-            & (F.col("b.nw") * den >= F.col("a.nw") * num)
+    return (
+        a.join(b, cond)
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
-    cond = cond & ~earlier_band_matches
-    return a.join(b2, cond).select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        .distinct()
     )
 
 
 def d04_candidate_pairs(
     docs: DataFrame, grouped: DataFrame | None = None
 ) -> DataFrame:
-    """d04's candidate set at REPRESENTATIVE level (r16): one LSH
-    probe row per DISTINCT token set (``d04_grouped``), banded and
-    size-pruned exactly as before. Shared by the catalog query and
-    bench.py's beyond-broadcast verify measurement so both verify the
-    IDENTICAL candidate set (a drifting copy would invalidate the
-    bench delta). ``grouped`` lets the full pipeline pass its
+    """d04's candidate set at REPRESENTATIVE level: one LSH probe row
+    per DISTINCT token set (``d04_grouped``, keyed by its min doc_id),
+    banded by ``lsh_candidate_pairs``. Shared by the catalog query and
+    bench.py's verify-stage measurement so both verify the IDENTICAL
+    candidate set. ``grouped`` lets the full pipeline pass its
     materialized group table (see the query body).
 
-    r16 optimization (guide §8: decide with small rows): the fixture
-    — like every web corpus — is dominated by exact token-set
-    duplicate cliques (sf0.1: 5000 docs but only 3935 distinct sets,
-    with one 248-member clique). Pre-r16, every clique member entered
-    every band bucket, so bucket self-joins exploded quadratically in
-    clique size (25.2M raw probe pairs for 3.31M member candidates,
-    all evaluated by the INTERPRETED first-band predicate — the
-    dominant cost AND the dominant variance of the whole query).
-    Collapsing to one representative per distinct set first shrinks
-    that to 7.2M size-pruned probes → 1.65M rep candidates → 28,865
-    verified rep pairs (the fixture's distinct sets are template
-    variants clustered around j≈0.65, where 21×6 banding passes ~80%
-    of pairs — banding cannot prune a mid-similarity-dense rep set
-    harder without giving up the j ≥ 0.9 recall contract, so exact
-    verification carries that load by design); member-level pairs
-    are reconstructed AFTER verification by joining group metadata
-    (``d04_dedup_minhash_lsh``), where every derived pair's jaccard
-    is IDENTICAL to its rep pair's by construction (identical token
-    sets). Signatures + band keys + nw + group folds all come from
-    the shared map-side NumPy kernel (``minhash_prepared``) in ONE
-    pass — no explode, no 126-min-agg groupBy exchange (measured
-    3.5s single-split for the old signature subtree alone). The
-    candidate set may differ from the pre-r16 xxhash64 family in
-    mid-similarity collisions, but d04's OUTPUT is exact-verified and
-    LSH recall at j ≥ 0.9 is a hash-family-independent banding
-    property (P[miss] ≈ 1e-7) — re-certified against the exact
-    all-pairs oracle at sf0.001/0.01/0.1 after the switch.
+    The fixture — like every web corpus — is dominated by exact
+    token-set duplicate cliques (sf0.1: 5000 docs but only 3935
+    distinct sets, with one 248-member clique). Banding members would
+    put every clique member in every band bucket and grow each bucket
+    self-join quadratically in clique size; banding representatives
+    gives 1.65M rep candidates → 28,865 verified rep pairs at sf0.1.
+    The distinct sets are template variants clustered around j≈0.65,
+    where 21×6 banding passes ~80% of pairs, so exact verification
+    carries that load: banding cannot prune harder without giving up
+    the j ≥ 0.9 recall contract. Member-level pairs are reconstructed
+    AFTER verification from group metadata (``d04_dedup_minhash_lsh``),
+    where every derived pair's jaccard is IDENTICAL to its rep pair's
+    (identical token sets).
     """
-    from fractions import Fraction
-
     if grouped is None:
         grouped = d04_grouped(docs)
     reps = grouped.select(F.col("gid").alias("doc_id"), "nw", "keys")
-    ratio = Fraction(str(MINHASH_THRESHOLD))
-    candidates = lsh_candidate_pairs(
-        reps, size_ratio=(ratio.numerator, ratio.denominator), prekeyed=True
-    )
-    return candidates.select("doc_a", "doc_b")
+    return lsh_candidate_pairs(reps)
 
 
 @query("d04_dedup_minhash_lsh", oracle=D04_ORACLE)
 def d04_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (Broder) 21x6-band LSH candidates + exact-Jaccard
     verification — the production near-dup recipe; quadratic work is
-    confined to band buckets, and (r16) exact token-set duplicates
-    are collapsed to one representative BEFORE banding, with member
-    pairs reconstructed from verified representative pairs (identical
-    token sets ⇒ identical jaccard; within-group pairs are exactly
-    1.0). Output unchanged — hash-exact vs the all-pairs oracle."""
+    confined to band buckets, and exact token-set duplicates are
+    collapsed to one representative BEFORE banding, with member pairs
+    reconstructed from verified representative pairs (identical token
+    sets ⇒ identical jaccard; within-group pairs are exactly 1.0).
+    Hash-exact vs the all-pairs oracle."""
     docs = table(spark, sf_dir, "documents")
     # Materialize the kernel output and the (tiny) group table ONCE
     # per run — eager localCheckpoint, the d11/bench cands_mat
@@ -2255,35 +1948,27 @@ def d13_edit_distance_linkage(
 #
 # Spark-first plan — ZERO corpus-side exchanges (vs d04's one):
 # cross-corpus LSH is structurally asymmetric (eval suites are MBs;
-# the corpus is the 100 TB side), so instead of d04's agg-built
-# signatures + self-join, every stage becomes a per-row expression on
-# the corpus scan:
-#   1. MinHash signatures + the 21 band keys computed MAP-SIDE in an
-#      Arrow-vectorized NumPy kernel (``minhash_key_batches``,
-#      closure-local inside ``cross_corpus_neardup``): one
-#      md5-64 base hash per distinct token, then 126 splitmix64-mixed
-#      derived functions with per-row mins via minimum.reduceat —
-#      see the kernel docstring for the hash-family independence
-#      argument and the measured 2 orders of magnitude over the
-#      Catalyst higher-order-function form (interpreted, per-element
-#      boxed allocation: 40 ms/doc and GC-bound at 50-token docs vs
-#      ~0.1 ms/doc vectorized). Since r16, d04 uses the SAME kernel
-#      (``minhash_prepared`` / ``_minhash_kernel``) — its self-join
-#      materializes the kernel output once for both sides via the
-#      pinned (band, bkey) exchange + ReuseExchange, so the former
-#      explode+agg form's signature shuffle is deleted there too; at
-#      10^10 docs that shuffle moved ~1 KB/doc ≈ 10 TB, while the
-#      map-side form moves nothing.
-#   2. The EVAL index — (band, bkey) → eval doc, carrying its token
-#      set, set size, and full key array — is BROADCAST (21 rows per
-#      eval doc).
+# the corpus is the 100 TB side), so instead of d04's self-join every
+# stage becomes a per-row expression on the corpus scan:
+#   1. MinHash signatures + the 21 band keys computed MAP-SIDE by the
+#      Arrow-vectorized NumPy kernel d04 also runs
+#      (``minhash_key_batches``): one md5-64 base hash per distinct
+#      token, then 126 splitmix64-mixed derived functions with per-row
+#      mins via minimum.reduceat — see the kernel docstring for the
+#      hash-family independence argument and the measured 2 orders of
+#      magnitude over the Catalyst higher-order-function form
+#      (interpreted, per-element boxed allocation: 40 ms/doc and
+#      GC-bound at 50-token docs vs ~0.1 ms/doc vectorized).
+#   2. The EVAL index — (band, bkey) → eval doc, carrying its hashed
+#      token set, set size, and full key array — is BROADCAST (21 rows
+#      per eval doc).
 #   3. Corpus rows posexplode their 21 keys MAP-SIDE and probe the
-#      broadcast index; first-shared-band emission (d04's dedupe
-#      trick, both key arrays are in-row post-join) removes the
-#      distinct() shuffle; the d04 set-size necessary condition
+#      broadcast index; first-shared-band emission (both key arrays
+#      are in-row post-join) emits each pair once without a distinct()
+#      shuffle; the d04 set-size necessary condition
 #      (10·min(nw) ≥ 9·max(nw) for J ≥ 0.9) prunes inside the join.
 #   4. Exact-Jaccard verification map-side: array_intersect of the
-#      two in-row token sets — no re-join with the corpus.
+#      two in-row hashed token sets — no re-join with the corpus.
 # Physical plan: Scan → MapInPandas → Generate → BroadcastHashJoin →
 # Filter → Project. No ShuffleExchange anywhere (plan-shape-tested) —
 # the whole decontamination is one pass over the corpus, which is the
@@ -2323,153 +2008,119 @@ WHERE (CAST(n_common AS DOUBLE) / (sa.nw + sb.nw - n_common))
 """
 
 
-def _minhash_kernel(
-    n_hashes: int, n_bands: int, n_rows: int, emit_toks: bool
-):
-    """Factory for the map-side MinHash kernel shared by d15
-    (``cross_corpus_neardup``, ``emit_toks=True``) and d04's prepared
-    path (``emit_toks=False`` — d04 verifies via a separate token
-    join, so shipping token arrays through the banded shuffle would
-    multiply corpus token bytes by ``n_bands``; see
-    ``d04_candidate_pairs``). One definition so the hash family
-    cannot drift between the two operators.
+def minhash_key_batches(it):
+    """mapInPandas kernel shared by d04, d15 and st13: (doc_id, text)
+    batches → (doc_id, toks, nw, keys, g1, g2) — the distinct-token
+    set as hashed longs, its size, the 21 LSH band keys of a
+    126-function MinHash signature, and two token-SET content folds.
 
-    The factory args become closure cells. The package is pickled by
-    value, so workers without it on sys.path still run the kernel; a
-    module-level helper the kernel calls must stay pure (no Spark,
-    DataFrame or JVM handles)."""
+    Hash family: base(t) = first 8 little-endian bytes of md5(t);
+    h_i(t) = splitmix64(base(t) XOR salt_i), salt_i = splitmix64(i+1).
+    Each h_i is a full avalanche over (base, i) — functions are
+    independent, so the j^rows banding math holds. A linear
+    composition h₁ + i·h₂ computes signatures faster, but its
+    functions are dependent across i: a token whose (h₁, h₂) are
+    jointly small wins the min for long runs of consecutive i, rows
+    within a band correlate, and banding both loses recall (959,577 of
+    964,854 true pairs at sf0.1) and floods buckets with mid-similarity
+    collisions. The only shared failure channel is a base-hash
+    collision between two distinct tokens (2⁻⁶⁴ per pair, p09's
+    accepted error model); the same base hashes are the ``toks`` every
+    consumer intersects to verify Jaccard. Deterministic pure-integer
+    ops — partition-independent.
 
-    def minhash_key_batches(it):
-        """mapInPandas kernel: (doc_id, text) batches → (doc_id,
-        [toks,] nw, keys): distinct-token set (when ``emit_toks``),
-        its size, and the 21 LSH band keys of a 126-function MinHash
-        signature.
+    Why a kernel and not Catalyst expressions: the equivalent
+    transform/array_min higher-order-function tree is interpreted
+    with per-element boxed allocation — measured 40 ms/doc (GC-bound)
+    on 50-token docs at x10 vs ~0.1 ms/doc here (md5 once per token,
+    NumPy-vectorized mixing, minimum.reduceat row mins)."""
+    import hashlib
 
-        Hash family: base(t) = first 8 little-endian bytes of md5(t);
-        h_i(t) = splitmix64(base(t) XOR salt_i), salt_i =
-        splitmix64(i+1). Each h_i is a full avalanche over (base, i)
-        — functions are independent, so the j^rows banding math holds
-        (unlike the linear h₁+i·h₂ composition d04's docstring
-        rejects); the only shared failure channel is a base-hash
-        collision between two distinct tokens (2⁻⁶⁴ per pair, p09's
-        accepted error model). Deterministic pure-integer ops —
-        partition-independent. The OUTPUT of every consumer is
-        exact-verified, so the signature needs determinism and
-        independence, not any particular hash family.
+    import numpy as np
 
-        Why a kernel and not Catalyst expressions: the equivalent
-        transform/array_min higher-order-function tree is interpreted
-        with per-element boxed allocation — measured 40 ms/doc
-        (GC-bound) on 50-token docs at x10 vs ~0.1 ms/doc here (md5
-        once per token, NumPy-vectorized mixing, minimum.reduceat row
-        mins) — the documented Pandas-UDF escape hatch."""
-        import hashlib
+    def mix(x):
+        # splitmix64 finalizer, vectorized over uint64 (wraparound is
+        # numpy's native uint64 behavior — no ANSI overflow)
+        x = x + np.uint64(0x9E3779B97F4A7C15)
+        x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+        x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+        return x ^ (x >> np.uint64(31))
 
-        import numpy as np
+    salts = mix(np.arange(1, MINHASH_K + 1, dtype=np.uint64))
+    md5 = hashlib.md5
 
-        def mix(x):
-            # splitmix64 finalizer, vectorized over uint64 (wraparound
-            # is numpy's native uint64 behavior — no ANSI overflow)
-            x = x + np.uint64(0x9E3779B97F4A7C15)
-            x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            return x ^ (x >> np.uint64(31))
-
-        salts = mix(np.arange(1, n_hashes + 1, dtype=np.uint64))
-        md5 = hashlib.md5
-
-        for pdf in it:
-            # NULL-text rows are dropped like the pre-r16 Catalyst
-            # form (split(NULL) → NULL → explode drops the doc), and
-            # an empty Arrow batch is skipped outright — np.split on
-            # a zero-row frame would otherwise raise (advisor r16).
-            pdf = pdf[pdf["text"].notna()]
-            if not len(pdf):
-                continue
-            # dict.fromkeys == array_distinct (first-occurrence order;
-            # split(" ") keeps empties exactly like Spark's split on
-            # the single-space regex)
-            toks = [
-                list(dict.fromkeys(t.split(" "))) for t in pdf["text"]
-            ]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            starts = np.zeros(len(toks), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            base = np.fromiter(
-                (
-                    int.from_bytes(md5(t.encode()).digest()[:8], "little")
-                    for row in toks
-                    for t in row
-                ),
-                dtype=np.uint64,
-                count=int(lens.sum()),
-            )
-            # one salt at a time keeps peak memory O(n_tokens), not
-            # O(K·n_tokens); reduceat needs non-empty segments — text
-            # is never null and "".split(" ") is [''], so lens ≥ 1
-            sig = np.empty((n_hashes, len(toks)), dtype=np.uint64)
-            for i in range(n_hashes):
-                sig[i] = np.minimum.reduceat(mix(base ^ salts[i]), starts)
-            keys = np.empty((n_bands, len(toks)), dtype=np.uint64)
-            for b in range(n_bands):
-                k = sig[b * n_rows]
-                for r in range(1, n_rows):
-                    k = mix(k ^ sig[b * n_rows + r])
-                keys[b] = k
-            keys_signed = keys.astype(np.int64).T
-            out = pdf.assign(
-                nw=lens.astype("int32"), keys=list(keys_signed)
-            )
-            if emit_toks:
-                out = out.assign(toks=toks)
-                yield out[["doc_id", "toks", "nw", "keys"]]
-            else:
-                # d04 path: two order-invariant 64-bit content-SET
-                # folds (xor / wraparound-sum of independently mixed
-                # base hashes) — together with nw they key the exact
-                # token-set duplicate groups d04 collapses before LSH
-                # (see d04 block comment). Two independent folds ⇒ a
-                # false group merge needs a simultaneous collision in
-                # both (~2⁻¹²⁸ per set pair) — far below the repo's
-                # accepted 64-bit token-hash error model. The base
-                # hashes themselves ride along as the per-doc hashed
-                # token array so the verify stage reads the SAME
-                # materialized table instead of re-tokenizing docs.
-                m1 = mix(base ^ np.uint64(0xD04C0FFEE0000001))
-                m2 = mix(base ^ np.uint64(0xD04C0FFEE0000002))
-                g1 = np.bitwise_xor.reduceat(m1, starts).astype(np.int64)
-                g2 = np.add.reduceat(m2, starts).astype(np.int64)
-                out = out.assign(
-                    g1=g1,
-                    g2=g2,
-                    toks=np.split(base.astype(np.int64), starts[1:]),
-                )
-                yield out[["doc_id", "toks", "nw", "keys", "g1", "g2"]]
-
-    return minhash_key_batches
+    for pdf in it:
+        # NULL-text rows are dropped (no token set to sign), and an
+        # empty Arrow batch is skipped outright — np.split on a
+        # zero-row frame would otherwise raise.
+        pdf = pdf[pdf["text"].notna()]
+        if not len(pdf):
+            continue
+        # dict.fromkeys == array_distinct (first-occurrence order;
+        # split(" ") keeps empties exactly like Spark's split on the
+        # single-space regex)
+        toks = [list(dict.fromkeys(t.split(" "))) for t in pdf["text"]]
+        lens = np.fromiter(
+            (len(t) for t in toks), dtype=np.int64, count=len(toks)
+        )
+        starts = np.zeros(len(toks), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        base = np.fromiter(
+            (
+                int.from_bytes(md5(t.encode()).digest()[:8], "little")
+                for row in toks
+                for t in row
+            ),
+            dtype=np.uint64,
+            count=int(lens.sum()),
+        )
+        # one salt at a time keeps peak memory O(n_tokens), not
+        # O(K·n_tokens); reduceat needs non-empty segments — text is
+        # not null here and "".split(" ") is [''], so lens ≥ 1
+        sig = np.empty((MINHASH_K, len(toks)), dtype=np.uint64)
+        for i in range(MINHASH_K):
+            sig[i] = np.minimum.reduceat(mix(base ^ salts[i]), starts)
+        keys = np.empty((LSH_BANDS, len(toks)), dtype=np.uint64)
+        for b in range(LSH_BANDS):
+            k = sig[b * LSH_ROWS]
+            for r in range(1, LSH_ROWS):
+                k = mix(k ^ sig[b * LSH_ROWS + r])
+            keys[b] = k
+        # two order-invariant 64-bit content-SET folds (xor /
+        # wraparound-sum of independently mixed base hashes) —
+        # together with nw they key the exact token-set duplicate
+        # groups d04 collapses before LSH. Two independent folds ⇒ a
+        # false group merge needs a simultaneous collision in both
+        # (~2⁻¹²⁸ per set pair).
+        m1 = mix(base ^ np.uint64(0xD04C0FFEE0000001))
+        m2 = mix(base ^ np.uint64(0xD04C0FFEE0000002))
+        out = pdf.assign(
+            toks=np.split(base.astype(np.int64), starts[1:]),
+            nw=lens.astype("int32"),
+            keys=list(keys.astype(np.int64).T),
+            g1=np.bitwise_xor.reduceat(m1, starts).astype(np.int64),
+            g2=np.add.reduceat(m2, starts).astype(np.int64),
+        )
+        yield out[["doc_id", "toks", "nw", "keys", "g1", "g2"]]
 
 
-def minhash_prepared(docs: DataFrame) -> DataFrame:
-    """Map-side (doc_id, nw, keys, g1, g2) — nw = |distinct tokens|,
-    keys = the 21 LSH band keys, (g1, g2) = order-invariant token-SET
-    content folds — via the shared NumPy kernel, ONE pass over
-    (doc_id, text) with no aggregation shuffle. This is d04's r16
-    signature path: the former explode → 126-min-agg groupBy form
-    paid one exchange plus 126 xxhash64 per token occurrence inside
-    the (at fixture scale single-split) scan task; here the whole
-    signature+banding computation is a per-row kernel that
-    parallelizes with the scan (``widen_scan`` pins fixture-scale
-    parallelism; a no-op once the input has real splits) and shuffles
-    NOTHING — the first exchange in the d04 plan is the tiny
-    group-collapse aggregation."""
-    kernel = _minhash_kernel(MINHASH_K, LSH_BANDS, LSH_ROWS, emit_toks=False)
-    return widen_scan(docs.select("doc_id", "text")).mapInPandas(
-        kernel,
+def _minhash(df: DataFrame) -> DataFrame:
+    """``minhash_key_batches`` over ``df``'s (doc_id, text)."""
+    return df.select("doc_id", "text").mapInPandas(
+        minhash_key_batches,
         "doc_id long, toks array<long>, nw int, keys array<long>, "
         "g1 long, g2 long",
     )
+
+
+def minhash_prepared(docs: DataFrame) -> DataFrame:
+    """d04's map-side signature table (doc_id, toks, nw, keys, g1,
+    g2) — see ``minhash_key_batches`` — in ONE pass over (doc_id,
+    text) with no aggregation shuffle. The per-row kernel parallelizes
+    with the scan (``widen_scan`` pins fixture-scale parallelism; a
+    no-op once the input has real splits), so the first exchange in
+    the d04 plan is the tiny group-collapse aggregation."""
+    return _minhash(widen_scan(docs.select("doc_id", "text")))
 
 
 #: Group-key columns of ``minhash_prepared`` output: two independent
@@ -2514,18 +2165,8 @@ def cross_corpus_neardup(
 
     ratio = Fraction(str(threshold))
     num, den = ratio.numerator, ratio.denominator
-    minhash_key_batches = _minhash_kernel(
-        MINHASH_K, LSH_BANDS, LSH_ROWS, emit_toks=True
-    )
-
-    def prepared(df: DataFrame) -> DataFrame:
-        return df.select("doc_id", "text").mapInPandas(
-            minhash_key_batches,
-            "doc_id long, toks array<string>, nw int, keys array<long>",
-        )
-
     ev_idx = (
-        prepared(ev)
+        _minhash(ev)
         .select(
             F.col("doc_id").alias("eval_id"),
             F.col("toks").alias("etoks"),
@@ -2540,7 +2181,7 @@ def cross_corpus_neardup(
             F.posexplode("ekeys").alias("band", "bkey"),
         )
     )
-    tr = prepared(train).select(
+    tr = _minhash(train).select(
         "doc_id",
         "toks",
         "nw",
@@ -2557,13 +2198,12 @@ def cross_corpus_neardup(
         & (F.col("a.nw") * den >= F.col("e.enw") * num)
         & (F.col("e.enw") * den >= F.col("a.nw") * num)
     )
-    # first-shared-band emission (d04's dedupe without its capped-map
-    # machinery — cross-corpus buckets are bounded by the eval side):
-    # a pair colliding in several bands is emitted ONLY at its first,
-    # checked in-row against both carried key arrays. (r16: an
-    # unrolled OR-chain variant measured 4× slower on d04's
-    # interpreted self-join — see lsh_candidate_pairs — so the
-    # exists() form stays here too.)
+    # first-shared-band emission (cross-corpus buckets are bounded by
+    # the eval side, so no cap): a pair colliding in several bands is
+    # emitted ONLY at its first, checked in-row against both carried
+    # key arrays. An unrolled OR chain of element_at comparisons
+    # measured 4× slower than this exists() form in an interpreted
+    # join condition.
     earlier = F.when(F.col("a.band") == 0, F.lit(False)).otherwise(
         F.exists(
             F.sequence(F.lit(1), F.col("a.band")),

@@ -16,30 +16,6 @@ from omop_dump_to_parquet_spark.sources.parquet import table
 QUERIES, _ = load_catalog()
 
 
-def test_minhash_estimates_jaccard(spark, sf_small):
-    """MinHash signature agreement ≈ true Jaccard (the estimator the
-    banding geometry is built on)."""
-    docs = table(spark, sf_small, "documents").limit(50)
-    sigs = D.minhash_signatures(docs)
-    rows = {r["doc_id"]: [r[f"h{i}"] for i in range(D.MINHASH_K)] for r in sigs.collect()}
-    toks = {
-        r["doc_id"]: set(r["text"].split(" "))
-        for r in docs.select("doc_id", "text").collect()
-    }
-    ids = sorted(rows)
-    checked = 0
-    for i in range(0, 10):
-        for j in range(i + 1, 10):
-            a, b = ids[i], ids[j]
-            true_j = len(toks[a] & toks[b]) / len(toks[a] | toks[b])
-            est = sum(
-                1 for x, y in zip(rows[a], rows[b]) if x == y
-            ) / D.MINHASH_K
-            assert abs(est - true_j) < 0.2, (a, b, true_j, est)
-            checked += 1
-    assert checked == 45
-
-
 def test_lsh_candidates_superset_of_high_jaccard_pairs(spark, sf_small):
     """Recall property: every pair above the operating threshold must
     appear in the candidate set (this is what makes the verified
@@ -47,7 +23,7 @@ def test_lsh_candidates_superset_of_high_jaccard_pairs(spark, sf_small):
     docs = table(spark, sf_small, "documents")
     cands = {
         (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(D.minhash_signatures(docs)).collect()
+        for r in D.lsh_candidate_pairs(D.minhash_prepared(docs)).collect()
     }
     toks = {
         r["doc_id"]: set(r["text"].split(" "))
@@ -64,27 +40,24 @@ def test_lsh_candidates_superset_of_high_jaccard_pairs(spark, sf_small):
 
 
 def test_lsh_cap_aware_first_band_emission(spark):
-    """r6 fix: a pair whose FIRST shared band falls in a capped
-    (dropped) bucket but that shares a later, uncapped band must
-    still be emitted exactly once. The r5 earlier-band check read
-    the raw key array, so the capped band suppressed the pair at
-    every later band — silent recall loss in exactly the
-    boilerplate-heavy regime the cap targets."""
-    # bands=3, rows=1 ⇒ band key is a pure function of h{b}. Docs
-    # 0..9 share h0 (band-0 bucket of 10, capped at 5); docs 0 and 1
-    # also share h1 (bucket of 2, survives). No h2 collisions.
+    """A pair whose FIRST shared band falls in a capped (dropped)
+    bucket but that shares a later, uncapped band must still be
+    emitted, exactly once — the cap must cost recall only for pairs
+    whose every shared bucket is capped."""
+    # 3 hand-built band keys per doc. Docs 0..9 share band 0's key
+    # (bucket of 10, capped at 5); docs 0 and 1 also share band 1's
+    # key (bucket of 2, survives). No band-2 collisions; equal nw so
+    # the size prune passes every pair.
     rows = [
-        (i, 777, 1000 if i < 2 else 1000 + i + 50, 2000 + i)
+        (i, 6, [777, 1000 if i < 2 else 1000 + i + 50, 2000 + i])
         for i in range(10)
     ]
-    sigs = spark.createDataFrame(
-        rows, "doc_id bigint, h0 bigint, h1 bigint, h2 bigint"
+    reps = spark.createDataFrame(
+        rows, "doc_id bigint, nw int, keys array<bigint>"
     )
     out = [
         (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(
-            sigs, bands=3, rows=1, max_bucket=5
-        ).collect()
+        for r in D.lsh_candidate_pairs(reps, max_bucket=5).collect()
     ]
     assert out == [(0, 1)], out  # emitted via band 1, exactly once
 
@@ -96,16 +69,15 @@ def test_lsh_capped_set_matches_surviving_band_model(spark, sf_small):
     from collections import Counter
 
     docs = table(spark, sf_small, "documents")
-    sigs = D.minhash_signatures(docs)
+    prepared = D.minhash_prepared(docs).select("doc_id", "nw", "keys")
     cap = 8
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(sigs, max_bucket=cap).collect()
+        for r in D.lsh_candidate_pairs(prepared, max_bucket=cap).collect()
     }
-    keys_df = sigs.select(
-        "doc_id", D.band_keys().alias("keys")
-    ).collect()
-    kmap = {r["doc_id"]: list(r["keys"]) for r in keys_df}
+    rows = prepared.collect()
+    kmap = {r["doc_id"]: list(r["keys"]) for r in rows}
+    nw = {r["doc_id"]: r["nw"] for r in rows}
     bucket = Counter(
         (b, k) for ks in kmap.values() for b, k in enumerate(ks)
     )
@@ -118,11 +90,21 @@ def test_lsh_capped_set_matches_surviving_band_model(spark, sf_small):
         (a, b)
         for i, a in enumerate(ids)
         for b in ids[i + 1 :]
-        if any(
+        if _size_ok(nw[a], nw[b])
+        and any(
             x is not None and x == y for x, y in zip(surv[a], surv[b])
         )
     }
+    assert any(v > cap for v in bucket.values()), "cap never fired"
     assert got == want, (len(got), len(want))
+
+
+def _size_ok(nw_a, nw_b):
+    """lsh_candidate_pairs' set-size prune for MINHASH_THRESHOLD."""
+    from fractions import Fraction
+
+    r = Fraction(str(D.MINHASH_THRESHOLD))
+    return min(nw_a, nw_b) * r.denominator >= max(nw_a, nw_b) * r.numerator
 
 
 def test_simhash_identical_docs_collide(spark, sf_small):
@@ -236,30 +218,30 @@ def test_demux_stub_is_honest():
 
 def test_size_prefilter_loses_no_recall(spark, sf_small):
     """The set-size necessary condition must drop ONLY pairs that
-    cannot reach the threshold: filtered candidates still contain
-    every true pair, and every dropped pair is verifiably below it."""
-    from pyspark.sql import functions as F
-
+    cannot reach the threshold: every candidate passes it, and every
+    band collision it drops is verifiably below the threshold."""
     docs = table(spark, sf_small, "documents")
-    nw = docs.select(
-        "doc_id",
-        F.size(F.array_distinct(F.split("text", " "))).alias("nw"),
-    )
-    sigs = D.minhash_signatures(docs).join(nw, "doc_id")
-    unfiltered = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(sigs.drop("nw")).collect()
-    }
+    prepared = D.minhash_prepared(docs)
     filtered = {
         (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(sigs, size_ratio=(9, 10)).collect()
+        for r in D.lsh_candidate_pairs(prepared).collect()
     }
-    assert filtered <= unfiltered
+    keys = {r["doc_id"]: r["keys"] for r in prepared.collect()}
+    ids = sorted(keys)
+    colliding = {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if any(x == y for x, y in zip(keys[a], keys[b]))
+    }
+    assert filtered < colliding  # the prune fired
     toks = {
         r["doc_id"]: set(r["text"].split(" "))
         for r in docs.select("doc_id", "text").collect()
     }
-    for a, b in unfiltered - filtered:
+    for a, b in filtered:
+        assert _size_ok(len(toks[a]), len(toks[b])), (a, b)
+    for a, b in colliding - filtered:
         jac = len(toks[a] & toks[b]) / len(toks[a] | toks[b])
         assert jac < D.MINHASH_THRESHOLD, (a, b, jac)
 
@@ -341,19 +323,8 @@ def test_shuffle_verify_matches_broadcast_verify(spark, sf_small):
     """The beyond-broadcast verification path (shuffle joins on doc id)
     must return exactly the broadcast path's pairs, and must actually
     plan without a broadcast of the token table."""
-    from fractions import Fraction
-
-    from pyspark.sql import functions as F
-
     docs = table(spark, sf_small, "documents")
-    nw = docs.select(
-        "doc_id", F.size(F.array_distinct(F.split("text", " "))).alias("nw")
-    )
-    sigs = D.minhash_signatures(docs).join(nw, "doc_id")
-    r = Fraction(str(D.MINHASH_THRESHOLD))
-    cands = D.lsh_candidate_pairs(
-        sigs, size_ratio=(r.numerator, r.denominator)
-    ).select("doc_a", "doc_b")
+    cands = D.lsh_candidate_pairs(D.minhash_prepared(docs))
 
     bc = D.verify_jaccard_pairs(docs, cands, D.MINHASH_THRESHOLD, True)
     sh = D.verify_jaccard_pairs(docs, cands, D.MINHASH_THRESHOLD, False)
@@ -1171,20 +1142,18 @@ def test_bmp_decode_kernel_matches_reference(spark):
 
 
 def test_lsh_capped_path_matches_surviving_band_model(spark):
-    """Drive lsh_candidate_pairs' CAPPED branch (the broadcast map is
-    non-empty, so the skeys rewrite + own-band short-circuit actually
-    run — at fixture scale the cap never fires and the r7 fast path
-    skips all of it) against a brute-force surviving-band model built
-    from the operator's own band_keys() definition: pairs emitted =
-    exactly the pairs sharing ≥1 surviving band, each exactly once."""
+    """Drive lsh_candidate_pairs with a cap that fires (the anti-join
+    drops real buckets — at fixture scale MAX_BUCKET never does)
+    against a brute-force surviving-band model built from the
+    kernel's own band keys: pairs emitted = exactly the pairs sharing
+    ≥1 surviving band, each exactly once."""
     import collections
     import itertools
 
     from omop_dump_to_parquet_spark.operators.dedup import (
         LSH_BANDS,
-        band_keys,
         lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_prepared,
     )
 
     rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(12)]
@@ -1195,11 +1164,9 @@ def test_lsh_capped_path_matches_surviving_band_model(spark):
         (i, f"u{i} v{i} w{i} x{i} y{i} z{i}") for i in range(24, 40)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(docs)
-    keys = {
-        r["doc_id"]: list(r["keys"])
-        for r in sigs.select("doc_id", band_keys().alias("keys")).collect()
-    }
+    # every doc has 6 distinct tokens, so the size prune passes all
+    sigs = minhash_prepared(docs).select("doc_id", "nw", "keys")
+    keys = {r["doc_id"]: list(r["keys"]) for r in sigs.collect()}
     cap = 8
     bucket = collections.Counter(
         (b, k[b]) for k in keys.values() for b in range(LSH_BANDS)
@@ -1230,73 +1197,6 @@ def test_lsh_capped_path_matches_surviving_band_model(spark):
         for r in lsh_candidate_pairs(sigs, max_bucket=10**9).collect()
     }
     assert got < uncapped
-    # the group_by scale mode (no carried array, anti-join cap) must
-    # produce the IDENTICAL candidate set under the same cap — any
-    # surviving band emits, dedupe by exchange
-    got_gb = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(
-            sigs, max_bucket=cap, dedupe="group_by"
-        ).collect()
-    }
-    assert got_gb == want
-
-
-def test_lsh_auto_mode_picks_winner_and_matches_both(spark):
-    """dedupe="auto" (r9): output-identical to both explicit modes on
-    BOTH sides of the crossover, and the probe thresholds on the
-    worst band's capped-key count — group_by (anti-join plan) past
-    ``auto_capped_keys_per_band``, first_band (skeys plan, no
-    anti-join) at or below it, first_band when nothing caps."""
-    from omop_dump_to_parquet_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(12)]
-    rows += [
-        (i, f"u{i} v{i} w{i} x{i} y{i} z{i}") for i in range(12, 30)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = minhash_signatures(docs)
-
-    def pairs(**kw):
-        return {
-            (r["doc_a"], r["doc_b"])
-            for r in lsh_candidate_pairs(sigs, **kw).collect()
-        }
-
-    def plan(**kw):
-        return lsh_candidate_pairs(
-            sigs, **kw
-        )._jdf.queryExecution().toString()
-
-    # capped regime, threshold 0: the 12-doc identical cluster blows
-    # the cap (≥1 capped key per core band > 0) → group_by
-    cap = 8
-    assert "LeftAnti" in plan(
-        max_bucket=cap, dedupe="auto", auto_capped_keys_per_band=0
-    )
-    assert (
-        pairs(max_bucket=cap, dedupe="auto", auto_capped_keys_per_band=0)
-        == pairs(max_bucket=cap, dedupe="first_band")
-        == pairs(max_bucket=cap, dedupe="group_by")
-    )
-
-    # capped regime, DEFAULT threshold: one template's worth of
-    # capped keys per band is far below the measured crossover, so
-    # auto must stay on first_band despite the cap firing
-    assert "LeftAnti" not in plan(max_bucket=cap, dedupe="auto")
-    assert pairs(max_bucket=cap, dedupe="auto") == pairs(
-        max_bucket=cap, dedupe="first_band"
-    )
-
-    # uncapped regime: no bucket caps → first_band plan (no anti-join)
-    assert "LeftAnti" not in plan(max_bucket=10**9, dedupe="auto")
-    got_auto = pairs(max_bucket=10**9, dedupe="auto")
-    assert got_auto == pairs(max_bucket=10**9, dedupe="first_band")
-    assert got_auto == pairs(max_bucket=10**9, dedupe="group_by")
-    assert got_auto  # the identical cluster must collide somewhere
 
 
 def test_png_decode_kernel_matches_reference(spark):

@@ -155,11 +155,11 @@ def test_vector_math_matches_numpy(spark):
 )
 @settings(max_examples=200, deadline=None)
 def test_first_band_emission_equals_distinct_any_band(keys):
-    """The r5 LSH dedupe-by-construction invariant
-    (dedup.lsh_candidate_pairs): emitting a colliding pair only at its
-    FIRST shared band yields each any-band-colliding pair EXACTLY
-    once — the same set the groupBy-dedupe formulation produced, with
-    no dedupe pass. Tiny key range (0-5) forces heavy collisions so
+    """The LSH emit-once invariant d15 relies on
+    (dedup.cross_corpus_neardup): emitting a colliding pair only at
+    its FIRST shared band yields each any-band-colliding pair EXACTLY
+    once — the set a distinct() over all band collisions gives, with
+    no distinct pass. Tiny key range (0-5) forces heavy collisions so
     multi-band duplication actually occurs."""
     n, bands = len(keys), 4
     any_band = {
@@ -178,59 +178,6 @@ def test_first_band_emission_equals_distinct_any_band(keys):
                     emitted.append((a, b))
     assert set(emitted) == any_band
     assert len(emitted) == len(set(emitted))  # exactly-once, no dedupe needed
-
-
-@given(
-    st.lists(  # per-doc band-key rows: doc i -> keys[i][band]
-        st.lists(st.integers(min_value=0, max_value=5), min_size=4, max_size=4),
-        min_size=2,
-        max_size=12,
-    ),
-    st.integers(min_value=1, max_value=6),  # bucket cap
-)
-@settings(max_examples=200, deadline=None)
-def test_first_band_emission_cap_aware(keys, cap):
-    """The r6 cap-aware invariant (dedup.lsh_candidate_pairs): with a
-    hot-bucket cap, "first shared band" must mean first shared
-    SURVIVING band. Model: null out a doc's band entry when its
-    (band, key) bucket exceeds the cap; a pair must be emitted
-    exactly once iff it shares ≥1 surviving band — in particular a
-    pair whose FIRST raw shared band was capped but that shares a
-    later uncapped band is still emitted (the r5 formulation checked
-    raw keys and silently dropped it)."""
-    from collections import Counter
-
-    n, bands = len(keys), 4
-    bucket = Counter((c, keys[d][c]) for d in range(n) for c in range(bands))
-    surv = [
-        [keys[d][c] if bucket[(c, keys[d][c])] <= cap else None
-         for c in range(bands)]
-        for d in range(n)
-    ]
-    want = {
-        (a, b)
-        for a in range(n)
-        for b in range(a + 1, n)
-        if any(
-            surv[a][c] is not None and surv[a][c] == surv[b][c]
-            for c in range(bands)
-        )
-    }
-    emitted = []
-    for c in range(bands):
-        for a in range(n):
-            for b in range(a + 1, n):
-                if (
-                    surv[a][c] is not None
-                    and surv[a][c] == surv[b][c]
-                    and not any(
-                        surv[a][e] is not None and surv[a][e] == surv[b][e]
-                        for e in range(c)
-                    )
-                ):
-                    emitted.append((a, b))
-    assert set(emitted) == want
-    assert len(emitted) == len(set(emitted))
 
 
 @given(st.integers(min_value=0, max_value=2**60 - 1),

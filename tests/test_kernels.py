@@ -180,8 +180,7 @@ ALLOWED_ARROW_CALLS = collections.Counter(
         ("functions/kernels.py", "map_rows", "mapInPandas"),
         ("operators/dedup.py", "simhash_chunks", "mapInPandas"),
         ("operators/dedup.py", "semdedup_prune_bucketed", "applyInPandas"),
-        ("operators/dedup.py", "minhash_prepared", "mapInPandas"),
-        ("operators/dedup.py", "cross_corpus_neardup.prepared", "mapInPandas"),
+        ("operators/dedup.py", "_minhash", "mapInPandas"),
         ("operators/similarity.py", "cosine_pair_gemm", "applyInPandas"),
         ("operators/similarity.py", "s06_ann_int8", "mapInPandas"),
         ("operators/similarity.py", "kmeans_bucket_assign._assigned", "mapInPandas"),

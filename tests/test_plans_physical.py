@@ -165,20 +165,13 @@ def test_no_plan_smells_catalogwide(spark, sf_small, name):
 
 
 def test_d04_cap_machinery_has_no_window(spark, sf_small):
-    """r6 regression guard, r16 restated at its TRUE invariant: the
-    hot-bucket cap is a partial-agg count broadcast back as one map
-    row — the r5 formulation computed it with a COUNT WINDOW, which
-    sorted every partition of the banded table (the largest
-    intermediate in the query). No Window node may reappear anywhere
-    in the candidate subtree, and the cap map must arrive via a
-    broadcast (nested-loop) join. The r6-r15 form of this test
-    asserted "no Sort node" on the whole plan, which held only while
-    the signature AGGREGATE's size estimates happened to plan the
-    banded self-join as broadcast at fixture scale; the r16 kernel's
-    unknown stats let the INITIAL plan pick sort-merge there (AQE
-    rewrites it at runtime from real sizes), and an SMJ sort is
-    legitimate join planning — at production scale it is the correct
-    strategy — not the r5 window regression."""
+    """The hot-bucket cap is a partial-agg count whose capped buckets
+    leave through a broadcast anti-join — never a COUNT WINDOW, which
+    would sort every partition of the banded table (the largest
+    intermediate in the query). And the band self-join's condition is
+    plain comparisons: a lambda or higher-order function there is
+    interpreted per raw band collision and keeps the join out of
+    whole-stage codegen."""
     from omop_dump_to_parquet_spark.operators.dedup import (
         d04_candidate_pairs,
     )
@@ -195,7 +188,19 @@ def test_d04_cap_machinery_has_no_window(spark, sf_small):
         )
     )
     assert not re.search(r"\(\d+\) Window", plan), plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+    # formatted mode details each node in a block headed "(N) Name"
+    joins = [
+        n.splitlines()
+        for n in re.split(r"\n(?=\(\d+\) )", plan)
+        if "Join type:" in n
+    ]
+    anti = [n[0] for n in joins if "Join type: LeftAnti" in n]
+    assert anti and all(h.endswith(" BroadcastHashJoin") for h in anti), plan
+    conds = [l for n in joins if "Join type: Inner" in n for l in n]
+    conds = [l for l in conds if l.startswith("Join condition")]
+    assert conds, plan
+    for cond in conds:
+        assert "lambdafunction" not in cond and "exists(" not in cond, cond
 
 
 def test_q35_not_exists_decorrelates_to_anti_join(spark, sf_small):

@@ -12,44 +12,29 @@ from omop_dump_to_parquet_spark.operators import dedup as D
 from omop_dump_to_parquet_spark.sources.parquet import table
 
 
-def _verified(spark, docs, candidates):
-    return {
-        (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
-        for r in D.verify_jaccard_pairs(
-            docs, candidates, D.MINHASH_THRESHOLD
-        ).collect()
-    }
-
-
 def test_d04_collapsed_pipeline_matches_legacy_agg_path(spark, sf_small):
-    """d04's r16 pipeline (map-side NumPy kernel → exact token-set
-    group collapse → rep-level LSH + verify → member expansion) must
-    yield the SAME output as the pre-r16 member-level explode+agg
-    xxhash64 path. Candidate sets differ (different hash family,
-    rep-level vs member-level) but both outputs are exact-verified,
-    so both equal the true ≥-threshold pair set wherever LSH recall
-    is 1 — asserted end-to-end on the fixture, jaccard values
-    included."""
-    from fractions import Fraction
-
-    docs = table(spark, sf_small, "documents")
-    ratio = Fraction(str(D.MINHASH_THRESHOLD))
-    sr = (ratio.numerator, ratio.denominator)
-
+    """d04's pipeline (map-side NumPy kernel → exact token-set group
+    collapse → rep-level LSH + verify → member expansion) must yield
+    exactly the brute-force all-pairs word-set Jaccard ≥ threshold
+    set on the fixture, jaccard values included."""
     new = {
         (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
         for r in D.d04_dedup_minhash_lsh(spark, sf_small).collect()
     }
-
-    nw_df = docs.select(
-        "doc_id",
-        F.size(F.array_distinct(F.split(F.col("text"), " "))).alias("nw"),
-    )
-    legacy_sigs = D.minhash_signatures(docs).join(nw_df, "doc_id")
-    legacy = _verified(
-        spark, docs, D.lsh_candidate_pairs(legacy_sigs, size_ratio=sr)
-    )
-    assert new == legacy and len(new) > 0
+    docs = table(spark, sf_small, "documents")
+    toks = {
+        r["doc_id"]: set(r["text"].split(" "))
+        for r in docs.select("doc_id", "text").collect()
+    }
+    ids = sorted(toks)
+    brute = set()
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            nc = len(toks[a] & toks[b])
+            jac = nc / (len(toks[a]) + len(toks[b]) - nc)
+            if jac >= D.MINHASH_THRESHOLD:
+                brute.add((a, b, round(jac, 9)))
+    assert new == brute and len(new) > 0
 
 
 def test_d04_group_collapse_is_exact(spark, sf_small):
@@ -123,31 +108,3 @@ def test_d04_plan_uses_kernel_not_agg_signatures(spark, sf_small):
         spark, sf_small
     )._jdf.queryExecution().executedPlan().toString()
     assert "min(xxhash64" not in plan
-
-
-def test_lsh_candidate_pairs_precomputed_keys_branch(spark, sf_small):
-    """The ``keys``-column fast path in lsh_candidate_pairs must be
-    plan-sugar only: feeding the SAME band keys as a precomputed
-    column yields the identical candidate set as the h0..h{k-1}
-    signature-column form."""
-    docs = table(spark, sf_small, "documents").limit(60)
-    sigs = D.minhash_signatures(docs)
-    via_cols = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(sigs).collect()
-    }
-    prekeyed = sigs.select("doc_id", D.band_keys().alias("keys"))
-    via_keys = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(prekeyed, prekeyed=True).collect()
-    }
-    assert via_cols == via_keys and len(via_cols) > 0
-    # the r17 explicit flag fails loud both ways: prekeyed=True without
-    # a keys column, and a stray 'keys' column no longer silently
-    # switches the path (the band_keys recombination requires h0..)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="prekeyed=True"):
-        D.lsh_candidate_pairs(sigs, prekeyed=True)
-    with _pytest.raises(Exception):
-        D.lsh_candidate_pairs(prekeyed).collect()  # no h0.. columns
