@@ -23,6 +23,9 @@ from __future__ import annotations
 import argparse
 import sys
 
+from .sinks import REFERENCE_SIZING
+from .sources.jdbc import DEFAULT_FETCH_SIZE
+
 DEFAULT_N_TO_FETCH = 2_000_000  # reference dump_table.py:28
 
 
@@ -38,7 +41,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--lower-bound", type=int)
     p.add_argument("--upper-bound", type=int)
     p.add_argument("--num-partitions", type=int)
-    p.add_argument("--fetch-size", type=int, default=2048)
+    p.add_argument("--fetch-size", type=int, default=DEFAULT_FETCH_SIZE)
     p.add_argument("--row-limit", type=int, default=DEFAULT_N_TO_FETCH)
     p.add_argument(
         "--grab-everything",
@@ -53,7 +56,11 @@ def build_parser() -> argparse.ArgumentParser:
         help="schema normalization cast, repeatable",
     )
     p.add_argument("--output-path", required=True)
-    p.add_argument("--max-records-per-file", type=int, default=2**19)
+    p.add_argument(
+        "--max-records-per-file",
+        type=int,
+        default=REFERENCE_SIZING["rows_per_file"],
+    )
     p.add_argument("--num-files", type=int)
     return p
 

@@ -70,7 +70,3 @@ def dsum_expr(sql_expr: str, prec: int = 18, scale: int = 2) -> str:
     """Oracle-SQL twin of :func:`dsum` for a raw column expression."""
     return f"CAST(SUM(CAST({sql_expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"
 
-
-def davg_expr(sql_expr: str, prec: int = 18, scale: int = 2) -> str:
-    """Oracle-SQL twin of :func:`davg`."""
-    return f"({dsum_expr(sql_expr, prec, scale)} / COUNT({sql_expr}))"

@@ -752,11 +752,6 @@ SIMHASH_CHUNK_BITS = 15
 SIMHASH_MAX_HAMMING = 3
 
 
-def simhash_token_hash() -> Column:
-    """60-bit md5-derived token hash (cross-engine reproducible)."""
-    return F.conv(F.substring(F.md5("w"), 1, 15), 16, 10).cast("long")
-
-
 def simhash_chunks(docs: DataFrame) -> DataFrame:
     """Per-doc SimHash as 4 columns c0..c3 (15 bits each).
 

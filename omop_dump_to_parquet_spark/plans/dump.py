@@ -41,6 +41,19 @@ class DumpResult:
     def ok(self) -> bool:
         return self.report.ok
 
+    def failure(self, expected_rows: int | None = None) -> str | None:
+        """Why this dump is not verified, or None. Beyond the report's
+        count, schema and sizing checks, a caller holding an
+        independent row expectation passes it as ``expected_rows``."""
+        if self.ok and expected_rows in (None, self.rows_written):
+            return None
+        r = self.report
+        return (
+            f"failed verification: rows_written={self.rows_written} "
+            f"expected_rows={expected_rows} count_matches={r.count_matches} "
+            f"schema_matches={r.schema_matches} sizing_ok={r.sizing_ok}"
+        )
+
 
 def dump_table(
     spark: SparkSession,

@@ -5,21 +5,22 @@ The reference's single server-side cursor (``dump_table.py:81-111``)
 has a brutal operational property at scale: ANY failure at row
 1,999,999,999 of a 2-billion-row dump restarts from row zero — there
 is no record of what already landed. This plan splits the dump into
-key-range chunks, writes each chunk to its own subdirectory, and
-marks completion with a commit marker written ONLY after the chunk's
-data is fully on disk. A re-run:
+key-range chunks, lands each chunk in its own subdirectory through
+:func:`plans.dump.dump_table`, and marks completion with a commit
+marker written ONLY after that chunk verified. A re-run:
 
 - validates every existing marker against ITS OWN recorded range and
   parameters (markers are self-describing JSON) and fails fast if the
   resume was invoked with different chunking — silently mixing two
   chunk layouts would duplicate and drop rows;
 - skips every chunk whose marker matches (the work is durable);
-- re-dumps any chunk without a marker — ``write_parquet``'s overwrite
-  mode replaces the chunk directory wholesale, so a torn write from
-  the crashed attempt is cleared by the rewrite itself;
-- verifies the reassembled lake by READ-BACK: the union of chunk
-  directories must count exactly the rows the markers claim
-  (the one-shot dump's count-conservation check, plans/dump.py).
+- re-dumps any chunk without a marker — the write's overwrite mode
+  replaces the chunk directory wholesale, so a torn write from the
+  crashed attempt is cleared by the rewrite itself;
+- verifies the reassembled lake from its footers: count against the
+  markers, schema against the source, and file sizing
+  (:func:`verify.verify_parquet`; ``_dump_manifest`` is hidden from it,
+  as every ``_`` name is).
 
 Coverage: the FIRST chunk is unbounded below (and owns NULL keys) and
 the LAST is unbounded above — the same convention as Spark's JDBC
@@ -47,7 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fs
-from ..sinks import REFERENCE_SIZING, write_parquet
+from ..sinks import REFERENCE_SIZING
+from ..verify import VerifyReport, verify_parquet
+from .dump import dump_table
 
 MANIFEST_DIR = "_dump_manifest"
 
@@ -59,7 +62,7 @@ def _marker_path(output_path: str, chunk: int) -> str:
 @dataclass
 class ResumableDumpResult:
     rows_written: int
-    read_back_rows: int
+    report: VerifyReport
     chunks_total: int
     chunks_skipped: int  # already committed by a previous attempt
     chunks_dumped: int
@@ -67,10 +70,10 @@ class ResumableDumpResult:
 
     @property
     def ok(self) -> bool:
-        """Count conservation, proven by read-back (not bookkeeping):
-        the reassembled lake must contain exactly the rows the chunk
-        markers claim."""
-        return self.read_back_rows == self.rows_written
+        """The reassembled lake holds exactly the rows the chunk
+        markers claim, in the source's schema and file sizing, as its
+        footers tell."""
+        return self.report.ok
 
 
 def dump_table_resumable(
@@ -82,7 +85,6 @@ def dump_table_resumable(
     upper: int,
     n_chunks: int = 8,
     max_records_per_file: int = REFERENCE_SIZING["rows_per_file"],
-    fail_after_chunk: int | None = None,
 ) -> ResumableDumpResult:
     """Dump ``source`` into ``n_chunks`` key-range chunks with
     restartable progress.
@@ -93,10 +95,6 @@ def dump_table_resumable(
     FILTER it. The first chunk takes everything ≤ its high bound
     (including NULL keys) and the last everything ≥ its low bound, so
     stale bounds skew chunk sizes but can never lose rows.
-
-    ``fail_after_chunk`` is a TEST hook: raise after committing that
-    many chunks, simulating a mid-dump crash so tests can assert the
-    resume behavior.
     """
     span = upper - lower + 1
     per = max(1, span // n_chunks)
@@ -150,46 +148,35 @@ def dump_table_resumable(
             cond = key >= lo
         else:
             cond = (key >= lo) & (key <= hi)
-        part = source.filter(cond)
-
-        from pyspark.sql import Observation
-
-        obs = Observation(f"chunk_{i}")
-        observed = part.observe(obs, F.count(F.lit(1)).alias("n"))
-        # mode="overwrite" replaces the chunk directory wholesale —
-        # this is the torn-write cleanup: an unmarked dir from a
-        # crashed attempt is simply rewritten.
-        write_parquet(
-            observed,
+        result = dump_table(
+            spark,
+            source.filter(cond),
             chunk_dir,
-            mode="overwrite",
             max_records_per_file=max_records_per_file,
         )
-        n = int(obs.get["n"])
-        # data is durable; NOW commit the self-describing marker
+        failure = result.failure()
+        if failure:  # no marker: the next attempt re-dumps the chunk
+            raise RuntimeError(f"chunk {i} {failure}")
+        n = result.rows_written
+        # data is durable and verified; NOW commit the self-describing
+        # marker
         fs.write_text(spark, marker, json.dumps({**expect, "rows": n}))
         chunk_rows[i] = n
         total_rows += n
         dumped += 1
 
-        if fail_after_chunk is not None and dumped >= fail_after_chunk:
-            raise RuntimeError(
-                f"simulated crash after {dumped} chunks (test hook)"
-            )
-
-    # Read back with the SOURCE schema supplied: a zero-row chunk
-    # writes a directory with no data files, and if every chunk is
-    # empty (empty source / degenerate bounds) schema inference over
-    # the glob would error instead of reporting a trivially-conserved
-    # zero-row dump.
-    read_back = (
-        spark.read.schema(source.schema)
-        .parquet(f"{output_path}/chunk=*")
-        .count()
+    # An empty chunk still lands one 0-row file carrying the schema, so
+    # an all-empty dump verifies as a conserved 0-row lake.
+    report = verify_parquet(
+        spark,
+        output_path,
+        expected_count=total_rows,
+        expected_schema=source.schema,
+        max_records_per_file=max_records_per_file,
     )
     return ResumableDumpResult(
         rows_written=total_rows,
-        read_back_rows=read_back,
+        report=report,
         chunks_total=n_chunks,
         chunks_skipped=skipped,
         chunks_dumped=dumped,

@@ -5,16 +5,18 @@ pipeline (``dump_table.py:175-252``) re-expressed for a source that
 never stops arriving. Structured Streaming's FileStreamSource replaces
 the reference's cursor loop: each discovered file becomes a
 micro-batch, the checkpoint (WAL + source offsets) replaces the
-reference's "run it again from zero" recovery story, and the sink is
-the SAME sized-parquet writer the batch plan uses, applied per epoch
-through ``foreachBatch``.
+reference's "run it again from zero" recovery story, and each epoch
+lands through ``foreachBatch`` into :func:`plans.dump.dump_table`, so
+it is sized like a batch dump and verified from its footers (count,
+schema, file sizing).
 
 Exactly-once: FileStreamSource offsets are committed to the checkpoint
 only after the batch sink returns, so a crash between write and commit
-replays the epoch. The sink appends with ``epoch_id`` recorded in the
-batch directory name, so a replayed epoch overwrites its own output
-instead of duplicating it (idempotent-by-epoch — the standard
-``foreachBatch`` exactly-once recipe).
+replays the epoch, and so does an epoch that fails verification (the
+sink raises). The sink writes with ``epoch_id`` recorded in the batch
+directory name, so a replayed epoch overwrites its own output instead
+of duplicating it (idempotent-by-epoch — the standard ``foreachBatch``
+exactly-once recipe).
 
 Scale: file discovery is the driver-side cost — at 100 TB/day use
 ``maxFilesPerTrigger`` to bound batch size and compact the landing
@@ -28,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ..sinks import REFERENCE_SIZING, write_parquet
+from ..sinks import REFERENCE_SIZING
 from ..sources.jdbc import normalize
+from .dump import dump_table
 
 
 def stream_dump(
@@ -57,17 +60,15 @@ def stream_dump(
     stream = normalize(stream, casts or {})
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        # ONE writer for batch and stream (r10 review): going through
-        # sinks.write_parquet keeps the row-group/page sizing contract
-        # (parquet.block.size / parquet.page.size — the reference's
-        # ~4-row-groups-per-file intent) identical across batch-dumped
-        # and stream-dumped shards of the same lake.
-        write_parquet(
+        result = dump_table(
+            spark,
             batch_df,
             f"{output_path}/epoch={epoch_id}",
-            mode="overwrite",
             max_records_per_file=max_records_per_file,
         )
+        failure = result.failure()
+        if failure:  # uncommitted: a restart replays the epoch
+            raise RuntimeError(f"epoch {epoch_id} {failure}")
 
     return (
         stream.writeStream.foreachBatch(sink)

@@ -15,8 +15,10 @@ optimizer can prune (CLOB-wide NOTE rows make this matter).
 
 Scale: with a hive/bucket layout, restrict the rewrite to partitions
 that actually contain updated keys (partition-pruned anti join) — the
-100 TB version rewrites only touched partitions. The swap is the same
-atomic-rename recipe as sinks/compact.py.
+100 TB version rewrites only touched partitions. The rewrite lands
+through :func:`plans.dump.dump_table`, so it is verified from its
+footers (count, schema, file sizing) before the same atomic-rename
+swap as sinks/compact.py.
 """
 
 from __future__ import annotations
@@ -24,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import fs
-from ..sinks import REFERENCE_SIZING, write_parquet
+from ..sinks import REFERENCE_SIZING
+from .dump import dump_table
 
 
 def upsert_parquet(
@@ -88,7 +91,7 @@ def upsert_parquet(
         # rows per key in the lake (the anti-join removes the old row,
         # then the union keeps every batch duplicate) and the
         # conservation check cannot catch it — it counts the same
-        # duplicates on both sides (r10 review). "Updates win" is only
+        # duplicates on both sides. "Updates win" is only
         # well-defined for one row per key: fail fast and make the
         # caller resolve intra-batch order (a CDC batch carries an
         # ordering column — see operators/pipeline.py p05's
@@ -105,30 +108,25 @@ def upsert_parquet(
         kept = current.join(
             updates.select(*key_cols), on=key_cols, how="left_anti"
         )
-        merged = updates.unionByName(kept)
-
-        # Two-sided conservation: observe counts the rows that ACTUALLY
-        # flowed into the write; the independent expectation is
-        # n_updates (pinned above) + kept.count() (deterministic: a
-        # parquet scan anti-joined against the pinned cache).
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation()
-        merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
-        write_parquet(merged, tmp, max_records_per_file=max_records_per_file)
-        written = obs.get["n"]
+        result = dump_table(
+            spark,
+            updates.unionByName(kept),
+            tmp,
+            max_records_per_file=max_records_per_file,
+        )
+        # Two-sided conservation: dump_table checks the footers against
+        # the rows that flowed into the write; the independent
+        # expectation is n_updates (pinned above) + kept.count()
+        # (deterministic: a parquet scan anti-joined against the pinned
+        # cache).
         expected = n_updates + kept.count()
-        n = spark.read.parquet(tmp).count()
-        if not (n == written == expected):  # keep the original lake
-            fs.delete(spark, tmp)
-            raise RuntimeError(
-                f"upsert row-count mismatch: read-back={n} "
-                f"written={written} expected={expected}"
-            )
+        failure = result.failure(expected)
+        if failure:
+            fs.delete(spark, tmp)  # keep the original lake
+            raise RuntimeError(f"upsert {failure}")
     finally:
         updates.unpersist()
     fs.rename(spark, lake_path, old)
     fs.rename(spark, tmp, lake_path)
     fs.delete(spark, old)
-    return n
+    return result.report.total_rows

@@ -6,7 +6,9 @@ sharding all create files far below the reference's deliberate
 file-listing and task-scheduling overhead dominates scan time long
 before I/O does. Compaction rewrites a directory to files near a
 target byte size, preserving row count and schema (the reference's
-O10 conservation contract), and verifies before replacing anything.
+O10 conservation contract). The rewrite lands through
+:func:`plans.dump.dump_table`, so it is verified from its footers
+(count, schema, file sizing) before it replaces anything.
 
 Sizing uses the ACTUAL on-disk bytes (driver-side listing — file
 metadata only, never data), not a rows×width guess, so compressed
@@ -20,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from .. import fs
-from .parquet_sink import write_parquet
+from ..verify import verify_parquet
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # one comfortable scan split
 
@@ -53,8 +55,8 @@ def compact_parquet_dir(
     """Rewrite ``path`` into ≈``total_bytes/target_file_bytes`` files.
 
     Returns the new file count (or the current one if no compaction
-    was needed). Verifies count conservation on the rewrite before
-    swapping it in; the old layout is kept as ``path`` until the swap.
+    was needed). The rewrite must hold the footer row count of the old
+    layout, which is kept as ``path`` until the swap.
 
     Hive-partitioned lakes (``path/col=value/…``) are compacted
     per partition directory — each leaf keeps its partition-pruning
@@ -138,28 +140,28 @@ def compact_parquet_dir(
     if n_target >= len(files):
         return len(files)  # already at or below target sizes
 
-    df = spark.read.parquet(path)
-    expected = df.count()
+    from ..plans.dump import dump_table  # plans imports sinks
+
+    expected = verify_parquet(spark, path).total_rows
     tmp = _marker(path, _TMP)
-    # maxRecordsPerFile must not undercut the target (r10 review): the
-    # sink's default (2^19 rows) silently splits each of the n_target
+    # maxRecordsPerFile must not undercut the target: the sink's
+    # default (2^19 rows) silently splits each of the n_target
     # partitions for narrow rows, producing ~4× the intended files and
     # making every later maintenance run re-rewrite the directory
     # without converging. Size it from the ACTUAL row count with a
     # small headroom over round-robin's near-even split.
     rows_per_file = -(-expected // n_target)  # ceil
-    write_parquet(
-        df,
+    result = dump_table(
+        spark,
+        spark.read.parquet(path),
         tmp,
         num_files=n_target,
         max_records_per_file=rows_per_file + max(64, rows_per_file // 16),
     )
-    actual = spark.read.parquet(tmp).count()
-    if actual != expected:  # conservation violated — keep the original
-        fs.delete(spark, tmp)
-        raise RuntimeError(
-            f"compaction row-count mismatch: {actual} != {expected}"
-        )
+    failure = result.failure(expected)
+    if failure:
+        fs.delete(spark, tmp)  # keep the original
+        raise RuntimeError(f"compaction of {path} {failure}")
     old = _marker(path, _OLD)
     fs.rename(spark, path, old)
     fs.rename(spark, tmp, path)

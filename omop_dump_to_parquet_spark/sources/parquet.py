@@ -195,12 +195,6 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: table(spark, sf_dir, n) for n in use}
 
 
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register fixture tables as temp views for SQL-API operators."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)
-
-
 def read_lake(
     spark: SparkSession, *paths: str, merge_schema: bool = False
 ) -> DataFrame:

@@ -21,7 +21,7 @@ import json
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 
@@ -163,11 +163,6 @@ def verify_parquet(
     if max_records_per_file is not None:
         report.sizing_ok = report.max_file_rows <= max_records_per_file
     return report
-
-
-def count_conserved(spark: SparkSession, source: DataFrame, path: str) -> bool:
-    """Reference semantics in one line: rows out == rows in."""
-    return spark.read.parquet(path).count() == source.count()
 
 
 def schema_drift(pinned, incoming) -> list[str]:

@@ -1,13 +1,19 @@
 from __future__ import annotations
 
+import ast
+import collections
+import pathlib
+
 import duckdb
 import pytest
 
+import omop_dump_to_parquet_spark
 from omop_dump_to_parquet_spark.session import get_spark
 from omop_dump_to_parquet_spark.sources.parquet import FIXTURE_TABLES
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+PACKAGE = pathlib.Path(omop_dump_to_parquet_spark.__file__).resolve().parent
 
 
 def count_jobs(spark, fn, group):
@@ -19,6 +25,31 @@ def count_jobs(spark, fn, group):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return value, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def package_calls(names):
+    """Count the package's calls to any of ``names``, as ``callee(...)``
+    or ``obj.callee(...)``, keyed by (file, enclosing function path,
+    callee)."""
+    found = collections.Counter()
+
+    def visit(node, path, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = (*scope, child.name)
+            if isinstance(child, ast.Call):
+                f = child.func
+                callee = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if callee in names:
+                    found[(path, ".".join(scope), callee)] += 1
+            visit(child, path, inner)
+
+    for f in sorted(PACKAGE.rglob("*.py")):
+        visit(ast.parse(f.read_text()), f.relative_to(PACKAGE).as_posix(), ())
+    return found
 
 
 @pytest.fixture(scope="session")

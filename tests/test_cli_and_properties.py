@@ -458,6 +458,36 @@ def test_cli_rejects_malformed_cast_before_jvm(capsys):
     assert "COL=TYPE" in capsys.readouterr().err
 
 
+def test_cli_defaults_are_package_constants_and_start_no_jvm():
+    """--fetch-size and --max-records-per-file default to the JDBC and
+    sink constants; importing them starts no JVM, so an argument error
+    still exits before any Spark startup (checked in a fresh
+    interpreter: this one already runs the test session's JVM)."""
+    import pathlib
+    import subprocess
+    import sys
+
+    import omop_dump_to_parquet_spark
+
+    code = """
+from pyspark import SparkContext
+from omop_dump_to_parquet_spark.cli import build_parser, main
+from omop_dump_to_parquet_spark.sinks import REFERENCE_SIZING
+from omop_dump_to_parquet_spark.sources.jdbc import DEFAULT_FETCH_SIZE
+args = ["--source-parquet", "/nonexistent", "--output-path", "/tmp/never"]
+a = build_parser().parse_args(args)
+assert a.fetch_size == DEFAULT_FETCH_SIZE
+assert a.max_records_per_file == REFERENCE_SIZING["rows_per_file"]
+assert main([*args, "--cast", "PROVIDER_ID"]) == 2
+assert SparkContext._gateway is None
+"""
+    root = pathlib.Path(omop_dump_to_parquet_spark.__file__).parents[1]
+    run = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True
+    )
+    assert run.returncode == 0, run.stderr
+
+
 def test_cosine_d_zero_norm_is_null_like_duckdb(spark):
     """r10 review: under ANSI a plain division THROWS on the 0.0
     divisor an all-zero embedding produces, while the DuckDB oracle

@@ -3,11 +3,12 @@ count conservation, schema stability, shard sizing."""
 
 from __future__ import annotations
 
-from conftest import count_jobs
+import collections
+
+from conftest import count_jobs, package_calls
 
 from omop_dump_to_parquet_spark.plans import dump_table
 from omop_dump_to_parquet_spark.sources.parquet import table
-from omop_dump_to_parquet_spark.verify import count_conserved
 
 
 def test_dump_conserves_counts_and_schema(spark, sf_small, tmp_path):
@@ -21,7 +22,6 @@ def test_dump_conserves_counts_and_schema(spark, sf_small, tmp_path):
     assert result.report.schema_matches
     assert result.report.max_file_rows <= 1000
     assert result.report.n_files >= 6  # 6000 rows / 1000-cap
-    assert count_conserved(spark, src, out)
 
 
 def test_dump_row_limit(spark, sf_small, tmp_path):
@@ -277,6 +277,60 @@ def test_dump_job_budget_and_stage_report(spark, sf_small, tmp_path):
     assert jobs == 0 and rep.ok
 
 
+def test_compaction_job_budget(spark, sf_small, tmp_path):
+    """Compaction takes its expected count from the old layout's
+    footers, so it runs only the schema inference and the repartitioned
+    write (two jobs under AQE)."""
+    from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
+
+    path = str(tmp_path / "frag")
+    table(spark, sf_small, "lineitem").repartition(40).write.parquet(path)
+    n, jobs = count_jobs(
+        spark,
+        lambda: compact_parquet_dir(spark, path, target_file_bytes=512 * 1024),
+        "compact_budget",
+    )
+    assert n < 40 and jobs <= 3
+
+
+def test_upsert_job_budget(spark, sf_small, tmp_path):
+    """The merged rewrite is checked from its footers, not by reading
+    it back."""
+    from pyspark.sql import functions as F
+
+    from omop_dump_to_parquet_spark.plans import upsert_parquet
+
+    cust = table(spark, sf_small, "customer")
+    lake = str(tmp_path / "cust_lake")
+    cust.write.parquet(lake)
+    updates = (
+        cust.orderBy("c_custkey").limit(5)
+        .withColumn("c_acctbal", F.lit(999999.0))
+    )
+    n, jobs = count_jobs(
+        spark,
+        lambda: upsert_parquet(spark, lake, updates, ["c_custkey"]),
+        "upsert_budget",
+    )
+    assert n == cust.count() and jobs <= 9
+
+
+#: The one place the package lands Parquet and observes its row count.
+ALLOWED_WRITE_CALLS = collections.Counter(
+    [
+        ("plans/dump.py", "dump_table", "write_parquet"),
+        ("plans/dump.py", "dump_table", "Observation"),
+    ]
+)
+
+
+def test_parquet_lands_only_through_dump_table():
+    """Resume, upsert, compaction and the streaming dump call
+    ``dump_table``, so every landed lake is verified the same way."""
+    write_calls = package_calls({"write_parquet", "Observation"})
+    assert write_calls == ALLOWED_WRITE_CALLS
+
+
 def test_binary_file_ingestion_to_multimodal_lake(spark, tmp_path):
     """binaryFile source → m01-shaped lake: one row per raw file,
     bytes + metadata, glob filtering source-side."""
@@ -318,11 +372,15 @@ class TestResumableDump:
     def test_resume_skips_committed_chunks_and_redumps_torn_ones(
         self, spark, sf_small, tmp_path
     ):
-        """Crash mid-dump (test hook), then resume: committed chunks
-        are skipped, the torn chunk is replaced, totals conserve."""
-        import pytest
+        """Resume from the state a crash after chunk 1 leaves behind:
+        committed chunks are skipped, the torn chunk is replaced,
+        totals conserve. A fresh 4-chunk dump runs one job per chunk;
+        verification reads footers."""
+        import os
+        import shutil
 
         from omop_dump_to_parquet_spark.plans.resume import (
+            MANIFEST_DIR,
             dump_table_resumable,
         )
         from omop_dump_to_parquet_spark.sources.parquet import table
@@ -333,23 +391,23 @@ class TestResumableDump:
         # source row, including keys outside the seed bounds
         n_total = li.count()
 
-        with pytest.raises(RuntimeError, match="simulated crash"):
-            dump_table_resumable(
-                spark,
-                li,
-                out,
-                "l_orderkey",
-                1,
-                6000,
-                n_chunks=4,
-                fail_after_chunk=2,
-            )
+        full, jobs = count_jobs(
+            spark,
+            lambda: dump_table_resumable(
+                spark, li, out, "l_orderkey", 1, 6000, n_chunks=4
+            ),
+            "resume_budget",
+        )
+        assert full.ok and full.chunks_dumped == 4 and jobs == 4
 
-        # simulate a torn write in the next (uncommitted) chunk
+        # crash state: markers for chunks 0-1 only, nothing of chunk 3
+        # and a torn write in chunk 2
+        for i in (2, 3):
+            os.remove(f"{out}/{MANIFEST_DIR}/chunk-{i:05d}")
+        shutil.rmtree(f"{out}/chunk=00003")
         torn = f"{out}/chunk=00002"
-        import os
-
-        os.makedirs(torn, exist_ok=True)
+        shutil.rmtree(torn)
+        os.makedirs(torn)
         with open(f"{torn}/part-garbage.parquet", "w") as fh:
             fh.write("not parquet")
 
@@ -359,11 +417,47 @@ class TestResumableDump:
         assert res.chunks_skipped == 2  # first attempt's work reused
         assert res.chunks_dumped == 2
         assert res.ok
-        assert res.rows_written == n_total
+        assert res.rows_written == res.report.total_rows == n_total
         # the lake reads back whole and the torn file is gone
         assert (
             spark.read.parquet(f"{out}/chunk=*").count() == n_total
         )
+
+    def test_resume_catches_a_retyped_committed_chunk(
+        self, spark, sf_small, tmp_path
+    ):
+        """A committed chunk rewritten with the same rows but one
+        column retyped keeps its marker and its count, so every chunk
+        is skipped; the footer schema check still fails the dump."""
+        import shutil
+
+        from pyspark.sql import functions as F
+
+        from omop_dump_to_parquet_spark.plans.resume import (
+            dump_table_resumable,
+        )
+        from omop_dump_to_parquet_spark.sources.parquet import table
+
+        li = table(spark, sf_small, "lineitem")
+        out = str(tmp_path / "lake")
+        assert dump_table_resumable(
+            spark, li, out, "l_orderkey", 0, 1499, n_chunks=3
+        ).ok
+        chunk, swapped = f"{out}/chunk=00001", str(tmp_path / "swapped")
+        rows = spark.read.parquet(chunk)
+        assert rows.count() > 0
+        retyped = F.col("l_quantity").cast("string")
+        rows.withColumn("l_quantity", retyped).write.parquet(swapped)
+        shutil.rmtree(chunk)
+        shutil.move(swapped, chunk)
+
+        res = dump_table_resumable(
+            spark, li, out, "l_orderkey", 0, 1499, n_chunks=3
+        )
+        assert res.chunks_skipped == 3 and res.chunks_dumped == 0
+        assert not res.ok
+        assert res.report.count_matches
+        assert res.report.schema_matches is False
 
     def test_rerun_after_success_is_all_skips(self, spark, sf_small, tmp_path):
         from omop_dump_to_parquet_spark.plans.resume import (
@@ -428,10 +522,9 @@ class TestResumableDump:
     def test_empty_source_reports_zero_conserved(
         self, spark, sf_small, tmp_path
     ):
-        """All-empty chunks write directories with no data files; the
-        read-back supplies the source schema so the verify reports a
-        trivially-conserved 0-row dump instead of erroring on schema
-        inference over an empty glob."""
+        """An empty chunk still lands one 0-row file carrying the
+        schema, so an all-empty dump verifies as a conserved 0-row
+        lake."""
         from omop_dump_to_parquet_spark.plans.resume import (
             dump_table_resumable,
         )
@@ -444,7 +537,7 @@ class TestResumableDump:
         )
         assert res.ok
         assert res.rows_written == 0
-        assert res.read_back_rows == 0
+        assert res.report.total_rows == 0
 
 
 def test_lake_additive_schema_evolution(spark, sf_small, tmp_path):

@@ -5,19 +5,16 @@ all-dropping inputs give 0 rows with the declared schema, and no other
 
 from __future__ import annotations
 
-import ast
 import collections
-import pathlib
 
 import pytest
+from conftest import package_calls
 from pyspark.sql.types import DataType
 
 from omop_dump_to_parquet_spark.functions.kernels import map_rows
 from omop_dump_to_parquet_spark.operators import multimodal as M
 from omop_dump_to_parquet_spark.operators import pipeline as P
 from omop_dump_to_parquet_spark.operators import text as T
-
-PACKAGE = pathlib.Path(M.__file__).resolve().parents[1]
 
 PAYLOADS = [
     b"the quick brown fox jumps over the lazy dog " * 3,
@@ -192,28 +189,8 @@ ALLOWED_ARROW_CALLS = collections.Counter(
 )
 
 
-def _arrow_calls():
-    found = collections.Counter()
-
-    def visit(node, path, scope):
-        for child in ast.iter_child_nodes(node):
-            inner = scope
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                inner = (*scope, child.name)
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in ("mapInPandas", "applyInPandas")
-            ):
-                found[(path, ".".join(scope), child.func.attr)] += 1
-            visit(child, path, inner)
-
-    for f in sorted(PACKAGE.rglob("*.py")):
-        visit(ast.parse(f.read_text()), f.relative_to(PACKAGE).as_posix(), ())
-    return found
-
-
 def test_arrow_calls_only_in_map_rows_and_batch_kernels():
     """A per-row kernel goes through ``map_rows``; a direct Arrow call
     is kept only where the kernel works on whole NumPy batches."""
-    assert _arrow_calls() == ALLOWED_ARROW_CALLS
+    arrow_calls = package_calls({"mapInPandas", "applyInPandas"})
+    assert arrow_calls == ALLOWED_ARROW_CALLS
