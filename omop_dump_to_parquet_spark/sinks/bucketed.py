@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .parquet_sink import PARQUET_CODEC
+
 
 def write_bucketed(
     df: DataFrame,
@@ -42,13 +44,16 @@ def write_bucketed(
     mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (optionally per-bucket-sorted)
-    parquet table registered in the session catalog.
+    ``PARQUET_CODEC`` parquet table registered in the session catalog.
 
     ``path`` makes it an external table at that location; otherwise it
     lands under ``spark.sql.warehouse.dir``.
     """
-    writer = df.write.format("parquet").mode(mode).bucketBy(
-        n_buckets, *bucket_cols
+    writer = (
+        df.write.format("parquet")
+        .mode(mode)
+        .option("compression", PARQUET_CODEC)
+        .bucketBy(n_buckets, *bucket_cols)
     )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -12,7 +12,10 @@ O10 conservation contract). The rewrite lands through
 
 Sizing uses the ACTUAL on-disk bytes (driver-side listing — file
 metadata only, never data), not a rows×width guess, so compressed
-width variation is accounted for. The rewrite is a plain
+width variation is accounted for. A directory landed with another
+codec (snappy, say) is sized by its own bytes, so its first rewrite
+lands smaller ``PARQUET_CODEC`` files that one more run may merge
+again; after that the layout is stable. The rewrite is a plain
 repartition-and-write to a sibling directory followed by an atomic
 rename — readers see the old layout or the new one, never a mix.
 """

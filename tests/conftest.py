@@ -27,6 +27,20 @@ def count_jobs(spark, fn, group):
     return value, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def parquet_codecs(path):
+    """Count the codec of every column chunk in every Parquet file
+    under ``path``, read from the footers."""
+    import pyarrow.parquet as pq
+
+    found = collections.Counter()
+    for f in pathlib.Path(path).rglob("*.parquet"):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                found[md.row_group(g).column(c).compression] += 1
+    return found
+
+
 def package_calls(names):
     """Count the package's calls to any of ``names``, as ``callee(...)``
     or ``obj.callee(...)``, keyed by (file, enclosing function path,

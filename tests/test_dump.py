@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import collections
 
-from conftest import count_jobs, package_calls
+import pytest
+
+from conftest import count_jobs, package_calls, parquet_codecs
 
 from omop_dump_to_parquet_spark.plans import dump_table
 from omop_dump_to_parquet_spark.sources.parquet import table
@@ -331,6 +333,55 @@ def test_parquet_lands_only_through_dump_table():
     assert write_calls == ALLOWED_WRITE_CALLS
 
 
+def _land_dump(spark, src, out):
+    dump_table(spark, src, out)
+
+
+def _land_compaction(spark, src, out):
+    from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
+
+    src.repartition(8).write.option("compression", "snappy").parquet(out)
+    assert compact_parquet_dir(spark, out, target_file_bytes=1 << 30) == 1
+
+
+def _land_upsert(spark, src, out):
+    from omop_dump_to_parquet_spark.plans import upsert_parquet
+
+    src.write.option("compression", "snappy").parquet(out)
+    upsert_parquet(spark, out, src.limit(5), ["l_orderkey", "l_linenumber"])
+
+
+def _land_resume(spark, src, out):
+    from omop_dump_to_parquet_spark.plans.resume import dump_table_resumable
+
+    assert dump_table_resumable(spark, src, out, "l_orderkey", 0, 1499, 3).ok
+
+
+def _land_bucketed(spark, src, out):
+    from omop_dump_to_parquet_spark.sinks import write_bucketed
+
+    try:
+        write_bucketed(src, "codec_b", ["l_orderkey"], 4, path=out)
+    finally:
+        spark.sql("DROP TABLE IF EXISTS codec_b")
+
+
+@pytest.mark.parametrize(
+    "land",
+    [_land_dump, _land_compaction, _land_upsert, _land_resume, _land_bucketed],
+    ids=["dump_table", "compaction", "upsert", "resume", "bucketed"],
+)
+def test_every_writer_lands_the_one_codec(spark, sf_small, tmp_path, land):
+    """Every column chunk of every file a writer lands is
+    ``PARQUET_CODEC`` (zstd), whatever codec its input was."""
+    from omop_dump_to_parquet_spark.sinks import PARQUET_CODEC
+
+    out = str(tmp_path / "lake")
+    land(spark, table(spark, sf_small, "lineitem"), out)
+    codecs = parquet_codecs(out)
+    assert set(codecs) == {PARQUET_CODEC.upper()}, codecs
+
+
 def test_binary_file_ingestion_to_multimodal_lake(spark, tmp_path):
     """binaryFile source → m01-shaped lake: one row per raw file,
     bytes + metadata, glob filtering source-side."""
@@ -394,7 +445,7 @@ class TestResumableDump:
         full, jobs = count_jobs(
             spark,
             lambda: dump_table_resumable(
-                spark, li, out, "l_orderkey", 1, 6000, n_chunks=4
+                spark, li, out, "l_orderkey", 0, 1499, n_chunks=4
             ),
             "resume_budget",
         )
@@ -412,16 +463,18 @@ class TestResumableDump:
             fh.write("not parquet")
 
         res = dump_table_resumable(
-            spark, li, out, "l_orderkey", 1, 6000, n_chunks=4
+            spark, li, out, "l_orderkey", 0, 1499, n_chunks=4
         )
         assert res.chunks_skipped == 2  # first attempt's work reused
         assert res.chunks_dumped == 2
         assert res.ok
         assert res.rows_written == res.report.total_rows == n_total
-        # the lake reads back whole and the torn file is gone
+        # the lake reads back whole, the torn file is gone and the
+        # re-dumped chunk holds rows
         assert (
             spark.read.parquet(f"{out}/chunk=*").count() == n_total
         )
+        assert spark.read.parquet(torn).count() > 0
 
     def test_resume_catches_a_retyped_committed_chunk(
         self, spark, sf_small, tmp_path
@@ -468,10 +521,10 @@ class TestResumableDump:
         li = table(spark, sf_small, "lineitem")
         out = str(tmp_path / "lake")
         first = dump_table_resumable(
-            spark, li, out, "l_orderkey", 1, 6000, n_chunks=3
+            spark, li, out, "l_orderkey", 0, 1499, n_chunks=3
         )
         again = dump_table_resumable(
-            spark, li, out, "l_orderkey", 1, 6000, n_chunks=3
+            spark, li, out, "l_orderkey", 0, 1499, n_chunks=3
         )
         assert first.ok and again.ok
         assert again.chunks_skipped == 3 and again.chunks_dumped == 0
@@ -491,20 +544,22 @@ class TestResumableDump:
 
         li = table(spark, sf_small, "lineitem")
         out = str(tmp_path / "lake")
-        dump_table_resumable(spark, li, out, "l_orderkey", 1, 6000, n_chunks=4)
+        dump_table_resumable(spark, li, out, "l_orderkey", 0, 1499, n_chunks=4)
         with pytest.raises(ValueError, match="parameter mismatch"):
             dump_table_resumable(
-                spark, li, out, "l_orderkey", 1, 6000, n_chunks=2
+                spark, li, out, "l_orderkey", 0, 1499, n_chunks=2
             )
         with pytest.raises(ValueError, match="parameter mismatch"):
             dump_table_resumable(
-                spark, li, out, "l_orderkey", 1000, 6000, n_chunks=4
+                spark, li, out, "l_orderkey", 500, 1499, n_chunks=4
             )
 
     def test_stale_bounds_lose_no_rows(self, spark, sf_small, tmp_path):
         """Edge chunks are unbounded (split-not-filter semantics), so
         bounds from a stale min/max estimate still cover every row —
         including keys outside [lower, upper]."""
+        from pyspark.sql import functions as F
+
         from omop_dump_to_parquet_spark.plans.resume import (
             dump_table_resumable,
         )
@@ -512,9 +567,12 @@ class TestResumableDump:
 
         li = table(spark, sf_small, "lineitem")
         out = str(tmp_path / "lake")
-        # bounds cover only the middle of the real key range [1, 6000]
+        # bounds cover only the middle of the real key range [0, 1499]
+        lower, upper = 500, 1000
+        assert li.filter(F.col("l_orderkey") < lower).count() > 0
+        assert li.filter(F.col("l_orderkey") > upper).count() > 0
         res = dump_table_resumable(
-            spark, li, out, "l_orderkey", 2000, 4000, n_chunks=3
+            spark, li, out, "l_orderkey", lower, upper, n_chunks=3
         )
         assert res.ok
         assert res.rows_written == li.count()
@@ -533,7 +591,7 @@ class TestResumableDump:
         li = table(spark, sf_small, "lineitem").filter("l_orderkey < 0")
         out = str(tmp_path / "lake")
         res = dump_table_resumable(
-            spark, li, out, "l_orderkey", 1, 6000, n_chunks=3
+            spark, li, out, "l_orderkey", 0, 1499, n_chunks=3
         )
         assert res.ok
         assert res.rows_written == 0

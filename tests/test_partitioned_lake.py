@@ -347,11 +347,11 @@ def test_hive_leaf_staging_invisible_to_concurrent_readers(
 
 
 def test_compaction_converges_for_narrow_rows(spark, tmp_path):
-    """r10 review: the sink's default maxRecordsPerFile (2^19) used to
-    split each of the n_target partitions of a narrow-row rewrite into
-    several files — the returned count was wrong and every later run
-    re-rewrote the directory without converging. The rewrite now sizes
-    records-per-file from the actual row count."""
+    """The sink's default maxRecordsPerFile (2^19) must not split each
+    of the n_target partitions of a narrow-row rewrite into several
+    files, or the returned count is wrong and every later run
+    re-rewrites the directory. The input lands through the sink, so
+    both runs size the same codec's bytes."""
     import glob
 
     from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
@@ -360,7 +360,7 @@ def test_compaction_converges_for_narrow_rows(spark, tmp_path):
     # per target file
     df = spark.range(3_000_000).selectExpr("id", "id % 97 AS v")
     path = str(tmp_path / "narrow")
-    df.repartition(24).write.parquet(path)
+    write_parquet(df, path, num_files=24)
     total = sum(
         __import__("os").path.getsize(f)
         for f in glob.glob(f"{path}/*.parquet")
@@ -373,3 +373,31 @@ def test_compaction_converges_for_narrow_rows(spark, tmp_path):
     # converged: a second run is a no-op (already at/below target)
     assert compact_parquet_dir(spark, path, target_file_bytes=target) == 2
     assert len(glob.glob(f"{path}/*.parquet")) == 2
+
+
+def test_compaction_converges_across_a_codec_change(spark, tmp_path):
+    """A snappy directory is sized by its snappy bytes, so its first
+    rewrite lands smaller zstd files that one more run may merge;
+    the run after that is a no-op."""
+    import glob
+    import os
+
+    from conftest import parquet_codecs
+
+    from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
+
+    df = spark.range(3_000_000).selectExpr("id", "id % 97 AS v")
+    path = str(tmp_path / "snappy")
+    df.repartition(24).write.option("compression", "snappy").parquet(path)
+
+    def files():
+        return sorted(glob.glob(f"{path}/*.parquet"))
+
+    target = max(1, round(sum(os.path.getsize(f) for f in files()) / 2))
+    runs = [
+        (compact_parquet_dir(spark, path, target), files()) for _ in range(3)
+    ]
+    assert set(parquet_codecs(path)) == {"ZSTD"}
+    assert runs[0][0] == 2 and runs[1][0] <= 2
+    assert runs[2] == runs[1]  # the third run rewrites nothing
+    assert spark.read.parquet(path).count() == 3_000_000

@@ -50,3 +50,16 @@ def test_warm_cycle_compiles_no_class(spark, sf_small):
 
     cycle()
     assert cycle() == 0
+
+
+def test_corpus_profile_warm_calls_compile_no_class(spark, sf_small):
+    """t16 keeps one distinct aggregate: several plan an Expand whose
+    group numbering follows fresh expression ids, and warm calls
+    recompiled 2–4 classes each."""
+    queries, _ = load_catalog()
+    t16 = queries["t16_corpus_profile"]
+    t16(spark, sf_small).collect()
+    before = codegen_compilations(spark)
+    for _ in range(3):
+        t16(spark, sf_small).collect()
+    assert codegen_compilations(spark) == before
