@@ -48,10 +48,11 @@ from pyspark.sql import functions as F
 def dsum(col: Column | str, prec: int = 18, scale: int = 2) -> Column:
     """Deterministic double-valued SUM via exact DECIMAL accumulation.
 
-    Overflow posture: this engine runs ANSI mode (session.py), so a
-    value exceeding DECIMAL(prec,scale) THROWS mid-job with the cast's
-    call site — loud, never a silent NULL-drop. Size ``prec`` for the
-    data; the default 18,2 holds ±10^16 cents."""
+    Overflow posture: Spark 4 runs ANSI mode, so a value exceeding
+    DECIMAL(prec,scale) THROWS mid-job an ``ArithmeticException`` with
+    condition ``NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION`` — loud,
+    never a silent NULL-drop. Size ``prec`` for the data; the default
+    18,2 holds ±10^16 cents."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal({prec},{scale})")).cast("double")
 
@@ -64,9 +65,4 @@ def davg(col: Column | str, prec: int = 18, scale: int = 2) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return dsum(c, prec, scale) / F.count(c)
-
-
-def dsum_expr(sql_expr: str, prec: int = 18, scale: int = 2) -> str:
-    """Oracle-SQL twin of :func:`dsum` for a raw column expression."""
-    return f"CAST(SUM(CAST({sql_expr} AS DECIMAL({prec},{scale}))) AS DOUBLE)"
 

@@ -26,6 +26,21 @@ and every one of the ~2,700 a catalog pass compiles. ``get_spark``
 sizes the cache to hold the whole catalog, and a warm pass of that
 workload now compiles none. A session the caller built keeps Spark's
 100 entries.
+
+PySpark's DataFrame debugging is the other. While
+``spark.python.sql.dataFrameDebugging.enabled`` is on (Spark's
+default), every classic ``Column`` method and ``F.col`` call walks the
+Python stack and makes five py4j round trips to record its call site:
+the active session, the ``stackTracesInDataFrameContext`` depth, a
+lookup of the ``PySparkCurrentOrigin`` class, and its ``set`` and
+``clear``. A warm q01 plan build at sf0.001 made 702 round trips with
+capture on and 184 with it off. The key is not modifiable at runtime,
+and PySpark reads it once per process, at the first Column call, so
+only ``get_spark``'s builder can turn it off. Plans do not change, and
+errors stay loud: an ANSI overflow still raises its named condition
+and only loses the ``== DataFrame ==`` line naming the Python call
+site. A session the caller built keeps the default and pays the
+capture on every Column call.
 """
 
 from __future__ import annotations
@@ -153,6 +168,7 @@ def get_spark(
         .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     for k, v in RUNTIME_CONFS.items():

@@ -189,12 +189,6 @@ def ts_us(col="ts"):
     return F.unix_micros(col if not isinstance(col, str) else F.col(col))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Load several fixture tables at once; defaults to all of them."""
-    use = names or FIXTURE_TABLES
-    return {n: table(spark, sf_dir, n) for n in use}
-
-
 def read_lake(
     spark: SparkSession, *paths: str, merge_schema: bool = False
 ) -> DataFrame:

@@ -1,13 +1,25 @@
 """The session ``get_spark`` builds keeps every generated class a served
-workload uses: replaying the same queries compiles nothing."""
+workload uses, so replaying the same queries compiles nothing, and it
+records no Python call site per Column call."""
 
 from __future__ import annotations
+
+import py4j.clientserver
+import pyspark.errors.utils
 
 from omop_dump_to_parquet_spark import load_catalog
 from omop_dump_to_parquet_spark.force import forced_count
 from omop_dump_to_parquet_spark.session import (
     CODEGEN_CACHE_ENTRIES,
+    RUNTIME_CONFS,
     codegen_compilations,
+)
+
+# Static keys: Spark refuses them at runtime, so they go on
+# ``get_spark``'s builder.
+BUILDER_ONLY_CONFS = (
+    "spark.sql.codegen.cache.maxEntries",
+    "spark.python.sql.dataFrameDebugging.enabled",
 )
 
 # The relational and window ids of the benchmark's lake-relational pass.
@@ -63,3 +75,34 @@ def test_corpus_profile_warm_calls_compile_no_class(spark, sf_small):
     for _ in range(3):
         t16(spark, sf_small).collect()
     assert codegen_compilations(spark) == before
+
+
+def test_runtime_confs_are_modifiable(spark):
+    """``apply_runtime_confs`` swallows the error a static key raises, so
+    one listed in ``RUNTIME_CONFS`` would silently do nothing."""
+    assert all(spark.conf.isModifiable(k) for k in RUNTIME_CONFS)
+    assert not any(spark.conf.isModifiable(k) for k in BUILDER_ONLY_CONFS)
+
+
+def test_session_skips_call_site_capture(spark, sf_small):
+    """With DataFrame debugging on, every Column call looks up
+    ``PySparkCurrentOrigin`` over py4j to record its Python call site."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not pyspark.errors.utils.is_debugging_enabled()
+
+    q01 = load_catalog()[0]["q01_pricing_summary"]
+    conn = py4j.clientserver.ClientServerConnection
+    send = conn.send_command
+    commands = []
+
+    def counting(self, command, *args, **kwargs):
+        commands.append(command)
+        return send(self, command, *args, **kwargs)
+
+    conn.send_command = counting
+    try:
+        q01(spark, sf_small)
+    finally:
+        conn.send_command = send
+    assert commands
+    assert not [c for c in commands if "PySparkCurrentOrigin" in c]
