@@ -16,6 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from omop_dump_to_parquet_spark import load_catalog  # noqa: E402
+from omop_dump_to_parquet_spark.functions.kernels import map_batches  # noqa: E402
 from omop_dump_to_parquet_spark.session import (  # noqa: E402
     codegen_compilations,
     get_spark,
@@ -37,7 +38,7 @@ HEADLINE = [
     "s06_ann_int8",  # SQ8-quantized GEMM top-k
     "t02_quality_score",  # map-side text profiling
     "q29_lateral_explode",  # generator fan-out (one row per token)
-    "m02_decode_features",  # Arrow mapInPandas decode path
+    "m02_decode_features",  # Arrow map_rows decode path
 ]
 
 
@@ -66,26 +67,20 @@ def main() -> None:
     spark.range(1000).count()
     warm = spark.read.parquet(f"{sf_dir}/region.parquet")
     warm.groupBy("r_name").count().collect()
-    # ... and the Python-worker pool, so Arrow-UDF queries don't pay
+    # ... and the Python-worker pool, so Arrow-kernel queries don't pay
     # daemon spawn + import time inside their measurement. The warm
-    # batch mirrors the GEMM kernels' shape (array<double> column,
-    # NumPy stacked inside the worker) so their first measured batch
-    # doesn't pay the numpy import either.
-    def _warm_gemm(batches):
-        import numpy as _np
-
-        for pdf in batches:
-            _np.stack(pdf["emb"].to_numpy())
-            yield pdf[["id"]]
-
+    # batch mirrors the GEMM kernels' shape (an array<double> column
+    # through map_batches) so their first measured batch doesn't pay
+    # the numpy import either.
     from pyspark.sql import functions as F
 
-    (
-        spark.range(64)
-        .select("id", F.array(*[F.lit(float(i)) for i in range(64)]).alias("emb"))
-        .mapInPandas(_warm_gemm, schema="id long")
-        .count()
-    )
+    map_batches(
+        spark.range(64).select(
+            "id", F.array(*[F.lit(float(i)) for i in range(64)]).alias("emb")
+        ),
+        lambda ids, emb: (ids,),
+        "id long",
+    ).count()
 
     # Classes each rep compiled (codegen-cache misses), per id: the
     # first rep compiles the id's classes, a warm rep should compile 0.

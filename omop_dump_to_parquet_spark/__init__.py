@@ -16,18 +16,18 @@ Oracle→Parquet ETL, ``dump_table.py``), generalized into:
   MinHash-LSH, SimHash, n-gram Jaccard, embedding-cosine), similarity
   search, text analysis, multimodal columns.
 - ``functions/`` — reusable column-expression helpers (vector math,
-  text metrics, deterministic-rounding utilities) and the row-kernel
-  wrapper ``map_rows``.
+  text metrics, deterministic-rounding utilities) and the kernel
+  wrappers ``map_rows`` and ``map_batches``.
 - ``streaming/`` — Structured Streaming variants (windowed and
   session aggregation).
 
 Everything is DataFrame/Catalyst-first: logical plans are declared with
 the public PySpark API and physical strategy is left to Catalyst +
 Tungsten + AQE. Python UDFs appear only where built-ins genuinely
-cannot express the semantics (multimodal decode), and then only as
-Arrow-batched ``mapInPandas``: per-row kernels through
-``functions.kernels.map_rows``, batch-vectorized NumPy kernels
-directly.
+cannot express the semantics (multimodal decode), and then only over
+Arrow batches: per-row kernels through ``functions.kernels.map_rows``,
+batch-vectorized NumPy kernels through ``map_batches``, and three
+grouped NumPy kernels through ``applyInArrow``.
 """
 
 __version__ = "0.1.0"

@@ -38,7 +38,7 @@ def contains_map(dt: DataType) -> bool:
 def forced_count(df: DataFrame) -> int:
     """Row count with EVERY output column evaluated (see module
     docstring). Cardinality-CHANGING plans (joins, aggregates,
-    explodes, filters, mapInPandas) were already forced by count(),
+    explodes, filters, mapInArrow) were already forced by count(),
     but one recipe for every id beats a per-id prunability argument."""
     cols = [
         F.to_json(f.name) if contains_map(f.dataType) else F.col(f.name)

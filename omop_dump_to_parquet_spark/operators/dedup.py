@@ -23,7 +23,7 @@ Scale design (the whole point at 100 TB):
 DataFrame/Catalyst expressions by default, and no row-at-a-time
 Python UDFs. Where the Catalyst form would be an interpreted
 higher-order-function tree, an Arrow-vectorized NumPy batch kernel
-runs instead: ``minhash_key_batches`` (d04, d15, st13; the HOF form
+runs instead: ``minhash_keys`` (d04, d15, st13; the HOF form
 measured two orders of magnitude slower), ``simhash_chunks`` (d05)
 and ``semdedup_prune_bucketed`` (d10, d14).
 """
@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.kernels import map_batches, numpy_column
 from ..registry import query
 from ..session import get_shuffle_partitions
 from ..sources.parquet import table
@@ -224,25 +225,11 @@ def _ranked_tokens(
     return ranked.withColumn("nw", F.count(F.lit(1)).over(wdoc))
 
 
-def prefix_index(
-    docs: DataFrame,
-    num: int,
-    den: int,
-    *block_cols: str,
-    tok: DataFrame | None = None,
-    sizes: DataFrame | None = None,
-) -> DataFrame:
-    """The AllPairs prefix index: per doc, its ``nw - ⌈t·nw⌉ + 1``
-    rarest tokens under the global (document-frequency ASC, token ASC)
-    order, with ``nw`` attached. Exposed separately so tests assert
-    the SHIPPED index's properties (hot tokens excluded, sizes exact)
-    rather than re-deriving them.
-
-    ``tok``/``sizes`` let the caller pass the token explosion and
-    per-doc size aggregate it already computed (identical subtrees →
-    one scan via ReuseExchange instead of three)."""
-    ranked = _ranked_tokens(docs, *block_cols, tok=tok, sizes=sizes)
-    # prefix length nw - ⌈t·nw⌉ + 1, integer-exact: ⌈num·nw/den⌉
+def _prefix(ranked: DataFrame, num: int, den: int) -> DataFrame:
+    """The AllPairs prefix index over ``_ranked_tokens``: per doc, its
+    ``nw - ⌈t·nw⌉ + 1`` rarest tokens under the global
+    (document-frequency ASC, token ASC) order, integer-exact with
+    ``⌈num·nw/den⌉``."""
     ceil_t_nw = F.floor(
         (F.lit(num) * F.col("nw") + F.lit(den - 1)) / F.lit(den)
     )
@@ -377,12 +364,7 @@ def prefix_filter_candidates(
     # overlaps, and AQE's runtime exchange reuse already shares the
     # heavy shuffle between the two sides. Kept lazy.)
     ranked = _ranked_tokens(docs, *block_cols, tok=tok)
-    ceil_t_nw = F.floor(
-        (F.lit(num) * F.col("nw") + F.lit(den - 1)) / F.lit(den)
-    )
-    index = ranked.filter(
-        F.col("rn") <= F.col("nw") - ceil_t_nw + 1
-    ).alias("b")
+    index = _prefix(ranked, num, den).alias("b")
     probe = ranked.alias("a")
     overlap_ub = F.lit(1) + F.least(
         F.col("a.nw") - F.col("a.rn"), F.col("b.nw") - F.col("b.rn")
@@ -768,58 +750,50 @@ def simhash_chunks(docs: DataFrame) -> DataFrame:
     counts."""
     n_chunks, n_bits = SIMHASH_CHUNKS, SIMHASH_CHUNK_BITS
 
-    def chunk_batches(it):
+    def chunks(doc_id, text):
         # worker-side imports; the package itself ships by value
         import hashlib
 
         import numpy as np
 
         md5 = hashlib.md5
-        nb = n_chunks * n_bits
-        bit_idx = np.arange(nb, dtype=np.int64)
+        bit_idx = np.arange(n_chunks * n_bits, dtype=np.int64)
         pack = 1 << np.arange(n_bits, dtype=np.int64)
-        for pdf in it:
-            # NULL-text rows drop like the former Catalyst form
-            # (explode(NULL) emitted nothing); empty batches skip —
-            # reduceat needs ≥1 row (advisor r16)
-            pdf = pdf[pdf["text"].notna()]
-            if not len(pdf):
-                continue
-            toks = [
-                list(dict.fromkeys(t.split(" "))) for t in pdf["text"]
-            ]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            starts = np.zeros(len(toks), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            h = np.fromiter(
-                (
-                    int(md5(t.encode()).hexdigest()[:15], 16)
-                    for row in toks
-                    for t in row
-                ),
-                dtype=np.int64,
-                count=int(lens.sum()),
-            )
-            # (tokens × 60) of ±1; int32 keeps the per-doc sums exact
-            # to 2^31 tokens/doc while halving the matrix footprint
-            bits = (((h[:, None] >> bit_idx) & 1) * 2 - 1).astype(
-                np.int32
-            )
-            sums = np.add.reduceat(bits, starts, axis=0)
-            pos = sums > 0
-            out = {}
-            for c in range(n_chunks):
-                seg = pos[:, c * n_bits : (c + 1) * n_bits]
-                out[f"c{c}"] = (seg @ pack).astype(np.int32)
-            yield pdf[["doc_id"]].assign(**out)
+        # NULL-text rows drop like the former Catalyst form
+        # (explode(NULL) emitted nothing)
+        keep = np.array([t is not None for t in text], dtype=bool)
+        if not keep.any():  # reduceat needs ≥1 row
+            return None
+        doc_id, text = doc_id[keep], text[keep]
+        toks = [list(dict.fromkeys(t.split(" "))) for t in text]
+        lens = np.fromiter(
+            (len(t) for t in toks), dtype=np.int64, count=len(toks)
+        )
+        starts = np.zeros(len(toks), dtype=np.int64)
+        np.cumsum(lens[:-1], out=starts[1:])
+        h = np.fromiter(
+            (
+                int(md5(t.encode()).hexdigest()[:15], 16)
+                for row in toks
+                for t in row
+            ),
+            dtype=np.int64,
+            count=int(lens.sum()),
+        )
+        # (tokens × 60) of ±1; int32 keeps the per-doc sums exact
+        # to 2^31 tokens/doc while halving the matrix footprint
+        bits = (((h[:, None] >> bit_idx) & 1) * 2 - 1).astype(np.int32)
+        pos = np.add.reduceat(bits, starts, axis=0) > 0
+        return [doc_id] + [
+            (pos[:, c * n_bits : (c + 1) * n_bits] @ pack).astype(np.int32)
+            for c in range(n_chunks)
+        ]
 
     schema = "doc_id long, " + ", ".join(
         f"c{c} int" for c in range(n_chunks)
     )
-    return widen_scan(docs.select("doc_id", "text")).mapInPandas(
-        chunk_batches, schema
+    return map_batches(
+        widen_scan(docs.select("doc_id", "text")), chunks, schema
     )
 
 
@@ -1161,7 +1135,7 @@ def d10_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     A self-join + per-pair column-expression cosine computes the same
     thing but interpreted (higher-order functions don't enter
     codegen) — measured 3.9s vs 0.6s at sf0.1 for identical output.
-    applyInPandas groups each bucket into one Arrow batch; the
+    applyInArrow groups each bucket into one Arrow table; the
     planes-scale-with-corpus rule that bounds pairwise work also
     bounds batch size, and a pathologically hot bucket would take
     s04's block-pair decomposition WITHIN the bucket. NumPy
@@ -1219,68 +1193,19 @@ def semdedup_prune_bucketed(emb: DataFrame, tau: float) -> DataFrame:
     contract) and the K∝N k-means scale path
     (:func:`~..operators.similarity.kmeans_bucket_assign`)."""
 
-    def bucket_gemm(pdf):
-        import numpy as _np
-        import pandas as _pd
+    from .similarity import cosine_pairs
 
-        if len(pdf) < 2:
-            return _pd.DataFrame(
-                {
-                    "keeper_id": _np.array([], dtype=_np.int64),
-                    "removed_id": _np.array([], dtype=_np.int64),
-                    "cos_sim": _np.array([], dtype=_np.float64),
-                }
-            )
-        ids = pdf["vec_id"].to_numpy()
-        A = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
+    def bucket_gemm(group):
+        import pyarrow as _pa
 
-        # GEMM-prefilter + sequential-fold exact refine — the same
-        # r10 exactness contract as similarity.cosine_pair_gemm: BLAS
-        # blocked summation differs from the engines' left-to-right
-        # fold by ulps, so the threshold/round-6 decisions are made
-        # on a bit-equal sequential recompute. The 1e-6 prefilter
-        # margin covers the round-6 half-step (cos in [tau-5e-7, tau)
-        # ROUNDS UP into the kept set) plus ulp drift.
-        # r11 scale fix (see cosine_pair_gemm for the full argument):
-        # the fold runs only on pairs within 1e-9 of a round-half
-        # boundary — the only pairs the ≤1.4e-14 GEMM-vs-fold drift
-        # can round differently — instead of on every survivor, which
-        # was pair-sized work that took the ×10 rehearsal from 3.2s
-        # to 31s on this op.
-        def _seq_dot(X, Y):
-            acc = _np.zeros(len(X), dtype=_np.float64)
-            for k in range(X.shape[1]):
-                acc = acc + X[:, k] * Y[:, k]
-            return acc
-
-        nrm = _np.sqrt(_seq_dot(A, A))
-        S = (A @ A.T) / _np.outer(nrm, nrm)
-        mask = (S >= tau - 1e-6) & (ids[:, None] < ids[None, :])
-        ii, jj = _np.nonzero(mask)
-        if not len(ii):
-            return _pd.DataFrame(
-                {
-                    "keeper_id": _np.array([], dtype=_np.int64),
-                    "removed_id": _np.array([], dtype=_np.int64),
-                    "cos_sim": _np.array([], dtype=_np.float64),
-                }
-            )
-        g = S[ii, jj]
-        r = g * 1e6
-        ambiguous = _np.abs(r - _np.floor(r) - 0.5) < 1e-3  # ±1e-9 cos
-        cos = _np.round(g, 6)
-        if ambiguous.any():
-            ia, ja = ii[ambiguous], jj[ambiguous]
-            cos[ambiguous] = _np.round(
-                _seq_dot(A[ia], A[ja]) / (nrm[ia] * nrm[ja]), 6
-            )
-        keep = cos >= tau
-        ii, jj, cos = ii[keep], jj[keep], cos[keep]
-        return _pd.DataFrame(
+        ids = numpy_column(group.column("vec_id"))
+        A = numpy_column(group.column("emb"))
+        ii, jj, cos = cosine_pairs(A, A, ids, ids, tau, True)
+        return _pa.table(
             {"keeper_id": ids[ii], "removed_id": ids[jj], "cos_sim": cos}
         )
 
-    hits = emb.groupBy("bucket").applyInPandas(
+    hits = emb.groupBy("bucket").applyInArrow(
         bucket_gemm, schema="keeper_id long, removed_id long, cos_sim double"
     )
     return hits.groupBy("removed_id").agg(
@@ -1947,7 +1872,7 @@ def d13_edit_distance_linkage(
 # stage becomes a per-row expression on the corpus scan:
 #   1. MinHash signatures + the 21 band keys computed MAP-SIDE by the
 #      Arrow-vectorized NumPy kernel d04 also runs
-#      (``minhash_key_batches``): one md5-64 base hash per distinct
+#      (``minhash_keys``): one md5-64 base hash per distinct
 #      token, then 126 splitmix64-mixed derived functions with per-row
 #      mins via minimum.reduceat — see the kernel docstring for the
 #      hash-family independence argument and the measured 2 orders of
@@ -1964,7 +1889,7 @@ def d13_edit_distance_linkage(
 #      (10·min(nw) ≥ 9·max(nw) for J ≥ 0.9) prunes inside the join.
 #   4. Exact-Jaccard verification map-side: array_intersect of the
 #      two in-row hashed token sets — no re-join with the corpus.
-# Physical plan: Scan → MapInPandas → Generate → BroadcastHashJoin →
+# Physical plan: Scan → MapInArrow → Generate → BroadcastHashJoin →
 # Filter → Project. No ShuffleExchange anywhere (plan-shape-tested) —
 # the whole decontamination is one pass over the corpus, which is the
 # optimal 100 TB shape for this op.
@@ -2003,9 +1928,9 @@ WHERE (CAST(n_common AS DOUBLE) / (sa.nw + sb.nw - n_common))
 """
 
 
-def minhash_key_batches(it):
-    """mapInPandas kernel shared by d04, d15 and st13: (doc_id, text)
-    batches → (doc_id, toks, nw, keys, g1, g2) — the distinct-token
+def minhash_keys(doc_id, text):
+    """Batch kernel shared by d04, d15 and st13: one (doc_id, text)
+    batch → (doc_id, toks, nw, keys, g1, g2) — the distinct-token
     set as hashed longs, its size, the 21 LSH band keys of a
     126-function MinHash signature, and two token-SET content folds.
 
@@ -2032,6 +1957,7 @@ def minhash_key_batches(it):
     import hashlib
 
     import numpy as np
+    import pyarrow as pa
 
     def mix(x):
         # splitmix64 finalizer, vectorized over uint64 (wraparound is
@@ -2044,65 +1970,63 @@ def minhash_key_batches(it):
     salts = mix(np.arange(1, MINHASH_K + 1, dtype=np.uint64))
     md5 = hashlib.md5
 
-    for pdf in it:
-        # NULL-text rows are dropped (no token set to sign), and an
-        # empty Arrow batch is skipped outright — np.split on a
-        # zero-row frame would otherwise raise.
-        pdf = pdf[pdf["text"].notna()]
-        if not len(pdf):
-            continue
-        # dict.fromkeys == array_distinct (first-occurrence order;
-        # split(" ") keeps empties exactly like Spark's split on the
-        # single-space regex)
-        toks = [list(dict.fromkeys(t.split(" "))) for t in pdf["text"]]
-        lens = np.fromiter(
-            (len(t) for t in toks), dtype=np.int64, count=len(toks)
-        )
-        starts = np.zeros(len(toks), dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        base = np.fromiter(
-            (
-                int.from_bytes(md5(t.encode()).digest()[:8], "little")
-                for row in toks
-                for t in row
-            ),
-            dtype=np.uint64,
-            count=int(lens.sum()),
-        )
-        # one salt at a time keeps peak memory O(n_tokens), not
-        # O(K·n_tokens); reduceat needs non-empty segments — text is
-        # not null here and "".split(" ") is [''], so lens ≥ 1
-        sig = np.empty((MINHASH_K, len(toks)), dtype=np.uint64)
-        for i in range(MINHASH_K):
-            sig[i] = np.minimum.reduceat(mix(base ^ salts[i]), starts)
-        keys = np.empty((LSH_BANDS, len(toks)), dtype=np.uint64)
-        for b in range(LSH_BANDS):
-            k = sig[b * LSH_ROWS]
-            for r in range(1, LSH_ROWS):
-                k = mix(k ^ sig[b * LSH_ROWS + r])
-            keys[b] = k
-        # two order-invariant 64-bit content-SET folds (xor /
-        # wraparound-sum of independently mixed base hashes) —
-        # together with nw they key the exact token-set duplicate
-        # groups d04 collapses before LSH. Two independent folds ⇒ a
-        # false group merge needs a simultaneous collision in both
-        # (~2⁻¹²⁸ per set pair).
-        m1 = mix(base ^ np.uint64(0xD04C0FFEE0000001))
-        m2 = mix(base ^ np.uint64(0xD04C0FFEE0000002))
-        out = pdf.assign(
-            toks=np.split(base.astype(np.int64), starts[1:]),
-            nw=lens.astype("int32"),
-            keys=list(keys.astype(np.int64).T),
-            g1=np.bitwise_xor.reduceat(m1, starts).astype(np.int64),
-            g2=np.add.reduceat(m2, starts).astype(np.int64),
-        )
-        yield out[["doc_id", "toks", "nw", "keys", "g1", "g2"]]
+    # NULL-text rows are dropped (no token set to sign); an all-NULL
+    # batch emits nothing
+    keep = np.array([t is not None for t in text], dtype=bool)
+    if not keep.any():
+        return None
+    doc_id, text = doc_id[keep], text[keep]
+    # dict.fromkeys == array_distinct (first-occurrence order;
+    # split(" ") keeps empties exactly like Spark's split on the
+    # single-space regex)
+    toks = [list(dict.fromkeys(t.split(" "))) for t in text]
+    lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
+    starts = np.zeros(len(toks), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    base = np.fromiter(
+        (
+            int.from_bytes(md5(t.encode()).digest()[:8], "little")
+            for row in toks
+            for t in row
+        ),
+        dtype=np.uint64,
+        count=int(lens.sum()),
+    )
+    # one salt at a time keeps peak memory O(n_tokens), not
+    # O(K·n_tokens); reduceat needs non-empty segments — text is not
+    # null here and "".split(" ") is [''], so lens ≥ 1
+    sig = np.empty((MINHASH_K, len(toks)), dtype=np.uint64)
+    for i in range(MINHASH_K):
+        sig[i] = np.minimum.reduceat(mix(base ^ salts[i]), starts)
+    keys = np.empty((LSH_BANDS, len(toks)), dtype=np.uint64)
+    for b in range(LSH_BANDS):
+        k = sig[b * LSH_ROWS]
+        for r in range(1, LSH_ROWS):
+            k = mix(k ^ sig[b * LSH_ROWS + r])
+        keys[b] = k
+    # two order-invariant 64-bit content-SET folds (xor / wraparound-
+    # sum of independently mixed base hashes) — together with nw they
+    # key the exact token-set duplicate groups d04 collapses before
+    # LSH. Two independent folds ⇒ a false group merge needs a
+    # simultaneous collision in both (~2⁻¹²⁸ per set pair).
+    m1 = mix(base ^ np.uint64(0xD04C0FFEE0000001))
+    m2 = mix(base ^ np.uint64(0xD04C0FFEE0000002))
+    offsets = np.append(starts, len(base)).astype(np.int32)
+    return (
+        doc_id,
+        pa.ListArray.from_arrays(offsets, base.astype(np.int64)),
+        lens.astype(np.int32),
+        keys.astype(np.int64).T,
+        np.bitwise_xor.reduceat(m1, starts).astype(np.int64),
+        np.add.reduceat(m2, starts).astype(np.int64),
+    )
 
 
 def _minhash(df: DataFrame) -> DataFrame:
-    """``minhash_key_batches`` over ``df``'s (doc_id, text)."""
-    return df.select("doc_id", "text").mapInPandas(
-        minhash_key_batches,
+    """``minhash_keys`` over ``df``'s (doc_id, text)."""
+    return map_batches(
+        df.select("doc_id", "text"),
+        minhash_keys,
         "doc_id long, toks array<long>, nw int, keys array<long>, "
         "g1 long, g2 long",
     )
@@ -2110,7 +2034,7 @@ def _minhash(df: DataFrame) -> DataFrame:
 
 def minhash_prepared(docs: DataFrame) -> DataFrame:
     """d04's map-side signature table (doc_id, toks, nw, keys, g1,
-    g2) — see ``minhash_key_batches`` — in ONE pass over (doc_id,
+    g2) — see ``minhash_keys`` — in ONE pass over (doc_id,
     text) with no aggregation shuffle. The per-row kernel parallelizes
     with the scan (``widen_scan`` pins fixture-scale parallelism; a
     no-op once the input has real splits), so the first exchange in

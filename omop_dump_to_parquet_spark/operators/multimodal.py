@@ -126,24 +126,19 @@ def m02_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the CODEC, differentially checked for everything else — r6).
 # Chunks the payload into fixed-size frames and emits every k-th one —
 # the plumbing (explode to frame rows, per-frame metadata, bounded
-# memory per batch) is the real shape of video pipelines. A real
-# container demuxer stays NotImplemented (no codec in this
-# environment), but the deterministic fake demux is byte slicing the
-# oracle reproduces with substr on the ASCII fixture, so the whole
-# Arrow path (binary in, binary frames out, typed metadata) gets a
-# full differential oracle: the registered query projects the frame
-# bytes to LOSSLESS hex (the m01 convention — no oracle-backed query
-# emits raw binary, keeping the driver's value hash on strings);
+# memory per batch) is the real shape of video pipelines. There is no
+# container demuxer (no video codec is available), so the demux is a
+# deterministic fake: byte slicing the oracle reproduces with substr
+# on the ASCII fixture, so the whole Arrow path (binary in, binary
+# frames out, typed metadata) gets a full differential oracle: the
+# registered query projects the frame bytes to LOSSLESS hex (the m01
+# convention — no oracle-backed query emits raw binary, keeping the
+# driver's value hash on strings);
 # ``frame_sample`` keeps the binary API for real consumers.
 # ---------------------------------------------------------------------------
 
 FRAME_BYTES = 64
 FRAME_STRIDE = 2
-
-
-def demux_video(payload: bytes) -> list[bytes]:
-    """Real demuxer is unavailable in this container."""
-    raise NotImplementedError("no video codec in this environment")
 
 
 def _fake_demux(payload: bytes) -> list[bytes]:

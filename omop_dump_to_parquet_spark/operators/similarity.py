@@ -27,6 +27,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.kernels import arrow_column, map_batches, numpy_column
 from ..functions.vectors import cosine_d, dot_d, l2norm_d, to_double_array
 from ..registry import query
 from ..sources.parquet import table
@@ -266,7 +267,7 @@ def s04_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides stay distributed: the corpus is hashed into ``blocks``
     row-blocks (``vec_id % B``), the constant upper-triangular
     block-pair table (B(B+1)/2 rows) is broadcast-joined against both
-    sides, and a cogrouped ``applyInPandas`` runs one NumPy GEMM per
+    sides, and a cogrouped ``applyInArrow`` runs one NumPy GEMM per
     block pair. Every unordered vector pair lands in exactly one
     block pair, so the result is exact — identical arithmetic to
     one-sided brute force — while the shuffle moves O(n·B) replicated
@@ -285,6 +286,59 @@ def s04_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", to_double_array("embedding").alias("emb")
     )
     return cosine_pair_gemm(emb, COS_DUP_THRESHOLD, GEMM_BLOCKS)
+
+
+def cosine_pairs(A, B, a_ids, b_ids, threshold: float, same_set: bool):
+    """Row pairs ``(ii, jj)`` of ``A`` and ``B`` whose cosine, rounded
+    to 6 dp, is at least ``threshold``, and those cosines; with
+    ``same_set`` only pairs with ``a_ids[ii] < b_ids[jj]``. The kernel
+    core of s04's block-pair GEMM and d10/d14's per-bucket prune."""
+    import numpy as np
+
+    # Exactness contract: BLAS GEMM sums products in a blocked order,
+    # the engines' list_dot_product/F.aggregate fold LEFT-TO-RIGHT —
+    # results differ by ulps, so a cosine within ~1e-16 of a round-6
+    # boundary (or of the threshold) could flip between kernel and
+    # oracle. The GEMM is therefore only the PREFILTER. The margin must
+    # cover BOTH the ulp drift AND the half-step of the round-6 keep
+    # rule: a cosine in [thr-5e-7, thr) ROUNDS UP into the kept set, so
+    # a margin narrower than 0.5e-6 would mask out pairs the oracle
+    # keeps.
+    #
+    # Scale: sequential-folding EVERY margin survivor is pair-sized
+    # work (A[ii] fancy-index copies of P×dim doubles) that took d10
+    # 3.2s→31s and d08 37s→66s at the ×10 rehearsal once the clustered fixture pushed ~20M
+    # pairs past the prefilter. But the fold can only change the
+    # 6-dp result when the GEMM value sits within the fold DRIFT
+    # of a rounding boundary: |gemm − fold| ≤ dim·2⁻⁵²·‖a‖‖b‖ /
+    # (norms) ≈ 1.4e-14 for 64 dims — so pairs ≥1e-9 (a 70,000×
+    # safety factor) from the nearest round-half boundary round
+    # identically from either value and need NO recompute. Only
+    # the ambiguous sliver (~0.2% at a uniform phase) pays the
+    # sequential fold; the decision rule is unchanged, bit-equal
+    # to both engines, and the n²-sized scan stays BLAS.
+    def seq_dot(X, Y):
+        acc = np.zeros(len(X), dtype=np.float64)
+        for k in range(X.shape[1]):
+            acc = acc + X[:, k] * Y[:, k]
+        return acc
+
+    an = np.sqrt(seq_dot(A, A))
+    bn = np.sqrt(seq_dot(B, B))
+    S = (A @ B.T) / np.outer(an, bn)
+    mask = S >= threshold - 1e-6
+    if same_set:
+        mask &= a_ids[:, None] < b_ids[None, :]
+    ii, jj = np.nonzero(mask)
+    g = S[ii, jj]
+    r = g * 1e6
+    ambiguous = np.abs(r - np.floor(r) - 0.5) < 1e-3  # ±1e-9 cos
+    cos = np.round(g, 6)
+    if ambiguous.any():
+        ia, ja = ii[ambiguous], jj[ambiguous]
+        cos[ambiguous] = np.round(seq_dot(A[ia], B[ja]) / (an[ia] * bn[ja]), 6)
+    keep = cos >= threshold
+    return ii[keep], jj[keep], cos[keep]
 
 
 def cosine_pair_gemm(
@@ -321,90 +375,39 @@ def cosine_pair_gemm(
         )
     )
 
-    def gemm(key, ldf, rdf):
+    def gemm(key, left, right):
         import numpy as _np
-        import pandas as _pd
+        import pyarrow as _pa
 
-        empty = _pd.DataFrame(
-            {
-                "vec_a": _np.array([], dtype=_np.int64),
-                "vec_b": _np.array([], dtype=_np.int64),
-                "cos_sim": _np.array([], dtype=_np.float64),
-            }
+        if not left.num_rows or not right.num_rows:
+            return _pa.table({})
+        bi, bj = divmod(key[0].as_py(), nb)
+        a_ids = numpy_column(left.column("vec_id"))
+        b_ids = numpy_column(right.column("vec_id"))
+        # diagonal block: same set on both sides — keep each unordered
+        # pair once and drop the self-pair
+        ii, jj, cos = cosine_pairs(
+            numpy_column(left.column("emb")),
+            numpy_column(right.column("emb")),
+            a_ids,
+            b_ids,
+            threshold,
+            bi == bj,
         )
-        if not len(ldf) or not len(rdf):
-            return empty
-        bi, bj = divmod(int(key[0]), nb)
-        A = _np.stack(ldf["emb"].to_numpy()).astype(_np.float64)
-        B = _np.stack(rdf["emb"].to_numpy()).astype(_np.float64)
-        a_ids = ldf["vec_id"].to_numpy()
-        b_ids = rdf["vec_id"].to_numpy()
-
-        # Exactness contract (r10 review): BLAS GEMM sums products in
-        # a blocked order, the engines' list_dot_product/F.aggregate
-        # fold LEFT-TO-RIGHT — results differ by ulps, so a cosine
-        # within ~1e-16 of a round-6 boundary (or of the threshold)
-        # could flip between kernel and oracle. The GEMM is therefore
-        # only the PREFILTER. The margin must cover BOTH the ulp drift
-        # AND the half-step of the round-6 keep rule: a cosine in
-        # [thr-5e-7, thr) ROUNDS UP into the kept set, so a margin
-        # narrower than 0.5e-6 would mask out pairs the oracle keeps
-        # (r10 adversarial re-review of this very refactor).
-        #
-        # r11 scale fix: the r10 version sequential-folded EVERY
-        # margin survivor — pair-sized work (A[ii] fancy-index copies
-        # of P×dim doubles) that took d10 3.2s→31s and d08 37s→66s at
-        # the ×10 rehearsal once the clustered fixture pushed ~20M
-        # pairs past the prefilter. But the fold can only change the
-        # 6-dp result when the GEMM value sits within the fold DRIFT
-        # of a rounding boundary: |gemm − fold| ≤ dim·2⁻⁵²·‖a‖‖b‖ /
-        # (norms) ≈ 1.4e-14 for 64 dims — so pairs ≥1e-9 (a 70,000×
-        # safety factor) from the nearest round-half boundary round
-        # identically from either value and need NO recompute. Only
-        # the ambiguous sliver (~0.2% at a uniform phase) pays the
-        # sequential fold; the decision rule is unchanged, bit-equal
-        # to both engines, and the n²-sized scan stays BLAS.
-        def _seq_dot(X, Y):
-            acc = _np.zeros(len(X), dtype=_np.float64)
-            for k in range(X.shape[1]):
-                acc = acc + X[:, k] * Y[:, k]
-            return acc
-
-        an = _np.sqrt(_seq_dot(A, A))
-        bn = _np.sqrt(_seq_dot(B, B))
-        S = (A @ B.T) / _np.outer(an, bn)
-        mask = S >= threshold - 1e-6
-        if bi == bj:
-            # diagonal block: same set on both sides — keep each
-            # unordered pair once and drop the self-pair
-            mask &= a_ids[:, None] < b_ids[None, :]
-        ii, jj = _np.nonzero(mask)
-        if not len(ii):
-            return empty
-        g = S[ii, jj]
-        r = g * 1e6
-        ambiguous = _np.abs(r - _np.floor(r) - 0.5) < 1e-3  # ±1e-9 cos
-        cos = _np.round(g, 6)
-        if ambiguous.any():
-            ia, ja = ii[ambiguous], jj[ambiguous]
-            cos[ambiguous] = _np.round(
-                _seq_dot(A[ia], B[ja]) / (an[ia] * bn[ja]), 6
-            )
-        keep = cos >= threshold
-        ii, jj, cos = ii[keep], jj[keep], cos[keep]
-        if not len(ii):
-            return empty
+        a, b = a_ids[ii], b_ids[jj]
         # off-diagonal blocks are disjoint id sets; normalize to a<b
-        va = _np.minimum(a_ids[ii], b_ids[jj])
-        vb = _np.maximum(a_ids[ii], b_ids[jj])
-        return _pd.DataFrame(
-            {"vec_a": va, "vec_b": vb, "cos_sim": cos}
+        return _pa.table(
+            {
+                "vec_a": _np.minimum(a, b),
+                "vec_b": _np.maximum(a, b),
+                "cos_sim": cos,
+            }
         )
 
     return (
         left.groupBy("pair_id")
         .cogroup(right.groupBy("pair_id"))
-        .applyInPandas(gemm, schema="vec_a long, vec_b long, cos_sim double")
+        .applyInArrow(gemm, schema="vec_a long, vec_b long, cos_sim double")
     )
 
 
@@ -614,37 +617,31 @@ def s06_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((p_ids, Pq.astype(np.int32), pn))
     top_k = TOP_K
 
-    def kernel(batches):
+    def kernel(b_ids, B):
         import numpy as _np
-        import pandas as _pd
 
         ids_p, Pi, pn_p = bc.value
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "cos_sim_q": []}
-            if len(pdf):
-                B = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
-                scales = _np.abs(B).max(axis=1)
-                scales[scales == 0] = 1.0
-                Bq = _np.rint(B / scales[:, None] * 127).astype(_np.int8)
-                bn = _np.sqrt((Bq.astype(_np.float64) ** 2).sum(axis=1))
-                bn[bn == 0] = 1.0
-                # int32 accumulation of the int8 dot, then normalize
-                S = (Pi @ Bq.astype(_np.int32).T) / _np.outer(pn_p, bn)
-                S = _np.round(S, 6)
-                b_ids = pdf["vec_id"].to_numpy()
-                for i in range(len(ids_p)):
-                    keep = b_ids != ids_p[i]  # exclude self
-                    cand = _np.nonzero(keep)[0]
-                    s = S[i][cand]
-                    order = _np.lexsort((b_ids[cand], -s))[:top_k]
-                    for j in order:
-                        out["query_id"].append(int(ids_p[i]))
-                        out["neighbor_id"].append(int(b_ids[cand[j]]))
-                        out["cos_sim_q"].append(float(s[j]))
-            yield _pd.DataFrame(out)
+        out = ([], [], [])
+        scales = _np.abs(B).max(axis=1)
+        scales[scales == 0] = 1.0
+        Bq = _np.rint(B / scales[:, None] * 127).astype(_np.int8)
+        bn = _np.sqrt((Bq.astype(_np.float64) ** 2).sum(axis=1))
+        bn[bn == 0] = 1.0
+        # int32 accumulation of the int8 dot, then normalize
+        S = (Pi @ Bq.astype(_np.int32).T) / _np.outer(pn_p, bn)
+        S = _np.round(S, 6)
+        for i in range(len(ids_p)):
+            keep = b_ids != ids_p[i]  # exclude self
+            cand = _np.nonzero(keep)[0]
+            s = S[i][cand]
+            order = _np.lexsort((b_ids[cand], -s))[:top_k]
+            out[0].extend([ids_p[i]] * len(order))
+            out[1].extend(b_ids[cand[order]])
+            out[2].extend(s[order])
+        return out
 
-    cand = emb.mapInPandas(
-        kernel, schema="query_id long, neighbor_id long, cos_sim_q double"
+    cand = map_batches(
+        emb, kernel, "query_id long, neighbor_id long, cos_sim_q double"
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("cos_sim_q").desc(), F.col("neighbor_id")
@@ -930,7 +927,7 @@ def kmeans_bucket_assign(
     with the corpus; Voronoi cells cut through dense blobs).
 
     Returns ``(vec_id, emb, bucket)``. Each Lloyd iteration is one
-    numpy-GEMM assign pass (``mapInPandas``; the k×dim centroid
+    numpy-GEMM assign pass (``map_batches``; the k×dim centroid
     matrix rides in the pickled closure — bounded driver state, the
     s05/s07 collect contract) plus one posexplode partial-agg shuffle
     for the means. Deterministic for a fixed partitioning: init is
@@ -956,27 +953,18 @@ def kmeans_bucket_assign(
     def _assigned(C: "np.ndarray") -> DataFrame:
         c2 = (C * C).sum(axis=1)
 
-        def assign(it):
+        def assign(vec_id, A):
             import numpy as _np
-            import pandas as _pd
 
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                A = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
-                # argmin_c |c|^2 - 2 x·c  (|x|^2 drops out); numpy
-                # argmin returns the FIRST minimum -> smallest bucket
-                b = _np.argmin(c2[None, :] - 2.0 * (A @ C.T), axis=1)
-                yield _pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "emb": pdf["emb"],
-                        "bucket": b.astype(_np.int64),
-                    }
-                )
+            # argmin_c |c|^2 - 2 x·c  (|x|^2 drops out); numpy argmin
+            # returns the FIRST minimum -> smallest bucket
+            b = _np.argmin(c2[None, :] - 2.0 * (A @ C.T), axis=1)
+            return vec_id, A, b.astype(_np.int64)
 
-        return emb.mapInPandas(
-            assign, schema="vec_id long, emb array<double>, bucket long"
+        return map_batches(
+            emb.select("vec_id", "emb"),
+            assign,
+            "vec_id long, emb array<double>, bucket long",
         )
 
     for _ in range(iters):
@@ -1025,8 +1013,8 @@ def kmeans_bucket_assign_2level(
     k_fine = max(1, -(-k // k_coarse))  # ceil
 
     # Pin the coarse assignment before it is consumed by TWO separate
-    # actions (the applyInPandas collect that builds the fine codebook,
-    # then the returned mapInPandas): without the barrier the coarse
+    # actions (the applyInArrow collect that builds the fine codebook,
+    # then the returned map_batches): without the barrier the coarse
     # lineage — including its numpy argmin — would be recomputed for
     # the second action, and a BLAS/batching ulp flipping an argmin
     # tie between runs would hand assign_fine a cell that was empty
@@ -1037,13 +1025,13 @@ def kmeans_bucket_assign_2level(
         eager=False
     )
 
-    def cell_kmeans(pdf):
+    def cell_kmeans(key, group):
         import numpy as _np
-        import pandas as _pd
+        import pyarrow as _pa
 
-        pdf = pdf.sort_values("vec_id")  # deterministic init
-        cell = int(pdf["bucket"].iloc[0])
-        A = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
+        group = group.sort_by("vec_id")  # deterministic init
+        cell = key[0].as_py()
+        A = numpy_column(group.column("emb"))
         kf = min(k_fine, len(A))
         C = A[:kf].copy()
         for _ in range(iters):
@@ -1053,17 +1041,17 @@ def kmeans_bucket_assign_2level(
                 sel = b == j
                 if sel.any():
                     C[j] = A[sel].mean(axis=0)
-        return _pd.DataFrame(
+        return _pa.table(
             {
                 "cell": _np.full(kf, cell, dtype=_np.int64),
                 "fine": _np.arange(kf, dtype=_np.int64),
-                "cent": list(C),
+                "cent": arrow_column(C, _pa.list_(_pa.float64())),
             }
         )
 
     fine_rows = (
         coarse.groupBy("bucket")
-        .applyInPandas(cell_kmeans, schema="cell long, fine long, cent array<double>")
+        .applyInArrow(cell_kmeans, schema="cell long, fine long, cent array<double>")
         .collect()
     )  # bounded: ≤ k×dim driver state
     by_cell: dict[int, "np.ndarray"] = {}
@@ -1077,34 +1065,23 @@ def kmeans_bucket_assign_2level(
     }
     kf_out = k_fine
 
-    def assign_fine(it):
+    f2 = {c: (M * M).sum(axis=1) for c, M in fine_mats.items()}
+
+    def assign_fine(vec_id, A, cells):
         import numpy as _np
-        import pandas as _pd
 
-        f2 = {c: (M * M).sum(axis=1) for c, M in fine_mats.items()}
-        for pdf in it:
-            if not len(pdf):
-                continue
-            out_bucket = _np.empty(len(pdf), dtype=_np.int64)
-            A = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
-            cells = pdf["bucket"].to_numpy()
-            for c in _np.unique(cells):
-                sel = cells == c
-                M = fine_mats[int(c)]
-                b = _np.argmin(
-                    f2[int(c)][None, :] - 2.0 * (A[sel] @ M.T), axis=1
-                )
-                out_bucket[sel] = int(c) * kf_out + b
-            yield _pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "emb": pdf["emb"],
-                    "bucket": out_bucket,
-                }
-            )
+        out_bucket = _np.empty(len(cells), dtype=_np.int64)
+        for c in _np.unique(cells):
+            sel = cells == c
+            M = fine_mats[int(c)]
+            b = _np.argmin(f2[int(c)][None, :] - 2.0 * (A[sel] @ M.T), axis=1)
+            out_bucket[sel] = int(c) * kf_out + b
+        return vec_id, A, out_bucket
 
-    return coarse.mapInPandas(
-        assign_fine, schema="vec_id long, emb array<double>, bucket long"
+    return map_batches(
+        coarse.select("vec_id", "emb", "bucket"),
+        assign_fine,
+        "vec_id long, emb array<double>, bucket long",
     )
 
 
@@ -1486,35 +1463,29 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bc = spark.sparkContext.broadcast((p_ids, tables, C))
     refine = PQ_REFINE
 
-    def kernel(batches):
+    def kernel(b_ids, X):
         import numpy as _np
-        import pandas as _pd
 
         ids_p, tabs, cbk = bc.value
         m, k, s = cbk.shape
-        for pdf in batches:
-            out = {"query_id": [], "neighbor_id": [], "approx_dist": []}
-            if len(pdf):
-                X = _np.stack(pdf["emb"].to_numpy()).astype(_np.float64)
-                U = _pq_unit_lattice_np(X).reshape(len(X), m, s)
-                # encode: nearest codeword per subspace, exact int64
-                d = ((U[:, :, None, :] * lattice - cbk[None]) ** 2).sum(-1)
-                codes = d.argmin(-1)  # (n, M); first min ⇒ smallest k
-                b_ids = pdf["vec_id"].to_numpy()
-                mi = _np.arange(m)
-                for i in range(len(ids_p)):
-                    approx = tabs[i][mi[None, :], codes].sum(1)
-                    cand = _np.nonzero(b_ids != ids_p[i])[0]
-                    a = approx[cand]
-                    order = _np.lexsort((b_ids[cand], a))[:refine]
-                    for j in order:
-                        out["query_id"].append(int(ids_p[i]))
-                        out["neighbor_id"].append(int(b_ids[cand[j]]))
-                        out["approx_dist"].append(int(a[j]))
-            yield _pd.DataFrame(out)
+        out = ([], [], [])
+        U = _pq_unit_lattice_np(X).reshape(len(X), m, s)
+        # encode: nearest codeword per subspace, exact int64
+        d = ((U[:, :, None, :] * lattice - cbk[None]) ** 2).sum(-1)
+        codes = d.argmin(-1)  # (n, M); first min ⇒ smallest k
+        mi = _np.arange(m)
+        for i in range(len(ids_p)):
+            approx = tabs[i][mi[None, :], codes].sum(1)
+            cand = _np.nonzero(b_ids != ids_p[i])[0]
+            a = approx[cand]
+            order = _np.lexsort((b_ids[cand], a))[:refine]
+            out[0].extend([ids_p[i]] * len(order))
+            out[1].extend(b_ids[cand[order]])
+            out[2].extend(a[order])
+        return out
 
-    cand = emb.mapInPandas(
-        kernel, schema="query_id long, neighbor_id long, approx_dist long"
+    cand = map_batches(
+        emb, kernel, "query_id long, neighbor_id long, approx_dist long"
     )
     w_adc = W.partitionBy("query_id").orderBy(
         F.col("approx_dist").asc(), F.col("neighbor_id")

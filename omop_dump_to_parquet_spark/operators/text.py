@@ -12,8 +12,8 @@ Most of these are map-side-only column expressions (no shuffle except
 the final optional aggregation), i.e. they scale linearly and stay
 inside whole-stage codegen — the correct shape for a 100 TB corpus
 profiling pass. No per-row Python UDFs anywhere; three operators run
-Python over Arrow batches: t18's ``local_candidates`` (a batch
-``mapInPandas`` kernel, per-batch heavy-hitter counting), and two row
+Python over Arrow batches: t18's ``local_candidates`` (a
+``map_batches`` kernel, per-batch heavy-hitter counting), and two row
 kernels run by ``functions.kernels.map_rows`` — t23's ``bpe_encode``
 (the merge table applied as ``str.replace``) and t25's HTML extraction
 (regex-per-document markup removal), the same shape as the m-family
@@ -31,7 +31,7 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.kernels import map_rows
+from ..functions.kernels import map_batches, map_rows
 from ..registry import query
 from ..sources.parquet import table
 
@@ -1056,17 +1056,15 @@ def t18_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(F.explode(F.split("text", " ")).alias("w"))
     k = HH_K
 
-    def local_candidates(batches):
-        import pandas as _pd
+    def local_candidates(w):
+        import pyarrow as _pa
+        import pyarrow.compute as _pc
 
-        for pdf in batches:
-            counts = pdf["w"].value_counts()
-            keep = counts[counts * (k + 1) > len(pdf)]
-            yield _pd.DataFrame({"w": keep.index})
+        counts = _pc.value_counts(_pa.array(w, _pa.string())).flatten()
+        heavy = _pc.greater(_pc.multiply(counts[1], k + 1), len(w))
+        return (counts[0].filter(heavy),)
 
-    candidates = tok.mapInPandas(
-        local_candidates, schema="w string"
-    ).distinct()
+    candidates = map_batches(tok, local_candidates, "w string").distinct()
     total = tok.agg(F.count(F.lit(1)).alias("n_total"))
     return (
         tok.join(F.broadcast(candidates), "w", "left_semi")
@@ -1649,7 +1647,7 @@ def bpe_encode(
     ]
 
     def enc(text):
-        if not isinstance(text, str):  # NULL (None or NaN)
+        if text is None:
             return [(None, None, None)]
         if "|" in text:
             raise RuntimeError(

@@ -46,6 +46,7 @@ capture on every Column call.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -80,27 +81,28 @@ RUNTIME_CONFS = {
 CODEGEN_CACHE_ENTRIES = 4096
 
 
+#: Sessions ``apply_runtime_confs`` has already set up.
+_APPLIED: weakref.WeakSet = weakref.WeakSet()
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally built session.
+    """Apply runtime-settable confs to an externally built session,
+    once per session.
 
-    Safe to call repeatedly; every public query entry point calls this
-    so correctness (UTC timestamps) does not depend on who built the
-    session.
-
-    A measurement harness can PIN a key against this re-application
-    by setting ``spark.graft.pin.<key>`` on its session. Load-bearing
-    for the determinism sweep's AQE axis (r10 review): without the
-    pin, the sweep's AQE-"off" leg was silently flipped back on here
-    at the first catalog call — both legs ran AQE-on and the
-    certification was vacuous.
+    Every public query entry point calls this so correctness (UTC
+    timestamps) does not depend on who built the session. A repeat
+    call on the same session does nothing, so a setting its owner makes
+    after the first call stands (the determinism sweep turns AQE off
+    that way).
     """
+    if spark in _APPLIED:
+        return spark
     for k, v in RUNTIME_CONFS.items():
         try:
-            if spark.conf.get(f"spark.graft.pin.{k}", None) is not None:
-                continue
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on some builds — keep going
+    _APPLIED.add(spark)
     return spark
 
 

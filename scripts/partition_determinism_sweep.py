@@ -56,19 +56,11 @@ def main() -> int:
         apply_runtime_confs(s)
         s.conf.set("spark.sql.shuffle.partitions", width)
         s.conf.set("spark.sql.adaptive.enabled", aqe)
-        # PIN the AQE choice: every @query entry point re-applies
-        # RUNTIME_CONFS (adaptive.enabled=true) to whatever session
-        # it is handed, which silently flipped the "off" leg back on
-        # and made the AQE axis vacuous (r10 review). The pin conf
-        # tells apply_runtime_confs to leave this key alone.
-        s.conf.set("spark.graft.pin.spark.sql.adaptive.enabled", "1")
         if arrow_batch is not None:
             s.conf.set(
                 "spark.sql.execution.arrow.maxRecordsPerBatch", arrow_batch
             )
         if codegen is not None:
-            # not in RUNTIME_CONFS, so no pin needed — nothing
-            # re-applies it behind the sweep's back
             s.conf.set("spark.sql.codegen.wholeStage", codegen)
         if auto_bcast is not None:
             s.conf.set("spark.sql.autoBroadcastJoinThreshold", auto_bcast)
@@ -111,14 +103,14 @@ def main() -> int:
             session(WIDE, "true"), session(WIDE, "false"),
         ),
         # Arrow batch-boundary independence (r11, third axis): a tiny
-        # maxRecordsPerBatch re-slices every mapInPandas kernel's
+        # maxRecordsPerBatch re-slices every mapInArrow kernel's
         # input into many small batches — a kernel that accumulates
         # state ACROSS batch boundaries (or emits batch-relative
         # values) diverges here while passing both other axes.
-        # applyInPandas groups are delivered whole regardless, so this
-        # axis specifically certifies the mapInPandas family
-        # (multimodal decoders, text kernels, streaming foreachBatch
-        # bodies) as batch-shape-independent.
+        # applyInArrow groups are delivered whole regardless, so this
+        # axis specifically certifies the map_rows and map_batches
+        # kernels (multimodal decoders, text kernels, streaming
+        # foreachBatch bodies) as batch-shape-independent.
         "arrow_batch_default_vs_7": sweep(
             "arrow-batch default-vs-7",
             session(WIDE, "true"), session(WIDE, "true", arrow_batch="7"),

@@ -209,13 +209,6 @@ def test_frame_sample_stride_and_sizes(spark, sf_small):
     )
 
 
-def test_demux_stub_is_honest():
-    from omop_dump_to_parquet_spark.operators.multimodal import demux_video
-
-    with pytest.raises(NotImplementedError):
-        demux_video(b"fake")
-
-
 def test_size_prefilter_loses_no_recall(spark, sf_small):
     """The set-size necessary condition must drop ONLY pairs that
     cannot reach the threshold: every candidate passes it, and every
@@ -452,16 +445,18 @@ def test_prefix_filter_excludes_hot_tokens_and_loses_no_recall(
 
     # index-size guard: join work is sum(df_full * df_prefix); the
     # naive self-join pays sum(df_full^2). Require a real reduction.
-    # The index inspected here is the SHIPPED one (D.prefix_index),
-    # not a test-local re-derivation.
+    # The index inspected here is the one d03/d07 build (D._prefix
+    # over D._ranked_tokens), not a test-local re-derivation.
     from pyspark.sql import functions as F
 
     tok = D._distinct_tokens(docs, "lang", "source")
     dfreq = tok.groupBy("lang", "source", "w").agg(
         F.count(F.lit(1)).alias("df")
     )
-    prefix = D.prefix_index(
-        docs, ratio.numerator, ratio.denominator, "lang", "source"
+    prefix = D._prefix(
+        D._ranked_tokens(docs, "lang", "source"),
+        ratio.numerator,
+        ratio.denominator,
     )
     pfreq = prefix.groupBy("lang", "source", "w").agg(
         F.count(F.lit(1)).alias("pdf")

@@ -5,7 +5,7 @@ against a list-walking pure-Python Sennrich reference, and learn and
 encode are both checked against freshly-unrolled DuckDB oracles at
 merge depth 8 — the independent check, since the driver learner and
 the reference share an algorithm. Also covered: the '|' boundary
-sentinel guards, the mapInPandas encode kernel, the vocabulary cap,
+sentinel guards, the map_rows encode kernel, the vocabulary cap,
 the learner's Spark job budget and degenerate corpora.
 """
 
@@ -357,7 +357,7 @@ def test_t23_row_guard_rejects_pipe_in_text(spark, tmp_path):
 
 
 def test_bpe_encode_kernel_matches_expression_chain(spark, sf_small):
-    """The mapInPandas encode must be byte-identical to the
+    """The map_rows encode must be byte-identical to the
     whole-stage-codegen expression chain it replaced, row for row
     (same boundary rendering, same replace semantics, same md5)."""
     docs = table(spark, sf_small, "documents")

@@ -20,9 +20,13 @@ from test_parity import ORACLES, assert_frames_match
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# kernels that call module-level helpers (map_rows, row functions,
-# decoders, demux, PQ lattice)
+# kernels that call module-level helpers (map_rows, map_batches, row
+# functions, decoders, demux, PQ lattice, the Arrow column helpers)
 KERNEL_IDS = (
+    "d05_dedup_simhash",
+    "d10_semdedup",
+    "d14_semdedup_kmeans",
+    "d15_fuzzy_decontamination",
     "m02_decode_features",
     "m03_frame_sample",
     "m04_resize",
@@ -32,7 +36,10 @@ KERNEL_IDS = (
     "m10_wav_decode_features",
     "m11_png_decode_roundtrip",
     "p11_dsir_importance",
+    "s04_dedup_embedding",
+    "s06_ann_int8",
     "s09_ann_pq",
+    "t18_heavy_hitters",
     "t23_bpe_encode",
     "t25_html_extract",
 )

@@ -1,12 +1,15 @@
-"""The row-kernel wrapper ``functions.kernels.map_rows`` and the kernels
-built on it: keys pass through with their own type and NULLs, empty and
-all-dropping inputs give 0 rows with the declared schema, and no other
-``mapInPandas``/``applyInPandas`` call enters the package."""
+"""The kernel wrappers ``functions.kernels.map_rows`` and
+``map_batches`` and the kernels built on them: keys pass through with
+their own type, exact values and NULLs, empty and all-dropping inputs
+give 0 rows with the declared schema, a NULL or ragged embedding fails
+by name, and every Python kernel in the package runs on Arrow."""
 
 from __future__ import annotations
 
 import collections
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from conftest import package_calls
 from pyspark.sql.types import DataType
@@ -14,6 +17,7 @@ from pyspark.sql.types import DataType
 from omop_dump_to_parquet_spark.functions.kernels import map_rows
 from omop_dump_to_parquet_spark.operators import multimodal as M
 from omop_dump_to_parquet_spark.operators import pipeline as P
+from omop_dump_to_parquet_spark.operators import similarity as S
 from omop_dump_to_parquet_spark.operators import text as T
 
 PAYLOADS = [
@@ -81,6 +85,38 @@ def test_map_rows_fans_out_and_keeps_null_keys(spark):
         assert sorted(map(tuple, out.collect()), key=repr) == sorted(
             [(key, 0, "x0"), (key, 1, "x1"), (None, 0, "x0")], key=repr
         )
+
+
+def test_map_rows_keeps_64_bit_values_exact_next_to_nulls(spark):
+    """pandas widens a nullable long column holding a NULL to float64:
+    2^53 + 1 rounds to 2^53, and 7 reaches the row function as 7.0."""
+    big = 2**53 + 1
+    df = spark.createDataFrame(
+        [(big, 7), (None, None)], "k long, v long"
+    ).coalesce(1)
+    out = map_rows(df, lambda v: [(repr(v),)], "seen string")
+    assert sorted(map(tuple, out.collect()), key=repr) == sorted(
+        [(big, "7"), (None, "None")], key=repr
+    )
+
+
+@pytest.mark.parametrize(
+    "broken, message",
+    [(None, "embedding column holds 1 NULL row"), ([0.5], "ragged embedding")],
+    ids=["null", "ragged"],
+)
+def test_vector_kernel_names_a_null_or_ragged_embedding(
+    spark, sf_small, tmp_path, broken, message
+):
+    emb = pq.read_table(f"{sf_small}/embeddings.parquet").slice(0, 40)
+    rows = emb.to_pylist()
+    rows[S.N_QUERIES + 3]["embedding"] = broken
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=emb.schema),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    with pytest.raises(Exception, match=f"ValueError: {message}"):
+        S.s06_ann_int8(spark, str(tmp_path)).collect()
 
 
 _BINARY = "doc_id long, payload binary"
@@ -170,27 +206,24 @@ def test_input_where_every_row_yields_nothing(spark, kernel):
     assert out.collect() == [] and dict(out.dtypes)["doc_id"] == "bigint"
 
 
-# (module, enclosing function, method): the batch-vectorized kernels
-# that work on whole NumPy batches, plus the wrapper itself
-ALLOWED_ARROW_CALLS = collections.Counter(
+# (module, enclosing function, method): the two wrappers and the three
+# kernels that need whole groups
+ARROW_CALLS = collections.Counter(
     [
-        ("functions/kernels.py", "map_rows", "mapInPandas"),
-        ("operators/dedup.py", "simhash_chunks", "mapInPandas"),
-        ("operators/dedup.py", "semdedup_prune_bucketed", "applyInPandas"),
-        ("operators/dedup.py", "_minhash", "mapInPandas"),
-        ("operators/similarity.py", "cosine_pair_gemm", "applyInPandas"),
-        ("operators/similarity.py", "s06_ann_int8", "mapInPandas"),
-        ("operators/similarity.py", "kmeans_bucket_assign._assigned", "mapInPandas"),
-        ("operators/similarity.py", "kmeans_bucket_assign_2level", "applyInPandas"),
-        ("operators/similarity.py", "kmeans_bucket_assign_2level", "mapInPandas"),
-        ("operators/similarity.py", "s09_ann_pq", "mapInPandas"),
-        ("operators/text.py", "t18_heavy_hitters", "mapInPandas"),
+        ("functions/kernels.py", "map_rows", "mapInArrow"),
+        ("functions/kernels.py", "map_batches", "mapInArrow"),
+        ("operators/dedup.py", "semdedup_prune_bucketed", "applyInArrow"),
+        ("operators/similarity.py", "cosine_pair_gemm", "applyInArrow"),
+        ("operators/similarity.py", "kmeans_bucket_assign_2level", "applyInArrow"),
     ]
 )
 
 
 def test_arrow_calls_only_in_map_rows_and_batch_kernels():
-    """A per-row kernel goes through ``map_rows``; a direct Arrow call
-    is kept only where the kernel works on whole NumPy batches."""
-    arrow_calls = package_calls({"mapInPandas", "applyInPandas"})
-    assert arrow_calls == ALLOWED_ARROW_CALLS
+    """No kernel goes through pandas; a per-row or per-batch kernel goes
+    through ``map_rows`` or ``map_batches``, and ``applyInArrow`` is
+    called only where a kernel needs whole groups."""
+    calls = package_calls(
+        {"mapInPandas", "applyInPandas", "mapInArrow", "applyInArrow"}
+    )
+    assert calls == ARROW_CALLS

@@ -123,16 +123,16 @@ def test_s04_gemm_is_distributed_cogroup(spark, sf_small):
     regression would show a LocalTableScan in place of the second
     parquet scan."""
     plan = formatted_plan(spark, "s04_dedup_embedding", sf_small)
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
     assert plan.count("Scan parquet") >= 2  # both GEMM sides read distributed
     assert "LocalTableScan" not in plan
 
 
 def test_s06_corpus_stays_on_executors(spark, sf_small):
     """S06 broadcasts only the N_QUERIES probe vectors; the corpus side
-    is a parquet scan into mapInPandas — no driver round-trip."""
+    is a parquet scan into mapInArrow — no driver round-trip."""
     plan = formatted_plan(spark, "s06_ann_int8", sf_small)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Scan parquet" in plan
     assert "LocalTableScan" not in plan
 
@@ -157,7 +157,7 @@ STREAMING_QUERIES = {
 )
 def test_no_plan_smells_catalogwide(spark, sf_small, name):
     """Every batch query in the catalog: no cartesian product, no
-    row-at-a-time Python (BatchEvalPython). Arrow-batched mapInPandas
+    row-at-a-time Python (BatchEvalPython). Arrow-batched mapInArrow
     stages are the sanctioned Python path."""
     plan = formatted_plan(spark, name, sf_small)
     assert "CartesianProduct" not in plan, name

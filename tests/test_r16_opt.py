@@ -91,7 +91,7 @@ def test_minhash_prepared_nw_matches_expression_form(spark, sf_small):
 
 def test_d04_plan_uses_kernel_not_agg_signatures(spark, sf_small):
     """Plan shape: the d04 signature subtree is the Arrow kernel
-    (MapInPandas), and the 126-column min-aggregate groupBy is gone —
+    (MapInArrow), and the 126-column min-aggregate groupBy is gone —
     the only aggregates left belong to the hot-bucket cap machinery
     (count per (band, bkey))."""
     docs = table(spark, sf_small, "documents")
@@ -99,7 +99,7 @@ def test_d04_plan_uses_kernel_not_agg_signatures(spark, sf_small):
     sub = D.minhash_prepared(
         docs
     )._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in sub
+    assert "MapInArrow" in sub
     assert "HashAggregate" not in sub and "xxhash64" not in sub
     # the full query's plan is checkpoint-truncated (Scan ExistingRDD
     # leaves), so assert the legacy 126-min-agg signature shape is

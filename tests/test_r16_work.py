@@ -223,7 +223,7 @@ def test_t25_entity_decode_is_single_pass(spark):
 
 def test_t25_plan_zero_shuffles(spark, sf_small, catalog):
     """Zero shuffles by construction: scan → expressions →
-    mapInPandas → project. Only widen_scan's fixture round-robin may
+    mapInArrow → project. Only widen_scan's fixture round-robin may
     appear; no hash/range exchange, no join, no aggregate."""
     queries, _ = catalog
     plan = (

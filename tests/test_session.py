@@ -84,13 +84,8 @@ def test_runtime_confs_are_modifiable(spark):
     assert not any(spark.conf.isModifiable(k) for k in BUILDER_ONLY_CONFS)
 
 
-def test_session_skips_call_site_capture(spark, sf_small):
-    """With DataFrame debugging on, every Column call looks up
-    ``PySparkCurrentOrigin`` over py4j to record its Python call site."""
-    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
-    assert not pyspark.errors.utils.is_debugging_enabled()
-
-    q01 = load_catalog()[0]["q01_pricing_summary"]
+def _py4j_commands(call) -> list[str]:
+    """The py4j commands the driver sends while ``call()`` runs."""
     conn = py4j.clientserver.ClientServerConnection
     send = conn.send_command
     commands = []
@@ -101,8 +96,31 @@ def test_session_skips_call_site_capture(spark, sf_small):
 
     conn.send_command = counting
     try:
-        q01(spark, sf_small)
+        call()
     finally:
         conn.send_command = send
+    return commands
+
+
+def test_session_skips_call_site_capture(spark, sf_small):
+    """With DataFrame debugging on, every Column call looks up
+    ``PySparkCurrentOrigin`` over py4j to record its Python call site."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not pyspark.errors.utils.is_debugging_enabled()
+
+    q01 = load_catalog()[0]["q01_pricing_summary"]
+    commands = _py4j_commands(lambda: q01(spark, sf_small))
     assert commands
     assert not [c for c in commands if "PySparkCurrentOrigin" in c]
+
+
+def test_runtime_confs_apply_once_per_session(spark, sf_small):
+    """A repeat entry on a session the runtime confs were applied to
+    sets no conf: each apply cost a get and a set per key. (The Parquet
+    source still reads the confs its schema memo depends on.)"""
+    q01 = load_catalog()[0]["q01_pricing_summary"]
+    q01(spark, sf_small)
+    conf_set = f"c\n{spark.conf._jconf._target_id}\nset\n"
+    commands = _py4j_commands(lambda: q01(spark, sf_small))
+    assert commands
+    assert not [c for c in commands if c.startswith(conf_set)]
