@@ -67,8 +67,8 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    # Validate EVERY pure argument error before get_spark (r10
-    # review): JVM startup costs seconds and leaves a stray session —
+    # Validate EVERY pure argument error before get_spark: JVM
+    # startup costs seconds and leaves a stray session —
     # pointless for a usage mistake argparse could have named.
     for c in args.cast:
         if "=" not in c:

@@ -1,20 +1,19 @@
 """The one forcing recipe every timing/audit instrument uses.
 
 A bare ``count()`` lets Catalyst column-prune computed columns out of
-cardinality-preserving plans entirely — t23's encode projection (and,
-before the r15b honesty pass, t24's whole classifier) never ran under
-count()-based timing, so the recorded numbers measured parquet row
-counting. ``hash(*)`` depends on every output column; the 32-bit hash
-summed into a long cannot overflow under ANSI mode until ~2^32 rows.
+cardinality-preserving plans entirely — t23's encode projection or
+t24's whole classifier would never run under count()-based timing, so
+the recorded numbers would measure parquet row counting. ``hash(*)``
+depends on every output column; the 32-bit hash summed into a long
+cannot overflow under ANSI mode until ~2^32 rows.
 
 ``hash()`` rejects MapType ANYWHERE in a column's type — top-level,
 inside a struct field, an array element, or another map's key/value —
 so any column whose type transitively contains a map routes through
-``to_json`` first (the r15 audit scripts checked only TOP-LEVEL maps;
-a catalog op emitting array<map<...>> would have crashed the audit
-rather than been timed — r15 advisor). One importable function
-replaces the three drifting copies in bench.run_once,
-scripts/scale_rehearsal.py and scripts/constant_audit.py.
+``to_json`` first (checking only TOP-LEVEL maps would crash on a
+catalog op emitting array<map<...>> rather than time it). bench.py,
+scripts/scale_rehearsal.py and scripts/constant_audit.py all call
+this one function.
 """
 
 from __future__ import annotations

@@ -40,8 +40,8 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
     (Hadoop signals e.g. an existing destination FILE by returning
     false).
 
-    An existing destination DIRECTORY is refused explicitly (r10
-    review): Hadoop's rename would otherwise move ``src`` INSIDE it
+    An existing destination DIRECTORY is refused explicitly: Hadoop's
+    rename would otherwise move ``src`` INSIDE it
     and return true — a swap step (``rename(tmp, path)``) racing a
     concurrent re-creation of ``path`` would silently nest the lake
     at ``path/<tmp-name>/…`` with no error anywhere. The check is
@@ -115,10 +115,10 @@ def write_text(spark: SparkSession, path: str, payload: str) -> None:
 
 def read_text(spark: SparkSession, path: str) -> str:
     """Read a small text file written by :func:`write_text`,
-    byte-faithfully. The earlier ``spark.read.text`` implementation
-    was NOT a faithful inverse (r10 review): Hadoop's line reader
-    strips ``\\n``/``\\r\\n`` terminators, so a payload with a trailing
-    newline read back unequal to what was written. The copy runs
+    byte-faithfully. ``spark.read.text`` is NOT a faithful inverse:
+    Hadoop's line reader strips ``\\n``/``\\r\\n`` terminators, so a
+    payload with a trailing newline would read back unequal to what
+    was written. The copy runs
     JVM-side (one ``byte[]`` transfer, no per-byte py4j round trips)."""
     fs, jpath = _fs_path(spark, path)
     jvm = spark._jvm

@@ -46,7 +46,7 @@ def l2norm_d(a: Column) -> Column:
 
 def cosine_d(a: Column, b: Column) -> Column:
     """Cosine similarity; a ZERO-NORM side yields NULL in BOTH
-    engines. ``try_divide`` is load-bearing (r10 review): under ANSI
+    engines. ``try_divide`` is load-bearing: under ANSI
     mode a plain ``/`` THROWS on the 0.0 divisor an all-zero
     embedding produces, while the DuckDB oracle returns NULL — so an
     adversarial row would abort the Spark job where the oracle keeps

@@ -70,7 +70,7 @@ def zorder_key(
         # orders above every value — and one ±Infinity would become
         # the derived edge, making the span infinite so every finite
         # row quantizes to bucket 0 (the same dimension-collapse
-        # failure, degraded rather than thrown — r11 advice).
+        # failure, degraded rather than thrown).
         # Excluded rows keep their real bounds on the other
         # dimensions and follow the per-row NULL/NaN/clamp policy.
         finite_only = {}
@@ -113,7 +113,7 @@ def zorder_key(
         # default ANSI mode, casting an out-of-range double to long
         # throws at write time instead of saturating, so a clamp
         # placed after the cast never runs for exactly the values
-        # that need it (r10 advice)
+        # that need it
         q = F.least(
             F.lit(float(max_q)),
             F.greatest(

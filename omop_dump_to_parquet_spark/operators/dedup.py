@@ -199,15 +199,13 @@ def _ranked_tokens(
     the position-filtered probe side (one subtree → one computation
     via ReuseExchange).
 
-    r17 restructure (guide §2.4 — remove shuffles outright): ``nw``
-    rides the rank window as a second Window over the SAME (doc_id)
-    exchange instead of a separate sizes aggregate + doc_id join —
-    one aggregate and one join deleted, zero new exchange, values
-    (df, rn, nw) unchanged expression-for-expression. (An explicit
-    (block, token) repartition shared by the census groupBy and its
-    join was A/B'd and REVERTED — scripts/r17_ab_census.py: at
-    fixture scale the planner broadcasts the census table so the
-    explicit exchange was pure addition, d03 3.10s → 3.44s.)"""
+    ``nw`` rides the rank window as a second Window over the SAME
+    (doc_id) exchange instead of a separate sizes aggregate + doc_id
+    join: no extra aggregate, join or exchange. (An explicit (block,
+    token) repartition shared by the census groupBy and its join
+    measured slower: at fixture scale the planner broadcasts the
+    census table, so the explicit exchange is pure addition, d03
+    3.10s → 3.44s.)"""
     if tok is None:
         tok = _distinct_tokens(docs, *block_cols)
     dfreq = tok.groupBy(*block_cols, "w").agg(
@@ -258,7 +256,7 @@ def _guard_block_population(
     and fires even when the caller never inspects block sizes.
 
     Broadcasting a SCALAR rather than the per-block count table
-    matters at scale (advisor note r9): with high-cardinality
+    matters at scale: with high-cardinality
     ``block_cols`` — the realistic production case this guard
     targets — a full per-block table could itself exceed the
     broadcast limit or driver memory, making the safety guard the
@@ -278,8 +276,8 @@ def _guard_block_population(
     # explicitly: the assert filter below references only the scalar
     # side's column, so Catalyst is free to push it BELOW the join
     # onto the one-row bsz relation, where it evaluates even when
-    # docs has no rows (found by the r10 ×10 rehearsal — d13's
-    # empty small-string path raised "population null exceeds").
+    # docs has no rows (d13's empty small-string path would raise
+    # "population null exceeds").
     ok = F.coalesce(
         F.col("_block_docs") <= F.lit(max_block_docs), F.lit(True)
     )
@@ -328,7 +326,7 @@ def prefix_filter_candidates(
     exact set-size condition (den·min(nw) ≥ num·max(nw), cf.
     lsh_candidate_pairs) prunes further at zero recall cost.
 
-    POSITION filter (PPJoin, Xiao et al. 2008 — r6): a match between
+    POSITION filter (PPJoin, Xiao et al. 2008): a match between
     A's token at rank pa and B's token at rank pb (global df order on
     both sides) can witness an overlap of at most
     1 + min(nwa−pa, nwb−pb) (every other common token sorts after the
@@ -343,7 +341,7 @@ def prefix_filter_candidates(
     growth that made exact-Jaccard candidate generation the one
     superlinear stage in the scale rehearsal (SCALING.md).
 
-    BOUNDED-BLOCK contract (r9, enforced): candidate volume per
+    BOUNDED-BLOCK contract (enforced): candidate volume per
     block is ~N^1.6 even under Heaps-law vocabulary growth
     (HEAPS_SWEEP.json), so ``max_block_docs`` (default
     ``DEFAULT_MAX_BLOCK_DOCS``) caps the population any single block
@@ -354,15 +352,14 @@ def prefix_filter_candidates(
     """
     docs = _guard_block_population(docs, block_cols, max_block_docs)
     tok = _distinct_tokens(docs, *block_cols, tokens=tokens)
-    # sizes=None (r17): nw rides the rank window — see _ranked_tokens.
-    # (r17 losing A/B, recorded: materializing `ranked` once via lazy
-    # localCheckpoint — isolated phase probes showed the self-join
-    # evaluating the census+rank subtree twice (d07 candidates 4.42s ≈
-    # 2 × ranked 2.10s) — measured WORSE end-to-end: d03 2.87s → 3.28s,
-    # d07 3.63s → 3.50s wash (scripts/r17_ab_census.py run 4). The
-    # materialization is a barrier that serializes what the lazy plan
-    # overlaps, and AQE's runtime exchange reuse already shares the
-    # heavy shuffle between the two sides. Kept lazy.)
+    # nw rides the rank window — see _ranked_tokens. `ranked` stays
+    # lazy: materializing it once via localCheckpoint (the self-join
+    # evaluates the census+rank subtree twice, d07 candidates 4.42s ≈
+    # 2 × ranked 2.10s) measured WORSE end-to-end, d03 2.87s → 3.28s
+    # and d07 3.63s → 3.50s. The materialization is a barrier that
+    # serializes what the lazy plan overlaps, and AQE's runtime
+    # exchange reuse already shares the heavy shuffle between the
+    # two sides.
     ranked = _ranked_tokens(docs, *block_cols, tok=tok)
     index = _prefix(ranked, num, den).alias("b")
     probe = ranked.alias("a")
@@ -573,7 +570,7 @@ def d04_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4-6 traversals ≈ the whole query's cost at fixture scale). Both
     # are per-run materializations computed from the parquet inputs —
     # nothing persists across runs. At 100 TB `prepared` would be
-    # written to storage instead (guide §8's decision-table pattern);
+    # written to storage instead;
     # the group table stays O(distinct sets) metadata either way.
     prepared = minhash_prepared(docs).localCheckpoint(eager=True)
     grouped = d04_grouped(docs, prepared).localCheckpoint(eager=True)
@@ -649,7 +646,7 @@ def verify_jaccard_pairs(
 
     ``tokens`` overrides the default word tokenizer with any
     already-distinct array expression over ``docs`` (must match the
-    tokenizer used for candidate generation). ``tok_arr`` (r16)
+    tokenizer used for candidate generation). ``tok_arr``
     instead supplies a PREBUILT (doc_id, toks array<long>, nw) table
     — e.g. d04's materialized kernel output — skipping the
     re-tokenization of ``docs`` entirely; its token hashes must come
@@ -722,8 +719,8 @@ def verify_jaccard_pairs(
 # The token hash is 60 bits of md5 (15 hex chars parsed as an int64) —
 # chosen over xxhash64 PRECISELY because DuckDB can compute the
 # identical value (('0x' || substr(md5(w), 1, 15))::BIGINT), which
-# upgrades d05 from a rows-only check (r1-r4) to a full differential
-# oracle. The oracle skips the banding: Hamming ≤ 3 over 4 chunks
+# makes d05 a full differential rather than a rows-only check. The
+# oracle skips the banding: Hamming ≤ 3 over 4 chunks
 # IMPLIES ≥1 equal chunk (pigeonhole), so the banded Spark plan and
 # the all-pairs SQL define the same output set — banding is only the
 # SCALE strategy, never the semantics.
@@ -737,17 +734,14 @@ SIMHASH_MAX_HAMMING = 3
 def simhash_chunks(docs: DataFrame) -> DataFrame:
     """Per-doc SimHash as 4 columns c0..c3 (15 bits each).
 
-    r16 (guide §4.2, the d04/d15 kernel pattern): computed map-side
-    in a NumPy kernel — one md5 per distinct token, a (tokens × 60)
-    ±1 bit matrix summed per doc with add.reduceat, chunks packed by
-    a matrix-vector product. VALUE-identical to the former explode →
-    60-conditional-sum groupBy form (token hash = int(md5-hex[:15],
-    16) = Spark's conv(substring(md5(w),1,15),16,10) = the oracle's
-    ('0x'||substr(md5(w),1,15))::BIGINT), so the differential check
-    is unchanged, and the aggregation exchange is deleted — the
-    per-doc fingerprint never leaves its scan task. widen_scan
-    parallelizes the fixture's single split; no-op at real split
-    counts."""
+    Computed map-side in a NumPy kernel (the d04/d15 kernel pattern):
+    one md5 per distinct token, a (tokens × 60) ±1 bit matrix summed
+    per doc with add.reduceat, chunks packed by a matrix-vector
+    product. The token hash int(md5-hex[:15], 16) equals the oracle's
+    ('0x'||substr(md5(w),1,15))::BIGINT, and no aggregation exchange
+    is needed — the per-doc fingerprint never leaves its scan task.
+    widen_scan parallelizes the fixture's single split; no-op at real
+    split counts."""
     n_chunks, n_bits = SIMHASH_CHUNKS, SIMHASH_CHUNK_BITS
 
     def chunks(doc_id, text):
@@ -963,8 +957,8 @@ def d07_dedup_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fractions import Fraction
 
     docs = table(spark, sf_dir, "documents")
-    # widen_scan (r16): the interpreted shingle construction below is
-    # the query's dominant per-row cost and ran inside the fixture's
+    # widen_scan: the interpreted shingle construction below is the
+    # query's dominant per-row cost and would run inside the fixture's
     # single scan split; widening parallelizes the checkpoint build
     # (measured 4.0s → 3.5s median at sf0.1) and is a no-op at real
     # split counts. (The same A/B on d03's plain tokenizer LOST —
@@ -1098,8 +1092,7 @@ def _semdedup_hits_sql(rel: str, bucket_col: str) -> str:
     over any relation with (vec_id, emb, {bucket_col}). The SINGLE
     definition shared by d10 (hyperplane buckets) and d14 (k-means
     buckets), so a τ-handling or rounding fix moves both
-    certifications in lockstep (r13 review: the 14-line block was
-    previously duplicated verbatim)."""
+    certifications in lockstep."""
     return f"""hits AS (
   SELECT a.vec_id AS keeper_id, c.vec_id AS removed_id,
          round(list_dot_product(a.emb, c.emb)
@@ -1170,7 +1163,7 @@ def semdedup_prune(
     like s02 — SemDeDup's own clustering (k-means, s07) has the same
     border property.
 
-    r12 caveat, measured at ×100 (SCALING.md "x100"): the planes rule
+    Caveat, measured at ×100 (SCALING.md "x100"): the planes rule
     holds only while hyperplanes can SPLIT the population. A tight
     semantic cluster shares its sign pattern under (almost) any
     hyperplane, so once buckets align with clusters the densest
@@ -1217,14 +1210,13 @@ def semdedup_prune_bucketed(emb: DataFrame, tau: float) -> DataFrame:
 # ---------------------------------------------------------------------------
 # D14 — SemDeDup with the paper's OWN clustering step: k-means
 # bucketing feeding the per-cluster prune (Abbas et al. 2023 §2 run
-# as written, where d10 substitutes hyperplane buckets). Promoted to
-# a catalog id in r13 (r12 verdict #3) because the K∝N k-means
-# bucketing became the documented production path for
-# density-concentrated corpora — the r12 x100 rehearsal showed random
+# as written, where d10 substitutes hyperplane buckets). A catalog id
+# because the K∝N k-means bucketing is the documented production path
+# for density-concentrated corpora — the x100 rehearsal showed random
 # hyperplanes cannot split a tight semantic cluster (max bucket grows
 # with the corpus, α 1.91) while Voronoi cells cut through dense
 # blobs (max bucket flat, α 0.611) — and plan-bearing code that only
-# scripts exercise is where regressions hide (SCALING.md, r11).
+# scripts exercise is where regressions hide (SCALING.md).
 #
 # Differential design: the clustering is the s07 exact-decimal Lloyd
 # lockstep (similarity.kmeans_exact — assign by round(|c|²−2·x·c, 6)
@@ -1366,7 +1358,7 @@ def d11_verbatim_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posting list, both self-join sides) — without truncation
     # Catalyst re-plans it per consumer: 4 corpus scans. Same
     # lesson as d07's shingle table; reliable checkpoint on a real
-    # cluster. widen_scan (r16): the gram build ran inside the
+    # cluster. widen_scan: the gram build would run inside the
     # fixture's single scan split — widening parallelizes the
     # checkpoint job (measured 2.82s → 1.47s median at sf0.1;
     # no-op at real split counts).
@@ -1482,7 +1474,7 @@ def d12_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # token-set ops (d03/d07 Jaccard) cannot express: a one-letter typo
 # is invisible to word-set similarity but is exactly edit distance 1.
 #
-# Scale shape (r10 rewrite — the r9 verdict's one weak component):
+# Scale shape:
 # blocking on brand ALONE is a fixed-cardinality key (~25 TPC-H
 # brands), so block populations grow LINEARLY with corpus size and
 # candidate pairs Σ_block n_b² grow QUADRATICALLY — at 100× data
@@ -1818,9 +1810,9 @@ def passjoin_pairs(
         max_edit=max_edit,
         # the banded path's completeness lemma needs band width >
         # max_edit; the fixed default only covers max_edit ≤ 3, so
-        # widen with the bound (r10 review: max_edit=4 used to raise
-        # ValueError from this internal call despite PassJoin itself
-        # supporting any bound)
+        # widen with the bound (a fixed band would make max_edit=4
+        # raise ValueError from this internal call despite PassJoin
+        # itself supporting any bound)
         len_band=max(D13_LEN_BAND, max_edit + 1),
         max_block_docs=max_block_docs,
     ).filter(
@@ -1836,7 +1828,7 @@ def d13_edit_distance_linkage(
     """D13 — blocked edit-distance entity resolution: within-brand
     part-name pairs at Levenshtein ≤ 2, via the threshold (banded-DP)
     variant so per-pair cost is bounded. Candidate generation is
-    PassJoin segment blocking (``passjoin_pairs``, r10): ANY
+    PassJoin segment blocking (``passjoin_pairs``): ANY
     fixed-cardinality blocking key — brand alone (~25 values), even
     brand × length-band (~200) — has block populations that grow
     linearly with the corpus and Σn_b² candidates that grow
@@ -2056,8 +2048,8 @@ def d04_grouped(
     exchange on the uniform content-fold key — the exact-duplicate
     collapse every production near-dedup runs before MinHash
     (boilerplate cliques are the dominant duplication mode in web
-    corpora), done here with group METADATA only (guide §8: decide
-    with small rows). ``first(keys)`` is deterministic because every
+    corpora), done here with group METADATA only (decide with small
+    rows). ``first(keys)`` is deterministic because every
     member of a group has the identical signature by construction
     (same token set ⇒ same base hashes ⇒ same mins). ``prepared``
     lets the full d04 pipeline pass its materialized kernel output so
@@ -2161,8 +2153,7 @@ def widen_scan(df: DataFrame) -> DataFrame:
         # count splits). Streams get their parallelism from the
         # source's partitioning — microbatch splits per file/topic
         # partition — so the fixture-widener is meaningless there;
-        # return unchanged so the helper is safe by construction
-        # (r15 advisor).
+        # return unchanged so the helper is safe by construction.
         return df
     n = get_shuffle_partitions(df.sparkSession)
     if df.rdd.getNumPartitions() >= n:

@@ -109,13 +109,12 @@ def connected_components(
     ``checkpoint_fn`` defaults to LAZY ``localCheckpoint`` — executor-
     local, right for a single job; pass ``lambda df: df.checkpoint()``
     with a configured checkpoint dir for fault-tolerant production runs.
-    Lazy (r17, guide §5/§2): the per-round convergence fingerprint is
-    the action that materializes the round's checkpoint — a full
-    count+sum aggregate computes every partition, so the round costs
-    ONE Spark job instead of two (eager materialization + fingerprint).
-    Measured at sf0.1 (d06's 3-round graph, scripts/r17_ab_graph.py):
-    whole-CC jobs 42 → 38 (one per init/round), median 5.29s → 3.66s
-    same-session paired.
+    Lazy: the per-round convergence fingerprint is the action that
+    materializes the round's checkpoint — a full count+sum aggregate
+    computes every partition, so the round costs ONE Spark job instead
+    of two (eager materialization + fingerprint). Measured at sf0.1
+    (d06's 3-round graph): whole-CC jobs 42 → 38 (one per init/round),
+    median 5.29s → 3.66s same-session paired.
     """
     if checkpoint_fn is None:
         def checkpoint_fn(df: DataFrame) -> DataFrame:
@@ -198,9 +197,8 @@ def _d03_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     four graph-side consumers (d06 clusters, g01 PageRank, g02 LPA,
     g03 triangles): blocked AllPairs prefix-filter candidates +
     exact-hash Jaccard verification at the shared threshold. One
-    definition (r10 review): four verbatim copies meant a threshold
-    or blocking change could silently make the ranked graph differ
-    from the clustered one."""
+    definition, so a threshold or blocking change cannot silently make
+    the ranked graph differ from the clustered one."""
     from fractions import Fraction
 
     docs = table(spark, sf_dir, "documents")
@@ -221,8 +219,8 @@ def _sym_src_edges(pairs: DataFrame, with_deg: bool = False) -> DataFrame:
     localCheckpoint truncates the candidate-generation lineage once.
     Measured at sf0.1 (g01): 1.81s → 0.92s for the PR loop.
 
-    ``with_deg`` (r17, guide §2.4): additionally attach each src's
-    out-degree BEFORE the checkpoint. The degree table is static
+    ``with_deg``: additionally attach each src's out-degree BEFORE the
+    checkpoint. The degree table is static
     across PageRank iterations, so joining it once here (groupBy +
     join both run in-place on the src-partitioned edges — zero extra
     exchange) deletes one join per iteration from g01's unrolled
@@ -421,22 +419,22 @@ def g01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = _d03_pairs(spark, sf_dir).select("doc_a", "doc_b")
     # degrees are static across iterations: attach them to the
-    # checkpointed edge table ONCE (r17) instead of re-joining the
-    # degree table inside every unrolled iteration — one join per
-    # iteration deleted, identical pr/deg arithmetic.
+    # checkpointed edge table ONCE instead of re-joining the degree
+    # table inside every unrolled iteration — one join fewer per
+    # iteration, identical pr/deg arithmetic.
     und = _sym_src_edges(pairs, with_deg=True)
     pr = und.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("pr")
     )
     for _ in range(PR_ITERS):
-        # SHUFFLE_HASH (r17, guide §3.1/§2.4): und is checkpointed
+        # SHUFFLE_HASH: und is checkpointed
         # hash-partitioned on src and pr comes out of groupBy(node) at
         # the same width, so the hinted join is EXCHANGE-FREE with a
         # per-partition hash build of the small rank table — no
         # per-iteration broadcast-build job, no sort of the edge
         # table. Each iteration's only shuffle is the groupBy(dst).
-        # Same-session paired A/B (scripts/r17_ab_graph.py, loop only,
-        # pairs materialized): 4.66s → 3.76s median.
+        # Same-session paired A/B (loop only, pairs materialized):
+        # 4.66s → 3.76s median.
         contrib = (
             und.join(pr.hint("shuffle_hash"), und["src"] == pr["node"])
             .select(
@@ -521,9 +519,9 @@ def g02_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the identical (cnt DESC, community ASC) winner, but the
         # (n2, community) counts partial-aggregate into one exchange
         # and the argmax needs no per-partition sort. Same-session
-        # paired A/B (scripts/r17_ab_graph.py): 3.67s → 2.44s median
-        # for the 4-round loop. Oracle unchanged (the unrolled SQL's
-        # row_number and this struct-min define the same winner).
+        # paired A/B: 3.67s → 2.44s median for the 4-round loop. The
+        # oracle's unrolled SQL row_number and this struct-min define
+        # the same winner.
         votes = (
             und.join(labels.hint("shuffle_hash"),
                      und["src"] == labels["node"])

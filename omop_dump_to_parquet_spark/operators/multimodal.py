@@ -123,7 +123,7 @@ def m02_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # M03 — frame sampling over fake "video" payloads (honest stub for
-# the CODEC, differentially checked for everything else — r6).
+# the CODEC, differentially checked for everything else).
 # Chunks the payload into fixed-size frames and emits every k-th one —
 # the plumbing (explode to frame rows, per-frame metadata, bounded
 # memory per batch) is the real shape of video pipelines. There is no
@@ -209,7 +209,7 @@ def m03_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # M04 — image resize over RAW (container-less) frames: the
 # metadata-carrying variant of the resample. The CODEC-complete
-# variant is m09 (r9), which runs the real BMP decoder in the kernel
+# variant is m09, which runs the real BMP decoder in the kernel
 # — m04 keeps the raw-frame API (`resize_frames`) for payloads that
 # are already decoded planes. Payloads carry (width, height)
 # metadata; the "image" is a deterministic fake (row-major bytes).
@@ -298,12 +298,12 @@ def m04_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def decode_bmp_gray(b: bytes) -> tuple[int, int, bytes]:
-    """REAL container decode (r7): uncompressed 8-bit-per-pixel BMP
+    """REAL container decode: uncompressed 8-bit-per-pixel BMP
     (BITMAPINFOHEADER, BI_RGB) → (width, height, row-major top-down
     grayscale bytes). Parses the actual format — magic, pixel-array
     offset, signed height (bottom-up vs top-down), 4-byte row
     stride — so the m04 plumbing is exercised against a true decoder,
-    not only the raw-bytes fake (verdict r6 ask #8). Pure bytes: no
+    not only the raw-bytes fake. Pure bytes: no
     image library exists in this container, and none is needed for
     BI_RGB. A PIL/cv2 decode drops in unchanged for compressed
     formats. The ``resize_bmp`` kernel calls it per payload.
@@ -333,7 +333,7 @@ def decode_bmp_gray(b: bytes) -> tuple[int, int, bytes]:
     # 8bpp pixel bytes are PALETTE INDICES, not luminance: decoding
     # them as grayscale is only valid when the palette is the
     # identity ramp (entry i = BGR (i,i,i)). Validate instead of
-    # silently mis-decoding a colormapped image (advisor note r7).
+    # silently mis-decoding a colormapped image.
     n_colors = clr_used or 256
     pal = b[14 + hdr_size : 14 + hdr_size + 4 * n_colors]
     if len(pal) < 4 * n_colors:
@@ -359,7 +359,7 @@ def decode_bmp_gray(b: bytes) -> tuple[int, int, bytes]:
     data = b"".join(rows)
     # pixels are palette INDICES: with a short palette (clr_used <
     # 256) an index >= clr_used points past the table — decoding it
-    # as luminance would be out-of-palette garbage (advisor note r9)
+    # as luminance would be out-of-palette garbage
     if n_colors < 256 and data and max(data) >= n_colors:
         raise ValueError(
             f"BMP pixel index >= clr_used={n_colors} "
@@ -382,9 +382,8 @@ def resize_bmp(payloads: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M09 — the REAL container decode as a first-class catalog id (r9;
-# previously `resize_bmp` was unit/property-tested but the registered
-# m04 ran only the stub arithmetic). End-to-end: build genuine 8bpp
+# M09 — the REAL container decode as a first-class catalog id (the
+# registered m04 runs only the stub arithmetic). End-to-end: build genuine 8bpp
 # BI_RGB BMP payloads from the fixture text in one Arrow stage (an
 # in-plan fixture ENCODER — bottom-up row order, 4-byte stride
 # padding, identity grayscale palette: every decoder obligation is
@@ -494,7 +493,7 @@ def m09_bmp_decode_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are bounded per band bucket (never corpus-quadratic); the verify is
 # a 2-long-column comparison. Only (doc_id, 8 bytes) shuffle.
 #
-# Full differential oracle (r6, the d05 recipe): the aHash threshold
+# Full differential oracle (the d05 recipe): the aHash threshold
 # is INTEGER-exact — bit j set iff chunk_sum[j]·64 > Σ chunk_sums,
 # algebraically identical to px[j] > mean(px) (all 64 chunks share
 # one stride) but with no float roundoff, so DuckDB recomputes the
@@ -812,7 +811,7 @@ def m07_augmentation_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# M08 — audio-style framing + per-frame features (r6): OVERLAPPING
+# M08 — audio-style framing + per-frame features: OVERLAPPING
 # fixed-length windows (frame 256, hop 128 — the 50%-overlap STFT
 # layout every audio front-end uses) over an opaque payload, with
 # per-frame integer features: energy (byte sum), peak (max byte),
@@ -900,7 +899,7 @@ def _audio_frames(payload: bytes) -> list[tuple]:
 
 
 # ---------------------------------------------------------------------------
-# M10 — the second REAL container decode (r9): WAV/RIFF → 16-bit PCM
+# M10 — the second REAL container decode: WAV/RIFF → 16-bit PCM
 # samples → overlapping frame features, differentially gated end to
 # end with the m09 recipe. One Arrow stage builds genuine WAV files
 # from the fixture text (RIFF size header, `fmt ` chunk, an

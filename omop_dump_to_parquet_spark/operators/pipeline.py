@@ -101,7 +101,7 @@ def p01_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "quality")
     )
 
-    # the SHARED t06/t12 expressions (r10 review): the manifest must
+    # the SHARED t06/t12 expressions: the manifest must
     # sample and shard exactly as the standalone operators do, so a
     # tuning change there cannot silently diverge here
     bucket = sample_bucket_expr(P01_SAMPLE_SEED)
@@ -496,8 +496,7 @@ def mixture_targets(
     bit-identical to the oracle's BIGINT arithmetic. The SINGLE
     definition of the basis arithmetic: p06 caps targets at n_s
     (sampling), p07 doesn't (upsampling) — a change here moves both
-    in lockstep (r13 review: the formula previously lived inline in
-    three places)."""
+    in lockstep."""
     import math
 
     r = {s: math.floor(math.sqrt(n) * 1_000_000) for s, n in counts.items()}
@@ -680,8 +679,7 @@ def mixture_threshold_draw(
     partition (a dominant source would serialize in a single task
     chain there).
 
-    Two passes, the d04-verify / r11 "refine must be sliver-sized"
-    shape:
+    Two passes, the d04-verify "refine must be sliver-sized" shape:
       1. map-side histogram of the first ``prefix_len`` hex chars of
          the rank hash per source (bounded driver state:
          |sources|·16^prefix_len rows) → per source, the boundary
@@ -749,13 +747,12 @@ def mixture_threshold_draw(
 # P08 — the threshold draw CERTIFIED on a skew-dominant corpus. P06's
 # window path per-source-sorts the whole corpus; its documented 100 TB
 # posture for a dominant source (which would serialize that source's
-# rank sort through one task chain) is `mixture_threshold_draw` above
-# — previously only unit/equivalence-tested, i.e. exactly the
-# plan-bearing-code-only-scripts-exercise gap the r11/r12 lessons
-# warn about (r13 verdict, next-round #4). This id runs the
-# threshold draw itself through the standing harnesses (driver
-# differential, four-axis determinism, randomized fixtures) on a
-# corpus where ONE source holds ≥90% of rows.
+# rank sort through one task chain) is `mixture_threshold_draw` above;
+# plan-bearing code that only unit tests exercise is where
+# regressions hide, so this id runs the threshold draw itself
+# through the standing harnesses (driver differential, four-axis
+# determinism, randomized fixtures) on a corpus where ONE source
+# holds ≥90% of rows.
 #
 # The skew is DERIVED deterministically (doc_id % 11 == 0 keeps its
 # source, everything else becomes 'web' → ~91% dominance at every sf;
@@ -764,13 +761,13 @@ def mixture_threshold_draw(
 # modulus is COPRIME with the fixture's source stripe (source is
 # src{doc_id % 20}), so the minority rows cycle through ALL twenty
 # sources in 2-3-row slivers — which also gives them FULL-SIZE quotas
-# (q = n_s, kept whole) while 'web' takes the boundary draw. Note
-# (r15 advice): under mixture_quotas, q = min(n_s, tgt) <= n_s, so a
+# (q = n_s, kept whole) while 'web' takes the boundary draw. Note:
+# under mixture_quotas, q = min(n_s, tgt) <= n_s, so a
 # full-quota source is kept whole via the BOUNDARY path (the prefix
 # loop always breaks); the separate ('g', 0) keep-all branch in
 # mixture_threshold_draw guards RAW quotas > n_s from callers outside
 # mixture_quotas and is exercised directly by a unit test
-# (tests/test_r15_advice.py), not by this id. The
+# (tests/test_pipeline.py), not by this id. The
 # oracle states the CONTRACT — the quota-smallest md5 rank hashes per
 # source, via the window form — while the Spark side never computes a
 # global per-source rank: pass 1 is a map-side histogram of 2-hex
@@ -869,12 +866,12 @@ def p08_mixture_skew_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the plan is width-independent).
 #
 # Spark shape (the d11 machinery, re-pointed): grams are hashed
-# per-token-window (two-stage since r15: token strings xxhash64'd once
+# per-token-window (two-stage: token strings xxhash64'd once
 # per row, then each gram hashes its w-long token-hash window — two
 # longs per posting row, no gram-string assembly, no per-gram string
 # re-hash; the ORACLE joins on gram TEXT, so row-for-row agreement
 # doubles as the collision check).
-# Error model on an oracle-less production corpus (r15 advice): a
+# Error model on an oracle-less production corpus: a
 # 64-bit hash collision can falsely mark a train gram contaminated or
 # merge two distinct grams in n_doc_grams; expected collisions ≈
 # n_train_grams · n_eval_grams / 2^64 (~5·10⁻⁶ even at 10¹² train ×
@@ -940,13 +937,13 @@ FROM hits h JOIN tot t2 ON h.doc_id = t2.doc_id
 def decontaminate(
     docs: DataFrame, width: int = P09_NGRAM, eval_mod: int = P09_EVAL_MOD
 ) -> DataFrame:
-    """The decontamination kernel, width-parameterized (r14 verdict #3):
+    """The decontamination kernel, width-parameterized:
     hashed per-doc-distinct gram index (one checkpoint, two consumers)
     → broadcast eval-gram LEFT join (map-side mark) → ONE
     groupBy(doc_id) for both counts (see the P09 block comment; the
     plan is width-independent). ``docs`` needs (doc_id, text).
 
-    Gram hashing is TWO-STAGE since r15: token strings are hashed once
+    Gram hashing is TWO-STAGE: token strings are hashed once
     per row in their OWN projection, then each gram hashes the w-long
     window of token hashes — at width 8 the naive form re-hashes every
     token string ~8x (measured 3x slower on .scale/x10: ~9s vs ~3s),
@@ -957,10 +954,9 @@ def decontaminate(
     keep the ~2^-64-per-pair conservative error model in the banner)."""
     from .text import tokens
 
-    # (r16: a widen_scan here measured SLOWER — 1.36s vs 0.93s median
+    # No widen_scan: it measured SLOWER here — 1.36s vs 0.93s median
     # at sf0.1 — the eager checkpoint bounds the single-split cost
     # already and the extra round-robin exchange is pure overhead.
-    # Left alone.)
     staged = docs.select(
         "doc_id",
         F.transform(tokens("text"), lambda t: F.xxhash64(t)).alias("th"),
@@ -998,9 +994,7 @@ def decontaminate(
 @query("p09_decontamination", oracle=P09_ORACLE)
 def p09_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The width-3 catalog pin of :func:`decontaminate` (see block
-    comment; body factored into the shared kernel in r15 for p10 —
-    expression-identical plan, pinned for a fresh driver check per the
-    r6/r13 value-identical-refactor precedent)."""
+    comment; p10 runs the same kernel at width 8)."""
     return decontaminate(
         table(spark, sf_dir, "documents"), P09_NGRAM, P09_EVAL_MOD
     )
@@ -1008,7 +1002,7 @@ def p09_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # P10 — decontamination at PRODUCTION gram width in a SPARSE regime.
-# The r14 Heaps rehearsal measured that width 3 on Zipf text is
+# The Heaps rehearsal measured that width 3 on Zipf text is
 # degenerate — 99.8% of train docs flagged, because Zipf-frequent
 # 3-grams dominate coverage at any vocabulary size (the refuted-
 # hypothesis note in SCALING.md) — so p09's certificate never ran the
@@ -1301,7 +1295,7 @@ def dsir_scores(train: DataFrame, ev: DataFrame) -> DataFrame:
         .select(
             F.transform(
                 F.sequence(F.lit(0), F.lit(P11_DIM - 1)),
-                # Accepted ULP risk (r15 advisor): java.lang.Math.log
+                # Accepted ULP risk: java.lang.Math.log
                 # and DuckDB's libm ln are each within 1 ulp of the
                 # true log but not guaranteed CORRECTLY-rounded, so a
                 # ratio whose ln lands within ~1 ulp of an exact

@@ -54,9 +54,9 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
     tax = F.col("l_tax").cast("decimal(4,2)")
-    # widen_scan (r16, guide §2/§6): the fixture's single-row-group
-    # parquet plans as ONE scan split, so the partial aggregation —
-    # the whole decimal-heavy per-row workload — ran on one core.
+    # widen_scan: the fixture's single-row-group parquet plans as
+    # ONE scan split, so the partial aggregation — the whole
+    # decimal-heavy per-row workload — would run on one core.
     # Round-robin repartition of the FILTERED rows spreads it across
     # the session width; structurally a no-op at production split
     # counts, and placed above the filter so PushedFilters still
@@ -145,7 +145,7 @@ def q03_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     ext = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
-    # widen_scan (r16): parallelize the per-order partial aggregation
+    # widen_scan: parallelize the per-order partial aggregation
     # past the fixture's single scan split (q01 note); no-op once the
     # input has real splits.
     per_order = widen_scan(li).groupBy("l_orderkey").agg(
@@ -257,8 +257,8 @@ def q07_star_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = table(spark, sf_dir, "region")
     ext = F.col("l_extendedprice").cast("decimal(12,2)")
     disc = F.col("l_discount").cast("decimal(4,2)")
-    # widen_scan (r16): at fixture scale every join side fits
-    # broadcast, so the whole probe chain + partial agg ran inside
+    # widen_scan: at fixture scale every join side fits broadcast,
+    # so the whole probe chain + partial agg would run inside
     # lineitem's single scan split; widening the probe side
     # parallelizes it (q01 note; no-op at real split counts).
     from .dedup import widen_scan
@@ -728,13 +728,12 @@ def q25_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("2000-06-01").cast("timestamp")
     )
-    # (r16: a widen_scan on the filtered fact side measured a wash
-    # here — lineitem is the BUILD side of this fixture-scale plan,
-    # so the extra exchange bought no parallelism. Left alone.
-    # r17, verdict #4: widening the PROBE side (orders) also LOST —
-    # 0.97s plain vs 1.09s widened, scripts/r17_ab_q2530.py — the
-    # probe work on 150k filtered orders rows is smaller than the
-    # exchange it buys; the sub-1s floor is per-job overhead.)
+    # No widen_scan: on the filtered fact side it measured a wash —
+    # lineitem is the BUILD side of this fixture-scale plan, so the
+    # extra exchange buys no parallelism — and on the PROBE side
+    # (orders) it lost, 0.97s plain vs 1.09s widened: the probe work
+    # on 150k filtered orders rows is smaller than the exchange it
+    # buys; the sub-1s floor is per-job overhead.
     li = table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("2000-06-01").cast("timestamp")
     )
@@ -776,13 +775,13 @@ def q26_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Q27 — sketch aggregates (HLL++ distinct, KLL quantiles): the
 # one-pass mergeable forms that replace exact distinct/percentile at
-# 100 TB. FULLY DIFFERENTIAL since r7 via the q47-q49 pattern: the
+# 100 TB. FULLY DIFFERENTIAL via the q47-q49 pattern: the
 # registered query computes both the sketch estimates AND the exact
 # answers, emitting the exact values plus within-ε booleans; the
 # oracle recomputes the exact side and emits TRUE — so the driver's
 # value hash gates both cross-engine exactness of the reference
 # computation and every estimate's accuracy, every round it's
-# sampled (previously a rows-only `no_oracle` row). The raw sketch
+# sampled. The raw sketch
 # values themselves are engine-internal and deliberately NOT output
 # columns. ε: HLL++ default rsd 0.05 → 3σ = 15%; KLL accuracy 10000
 # → rank error 1e-4 ≪ the ±0.05 rank band. Distinct from q49 (the
@@ -896,16 +895,14 @@ def q30_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("2001-01-01").cast("timestamp"))
     )
-    # (r16: widen_scan on lineitem measured SLOWER here — q30's
+    # No widen_scan: on lineitem it measured SLOWER — q30's
     # fixture-scale plan broadcasts the projected lineitem columns
     # and probes with ORDERS, so the widener shuffled 600k rows into
-    # a broadcast build for nothing: 1.94s vs 1.36s median. Left
-    # alone. r17, verdict #4: widening the PROBE side (orders) ALSO
-    # lost — 1.39s plain vs 1.56s widened, scripts/r17_ab_q2530.py —
-    # so q30's 8→32-core ratio of ~1.2 is per-job overhead plus a
-    # probe too small to amortize an exchange at fixture scale, not
-    # a missing-parallelism bug; at real split counts the probe side
-    # arrives already parallel.)
+    # a broadcast build for nothing: 1.94s vs 1.36s median. Widening
+    # the PROBE side (orders) also lost, 1.39s plain vs 1.56s
+    # widened: a probe this small cannot amortize an exchange at
+    # fixture scale, and at real split counts the probe side arrives
+    # already parallel.
     li = table(spark, sf_dir, "lineitem")
     supp = table(spark, sf_dir, "supplier")
     nation = table(spark, sf_dir, "nation")
@@ -956,8 +953,8 @@ GROUP BY l_orderkey
 @query("q31_array_map_funcs", oracle=Q31_ORACLE)
 def q31_array_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
-    # explicit floor() on BOTH sides (registry determinism contract,
-    # r10 review): a bare fractional->int cast truncates in Spark but
+    # explicit floor() on BOTH sides (registry determinism
+    # contract): a bare fractional->int cast truncates in Spark but
     # rounds in DuckDB, so the "quantities are integral" fixture fact
     # was the only guard against a silent divergence on drift
     qty = F.floor("l_quantity").cast("int")
@@ -1371,7 +1368,7 @@ def q40_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket. Theta sketches (set intersection/difference) extend the
 # same pattern to audience-overlap questions.
 #
-# FULLY DIFFERENTIAL since r9 via the q27/q47 exact+within-ε fold:
+# FULLY DIFFERENTIAL via the q27/q47 exact+within-ε fold:
 # DuckDB's HLL is a different implementation with different
 # estimates, so the raw estimate is not an output column; instead
 # the registered query computes BOTH the sketch-rollup estimate and
@@ -1379,9 +1376,9 @@ def q40_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a `hll_within_eps` boolean. The oracle recomputes the exact side
 # and emits TRUE — the driver's value hash then gates (a) the exact
 # computation cross-engine and (b) the merged estimate's accuracy,
-# every round it's sampled (previously a rows-only `no_oracle` row).
+# every round it's sampled.
 # ε = 0.05 ≈ 3σ for HLL lgConfigK=12 (RSE ≈ 1.6%) — the same band
-# the q47 companion has hash-passed since r6. The unit test
+# the q47 companion passes. The unit test
 # (tests/test_approx_operators.py) additionally bounds the estimate
 # at test scale.
 # ---------------------------------------------------------------------------
@@ -1535,7 +1532,7 @@ def q43_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exclusion question is answered from sketches alone. q41 is the
 # same argument for rollup-union; this is the intersection half.
 #
-# FULLY DIFFERENTIAL since r9 via the q27/q48 exact+within-ε fold:
+# FULLY DIFFERENTIAL via the q27/q48 exact+within-ε fold:
 # sketch estimates are implementation-specific, so the registered
 # query computes BOTH the theta-algebra estimates AND the exact set
 # counts (one groupBy(user_id) pass → per-user purchase/error flags
@@ -1579,8 +1576,8 @@ def _theta_purchase_error_sketches(ev: DataFrame) -> DataFrame:
     """Compact theta sketches of the purchasing / erroring user sets
     — ONE definition shared by q44 (the set-operation operator) and
     q48 (its error-bound companion), so the companion always gates
-    exactly the pipeline q44 runs (r10 review: the two blocks were
-    verbatim copies that could drift apart silently)."""
+    exactly the pipeline q44 runs; two copies could drift apart
+    silently."""
     return ev.groupBy().agg(
         F.theta_sketch_agg(
             F.when(F.col("event_type") == "purchase", F.col("user_id"))
@@ -1840,18 +1837,16 @@ def q48_theta_error_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max((F.col("event_type") == "error").cast("int")).alias("e"),
         )
         .agg(
-            # coalesce (r10 advice): on an EMPTY events input this
-            # global sum yields NULL while the oracle's COUNT(*) over
-            # an empty HAVING-filtered subquery yields 0 — the
-            # pre-r10 filter+count form returned 0, so the sum()
-            # rewrite would otherwise be a new empty-input mismatch
+            # coalesce: on an EMPTY events input this global sum
+            # yields NULL while the oracle's COUNT(*) over an empty
+            # HAVING-filtered subquery yields 0
             F.coalesce(
                 F.sum((F.col("p") + F.col("e") == 2).cast("long")),
                 F.lit(0).cast("long"),
             ).alias("n_overlap_exact"),
             # |A| + |B| >= |A ∪ B|: the intersection estimate's error
-            # envelope scales with the UNION, not the overlap (r10
-            # review) — a relative band collapses to [0,0] on a small
+            # envelope scales with the UNION, not the overlap — a
+            # relative band collapses to [0,0] on a small
             # or empty overlap and false-fails a healthy sketch; this
             # is the same absolute union-scaled tolerance q44 uses.
             F.coalesce(

@@ -418,7 +418,7 @@ def cosine_pair_gemm(
 # cell borders — the standard IVF accuracy knob). Cells here are
 # cosine-nearest of NLIST seed centroids (the first NLIST vectors —
 # deterministic; a production build k-means-trains them). Fully
-# differential since r5 (S05_ORACLE below rebuilds the identical
+# differential (S05_ORACLE below rebuilds the identical
 # index in SQL); cell-assignment totality, rank contiguity, and
 # recall vs brute force additionally asserted in unit tests.
 # Scale: assignment is map-side; the per-cell search is the same
@@ -434,7 +434,7 @@ _COS = (
     " * sqrt(list_dot_product({b}, {b})))"
 )
 
-# Full differential oracle (r5): the seed centroids are ROWS OF THE
+# Full differential oracle: the seed centroids are ROWS OF THE
 # TABLE (vec_id < NLIST), so SQL reproduces the whole index build —
 # cell assignment is argmax unrounded cosine with cell-id tie-break
 # (the identical (−cos, cell) sort order as the Spark plan; both
@@ -490,7 +490,7 @@ def s05_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degenerate case) coalesces to +inf so it ranks LAST, matching
     # the oracle's row_number(ORDER BY cos DESC) with NULLS LAST;
     # a bare NULL struct field would sort FIRST in Spark's ascending
-    # struct order and grab every assignment (r10 review).
+    # struct order and grab every assignment.
     scored = [
         F.struct(
             F.coalesce(
@@ -544,7 +544,7 @@ def s05_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (float64 → int8), and int8 GEMM is memory-bandwidth-bound — this is
 # the standard serving layout (FAISS SQ8).
 #
-# Full differential oracle (r5): every step of the quantized scoring
+# Full differential oracle: every step of the quantized scoring
 # is reproducible in SQL — np.rint is banker's rounding, which DuckDB
 # spells round_even(x, 0); the int8 dot is exact integer arithmetic
 # (≤ 64·127², exact in doubles); norms and the final round-6 ranking
@@ -655,8 +655,8 @@ def s06_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # S07 — k-means clustering over the embedding corpus: deterministic
-# Lloyd, DIFFERENTIALLY CHECKED (r6, the g01 unrolled-iteration
-# recipe; previously MLlib with a rows-only check). Five Lloyd
+# Lloyd, DIFFERENTIALLY CHECKED (the g01 unrolled-iteration
+# recipe). Five Lloyd
 # iterations with cross-engine lockstep at every step:
 #   init      — centroids = the K smallest vec_ids' embeddings (the
 #               fixture id space is dense; any deterministic pick
@@ -714,8 +714,8 @@ def _s07_assign(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
 
     |c|² is constant per centroid, so it is folded DRIVER-side and
     carried in the broadcast row rather than re-folded per
-    row×centroid in the hot map (r12: halves the interpreted-HOF work
-    of the per-row scan — measured assign 2.4s → 1.3s warm at ×10).
+    row×centroid in the hot map (halves the interpreted-HOF work of
+    the per-row scan — measured assign 2.4s → 1.3s warm at ×10).
     Bit-identity with the oracle's list_dot_product(cent, cent) is
     preserved because Python's sequential sum is the same strict
     left-fold over the same doubles as dot_d's aggregate (and dot_d
@@ -825,17 +825,17 @@ def kmeans_exact(
     list. The SQL twin is :func:`kmeans_oracle_prefix`."""
     from ..functions.deterministic import davg
 
-    # Within-run materialization (r17, guide §5 — the d04/d11
-    # pattern): every Lloyd iteration's update job, the init collect,
-    # and the final assign otherwise each re-scan the parquet and
-    # re-run the array conversion. Lazy localCheckpoint: the init
-    # collect below is the materializing action; iters+1 downstream
-    # passes read the checkpointed rows. (r17 losing A/B, recorded:
-    # widen_scan before the checkpoint — parallelizing the fixture's
-    # single-split assign/update passes — measured d14 3.31s → 3.66s;
-    # the exchange of the embedding rows costs more than the
-    # parallelism buys at this size.) Computed from the parquet
-    # inputs on every invocation — nothing persists across runs.
+    # Within-run materialization (the d04/d11 pattern): every Lloyd
+    # iteration's update job, the init collect, and the final assign
+    # otherwise each re-scan the parquet and re-run the array
+    # conversion. Lazy localCheckpoint: the init collect below is the
+    # materializing action; iters+1 downstream passes read the
+    # checkpointed rows. (No widen_scan before the checkpoint:
+    # parallelizing the fixture's single-split assign/update passes
+    # measured d14 3.31s → 3.66s; the exchange of the embedding rows
+    # costs more than the parallelism buys at this size.) Computed
+    # from the parquet inputs on every invocation — nothing persists
+    # across runs.
     emb = emb.localCheckpoint(eager=False)
     # Bounded driver state: k initial centroids, then k×dim means per
     # iteration — the same contract as s05's IVF centroid collect.
@@ -859,7 +859,7 @@ def kmeans_exact(
         # arithmetic (exact DECIMAL(38,18) sums are summation-order
         # independent, so the per-dim mean is bit-identical), but the
         # expression tree shrinks from 64 decimal-avg columns to one —
-        # the r11 catalog audit measured ~0.9s/iter of driver-side
+        # the catalog constant audit measured ~0.9s/iter of driver-side
         # Column construction plus ~1.3s/iter of Catalyst analysis on
         # the wide form (a compile CONSTANT, paid even at sf0.001).
         # Shuffle volume is unchanged: partial agg combines each map
@@ -881,8 +881,7 @@ def kmeans_exact(
         # Fail loudly if any non-empty cluster came back with fewer
         # than `dim` (cluster, pos) rows — a NULL element or a short
         # embedding array would otherwise leave a coordinate silently
-        # at the 0.0 placeholder, diverging from the oracle where the
-        # old wide form raised (r12 advisor note).
+        # at the 0.0 placeholder, diverging from the oracle.
         short = {c: n for c, n in filled.items() if n != dim}
         if short:
             raise ValueError(
@@ -1020,7 +1019,7 @@ def kmeans_bucket_assign_2level(
     # tie between runs would hand assign_fine a cell that was empty
     # during the codebook pass (KeyError in fine_mats). localCheckpoint
     # is the d06/g01 pattern; eager=False defers materialization to
-    # the codebook collect (r12 advisor note).
+    # the codebook collect.
     coarse = kmeans_bucket_assign(emb, k_coarse, iters).localCheckpoint(
         eager=False
     )
@@ -1159,8 +1158,7 @@ def s08_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # here — 4× under int8, 32× under float64), so a billion-vector
 # index is ~16 GB and scan cost is table-lookup-bound.
 #
-# FULLY DIFFERENTIAL since r7 (previously the one similarity op with
-# a rows-only check). The trick is an INTEGER-LATTICE formulation:
+# FULLY DIFFERENTIAL. The trick is an INTEGER-LATTICE formulation:
 # every vector is quantized onto an integer grid through scalar IEEE
 # steps both engines perform identically (the s06 recipe — np.rint ≡
 # DuckDB round_even; max/abs/division/sqrt-of-integer are all exact
@@ -1196,7 +1194,7 @@ def _pq_unit_lattice_np(X):
     division and multiply is one correctly-rounded IEEE op on
     identical operands (·127 and ·2^14 — the latter exact outright),
     |q8| = sqrt of an exact integer, and np.rint ≡ DuckDB round_even
-    (the s06 precedent, driver-hash-proven since r5). Unit
+    (the s06 precedent, driver-hash-proven). Unit
     normalization is what makes squared L2 rank-equivalent to cosine
     (2 − 2·cos on unit vectors); the intermediate q8 step exists so
     the norm is computed from INTEGERS (a float-vector norm would
@@ -1417,16 +1415,14 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array("embedding").alias("emb")
     ).localCheckpoint(eager=False)
-    # Lazy within-run materialization (r17, the d04/d11 pattern): the
+    # Lazy within-run materialization (the d04/d11 pattern): the
     # collect below materializes it; the kernel scan and the two
     # re-rank sides then read checkpointed rows instead of re-running
     # parquet decode + array conversion (4 passes total). Recomputed
     # from parquet every invocation.
-    # ONE bounded collect for both driver-side row sets (r17, verdict
-    # #6 — collect-per-round floors): the probe ids and the codebook
-    # seed ids are adjacent ranges, so one scan job fetches both and
-    # the split happens driver-side. Identical rows to the former two
-    # filtered collects.
+    # ONE bounded collect for both driver-side row sets: the probe ids
+    # and the codebook seed ids are adjacent ranges, so one scan job
+    # fetches both and the split happens driver-side.
     head_rows = emb.filter(
         F.col("vec_id") < N_QUERIES + PQ_TRAIN_N
     ).collect()
@@ -1687,7 +1683,7 @@ def s11_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# S12 — hybrid retrieval with reciprocal-rank fusion (r6): BM25
+# S12 — hybrid retrieval with reciprocal-rank fusion: BM25
 # lexical top-K and cosine vector top-K, fused by RRF
 # (Cormack et al. 2009: score = Σ 1/(60 + rank)) — the production
 # retrieval stack (every RAG/search pipeline runs exactly this
@@ -2073,7 +2069,7 @@ def s13_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         # both mmr comparisons evaluate NULL→false and the
         # comparator falls through to the id tie-break — promoting
         # a NULL candidate by low id and making the comparator
-        # non-transitive (r10 review).
+        # non-transitive.
         ids = (
             F.when(a["id"] < b["id"], F.lit(-1))
             .when(a["id"] > b["id"], F.lit(1))
@@ -2118,7 +2114,7 @@ def s13_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .drop("best")
         )
-        # Plan-size barrier (r11): without it, CollapseProject inlines
+        # Plan-size barrier: without it, CollapseProject inlines
         # each step's sel/rem into the next step's expressions — best
         # references rem once via the sort and sel once via concat,
         # rem references best again — so the analyzed tree grows

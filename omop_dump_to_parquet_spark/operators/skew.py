@@ -16,7 +16,7 @@ side that is large-and-skewed and replicate the smaller one, and keep
 ``n`` near (hot-key rows / target-partition rows).
 
 Salt derivation is ``pmod(hash(partition_id, <non-map columns>), n)``.
-The partition id term is load-bearing (r10 review): hashing the row
+The partition id term is load-bearing: hashing the row
 content alone degenerates to ONE salt per distinct row — and the
 common hot-key shapes (a key-only projection for a semi join, rows
 that are literal duplicates) have exactly one distinct row per hot

@@ -280,9 +280,8 @@ def _sample_threshold(frac: float) -> str:
 
 def sample_bucket_expr(seed: int) -> Column:
     """The ``md5(doc_id ':' seed)`` 3-nibble sampling bucket — ONE
-    definition shared by t06 and p01's manifest (r10 review: the
-    manifest previously duplicated the expression, so a change to the
-    sampling mechanics here would have silently desynchronized it)."""
+    definition shared by t06 and p01's manifest, so a change to the
+    sampling mechanics here cannot silently desynchronize them."""
     return F.substring(
         F.md5(
             F.concat(F.col("doc_id").cast("string"), F.lit(f":{seed}"))
@@ -296,7 +295,7 @@ def shard_expr_and_window() -> tuple[Column, "W"]:
     """Deterministic 16-way shard assignment from the first nibble of
     an md5 column named ``h``: returns ``(shard, window)`` — the
     shard id expression and the per-shard position window — shared by
-    t12 and p01 (same r10 single-definition rule; the documented
+    t12 and p01 (same single-definition rule; the documented
     scale path is k nibbles → 16^k shards, changed HERE or nowhere).
     instr('0123…f', nibble)-1 maps the hex char to 0..15 with the
     same expression text both engines accept."""
@@ -700,14 +699,13 @@ def t12_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at 100 TB while the fact side never shuffles — the alternative
 # (shuffle both on token) would re-exchange the full exploded corpus.
 # The final per-doc mean is a groupBy on doc_id with partial aggs.
-# Determinism (r10, upgraded to the t19 pattern): per-term log-probs
-# are rounded at 9 dp — quantizing away libm's ~1-ulp ln() drift —
-# and the per-doc mean accumulates through exact DECIMAL (davg), so
-# neither engine differences nor Spark's partition-merge summation
-# order can move the 6-dp result. The previous plain avg(double) of
-# unrounded logs argued the noise was ≤1e-13 — true, but a mean
-# landing within that band of a rounding boundary could still flip
-# the hash; this closes the band to zero.
+# Determinism (the t19 pattern): per-term log-probs are rounded at
+# 9 dp — quantizing away libm's ~1-ulp ln() drift — and the per-doc
+# mean accumulates through exact DECIMAL (davg), so neither engine
+# differences nor Spark's partition-merge summation order can move
+# the 6-dp result. A plain avg(double) of unrounded logs keeps the
+# noise ≤1e-13, but a mean landing within that band of a rounding
+# boundary could still flip the hash; this closes the band to zero.
 # ---------------------------------------------------------------------------
 
 T13_ORACLE = """
@@ -1077,7 +1075,7 @@ def t18_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# T19 — bigram language-model scoring (r6): train an add-one-smoothed
+# T19 — bigram language-model scoring: train an add-one-smoothed
 # bigram LM on the corpus itself and score each document by its
 # average negative log-likelihood — the classic KenLM-shaped quality
 # filter (high avg NLL ⇒ the document's word transitions are unlike
@@ -1158,7 +1156,7 @@ def t19_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-bigram NLL is rounded to 9 and the per-doc mean accumulates
     # through exact DECIMAL (davg) — a plain avg(double) would
     # re-introduce cross-engine summation-order noise at the round-6
-    # boundary (deterministic.py's warning; review finding r6).
+    # boundary (deterministic.py's warning).
     from ..functions.deterministic import davg
 
     model = (
@@ -1538,8 +1536,7 @@ def t22_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # below), and a learned pair (l, r) can only match ' l  r ', so
 # merges can never cross a word boundary (BPE's contract) — then
 # each merge is applied in learned order as a literal replace. No
-# join, no shuffle: the learned table rides the kernel closure (r17;
-# formerly three string literals in a codegen replace chain — see
+# join, no shuffle: the learned table rides the kernel closure (see
 # bpe_encode's docstring for the byte-identity evidence). Outputs are
 # content-verified: md5 of the full encoded symbol stream, plus the
 # post-merge symbol count.
@@ -1547,15 +1544,15 @@ def t22_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The boundary rendering is built from the SAME token array the
 # oracle uses (split(text,' ') → per-word char split → join with
 # '  |  ') rather than translate(' '→'|') over the raw text: on
-# consecutive spaces the translate form emitted one pipe per space
+# consecutive spaces the translate form emits one pipe per space
 # (' a  |  |  b  ') while the oracle's string_split path renders the
 # empty token between them ('a  |    |  b') — a latent hash
-# divergence only masked by the single-spaced fixture (r14 advice,
-# medium). Both engines agree char-split('')→[''] joins to '' and
-# split('a  b',' ')→['a','','b'], verified empirically, so empty
-# tokens now take the identical path on both sides.
+# divergence the single-spaced fixture would mask. Both engines agree
+# char-split('')→[''] joins to '' and split('a  b',' ')→['a','','b'],
+# verified empirically, so empty tokens take the identical path on
+# both sides.
 #
-# The '|' sentinel assumption is enforced, not assumed (r14 advice):
+# The '|' sentinel assumption is enforced, not assumed:
 # a literal '|' in document text would be indistinguishable from a
 # word boundary IDENTICALLY in both engines — the differential
 # certification cannot catch it — so the encode fails loud instead:
@@ -1568,7 +1565,7 @@ def t22_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # map-side scan at scan parallelism. At
 # 100 TB the encode pass is embarrassingly parallel and
 # sink-streamable; the Arrow kernel amortizes its per-task setup over
-# every batch in the partition (guide §4.5).
+# every batch in the partition.
 # ---------------------------------------------------------------------------
 
 
@@ -1615,26 +1612,26 @@ def bpe_encode(
     docs: DataFrame, merges: list[tuple[int, str, str, str, int]]
 ) -> DataFrame:
     """Apply a learned merge table to every document — t23's transform,
-    factored so the property net can drive it at arbitrary merge depth
-    (r13 verdict #6). One map-side pass; merges ride the kernel closure.
+    factored so the property net can drive it at arbitrary merge depth.
+    One map-side pass; merges ride the kernel closure.
 
-    r17 (guide §4.2, verdict #3): the encode is a Python row kernel
-    (``map_rows``) — per doc, the same boundary rendering as the former
-    expression chain (' a  b  |  c  d  ', built by joining each word's
+    The encode is a Python row kernel (``map_rows``) — per doc, the
+    boundary rendering (' a  b  |  c  d  ', built by joining each word's
     codepoints with '  ': Python str iteration walks codepoints
     exactly like the learner's ``_symbols`` and the oracle's
     string_split), then each merge as ``str.replace`` (left-to-right
     non-overlapping — Java ``replace`` semantics), then
     ``hashlib.md5`` over UTF-8 (≡ Spark ``md5``). BYTE-IDENTICAL to
-    the r16 expression chain (tests/test_bpe.py compares the two row
-    for row) and md5-pinned by the t23 oracle. Same-session paired
-    A/B: 0.736s → 0.639s median (the per-char regexp_replace capture
-    group was the expression chain's cost). NULL text yields NULL
-    metrics exactly like the former chain (size(NULL)/md5(NULL)).
+    a codegen regexp_replace expression chain (tests/test_bpe.py
+    compares the two row for row) and md5-pinned by the t23 oracle;
+    the kernel is faster, 0.736s → 0.639s median in a same-session
+    paired A/B (the per-char regexp_replace capture group is the
+    chain's cost). NULL text yields NULL metrics, as
+    size(NULL)/md5(NULL) would.
 
     The '|' sentinel guard keeps both halves: the free driver-side
-    merge-symbol check below, and a row-level raise inside the kernel
-    (was a raise_error branch in the project)."""
+    merge-symbol check below, and a row-level raise inside the
+    kernel."""
     if any("|" in (lft + rgt) for _, lft, rgt, _m, _c in merges):
         # free driver-side half of the sentinel guard (block comment)
         raise ValueError(
@@ -1687,8 +1684,7 @@ def t23_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stage (a trained fastText-style linear classifier scores every
 # document; docs above the decision threshold are kept). The catalog's
 # existing quality signals are heuristics (t02 rule blend, t13/t19 LM
-# perplexity stand-ins); nothing ran a trained model — the r14 verdict's
-# "last obvious training-pipeline gap" (#4).
+# perplexity stand-ins); this id runs a trained model's inference.
 #
 # Model shape (fastText, Joulin et al. 2016, public): hashed uni+bigram
 # features → weight lookup → sum → sigmoid. The WEIGHT VECTOR is what a
@@ -1712,17 +1708,16 @@ def t23_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sigmoid(logit/n_features·scale) themselves — the p09 no-ratio rule).
 # ---------------------------------------------------------------------------
 
-# Scale-cost note (r15b, measured): this expression-only form pays
+# Scale-cost note (measured): this expression-only form pays
 # ~60 µs/feature — Catalyst evaluates higher-order functions
 # interpreted with per-element boxed allocation, and md5's
 # hex-string → substring → conv(16,10) BigInteger path allocates per
-# feature. Forced-evaluation x10/x100 rows live in SCALE_REHEARSAL
-# (t24_classifier_x100 — the FIRST recording there was a vacuous
-# column-pruned count(); see the script's _median_wall docstring).
+# feature. Forced-evaluation x10/x100 rows live in
+# SCALE_REHEARSAL.json (t24_classifier_x100).
 # The form is kept deliberately: one pass, no Python, and the
 # correctness certificate is the point. A pipeline applying this at
 # 100 TB should lift the bucketing into p11's value-identical Arrow
-# kernel (pipeline.dsir_scores.bucket_batches — equality pinned in
+# kernel (pipeline._dsir_buckets — equality pinned in
 # test_p11_kernel_buckets_equal_expression_buckets) and keep the
 # broadcast-weights lookup unchanged.
 T24_DIM = 256            # hashed feature buckets (fastText default 2M;
@@ -1830,7 +1825,7 @@ def t24_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast weight vector + map-side hashed-feature lookup).
     widen_scan: a zero-shuffle plan's parallelism is its input splits;
     the single-file fixtures plan as 1-2 splits and would serialize
-    the per-row feature hashing — production no-op (r15b)."""
+    the per-row feature hashing — production no-op."""
     from .dedup import widen_scan
 
     return classifier_score(
@@ -2020,7 +2015,7 @@ def t25_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     each fixture doc in a real HTML page in-plan, then recover the
     text with the link-density extraction kernel; the identity
     roundtrip md5-compares every byte. widen_scan: fixture-only
-    parallelism for the zero-shuffle plan (r15b)."""
+    parallelism for the zero-shuffle plan."""
     from .dedup import widen_scan
 
     docs = table(spark, sf_dir, "documents")

@@ -29,7 +29,7 @@ def _asof_last_error(ev: DataFrame) -> DataFrame:
     union-and-carry-forward plan (one shuffle + one sort, no join
     explosion). Ordering ``(ts, is_probe, event_id)`` puts an
     equal-ts error BEFORE the probe, matching ASOF ``>=`` semantics.
-    Extracted (r10 review) so a tie-break fix can never apply to one
+    One definition, so a tie-break fix can never apply to one
     ASOF variant and silently miss the other."""
     tagged = ev.filter(F.col("event_type").isin("purchase", "error")).select(
         "event_id",
@@ -54,7 +54,7 @@ def _event_type_islands(ev: DataFrame) -> DataFrame:
     ``island_id``. Returns ``(user_id, event_type, ts, island_id)``;
     callers that don't need ``ts`` let column pruning drop it. The
     ``(ts, event_id)`` ordering is the unique tie-break that keeps
-    island ids engine-independent — one definition (r10 review), so
+    island ids engine-independent — one definition, so
     the w02-family tie-break fix class cannot recur in one copy only."""
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     chg = F.when(
@@ -103,7 +103,7 @@ def w01_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ordering includes l_quantity: (shipdate, orderkey, linenumber) is
 # NOT unique in every driver fixture (the sf0.1 generation carries
 # duplicate (orderkey, linenumber) fact rows — found by a full-scale
-# differential sweep in round 5: ONE colliding pair with quantities
+# differential sweep: ONE colliding pair with quantities
 # 16 vs 13 made the running-sum multiset engine-order-dependent).
 # With the aggregated column itself as the final tie-break, any rows
 # STILL tied have equal quantity, and equal-quantity ties produce an

@@ -64,7 +64,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # hand-curated rotation, order the catalog STALEST-EVIDENCE-FIRST,
 # computed from the driver's own CORRECTNESS_r*.json artifacts:
 # least-recently-checked first (never-checked ids sort before all),
-# then fewest past checks, then registration order — the r5 fix; see
+# then fewest past checks, then registration order; see
 # ``staleness()`` below for why last-round is the primary key.
 # Properties: deterministic (pure function of committed
 # artifacts), self-rotating (each round's check makes those queries
@@ -91,7 +91,7 @@ def _artifact_root() -> str:
     """Directory holding the driver's CORRECTNESS_r*.json artifacts
     (the repo root). A function, not an inline expression, so tests
     can inject a directory without monkeypatching the process-global
-    ``os.path.dirname`` (r10 test review)."""
+    ``os.path.dirname``."""
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -102,8 +102,8 @@ def _driver_check_history() -> dict[str, tuple[int, int]]:
     Only a clean full run (``err`` null — rows+schema+hash all
     compared) counts as evidence; any ``err`` does not, keeping
     failing queries inside the checked window.  Historic
-    ``err == "no_oracle"`` rows-only runs (r1–r7, before the catalog
-    reached 150/150 full oracles) are deliberately non-evidence too:
+    ``err == "no_oracle"`` rows-only runs (from before every id had a
+    full oracle) are deliberately non-evidence too:
     they were weaker checks, and discounting them only rotates those
     ids in for a fresh full-oracle pass sooner.
     """
@@ -158,10 +158,10 @@ def load_catalog() -> tuple[dict[str, QueryFn], dict[str, str]]:
             forced = 0 if name in _FORCE_IN_WINDOW else 1
             # LAST-round-checked is the primary key (never-checked ids
             # have last=0 and still sort first): the goal is bounded
-            # evidence AGE.  Ordering by times-checked first (the r1-r4
-            # key) let an id checked once in a recent round cut ahead
-            # of one checked twice but not since r2 — which is how 12
-            # r1/r2-stale ids sat outside the r5 window.
+            # evidence AGE.  Ordering by times-checked first would let
+            # an id checked once in a recent round cut ahead of one
+            # checked twice long ago, leaving stale ids outside the
+            # window indefinitely.
             return (forced, last, checked, reg_pos[name])
 
         ordered = sorted(QUERIES, key=staleness)

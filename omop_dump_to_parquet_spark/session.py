@@ -119,10 +119,10 @@ def get_shuffle_partitions(spark: SparkSession) -> int:
     """``spark.sql.shuffle.partitions`` as an int, falling back to
     cluster parallelism when the conf is non-numeric — some managed
     runtimes set it to ``"auto"``, and a bare ``int()`` would raise
-    ``ValueError`` at plan-build time (advisor note r9).
+    ``ValueError`` at plan-build time.
 
     Named ``get_*`` so it cannot shadow / be shadowed by
-    ``get_spark``'s ``shuffle_partitions`` kwarg below (r10 review)."""
+    ``get_spark``'s ``shuffle_partitions`` kwarg below."""
     try:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):

@@ -29,7 +29,7 @@ Spark-first notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .parquet_sink import PARQUET_CODEC
 
@@ -60,9 +60,3 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read a bucketed table back through the catalog (path reads lose
-    the bucket spec)."""
-    return spark.table(table_name)

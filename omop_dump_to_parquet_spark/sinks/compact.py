@@ -35,7 +35,7 @@ _OLD = ".__compact_old"
 
 def _marker(path: str, suffix: str) -> str:
     """Crash-recovery staging path for ``path``: a DOT-PREFIXED
-    sibling (``parent/.name<suffix>``). The dot matters (r10 review):
+    sibling (``parent/.name<suffix>``). The dot matters:
     when ``path`` is a hive partition leaf, a plain-named sibling
     (``root/col=1.__compact_tmp``) sits INSIDE the discovered root —
     a concurrent ``spark.read.parquet(root)`` would pick it up as an
@@ -82,11 +82,10 @@ def compact_parquet_dir(
         fs.rename(spark, _marker(path, _OLD), path)
     for stale in (_marker(path, _TMP), _marker(path, _OLD)):
         fs.delete(spark, stale)
-    # legacy root markers (r10 advice): releases before the
-    # dot-prefixed ``_marker`` naming staged swaps as PLAIN siblings
-    # (``path.__compact_old``). A lake that crashed mid-compaction
-    # under that naming and was then upgraded must still be restored
-    # and cleaned here; leaf-level legacy markers need no extra branch
+    # plain-sibling root markers (``path.__compact_old``), the naming
+    # older releases staged swaps under: a lake that crashed
+    # mid-compaction under that naming must still be restored and
+    # cleaned here; leaf-level legacy markers need no extra branch
     # because the endswith() scan below already matches them.
     legacy_old = f"{path.rstrip('/')}{_OLD}"
     legacy_tmp = f"{path.rstrip('/')}{_TMP}"

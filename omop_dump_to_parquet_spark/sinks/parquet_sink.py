@@ -100,7 +100,7 @@ def write_parquet(
             "range_partition_on requires num_files (the range split count)"
         )
     if zorder_on is not None and num_files is None:
-        # same guard as range_partition_on (r10 review): a silent
+        # same guard as range_partition_on: a silent
         # default file count is wildly wrong at either end of the
         # size spectrum and destroys the clustering granularity the
         # caller asked for

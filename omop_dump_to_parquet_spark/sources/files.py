@@ -77,7 +77,7 @@ def infer_then_pin(
 
     read = read_csv if fmt == "csv" else read_json
     # The bounding listing goes through the Hadoop FileSystem API, not
-    # os.* (r10 review): driver-side os.path.isdir/os.listdir return
+    # os.*: driver-side os.path.isdir/os.listdir return
     # nothing for s3a://, hdfs:// or file:-scheme URIs, so the
     # inference read would silently scan the FULL landing directory —
     # the exact extra pass this function exists to avoid.
@@ -96,26 +96,3 @@ def infer_then_pin(
         sample = [f"{path.rstrip('/')}/{n}" for n in names[:sample_files]]
     schema = read(spark, sample, schema=None, **options).schema
     return schema, read(spark, path, schema=schema, **options)
-
-
-def read_binary_files(
-    spark: SparkSession,
-    path: str,
-    path_glob: str | None = None,
-) -> DataFrame:
-    """Raw-file ingestion via the ``binaryFile`` source: one row per
-    file with (path, modificationTime, length, content: binary).
-
-    This is the landing step for the multimodal surface
-    (operators/multimodal.py): raw image/audio/video files become
-    binary+metadata rows that the sized parquet sink
-    (sinks/parquet_sink.py) lands as the m01-shaped lake — after
-    which every decode/feature stage operates on the lake, never the
-    object store. Filtering on file METADATA (name, size) happens
-    source-side via ``pathGlobFilter`` and Catalyst pushdown on
-    ``length`` — bytes of excluded files are never read.
-    """
-    reader = spark.read.format("binaryFile")
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    return reader.load(path)

@@ -17,7 +17,7 @@ Scale: windowed-agg state is bounded by the watermark horizon;
 session-window state by open sessions per key. Both shuffle once on
 the grouping key.
 
-API-coverage note (r9): Spark 4's ``transformWithStateInPandas`` (the
+API-coverage note: Spark 4's ``transformWithStateInPandas`` (the
 successor arbitrary-stateful API — multiple named state variables,
 timers, TTL) is deliberately NOT a catalog id in this build: its
 driver-side runner requires ``google.protobuf``, which this container
@@ -96,7 +96,7 @@ def _events_footer_max_ts(sf_dir: str):
     if not stats or any(s is None for s in stats):
         # fail HERE with the cause, not three frames deeper with
         # "max() arg is an empty sequence" / AttributeError from
-        # staging (r10 review): zero row groups or a writer that
+        # staging: zero row groups or a writer that
         # skipped column statistics both make sentinel placement
         # impossible by this fast path.
         raise ValueError(
@@ -204,18 +204,8 @@ def _events_stream(
 #: batch-sized 32 partitions vs 3.1s with 8 — commitTimeMs alone was
 #: 70s summed across the 32×4 stores. In a checkpointed production
 #: job this is picked once at first start (it is frozen into the
-#: checkpoint) and sized for peak state; override here via
-#: SPARK_GRAFT_STREAM_PARTITIONS.
-def _stream_partitions() -> int:
-    raw = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8").strip()
-    try:
-        n = int(raw)
-    except ValueError:
-        return 8  # malformed override: fall back, don't kill the package
-    return n if n > 0 else 8
-
-
-STREAM_STATE_PARTITIONS = _stream_partitions()
+#: checkpoint) and sized for peak state.
+STREAM_STATE_PARTITIONS = 8
 
 
 def _run_to_memory(
@@ -630,7 +620,7 @@ def st06_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # upsert is idempotent by key (re-applying a replayed batch writes the
 # same rows), so crash/replay converges to the same lake — the
 # standard foreachBatch idempotence argument. That argument requires
-# an EXPLICIT checkpointLocation (r10 review): without one Spark
+# an EXPLICIT checkpointLocation: without one Spark
 # allocates a temporary checkpoint deleted on stop, and a restarted
 # query would rebuild cumulative state from zero and overwrite
 # correct lake totals with partials. The query below passes one,
@@ -836,7 +826,7 @@ def st08_stream_stream_left_outer(
 
 
 # ---------------------------------------------------------------------------
-# ST09 — STREAMING session windows (r6): st02's dynamic-gap
+# ST09 — STREAMING session windows: st02's dynamic-gap
 # sessionization as a real readStream job — append mode + watermark,
 # the form that runs forever (session state merges windows as events
 # arrive and emits a session only once the watermark proves no
@@ -991,7 +981,7 @@ from ..operators.pipeline import P09_NGRAM as _P09_NGRAM
 from ..operators.pipeline import P09_ORACLE as _P09_ORACLE
 
 #: Hard cap on the eval-split documents st11 may collect to the driver
-#: to build its static gram set (r17, verdict #5). Benchmarks are
+#: to build its static gram set. Benchmarks are
 #: thousands of documents at most; a fixture drift that makes the
 #: "eval split" corpus-sized must fail loud, not OOM the driver.
 ST11_MAX_EVAL_DOCS = 100_000
@@ -1012,7 +1002,7 @@ def st11_stream_decontamination(
         # static side, built once on the DRIVER: the benchmark's
         # distinct gram strings (~52 docs at sf0.1 — bounded by the
         # benchmark, never the corpus; see block comment). The collect
-        # is EXPLICITLY bounded (r17, verdict #5): limit(N+1) caps what
+        # is EXPLICITLY bounded: limit(N+1) caps what
         # can ever reach the driver, and row N+1 arriving means the
         # "benchmark" outgrew the stateless shape — fail loud and name
         # the batch fallback rather than OOM the driver.
@@ -1038,21 +1028,18 @@ def st11_stream_decontamination(
             for ts in (t.split(" "),)
             for i in range(len(ts) - w + 1)
         )
-        # one SPARK BROADCAST, not a closure capture (r17, verdict #5 /
-        # advisor r16): a closure-captured set is re-serialized into
-        # every task binary and re-shipped per micro-batch; the
-        # broadcast ships once per executor and the kernel reads
-        # bc.value (guide §3.1's broadcast discipline applied to
-        # Python-side static state).
+        # one SPARK BROADCAST, not a closure capture: a
+        # closure-captured set is re-serialized into every task binary
+        # and re-shipped per micro-batch; the broadcast ships once per
+        # executor and the kernel reads bc.value.
         bc = s.sparkContext.broadcast(eval_grams)
 
         def score(text):
             # the doc's distinct w-gram STRING set intersected with the
             # eval frozenset; docs with no hit yield no row
             if text is None:
-                # NULL text: the pre-r16 Catalyst form dropped the row
-                # (split(NULL) → no grams, no hit) — preserve that
-                # tolerance (advisor r16).
+                # NULL text drops the row, as the batch p09 plan does
+                # (split(NULL) → no grams, no hit).
                 return []
             ts = text.split(" ")
             gs = {" ".join(ts[i : i + w]) for i in range(len(ts) - w + 1)}

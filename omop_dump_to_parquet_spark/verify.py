@@ -163,26 +163,3 @@ def verify_parquet(
     if max_records_per_file is not None:
         report.sizing_ok = report.max_file_rows <= max_records_per_file
     return report
-
-
-def schema_drift(pinned, incoming) -> list[str]:
-    """Human-readable drift between the pinned schema and an incoming
-    batch's schema: added / dropped / retyped columns.
-
-    The reference freezes one inferred schema and forces every shard
-    through it (``dump_table.py:203,222,233``) — under continuous
-    ingest the same contract needs an explicit gate: an empty return
-    means the batch conforms; anything else is the reject/alert list
-    (silent pandas-style re-inference is exactly the failure mode the
-    reference's pinning exists to prevent).
-    """
-    p = {f.name: f.dataType for f in pinned.fields}
-    i = {f.name: f.dataType for f in incoming.fields}
-    drift = [f"added column: {n} {t}" for n, t in i.items() if n not in p]
-    drift += [f"dropped column: {n} {t}" for n, t in p.items() if n not in i]
-    drift += [
-        f"type change: {n} {p[n]} -> {i[n]}"
-        for n in p
-        if n in i and p[n] != i[n]
-    ]
-    return drift

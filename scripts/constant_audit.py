@@ -33,19 +33,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 FLAG_SEC = 3.0
 
 
-
-def _force_rows(df) -> int:
-    """count() with every output column evaluated — delegates to the
-    shared recipe (omop_dump_to_parquet_spark.force.forced_count),
-    which also handles maps NESTED inside struct/array columns; the
-    r15 copy here checked only top-level MapType (r15 advisor)."""
-    from omop_dump_to_parquet_spark.force import forced_count
-
-    return forced_count(df)
-
-
 def main() -> int:
     from omop_dump_to_parquet_spark import load_catalog
+    from omop_dump_to_parquet_spark.force import forced_count
     from omop_dump_to_parquet_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -59,7 +49,7 @@ def main() -> int:
         runs = []
         for rep in range(3):
             t0 = time.perf_counter()
-            _force_rows(fn(spark, sf_dir))
+            forced_count(fn(spark, sf_dir))
             dt = round(time.perf_counter() - t0, 3)
             if rep > 0:  # rep 0 is session/scan warmup, discarded
                 runs.append(dt)

@@ -80,9 +80,8 @@ OPS = (
     "t22_bpe_merges",
     "t23_bpe_encode",
     # r14: the two new catalog ids (standing rule) — p08 skew-robust
-    # threshold draw, p09 decontamination. Their x10→x100 step pairs
-    # live in r14_scale_evidence's blocks; these are the x1/x3/x10
-    # base rows on the standard fixtures.
+    # threshold draw, p09 decontamination: x1/x3/x10 base rows on
+    # the standard fixtures.
     "p08_mixture_skew_draw",
     "p09_decontamination",
     # r16: the two new catalog ids (standing rule) — d16 exact-
@@ -108,17 +107,6 @@ SCALES = (1, 3, 10)
 # 10× rows), the r7 headline-at-10× methodology.
 REL_OPS = ("q31_array_map_funcs", "q48_theta_error_bound")
 REL_X1 = "/root/testdata/sf0.1"
-
-
-
-def _force_rows(df) -> int:
-    """Row count with EVERY output column evaluated — delegates to the
-    shared recipe (omop_dump_to_parquet_spark.force.forced_count),
-    which also handles maps NESTED inside struct/array columns; the
-    r15 copy here checked only top-level MapType (r15 advisor)."""
-    from omop_dump_to_parquet_spark.force import forced_count
-
-    return forced_count(df)
 
 
 def _d13_candidate_counts(spark, sf_dir: str) -> dict:
@@ -182,6 +170,7 @@ def _merged_rel_ops(prior_path: str, rel: dict) -> dict:
 
 def main() -> None:
     from omop_dump_to_parquet_spark import load_catalog
+    from omop_dump_to_parquet_spark.force import forced_count
     from omop_dump_to_parquet_spark.operators.graph import LAST_CC_STATS
     from omop_dump_to_parquet_spark.session import get_spark
 
@@ -211,7 +200,7 @@ def main() -> None:
             for _ in range(REPS):
                 spark.sparkContext._jvm.System.gc()
                 t0 = time.perf_counter()
-                rows = _force_rows(queries[op](spark, sf_dir))
+                rows = forced_count(queries[op](spark, sf_dir))
                 runs.append(round(time.perf_counter() - t0, 3))
                 if op == "d06_dedup_clusters" and LAST_CC_STATS:
                     extra = dict(LAST_CC_STATS)
@@ -295,7 +284,7 @@ def main() -> None:
                 for _ in range(REPS):
                     spark.sparkContext._jvm.System.gc()
                     t0 = time.perf_counter()
-                    rows = _force_rows(queries[op](spark, sf_dir))
+                    rows = forced_count(queries[op](spark, sf_dir))
                     runs.append(round(time.perf_counter() - t0, 3))
                 rel.setdefault(op, {})[sf_label] = {
                     "sec": round(statistics.median(runs), 3),

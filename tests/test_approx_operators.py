@@ -1973,3 +1973,580 @@ def test_gemm_margin_refine_equals_sequential_brute_force(spark):
         for r in DD.semdedup_prune(emb, n_planes=planes, tau=tau).collect()
     }
     assert got_sd == ref_hits
+
+
+# ---------------------------------------------------------------------------
+# k-means (s07 / d14) and the SemDeDup prune
+# ---------------------------------------------------------------------------
+
+
+def test_seq_dot_bit_identical_to_spark_fold(spark):
+    """_seq_dot (the driver-side |c|² precompute) must be the exact
+    IEEE left-fold dot_d evaluates — any reassociation (fsum, numpy,
+    pairwise) would shift the rounded distance key on boundary values
+    and break the oracle lockstep."""
+    import struct
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from omop_dump_to_parquet_spark.functions.vectors import dot_d
+
+    finite = st.floats(
+        min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False
+    )
+
+    @given(st.lists(finite, min_size=1, max_size=32))
+    @settings(max_examples=20, deadline=None)
+    def check(vec):
+        df = spark.createDataFrame([(vec,)], "v array<double>")
+        got = df.select(dot_d(F.col("v"), F.col("v")).alias("d")).first()["d"]
+        assert struct.pack("d", got) == struct.pack("d", S._seq_dot(vec, vec))
+
+    check()
+
+
+def test_s07_update_step_matches_wide_decimal_agg(spark):
+    """The posexplode update step must reproduce a per-dimension
+    decimal-avg column per coordinate bit-for-bit (exact DECIMAL sums
+    are summation-order independent, so the two shapes are the same
+    arithmetic)."""
+    import math
+
+    from omop_dump_to_parquet_spark.functions.deterministic import davg
+
+    dim = 5
+    rows = [
+        (0, [float(i + j) / 7.0 for j in range(dim)]) for i in range(9)
+    ] + [(1, [math.sin(i + j) for j in range(dim)]) for i in range(7)]
+    df = spark.createDataFrame(rows, "cluster long, emb array<double>")
+
+    wide = df.groupBy("cluster").agg(
+        *[
+            F.round(davg(F.element_at(F.col("emb"), d + 1), 38, 18), 9).alias(
+                f"m{d}"
+            )
+            for d in range(dim)
+        ]
+    )
+    wide_means = {
+        int(r["cluster"]): [float(r[f"m{d}"]) for d in range(dim)]
+        for r in wide.collect()
+    }
+
+    tall = (
+        df.select("cluster", F.posexplode("emb").alias("pos", "x"))
+        .groupBy("cluster", "pos")
+        .agg(F.round(davg(F.col("x"), 38, 18), 9).alias("m"))
+    )
+    tall_means: dict[int, list[float]] = {}
+    for r in tall.collect():
+        tall_means.setdefault(int(r["cluster"]), [0.0] * dim)[
+            int(r["pos"])
+        ] = float(r["m"])
+
+    assert tall_means == wide_means
+
+
+def test_kmeans_exact_fails_loud_on_short_embedding(spark):
+    """The posexplode means rebuild must raise — not silently leave a
+    centroid coordinate at the 0.0 placeholder — when a cluster's
+    (cluster, pos) rows don't cover every dimension."""
+    # one cluster (k=1) whose only members are 3-element arrays while
+    # dim=4: position 3 never appears in the posexplode, so the fill
+    # check must trip
+    emb = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0]), (1, [2.0, 1.0, 0.5])],
+        "vec_id long, emb array<double>",
+    )
+    with pytest.raises(ValueError, match="mean rows"):
+        S.kmeans_exact(emb, k=1, iters=1, dim=4)
+
+
+def test_kmeans_exact_requires_dense_ids(spark):
+    emb = spark.createDataFrame(
+        [(3, [1.0, 2.0]), (7, [2.0, 1.0])],
+        "vec_id long, emb array<double>",
+    )
+    with pytest.raises(ValueError, match="dense vec_ids"):
+        S.kmeans_exact(emb, k=2, iters=1, dim=2)
+
+
+def _blob_emb(spark, n_per: int = 20, dim: int = 8):
+    """Two well-separated Gaussian-free blobs (deterministic offsets):
+    any sane clustering must split them."""
+    rows = []
+    for i in range(n_per):
+        rows.append((i, [1.0 + 0.001 * i] * dim))
+        rows.append((100 + i, [-1.0 - 0.001 * i] * dim))
+    return spark.createDataFrame(rows, "vec_id long, emb array<double>")
+
+
+def test_kmeans_bucket_assign_separates_blobs_deterministically(spark):
+    emb = _blob_emb(spark)
+    a = S.kmeans_bucket_assign(emb, 2, iters=3)
+    rows = a.collect()
+    assert len(rows) == 40
+    by_blob = {}
+    for r in rows:
+        assert 0 <= r["bucket"] < 2
+        by_blob.setdefault(r["vec_id"] >= 100, set()).add(r["bucket"])
+    # each blob lands in exactly one bucket, and not the same one
+    assert all(len(v) == 1 for v in by_blob.values())
+    assert by_blob[False] != by_blob[True]
+    # deterministic rerun
+    b = S.kmeans_bucket_assign(emb, 2, iters=3)
+    assert (
+        a.select("vec_id", "bucket")
+        .exceptAll(b.select("vec_id", "bucket"))
+        .count()
+        == 0
+    )
+
+
+def test_kmeans_2level_ids_disjoint_and_deterministic(spark):
+    emb = _blob_emb(spark)
+    a = S.kmeans_bucket_assign_2level(emb, 4, iters=2)
+    rows = a.collect()
+    assert len(rows) == 40
+    # k_coarse=2, k_fine=2 → bucket ids in [0, 4); the two blobs never
+    # share a bucket (they cannot share a coarse cell)
+    blob_buckets = {False: set(), True: set()}
+    for r in rows:
+        assert 0 <= r["bucket"] < 4
+        blob_buckets[r["vec_id"] >= 100].add(r["bucket"])
+    assert not (blob_buckets[False] & blob_buckets[True])
+    b = S.kmeans_bucket_assign_2level(emb, 4, iters=2)
+    assert (
+        a.select("vec_id", "bucket")
+        .exceptAll(b.select("vec_id", "bucket"))
+        .count()
+        == 0
+    )
+
+
+def test_semdedup_prune_bucketed_single_bucket_is_brute_force(spark):
+    """With every vector in ONE bucket, the bucketed prune must equal
+    the brute-force all-pairs min-keeper at the same threshold."""
+    import itertools
+    import math
+
+    vecs = {
+        0: [1.0, 0.0, 0.0],
+        1: [0.9999, 0.01, 0.0],
+        2: [0.0, 1.0, 0.0],
+        3: [0.0, 0.9999, 0.01],
+        4: [0.577, 0.577, 0.577],
+    }
+    tau = 0.99
+    df = spark.createDataFrame(
+        [(i, v, 0) for i, v in vecs.items()],
+        "vec_id long, emb array<double>, bucket long",
+    )
+    got = {
+        r["removed_id"]: (r["keeper_id"], r["max_cos_sim"])
+        for r in D.semdedup_prune_bucketed(df, tau).collect()
+    }
+
+    def cos(a, b):
+        d = sum(x * y for x, y in zip(a, b))
+        return d / (
+            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(x * x for x in b))
+        )
+
+    want: dict[int, tuple[int, float]] = {}
+    for i, j in itertools.combinations(sorted(vecs), 2):
+        c = round(cos(vecs[i], vecs[j]), 6)
+        if c >= tau:
+            keep, sim = want.get(j, (j + 1, -2.0))
+            want[j] = (min(keep, i), max(sim, c))
+    assert got == want
+
+
+def test_d14_buckets_match_s07_contract_and_prune_is_within_bucket(
+    spark, sf_small
+):
+    """d14's clusters must be exactly the kmeans_exact assignment (the
+    oracle derives them independently via unrolled CTEs), and every
+    (keeper, removed) pair must be a same-bucket pair with
+    keeper < removed — the SemDeDup within-cluster contract."""
+    from omop_dump_to_parquet_spark.functions.vectors import to_double_array
+
+    out = QUERIES["d14_semdedup_kmeans"](spark, sf_small).collect()
+    assert out, "fixture should produce at least one pruned vector"
+
+    emb = table(spark, sf_small, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb")
+    )
+    assigned, _ = S.kmeans_exact(emb, D.D14_K, D.D14_ITERS)
+    bucket_of = {
+        r["vec_id"]: r["cluster"]
+        for r in assigned.select("vec_id", "cluster").collect()
+    }
+    for r in out:
+        assert r["keeper_id"] < r["removed_id"]
+        assert bucket_of[r["keeper_id"]] == bucket_of[r["removed_id"]]
+
+
+def test_s09_merged_collect_rows_match_filtered_collects(spark, sf_small):
+    """s09's single bounded head collect must recover exactly the two
+    row sets separate probe and codebook-seed filters would collect."""
+    from omop_dump_to_parquet_spark.functions.vectors import to_double_array
+
+    emb = table(spark, sf_small, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb")
+    )
+    head = emb.filter(
+        F.col("vec_id") < S.N_QUERIES + S.PQ_TRAIN_N
+    ).collect()
+    seed_new = sorted(
+        (r["vec_id"] for r in head if r["vec_id"] >= S.N_QUERIES)
+    )
+    probe_new = sorted(
+        (r["vec_id"] for r in head if r["vec_id"] < S.N_QUERIES)
+    )
+    seed_old = sorted(
+        r["vec_id"]
+        for r in emb.filter(
+            (F.col("vec_id") >= S.N_QUERIES)
+            & (F.col("vec_id") < S.N_QUERIES + S.PQ_TRAIN_N)
+        ).collect()
+    )
+    probe_old = sorted(
+        r["vec_id"]
+        for r in emb.filter(F.col("vec_id") < S.N_QUERIES).collect()
+    )
+    assert seed_new == seed_old and probe_new == probe_old
+
+
+# ---------------------------------------------------------------------------
+# d04 — MinHash LSH kernel, group collapse and verify
+# ---------------------------------------------------------------------------
+
+
+def test_d04_pipeline_matches_brute_force_jaccard(spark, sf_small):
+    """d04's pipeline (map-side NumPy kernel → exact token-set group
+    collapse → rep-level LSH + verify → member expansion) must yield
+    exactly the brute-force all-pairs word-set Jaccard ≥ threshold
+    set on the fixture, jaccard values included."""
+    new = {
+        (r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
+        for r in D.d04_dedup_minhash_lsh(spark, sf_small).collect()
+    }
+    docs = table(spark, sf_small, "documents")
+    toks = {
+        r["doc_id"]: set(r["text"].split(" "))
+        for r in docs.select("doc_id", "text").collect()
+    }
+    ids = sorted(toks)
+    brute = set()
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            nc = len(toks[a] & toks[b])
+            jac = nc / (len(toks[a]) + len(toks[b]) - nc)
+            if jac >= D.MINHASH_THRESHOLD:
+                brute.add((a, b, round(jac, 9)))
+    assert new == brute and len(new) > 0
+
+
+def test_d04_group_collapse_is_exact(spark, sf_small):
+    """Two docs share a (nw, g1, g2) group key iff their distinct
+    token SETS are identical — the collapse must never merge distinct
+    sets (false jaccard-1.0 pairs) nor split identical ones (missed
+    within-group pairs)."""
+    docs = table(spark, sf_small, "documents")
+    rows = D.minhash_prepared(docs).select(
+        "doc_id", "nw", "g1", "g2"
+    ).collect()
+    toks = {
+        r["doc_id"]: frozenset(r["text"].split(" "))
+        for r in docs.select("doc_id", "text").collect()
+    }
+    by_key: dict = {}
+    for r in rows:
+        by_key.setdefault((r["nw"], r["g1"], r["g2"]), []).append(
+            r["doc_id"]
+        )
+    for key, ids in by_key.items():
+        sets = {toks[i] for i in ids}
+        assert len(sets) == 1, f"group {key} merged distinct sets"
+    # identical sets must land in the same group
+    by_set: dict = {}
+    for i, s in toks.items():
+        by_set.setdefault(s, set()).add(i)
+    keys_of = {
+        r["doc_id"]: (r["nw"], r["g1"], r["g2"]) for r in rows
+    }
+    for s, ids in by_set.items():
+        assert len({keys_of[i] for i in ids}) == 1
+
+
+def test_minhash_prepared_nw_matches_expression_form(spark, sf_small):
+    """The kernel's nw (|distinct tokens|) must equal the Catalyst
+    size(array_distinct(split(text))) — it feeds the exact integer
+    set-size pruning condition."""
+    docs = table(spark, sf_small, "documents")
+    got = {
+        r["doc_id"]: r["nw"] for r in D.minhash_prepared(docs).collect()
+    }
+    want = {
+        r["doc_id"]: r["nw"]
+        for r in docs.select(
+            "doc_id",
+            F.size(F.array_distinct(F.split(F.col("text"), " "))).alias(
+                "nw"
+            ),
+        ).collect()
+    }
+    assert got == want
+
+
+def test_d04_plan_uses_kernel_not_agg_signatures(spark, sf_small):
+    """Plan shape: the d04 signature subtree is the Arrow kernel
+    (MapInArrow), with no 126-column min-aggregate groupBy — the only
+    aggregates belong to the hot-bucket cap machinery (count per
+    (band, bkey))."""
+    docs = table(spark, sf_small, "documents")
+    # the signature subtree itself (pre-checkpoint): kernel, no agg
+    sub = D.minhash_prepared(
+        docs
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in sub
+    assert "HashAggregate" not in sub and "xxhash64" not in sub
+    # the full query's plan is checkpoint-truncated (Scan ExistingRDD
+    # leaves), so assert the 126-min-agg signature shape is absent
+    # from it rather than that the kernel node is visible
+    plan = D.d04_dedup_minhash_lsh(
+        spark, sf_small
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "min(xxhash64" not in plan
+
+
+def test_minhash_and_simhash_kernels_drop_null_text(spark):
+    """NULL-text rows must drop (as an explode over split(NULL)
+    would), and the all-NULL batch must not crash the reduceat /
+    np.split paths."""
+    docs = spark.createDataFrame(
+        [(1, "x y z"), (2, None), (3, None)], "doc_id long, text string"
+    )
+    mh = {r["doc_id"] for r in D.minhash_prepared(docs).collect()}
+    sh = {r["doc_id"] for r in D.simhash_chunks(docs).collect()}
+    assert mh == sh == {1}
+    all_null = spark.createDataFrame(
+        [(2, None)], "doc_id long, text string"
+    )
+    assert D.minhash_prepared(all_null).count() == 0
+    assert D.simhash_chunks(all_null).count() == 0
+
+
+def test_ranked_tokens_window_nw_matches_sizes_join(spark, sf_small):
+    """_ranked_tokens' window-computed ``nw`` must equal the separate
+    sizes aggregate + join form on every (doc, token) row."""
+    docs = table(spark, sf_small, "documents")
+    tok = D._distinct_tokens(docs, "lang", "source")
+    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nw"))
+    new = {
+        (r["doc_id"], r["w"], r["df"], r["rn"], r["nw"])
+        for r in D._ranked_tokens(docs, "lang", "source", tok=tok).collect()
+    }
+    old = {
+        (r["doc_id"], r["w"], r["df"], r["rn"], r["nw"])
+        for r in D._ranked_tokens(
+            docs, "lang", "source", tok=tok, sizes=sizes
+        ).collect()
+    }
+    assert new == old and len(new) > 0
+
+
+# ---------------------------------------------------------------------------
+# d15 — cross-corpus fuzzy decontamination (broadcast LSH)
+# ---------------------------------------------------------------------------
+
+
+def test_d15_kernel_plan_has_no_shuffle(spark, sf_small):
+    """The 100 TB claim: the corpus side crosses NO exchange — the
+    whole op is scan → project → generate → BroadcastHashJoin →
+    filter."""
+    docs = table(spark, sf_small, "documents")
+    kernel = D.cross_corpus_neardup(
+        docs.filter(F.col("doc_id") % D.D15_EVAL_MOD != 0),
+        docs.filter(F.col("doc_id") % D.D15_EVAL_MOD == 0),
+    )
+    plan = kernel._jdf.queryExecution().executedPlan().toString()
+    # Executed-plan strings render shuffles as "Exchange
+    # hashpartitioning/roundrobinpartitioning/rangepartitioning/
+    # SinglePartition", never as the class name "ShuffleExchange".
+    # The zero-shuffle certificate: after removing the one allowed
+    # exchange kind (BroadcastExchange, the eval index), NO Exchange
+    # of any partitioning remains.
+    assert "BroadcastExchange" in plan, plan
+    assert "Exchange" not in plan.replace("BroadcastExchange", ""), plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_d15_catalog_plan_only_widener_exchange(spark, sf_small):
+    """The registered query adds only widen_scan's round-robin
+    repartition (single-file fixture parallelism) — still no
+    hash-partitioned exchange and no sort-merge join."""
+    plan = (
+        QUERIES["d15_fuzzy_decontamination"](spark, sf_small)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_d15_no_duplicate_pairs(spark, sf_small):
+    """First-shared-band emission replaces distinct(): a pair
+    colliding in several bands must still emit exactly once."""
+    df = QUERIES["d15_fuzzy_decontamination"](spark, sf_small)
+    n = df.count()
+    assert n == df.select("doc_id", "eval_id").distinct().count()
+
+
+def test_d15_exact_boundary_pair(spark):
+    """J exactly at the 0.9 threshold must be kept: |A|=10, |B|=9,
+    9 shared tokens → J = 9/10. Also exercises the integer size-ratio
+    prune at its boundary (10·9 ≥ 9·10)."""
+    shared = [f"w{i}" for i in range(9)]
+    train = spark.createDataFrame(
+        [(1, " ".join(shared + ["extra"]))], "doc_id long, text string"
+    )
+    ev = spark.createDataFrame(
+        [(0, " ".join(shared))], "doc_id long, text string"
+    )
+    rows = D.cross_corpus_neardup(train, ev, D.MINHASH_THRESHOLD).collect()
+    assert [(r.doc_id, r.eval_id, r.jaccard) for r in rows] == [(1, 0, 0.9)]
+
+
+def test_d15_below_boundary_dropped(spark):
+    """8 shared of |A|=10, |B|=9 → J = 8/11 < 0.9 → no pair (the
+    size prune admits it; exact verification rejects it)."""
+    shared = [f"w{i}" for i in range(8)]
+    train = spark.createDataFrame(
+        [(1, " ".join(shared + ["xa", "xb"]))], "doc_id long, text string"
+    )
+    ev = spark.createDataFrame(
+        [(0, " ".join(shared + ["ya"]))], "doc_id long, text string"
+    )
+    assert D.cross_corpus_neardup(train, ev, D.MINHASH_THRESHOLD).count() == 0
+
+
+def test_d15_eval_mod_matches_p09():
+    """d15 keeps P09's eval-split derivation (numerically local to
+    avoid an import cycle) — pin the equality so the two
+    decontamination families can never silently diverge on what 'the
+    benchmark set' is."""
+    from omop_dump_to_parquet_spark.operators.pipeline import P09_EVAL_MOD
+
+    assert D.D15_EVAL_MOD == P09_EVAL_MOD
+
+
+# ---------------------------------------------------------------------------
+# d16 — span-level exact-substring dedup output
+# ---------------------------------------------------------------------------
+
+
+def _md5(s: str) -> str:
+    import hashlib
+
+    return hashlib.md5(s.encode()).hexdigest()
+
+
+def _rewrite_map(spark, docs_rows):
+    docs = spark.createDataFrame(docs_rows, "doc_id long, text string")
+    return {
+        r.doc_id: r
+        for r in D.exact_substring_rewrite(docs, w=3).collect()
+    }
+
+
+def test_d16_nondegenerate(spark, sf_small):
+    """The fixture actually exercises the operator: >20 docs get spans
+    removed, including at least one fully-deduplicated doc (retained
+    text == '') — and untouched docs round-trip byte-identical."""
+    rows = QUERIES["d16_exact_substring_rewrite"](spark, sf_small).collect()
+    rewritten = [r for r in rows if r.n_removed > 0]
+    assert len(rewritten) >= 20
+    assert any(r.n_removed == r.n_tokens for r in rewritten)
+    empty_md5 = _md5("")
+    for r in rewritten:
+        if r.n_removed == r.n_tokens:
+            assert r.retained_md5 == empty_md5
+    # untouched docs: md5 equals the original token-joined text
+    originals = {
+        r.doc_id: r.text
+        for r in table(spark, sf_small, "documents").collect()
+    }
+    untouched = [r for r in rows if r.n_removed == 0]
+    assert untouched
+    for r in untouched[:50]:
+        assert r.retained_md5 == _md5(originals[r.doc_id])
+
+
+def test_d16_cross_doc_keeper_is_min_doc(spark):
+    """A span duplicated across docs survives only in the lexicographic
+    -min (doc_id, pos) occurrence."""
+    span = "a b c"  # w=3: exactly one window
+    out = _rewrite_map(
+        spark,
+        [(1, f"{span} x y"), (2, f"p q {span}"), (3, f"{span} m n")],
+    )
+    assert out[1].n_removed == 0
+    assert out[1].retained_md5 == _md5("a b c x y")
+    assert out[2].n_removed == 3
+    assert out[2].retained_md5 == _md5("p q")
+    assert out[3].n_removed == 3
+    assert out[3].retained_md5 == _md5("m n")
+
+
+def test_d16_within_doc_repeat_keeps_first(spark):
+    out = _rewrite_map(spark, [(7, "a b c z a b c")])
+    # second occurrence (pos 5) deleted; tokens 5,6,7 removed
+    assert out[7].n_removed == 3
+    assert out[7].retained_md5 == _md5("a b c z")
+
+
+def test_d16_overlapping_marks_union(spark):
+    """Two overlapping duplicated windows in the same doc merge via the
+    deleted-position set — tokens are not double-counted."""
+    out = _rewrite_map(
+        spark,
+        [(1, "a b c d x"), (2, "y a b c d")],  # windows 'a b c','b c d' both dup
+    )
+    assert out[1].n_removed == 0
+    assert out[2].n_removed == 4  # positions 2..5 union, not 6
+    assert out[2].retained_md5 == _md5("y")
+
+
+def test_d16_short_doc_untouched(spark):
+    out = _rewrite_map(spark, [(1, "a b"), (2, "a b")])
+    # both docs shorter than w=3: no windows, byte-identical output
+    for d in (1, 2):
+        assert out[d].n_removed == 0
+        assert out[d].retained_md5 == _md5("a b")
+
+
+def test_d16_plan_single_corpus_hash_exchange(spark, sf_small):
+    """The 100 TB claim: the gram index's keeper groupBy is the ONLY
+    hash exchange over corpus-token-scale data; the keeper table and
+    deleted-set sliver ride broadcasts; no SortMergeJoin at fixture
+    scale. (At production the keeper join degrades to SMJ REUSING the
+    same gh exchange — same key.)"""
+    import re
+
+    plan = (
+        QUERIES["d16_exact_substring_rewrite"](spark, sf_small)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "SortMergeJoin" not in plan, plan
+    hash_ex = re.findall(r"Exchange hashpartitioning\(([a-z_]+)#", plan)
+    # exactly two hash exchanges: gh (gram index / keeper agg) and
+    # doc_id (duplicated-window sliver aggregation)
+    assert sorted(hash_ex) == ["doc_id", "gh"], hash_ex
+    assert plan.count("BroadcastHashJoin") == 2, plan

@@ -8,10 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from omop_dump_to_parquet_spark.operators.skew import salted_join
-from omop_dump_to_parquet_spark.sinks.bucketed import (
-    read_bucketed,
-    write_bucketed,
-)
+from omop_dump_to_parquet_spark.sinks.bucketed import write_bucketed
 from omop_dump_to_parquet_spark.sources.files import (
     infer_then_pin,
     read_csv,
@@ -60,7 +57,8 @@ def bucketed_pair(spark, sf_small, tmp_path_factory):
 
 def test_bucketed_join_has_no_shuffle(spark, bucketed_pair, sf_small):
     li_t, o_t = bucketed_pair
-    li, orders = read_bucketed(spark, li_t), read_bucketed(spark, o_t)
+    # read through the catalog: a path read loses the bucket spec
+    li, orders = spark.table(li_t), spark.table(o_t)
     # Force SMJ so the bucket layout (not a broadcast) carries the join.
     with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
         j = li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -80,7 +78,7 @@ def test_unbucketed_same_join_does_shuffle(spark, sf_small):
 
 def test_bucket_pruning_on_key_equality(spark, bucketed_pair):
     li_t, _ = bucketed_pair
-    li = read_bucketed(spark, li_t)
+    li = spark.table(li_t)
     # autoBucketedScan turns the bucketed layout OFF when no shuffle is
     # saved; force it on so the scan can bucket-prune the point lookup.
     with _conf(

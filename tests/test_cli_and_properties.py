@@ -50,43 +50,6 @@ def test_cli_parser_rejects_two_sources():
 
 
 @given(
-    st.lists(
-        st.tuples(st.text(min_size=1, max_size=8), st.sampled_from(["int", "str"])),
-        max_size=6,
-        unique_by=lambda kv: kv[0],
-    ),
-    st.lists(
-        st.tuples(st.text(min_size=1, max_size=8), st.sampled_from(["int", "str"])),
-        max_size=6,
-        unique_by=lambda kv: kv[0],
-    ),
-)
-@settings(max_examples=50, deadline=None)
-def test_schema_drift_is_empty_iff_schemas_equal(a, b):
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from omop_dump_to_parquet_spark.verify import schema_drift
-
-    mk = lambda kv: StructType(
-        [
-            StructField(n, IntegerType() if t == "int" else StringType())
-            for n, t in kv
-        ]
-    )
-    sa, sb = mk(a), mk(b)
-    drift = schema_drift(sa, sb)
-    if dict(a) == dict(b):
-        assert drift == []
-    else:
-        assert drift
-    # drift is symmetric in SIZE of the add/drop sets
-    back = schema_drift(sb, sa)
-    assert len([d for d in drift if d.startswith("added")]) == len(
-        [d for d in back if d.startswith("dropped")]
-    )
-
-
-@given(
     st.integers(min_value=1, max_value=200),
     st.integers(min_value=1, max_value=200),
 )
@@ -532,3 +495,62 @@ def test_runtime_conf_set_after_first_apply_survives_query_entry(spark, sf_small
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     queries["q01_pricing_summary"](s2, sf_small).count()
     assert s2.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+# ---------------------------------------------------------------------------
+# Scripts and repository layout
+# ---------------------------------------------------------------------------
+
+
+def test_rehearsal_filtered_refresh_preserves_unlisted_rel_ops(tmp_path):
+    """An op-filtered rel refresh of scripts/scale_rehearsal.py (only
+    q48 measured) must keep q31's prior step-pair rows instead of
+    shadowing the prior file with the rebuilt block."""
+    import importlib.util
+    import json
+    import pathlib
+
+    path = pathlib.Path(__file__).parent.parent / "scripts" / "scale_rehearsal.py"
+    spec = importlib.util.spec_from_file_location("scale_rehearsal", path)
+    rehearsal = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(rehearsal)
+
+    prior = {
+        "relational_x10_extension": {
+            "note": "prior",
+            "ops": {
+                "q31_array_map_funcs": {"x1": {"sec": 1.0}, "step_alpha": 0.5},
+                "q48_theta_error_bound": {"x1": {"sec": 9.9}},
+            },
+        }
+    }
+    prior_path = tmp_path / "SCALE_REHEARSAL.json"
+    prior_path.write_text(json.dumps(prior))
+
+    fresh = {"q48_theta_error_bound": {"x1": {"sec": 2.0}, "step_alpha": 0.7}}
+    merged = rehearsal._merged_rel_ops(str(prior_path), fresh)
+    # unlisted op preserved verbatim, listed op overlaid with the
+    # fresh measurement
+    assert merged["q31_array_map_funcs"]["step_alpha"] == 0.5
+    assert merged["q48_theta_error_bound"]["step_alpha"] == 0.7
+    # no prior file → just this run's ops
+    assert rehearsal._merged_rel_ops(str(tmp_path / "missing.json"), fresh) == fresh
+
+
+def test_no_round_named_tests_or_scripts():
+    """Tests live in topic files and measurements in reusable scripts
+    or perfbench/: a file named after a development round
+    (``test_r12_*``, ``r17_*``, ``r15b_*``) or a one-off ×100 probe
+    (``x100_*``, ``*_x100``) is a leftover to fold in or delete."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).parent.parent
+    named_by_round = re.compile(r"^(test_r\d+|r\d+b?_)|(^|_)x100(_|\.py$)")
+    offenders = sorted(
+        f.relative_to(root).as_posix()
+        for d in ("tests", "scripts")
+        for f in (root / d).rglob("*.py")
+        if named_by_round.search(f.name)
+    )
+    assert not offenders, offenders

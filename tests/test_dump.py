@@ -47,25 +47,6 @@ def test_dump_normalize_cast(spark, sf_small, tmp_path):
     assert dict(back.dtypes)["n_nationkey"] == "bigint"
 
 
-def test_schema_drift_detection(spark, sf_small):
-    from pyspark.sql import functions as F
-
-    from omop_dump_to_parquet_spark.verify import schema_drift
-
-    nation = spark.read.parquet(f"{sf_small}/nation.parquet")
-    assert schema_drift(nation.schema, nation.schema) == []
-    drifted = (
-        nation.drop("n_name")
-        .withColumn("n_regionkey", F.col("n_regionkey").cast("string"))
-        .withColumn("extra", F.lit(1))
-    )
-    drift = schema_drift(nation.schema, drifted.schema)
-    assert any(d.startswith("added column: extra") for d in drift)
-    assert any(d.startswith("dropped column: n_name") for d in drift)
-    assert any(d.startswith("type change: n_regionkey") for d in drift)
-    assert len(drift) == 3
-
-
 def test_upsert_merges_by_key(spark, sf_small, tmp_path):
     from pyspark.sql import functions as F
 
@@ -380,23 +361,6 @@ def test_every_writer_lands_the_one_codec(spark, sf_small, tmp_path, land):
     land(spark, table(spark, sf_small, "lineitem"), out)
     codecs = parquet_codecs(out)
     assert set(codecs) == {PARQUET_CODEC.upper()}, codecs
-
-
-def test_binary_file_ingestion_to_multimodal_lake(spark, tmp_path):
-    """binaryFile source → m01-shaped lake: one row per raw file,
-    bytes + metadata, glob filtering source-side."""
-    from omop_dump_to_parquet_spark.sources.files import read_binary_files
-
-    land = tmp_path / "raw"
-    land.mkdir()
-    (land / "a.img").write_bytes(b"\x89PNG fake payload")
-    (land / "b.img").write_bytes(b"\xff\xd8 other payload!!")
-    (land / "ignore.txt").write_text("not media")
-    df = read_binary_files(spark, str(land), path_glob="*.img")
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == {"a.img", "b.img"}
-    assert rows["a.img"]["length"] == 17
-    assert bytes(rows["a.img"]["content"]).startswith(b"\x89PNG")
 
 
 def test_upsert_is_idempotent_for_replayed_batch(spark, sf_small, tmp_path):

@@ -255,3 +255,22 @@ def test_memo_nanos_as_long_toggle_reinfers(spark, sf_small, tmp_path):
         spark.conf.set(key, before)
     _, jobs = count_jobs(spark, lambda: table(spark, sf_small, "events"), "memo-nanos-back")
     assert jobs > 0
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_MEDIUM])
+def test_driver_fixture_texts_contain_no_pipe_sentinel(sf_dir):
+    """The t22/t23 contracts assume documents.text never contains '|'
+    (the Spark side raises; the DuckDB oracle would silently treat it
+    as a word boundary). Assert the invariant on the driver fixtures
+    so the raise stays defense-in-depth, never a live engine-vs-oracle
+    asymmetry. Randomized fixtures get the same assert inside
+    scripts/gen_random_fixture.py."""
+    import pyarrow.parquet as pq
+
+    texts = (
+        pq.read_table(f"{sf_dir}/documents.parquet", columns=["text"])
+        .column("text")
+        .to_pylist()
+    )
+    assert texts
+    assert not any("|" in t for t in texts)

@@ -169,3 +169,69 @@ def test_triangle_counts_matches_bruteforce_on_random_graphs(spark):
             for r in triangle_counts(pairs).collect()
         }
         assert got == expect, f"mismatch on {len(edges)}-edge graph"
+
+
+def test_cc_lazy_default_matches_eager_checkpoint(spark, sf_small):
+    """The lazy localCheckpoint default (materialized by the
+    convergence fingerprint) must produce the identical component
+    assignment as an eager checkpoint, on the real d03 pair graph."""
+    from omop_dump_to_parquet_spark.operators.graph import _d03_pairs
+
+    pairs = _d03_pairs(spark, sf_small).select(
+        "doc_a", "doc_b"
+    ).localCheckpoint(eager=True)
+    lazy = sorted(
+        map(tuple, connected_components(pairs, "doc_a", "doc_b").collect())
+    )
+    eager = sorted(
+        map(
+            tuple,
+            connected_components(
+                pairs,
+                "doc_a",
+                "doc_b",
+                checkpoint_fn=lambda df: df.localCheckpoint(eager=True),
+            ).collect(),
+        )
+    )
+    assert lazy == eager and len(lazy) > 0
+
+
+def test_g02_struct_min_argmax_matches_window_argmax(spark):
+    """The LPA argmax (min of the (-cnt, community) struct) must pick
+    the identical (cnt DESC, community ASC) winner as a row_number
+    window — including on ties, which this synthetic vote table plants
+    deliberately (equal counts → smallest community)."""
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    votes = spark.createDataFrame(
+        [
+            (1, 10, 3),
+            (1, 11, 3),  # tie on cnt → community 10 must win
+            (1, 12, 1),
+            (2, 5, 7),
+            (2, 4, 2),
+            (3, 9, 4),
+        ],
+        "n2 long, community long, cnt long",
+    )
+    wv = W.partitionBy("n2").orderBy(F.col("cnt").desc(), F.col("community"))
+    via_window = {
+        (r["node"], r["community"])
+        for r in votes.withColumn("rn", F.row_number().over(wv))
+        .filter(F.col("rn") == 1)
+        .select(F.col("n2").alias("node"), "community")
+        .collect()
+    }
+    best = F.min(
+        F.struct((-F.col("cnt")).alias("neg"), F.col("community"))
+    ).alias("b")
+    via_agg = {
+        (r["node"], r["community"])
+        for r in votes.groupBy(F.col("n2").alias("node"))
+        .agg(best)
+        .select("node", F.col("b.community").alias("community"))
+        .collect()
+    }
+    assert via_window == via_agg == {(1, 10), (2, 5), (3, 9)}

@@ -132,3 +132,89 @@ def test_jaccard_verify_no_broadcast_matches_broadcast(spark, sf_small):
     )
     assert bc, "fixture produced no verified pairs — test would be vacuous"
     assert nb == bc
+
+
+# Oracle parity on an empty or truncated result would pass vacuously:
+# these ids' fixture outputs must keep their size (d16 and t25 emit
+# one row per document, p11 one per train document, 500 - 6 eval).
+@pytest.mark.parametrize(
+    "name, at_least, at_most",
+    [
+        ("d15_fuzzy_decontamination", 101, None),
+        ("d16_exact_substring_rewrite", 500, 500),
+        ("p11_dsir_importance", 494, 494),
+        ("t25_html_extract", 500, 500),
+    ],
+)
+def test_oracle_output_is_not_degenerate(name, at_least, at_most, duck):
+    (n,) = duck.sql(f"SELECT count(*) FROM ({ORACLES[name]})").fetchone()
+    assert n >= at_least and (at_most is None or n <= at_most), n
+
+
+def _mini_sf(tmp_path, tables: dict) -> str:
+    """Write {name: DataFrame} as a fixture-shaped sf directory."""
+    sf = str(tmp_path / "sf_mini")
+    for name, df in tables.items():
+        df.coalesce(1).write.mode("overwrite").parquet(f"{sf}/{name}.parquet")
+    return sf
+
+
+def _oracle_on(sf: str, name: str, tables: list[str]) -> pd.DataFrame:
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        for t in tables:
+            con.sql(
+                f"CREATE VIEW {t} AS SELECT * "
+                f"FROM read_parquet('{sf}/{t}.parquet/*.parquet')"
+            )
+        return con.sql(ORACLES[name]).df()
+    finally:
+        con.close()
+
+
+def test_q31_oracle_floors_fractional_quantities(spark, tmp_path):
+    """On FRACTIONAL quantities (where truncate != round: x.5 rounds
+    up under DuckDB round-half-away but floors down), every q31
+    column — map_total included — must agree between the Spark plan
+    and the DuckDB oracle."""
+    li = spark.createDataFrame(
+        [
+            (1, 1.5),  # floor 1, DuckDB CAST-round 2 → the divergence
+            (1, 2.5),
+            (2, 3.5),
+            (2, 1.0),
+        ],
+        "l_orderkey bigint, l_quantity double",
+    )
+    sf = _mini_sf(tmp_path, {"lineitem": li})
+    spark_rows = {
+        r["l_orderkey"]: r.asDict()
+        for r in QUERIES["q31_array_map_funcs"](spark, sf).collect()
+    }
+    duck = _oracle_on(sf, "q31_array_map_funcs", ["lineitem"])
+    assert len(duck) == len(spark_rows) == 2
+    for _, d in duck.iterrows():
+        s = spark_rows[d["l_orderkey"]]
+        for col in ("qty_csv", "n_items", "has_single", "qty_total",
+                    "first3_csv", "map_total"):
+            assert s[col] == d[col], (col, s[col], d[col])
+    # and map_total is the FLOORED total (1+2=3 for order 1), not the
+    # rounded one (2+3=5) — pins the semantics, not just parity
+    assert spark_rows[1]["map_total"] == 3
+    assert spark_rows[1]["qty_total"] == 3
+
+
+def test_q48_empty_events_matches_oracle_zero_true(spark, sf_small, tmp_path):
+    """q48 on an EMPTY events table: the oracle emits one (0, TRUE)
+    row; the Spark side must too, not NULL/NULL from a global sum."""
+    ev = spark.read.parquet(f"{sf_small}/events.parquet").limit(0)
+    sf = _mini_sf(tmp_path, {"events": ev})
+    rows = QUERIES["q48_theta_error_bound"](spark, sf).collect()
+    assert len(rows) == 1
+    assert rows[0]["n_overlap_exact"] == 0
+    assert rows[0]["within_eps"] is True
+    duck = _oracle_on(sf, "q48_theta_error_bound", ["events"])
+    assert int(duck["n_overlap_exact"][0]) == 0
+    assert bool(duck["within_eps"][0]) is True

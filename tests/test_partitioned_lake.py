@@ -235,7 +235,7 @@ def test_compaction_recovers_from_stale_crash_state(spark, sf_small, tmp_path):
     path = str(tmp_path / "frag2")
     li.repartition(20).write.parquet(path)
     # simulate a prior crash: stale dirs with junk in them (markers
-    # are dot-prefixed siblings since r10 — hidden from Spark listing)
+    # are dot-prefixed siblings — hidden from Spark listing)
     for stale in (
         f"{tmp_path}/.frag2.__compact_tmp",
         f"{tmp_path}/.frag2.__compact_old",
@@ -401,3 +401,169 @@ def test_compaction_converges_across_a_codec_change(spark, tmp_path):
     assert runs[0][0] == 2 and runs[1][0] <= 2
     assert runs[2] == runs[1]  # the third run rewrites nothing
     assert spark.read.parquet(path).count() == 3_000_000
+
+
+def test_compaction_recovers_legacy_plain_named_root_markers(
+    spark, sf_small, tmp_path
+):
+    """A lake that crashed MID-SWAP under the plain-sibling marker
+    naming (``path.__compact_old``, no dot prefix): the only copy of
+    the data sits in that marker, so recovery must restore it, then
+    compact normally."""
+    import glob
+    import os
+
+    from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
+
+    li = table(spark, sf_small, "lineitem")
+    path = str(tmp_path / "legacy_lake")
+    # crash state: data only under the plain-named old marker, plus a
+    # stale plain-named tmp with junk — path itself does not exist
+    li.repartition(20).write.parquet(f"{path}.__compact_old")
+    os.makedirs(f"{path}.__compact_tmp")
+    with open(f"{path}.__compact_tmp/junk.parquet", "w") as f:
+        f.write("not parquet")
+
+    n = compact_parquet_dir(spark, path, target_file_bytes=512 * 1024)
+    assert len(glob.glob(f"{path}/*.parquet")) == n < 20
+    assert spark.read.parquet(path).count() == li.count()
+    assert not os.path.exists(f"{path}.__compact_old")
+    assert not os.path.exists(f"{path}.__compact_tmp")
+
+
+def test_compaction_cleans_stale_legacy_markers_beside_live_path(
+    spark, sf_small, tmp_path
+):
+    """If the path itself survived the crash, leftover plain-named
+    markers are stale state: cleaned, never restored over the live
+    data."""
+    import glob
+    import os
+
+    from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
+
+    li = table(spark, sf_small, "lineitem")
+    path = str(tmp_path / "live_lake")
+    li.repartition(20).write.parquet(path)
+    # stale plain-named markers with DIFFERENT (wrong) contents
+    li.limit(5).write.parquet(f"{path}.__compact_old")
+    os.makedirs(f"{path}.__compact_tmp")
+
+    n = compact_parquet_dir(spark, path, target_file_bytes=512 * 1024)
+    assert len(glob.glob(f"{path}/*.parquet")) == n < 20
+    assert spark.read.parquet(path).count() == li.count()  # live data won
+    assert not os.path.exists(f"{path}.__compact_old")
+    assert not os.path.exists(f"{path}.__compact_tmp")
+
+
+# ---------------------------------------------------------------------------
+# zorder_key: out-of-range, NaN and ±inf values never throw under ANSI
+# ---------------------------------------------------------------------------
+
+ZBITS = 8
+ZMAX_Q = (1 << ZBITS) - 1
+
+
+def _deinterleave(key: int, d: int, n_dims: int = 2) -> int:
+    """Quantized coordinate of dimension ``d`` in a z-order key."""
+    return sum(((key >> (n_dims * i + d)) & 1) << i for i in range(ZBITS))
+
+
+def _zkeys(df, bounds=None) -> dict[int, int]:
+    from omop_dump_to_parquet_spark.functions.zorder import zorder_key
+
+    out = {
+        r["id"]: r["zk"]
+        for r in df.select(
+            "id",
+            zorder_key(df, ["x", "y"], bits=ZBITS, bounds=bounds).alias("zk"),
+        ).collect()
+    }
+    assert all(0 <= v <= (1 << (ZBITS * 2)) - 1 for v in out.values())
+    return out
+
+
+def test_zorder_clamps_out_of_range_and_nan_with_caller_bounds(spark):
+    """Caller-supplied bounds NARROWER than the data: far-out values
+    and NaN must clamp to edge buckets (docstring contract), not
+    throw from the ANSI double→long cast."""
+    df = spark.createDataFrame(
+        [
+            (0, 50.0, 50.0),        # inside the bounds
+            (1, 1.0e18, 50.0),      # far above hi → top edge bucket
+            (2, -1.0e18, 50.0),     # far below lo → bottom edge bucket
+            (3, float("nan"), 50.0),  # NaN → NULL-policy bottom bucket
+            (4, None, 50.0),        # NULL → bottom bucket
+        ],
+        "id bigint, x double, y double",
+    )
+    out = _zkeys(df, bounds={"x": (0.0, 100.0), "y": (0.0, 100.0)})
+    assert _deinterleave(out[1], 0) == ZMAX_Q  # clamped to top bucket
+    assert _deinterleave(out[2], 0) == 0      # clamped to bottom bucket
+    assert _deinterleave(out[3], 0) == 0      # NaN follows the NULL policy
+    assert _deinterleave(out[4], 0) == 0
+    assert 0 < _deinterleave(out[0], 0) < ZMAX_Q
+
+
+def test_zorder_nan_in_data_without_bounds_degrades_gracefully(spark):
+    """No caller bounds + a NaN in the column: Spark's max() returns
+    NaN (NaN orders above everything), which would poison the derived
+    bounds and collapse the dimension. NaN is excluded from the stats
+    aggregation, so non-NaN values keep their REAL quantization bounds
+    and the NaN row follows the per-row NULL policy (bottom bucket) —
+    never a throw, never an out-of-space key."""
+    df = spark.createDataFrame(
+        [(0, 1.0, 10.0), (1, float("nan"), 20.0), (2, 3.0, 30.0)],
+        "id bigint, x double, y double",
+    )
+    by_id = _zkeys(df)
+    # x (dim 0): bounds come from the non-NaN values {1.0, 3.0}, so
+    # 1.0 -> bottom, 3.0 -> top, NaN -> NULL policy (bottom)
+    assert _deinterleave(by_id[0], 0) == 0
+    assert _deinterleave(by_id[2], 0) == ZMAX_Q
+    assert _deinterleave(by_id[1], 0) == 0
+    # y (dim 1) clusters normally
+    ys = [_deinterleave(by_id[i], 1) for i in (0, 1, 2)]
+    assert ys[0] < ys[1] < ys[2]
+
+
+def test_zorder_inf_in_data_without_bounds_degrades_gracefully(spark):
+    """No caller bounds + a ±inf in the column: an infinite derived
+    span would quantize every FINITE row to bucket 0. Non-finite
+    values are excluded from the stats aggregation, so finite values
+    keep their real bounds; the inf rows clamp to the edge buckets per
+    the out-of-range policy."""
+    df = spark.createDataFrame(
+        [
+            (0, 1.0, 10.0),
+            (1, float("inf"), 20.0),
+            (2, 3.0, 30.0),
+            (3, float("-inf"), 40.0),
+        ],
+        "id bigint, x double, y double",
+    )
+    by_id = _zkeys(df)
+    # x (dim 0): bounds come from the FINITE values {1.0, 3.0}
+    assert _deinterleave(by_id[0], 0) == 0
+    assert _deinterleave(by_id[2], 0) == ZMAX_Q
+    # the inf rows clamp to the edges instead of throwing under ANSI
+    assert _deinterleave(by_id[1], 0) == ZMAX_Q
+    assert _deinterleave(by_id[3], 0) == 0
+    # y (dim 1) clusters normally despite x's non-finite rows
+    ys = [_deinterleave(by_id[i], 1) for i in (0, 1, 2, 3)]
+    assert ys == sorted(ys) and ys[0] < ys[3]
+
+
+def test_zorder_caller_supplied_inf_bounds_collapse_not_throw(spark):
+    """Caller-supplied (lo=-inf / hi=inf / NaN) bounds must be guarded
+    like derived ones: the dimension degrades to constant instead of
+    an inf span reaching the quantization arithmetic."""
+    df = spark.createDataFrame(
+        [(0, 1.0, 10.0), (1, 2.0, 20.0)], "id bigint, x double, y double"
+    )
+    by_id = _zkeys(
+        df, bounds={"x": (float("-inf"), float("inf")), "y": (10.0, 30.0)}
+    )
+    # x collapsed to a constant dim (guarded), y still clusters
+    assert _deinterleave(by_id[0], 0) == _deinterleave(by_id[1], 0)
+    assert _deinterleave(by_id[0], 1) < _deinterleave(by_id[1], 1)

@@ -1,15 +1,18 @@
-"""Semantic unit tests for the round-2 training-data pipeline
-operators (t08-t11) — invariants the differential oracle can't state
-(the oracle proves Spark≡DuckDB, these prove both mean what the
-docstrings claim).
+"""Semantic unit tests for the text operators (t08-t25) — invariants
+the differential oracle can't state (the oracle proves Spark≡DuckDB,
+these prove both mean what the docstrings claim) and the plan shapes
+the 100 TB arguments rest on.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from omop_dump_to_parquet_spark import load_catalog
 from omop_dump_to_parquet_spark.operators import text as T
 from omop_dump_to_parquet_spark.sources.parquet import table
+
+QUERIES, _ = load_catalog()
 
 
 def test_t08_fractions_are_valid_and_short_docs_are_zero(spark, sf_small):
@@ -362,3 +365,137 @@ def test_bpe_encode_keeps_input_doc_id_type_and_nulls(spark, sf_small):
     assert rows.pop(-1) == (None, None, None)
     want = {r["doc_id"]: tuple(r)[1:] for r in T.bpe_encode(docs, merges).collect()}
     assert rows == want and len(rows) > 0
+
+
+# ---------------------------------------------------------------------------
+# t24 — classifier inference plumbing
+# ---------------------------------------------------------------------------
+
+
+def test_t24_plan_has_no_shuffle(spark, sf_small):
+    """Inference is scan → broadcast weights → map-side project: no
+    Exchange other than the BroadcastExchange of the one-row weight
+    vector — the property that makes it free at 100 TB."""
+    plan = (
+        QUERIES["t24_quality_classifier"](spark, sf_small)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastExchange" in plan
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "Exchange rangepartitioning" not in plan, plan
+
+
+def test_t24_logit_matches_driver_side_recompute(spark, sf_small):
+    """Row-level ground truth: recompute a sample of logits in plain
+    Python from the same weight formula and md5 hash; exact match."""
+    import hashlib
+
+    got = {
+        r["doc_id"]: (r["n_features"], r["logit"], r["label"])
+        for r in QUERIES["t24_quality_classifier"](spark, sf_small).collect()
+    }
+    w = T.t24_weights()
+    sample = (
+        table(spark, sf_small, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") % 37 == 0)
+        .collect()
+    )
+    assert sample
+    for r in sample:
+        toks = r["text"].split(" ")
+        feats = toks + [
+            f"{a} {b}" for a, b in zip(toks, toks[1:])
+        ]
+        logit = sum(
+            w[int(hashlib.md5(f.encode()).hexdigest()[:15], 16) % T.T24_DIM]
+            for f in feats
+        )
+        assert got[r["doc_id"]] == (len(feats), logit, logit > 0), r["doc_id"]
+
+
+def test_t24_label_split_is_mixed(spark, sf_small):
+    """The decision threshold must actually separate the fixture (both
+    classes present) — a degenerate all-one-label output would make the
+    classifier stage vacuous as a filter."""
+    labels = (
+        QUERIES["t24_quality_classifier"](spark, sf_small)
+        .groupBy("label")
+        .count()
+        .collect()
+    )
+    assert len(labels) == 2, labels
+
+
+# ---------------------------------------------------------------------------
+# t25 — HTML extraction: encoder integrity, kernel semantics, plan
+# ---------------------------------------------------------------------------
+
+
+def test_t25_encoder_builds_real_markup(spark, sf_small):
+    """The roundtrip is not vacuous: the encoded page really contains
+    boilerplate blocks and live entities that the kernel must remove/
+    decode to recover the source bytes."""
+    docs = table(spark, sf_small, "documents")
+    row = T.html_wrap(docs).orderBy("doc_id").first()
+    h = row.html
+    for frag in (
+        "<nav>",
+        '<div class="sidebar">',
+        "<footer>",
+        "<article>",
+        "<p>&nbsp;",
+        "&#",  # numeric character reference in CONTENT
+        "&amp;",  # named entity (footer)
+        "<head>",
+    ):
+        assert frag in h, frag
+    orig = docs.orderBy("doc_id").first().text
+    assert orig not in h  # entities make content != source bytes
+
+
+def test_t25_kernel_on_handbuilt_page(spark):
+    """Known-answer extraction: link-dense blocks dropped, head
+    stripped, tags stripped, entities decoded, whitespace normal."""
+    page = (
+        "<html><head><title>leak me not</title></head><body>"
+        '<nav><a href="/">all links here</a></nav>'
+        "<p>keep &#72;ello &amp; <b>world</b></p>"
+        '<div><a href="/x">link link link</a> tiny</div>'
+        "<footer>mostly <a href='/y'>linked footer text</a></footer>"
+        "</body></html>"
+    )
+    df = spark.createDataFrame([(1, page)], "doc_id long, html string")
+    r = T.html_extract(df).collect()[0]
+    assert r.n_blocks == 4  # nav, p, div, footer
+    assert r.n_dropped == 3  # nav (1.0), div (~0.75), footer (~0.6)
+    assert r.extracted == "keep Hello & world"
+
+
+def test_t25_entity_decode_is_single_pass(spark):
+    """HTML semantics: '&#38;amp;' is '&amp;' (the decoder must not
+    rescan its own output), and unknown entities pass through."""
+    df = spark.createDataFrame(
+        [(1, "<p>&#38;amp; stays &unknown; ok</p>")],
+        "doc_id long, html string",
+    )
+    r = T.html_extract(df).collect()[0]
+    assert r.extracted == "&amp; stays &unknown; ok"
+
+
+def test_t25_plan_zero_shuffles(spark, sf_small):
+    """Zero shuffles by construction: scan → expressions →
+    mapInArrow → project. Only widen_scan's fixture round-robin may
+    appear; no hash/range exchange, no join, no aggregate."""
+    plan = (
+        QUERIES["t25_html_extract"](spark, sf_small)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "Exchange hashpartitioning" not in plan, plan
+    assert "Exchange rangepartitioning" not in plan, plan
+    assert "Join" not in plan, plan
+    assert "Aggregate" not in plan, plan
