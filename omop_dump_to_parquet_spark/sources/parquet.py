@@ -133,8 +133,16 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     This is the single choke point that canonicalizes fixture dtypes so
     the whole catalog can assume ``events.ts: timestamp`` (TIMESTAMP_LTZ)
-    regardless of how the driver happened to write the parquet. Layouts
-    seen across rounds:
+    regardless of how the fixture's writer laid out the parquet
+    (``canonical_ts``)."""
+    df = _read(spark, (f"{sf_dir}/{name}.parquet",))
+    return canonical_ts(df) if name == "events" else df
+
+
+def canonical_ts(df: DataFrame) -> DataFrame:
+    """``df`` (batch or streaming) with its ``ts`` column as TIMESTAMP,
+    whichever physical layout the parquet holds. Layouts seen so far
+    (fixtures are regenerated and have drifted between them):
 
     * TIMESTAMP(NANOS) read as a nanosecond ``bigint`` under
       ``spark.sql.legacy.parquet.nanosAsLong`` — truncate-divide to
@@ -143,24 +151,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     * ``timestamp[us]`` with ``isAdjustedToUTC=false``, which Spark
       reads as TIMESTAMP_NTZ — cast to TIMESTAMP. The session pins UTC
       (session.py), so NTZ→LTZ is value-preserving and ``unix_micros``
-      et al. see the same instants DuckDB does.
+      et al. see the same instants DuckDB does; a stream needs it too,
+      because EventTimeWatermark rejects TIMESTAMP_NTZ.
     * ``timestamp[us]`` already adjusted to UTC (plain TIMESTAMP) —
       passes through untouched.
 
-    If the driver ships a FOURTH layout, add its branch HERE (and in
-    the streaming twin ``streaming/stream_queries._events_stream``),
-    never at call sites — every operator assumes this contract.
+    If a fixture arrives in a FOURTH layout, add its branch here, never at
+    call sites — every operator assumes this contract.
     """
-    df = _read(spark, (f"{sf_dir}/{name}.parquet",))
-    dtypes = dict(df.dtypes)
-    if name == "events" and dtypes.get("ts") == "bigint":
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif name == "events" and dtypes.get("ts") == "timestamp_ntz":
-        from pyspark.sql import functions as F
-
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
@@ -175,7 +180,7 @@ def ts_us(col="ts"):
     guarantees that; the analysis error otherwise names this function.
 
     Known failure signatures of a NEW unhandled layout (fix
-    ``table()``, not the call site):
+    ``canonical_ts``, not the call site):
 
     * ``CANNOT_RESOLVE ... unix_micros(ts) ... TIMESTAMP_NTZ`` — a new
       not-UTC-adjusted physical type slipped past the ntz branch;

@@ -1,21 +1,28 @@
-"""Structured Streaming operators over the ``events`` table.
+"""Structured Streaming operators: the ``st*`` ids.
 
-The reference is strictly batch (SURVEY.md §2.2) — these extend the
-engine with the streaming surface a continuously-ingested lake needs:
+Each id replays fixture tables as a real ``readStream`` and runs the
+streaming plan to completion, so its answer is oracle-comparable to
+the batch computation (Structured Streaming's unification claim). One
+harness runs every replay, and each replay decision has one owner:
 
-- ST01: tumbling-window aggregation executed as a REAL streaming query
-  (``readStream`` → watermark → windowed agg → memory sink, driven to
-  completion with ``processAllAvailable``). The same parquet rows are
-  replayed as a stream, so the result is oracle-comparable to a batch
-  window aggregation — which is exactly Structured Streaming's
-  unification claim.
-- ST02: session windows via the native ``session_window`` operator
-  (the same operator works under ``readStream`` with a watermark; here
-  it runs in batch mode so the driver can hash-compare it).
-
-Scale: windowed-agg state is bounded by the watermark horizon;
-session-window state by open sessions per key. Both shuffle once on
-the grouping key.
+- ``_read_fixture`` reads a fixture table on the replay session, as a
+  stream (``readStream``) or as a static side (``read``). Its schema
+  comes from ``sources.parquet``'s memo on the CALLER's session (the
+  replay session is new on every call, so inferring there would run a
+  job each time), and ``events.ts`` gets ``canonical_ts``, the same
+  rule ``table()`` applies.
+- ``_staged`` memoizes, once per process, the directories a replay
+  needs beyond the fixture file: the events plus a flush sentinel
+  (st01, st08, st09) and the events split into files (st07).
+- ``_stream_session`` is the replay session: a clone of the caller's,
+  with the state-partition width.
+- ``_drive`` runs a started query until its input is processed and,
+  for a watermarked replay, until a committed batch's watermark has
+  passed the last real event (the flush), stops it, and returns its
+  progress as an ``observe.ProgressLog``.
+- ``_run_to_memory`` composes them for every memory-sink id and checks
+  the single-batch contract; st07's foreachBatch upsert uses the
+  session and ``_drive`` directly.
 
 API-coverage note: Spark 4's ``transformWithStateInPandas`` (the
 successor arbitrary-stateful API — multiple named state variables,
@@ -30,8 +37,12 @@ custom-stateful surface (st03) with zero extra dependencies.
 
 from __future__ import annotations
 
+import atexit
 import os
+import re
+import shutil
 import tempfile
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,41 +50,57 @@ from pyspark.sql import functions as F
 
 from ..functions.kernels import map_rows
 from ..registry import query
-from ..sources.parquet import table
+from ..sources.parquet import _read, canonical_ts, table
+from .observe import ProgressLog, batch_metrics
 
-#: staged landing dirs, keyed by sf_dir — FileStreamSource needs a
-#: directory, so the fixture file is symlinked into a temp dir once
-#: per (process, sf_dir) and reused by every streaming query instead
-#: of leaking a fresh mkdtemp per invocation.
+#: staging dirs by key (``_staged``), removed at interpreter exit.
 _STAGED: dict[str, str] = {}
 
 
 def _cleanup_staged() -> None:
-    """Remove staged landing dirs at interpreter exit — they hold only
-    symlinks, but a long-lived driver (or the correctness harness
-    running from its own CWD) shouldn't accumulate temp dirs."""
-    import shutil
-
+    """Remove staged dirs at interpreter exit — a long-lived driver (or
+    the correctness harness running from its own CWD) shouldn't
+    accumulate temp dirs."""
     while _STAGED:
-        _sf, stage = _STAGED.popitem()
+        _key, stage = _STAGED.popitem()
         shutil.rmtree(stage, ignore_errors=True)
 
-
-import atexit
 
 atexit.register(_cleanup_staged)
 
 
-def _stage_events(sf_dir: str) -> str:
-    stage = _STAGED.get(sf_dir)
+def _staged(key: str, fill) -> str:
+    """A temp dir that ``fill(dir)`` populates once per (process,
+    ``key``) and every later replay reuses, instead of leaking a fresh
+    mkdtemp per invocation; refilled if something removed it."""
+    stage = _STAGED.get(key)
     if stage is None or not os.path.exists(stage):
-        stage = tempfile.mkdtemp(prefix="events_stream_")
-        os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"),
-            os.path.join(stage, "events.parquet"),
-        )
-        _STAGED[sf_dir] = stage
+        stage = tempfile.mkdtemp(prefix="stream_stage_")
+        fill(stage)
+        _STAGED[key] = stage
     return stage
+
+
+def _read_fixture(
+    spark: SparkSession,
+    reader,
+    sf_dir: str,
+    name: str,
+    stage: str | None = None,
+) -> DataFrame:
+    """Fixture table ``name`` through ``reader`` — ``s.readStream`` or
+    ``s.read`` of the replay session ``s`` — with ``table()``'s dtypes
+    and the schema ``sources.parquet`` memoized on the caller's session
+    ``spark``, so a warm call runs no inference job.
+
+    ``stage`` (a ``_staged`` dir) replaces the fixture file. The file
+    itself is read through a one-file glob, because a file stream
+    source takes a directory or a glob, never a file; ``sf_dir``'s own
+    glob characters are escaped so they match only themselves."""
+    schema = _read(spark, (f"{sf_dir}/{name}.parquet",)).schema
+    glob = re.sub(r"([\\\[\]{}*?])", r"\\\1", sf_dir) + f"/{name}.parque[t]"
+    df = reader.schema(schema).parquet(stage or glob)
+    return canonical_ts(df) if name == "events" else df
 
 
 def _events_footer_max_ts(sf_dir: str):
@@ -81,8 +108,8 @@ def _events_footer_max_ts(sf_dir: str):
     scan). Returns whatever the footer surfaces: a ``datetime`` for
     TIMESTAMP columns, an ``int`` (nanoseconds) for TIMESTAMP(NANOS)
     stored as int64 — the single definition both the flush-sentinel
-    staging and st08's watermark threshold derive from, so a fixture
-    ts-layout change is handled in exactly one place."""
+    staging and the flush wait derive from, so a fixture ts-layout
+    change is handled in exactly one place."""
     import pyarrow.parquet as pq
 
     pf = pq.ParquetFile(os.path.abspath(f"{sf_dir}/events.parquet"))
@@ -108,18 +135,18 @@ def _events_footer_max_ts(sf_dir: str):
     return max(s.max for s in stats)
 
 
-def _count_data_batches(q) -> int:
-    """Micro-batches that actually carried rows, from the query's
-    progress history — no-data batches (watermark commits, state
-    flushes) report ``numInputRows == 0``. Shared by the
-    ``_run_to_memory`` single-batch assert and st07's multi-batch
-    assert so the counting rule cannot drift between them."""
-    import json
+def _events_max_ts_iso(sf_dir: str) -> str:
+    """Max real event time (shared footer walk, _events_footer_max_ts)
+    as the ISO-millis string Spark's progress JSON uses."""
+    import datetime as _dt
 
-    return sum(
-        1
-        for p in q.recentProgress
-        if json.loads(p.json).get("numInputRows", 0) > 0
+    max_ts = _events_footer_max_ts(sf_dir)
+    if not isinstance(max_ts, _dt.datetime):  # TIMESTAMP(NANOS) as int
+        max_ts = _dt.datetime(1970, 1, 1) + _dt.timedelta(
+            microseconds=int(max_ts) // 1000
+        )
+    return max_ts.strftime("%Y-%m-%dT%H:%M:%S.") + (
+        f"{max_ts.microsecond // 1000:03d}Z"
     )
 
 
@@ -140,23 +167,21 @@ def _stage_events_flush(sf_dir: str) -> str:
     column statistics give max(ts) without scanning data) and written
     with pyarrow so it lands as a flat file the FileStreamSource lists.
     """
-    key = f"{sf_dir}::flush"
-    stage = _STAGED.get(key)
-    if stage is None or not os.path.exists(stage):
+
+    def fill(stage: str) -> None:
+        import datetime as _dt
+
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        stage = tempfile.mkdtemp(prefix="events_stream_flush_")
         src = os.path.abspath(f"{sf_dir}/events.parquet")
         os.symlink(src, os.path.join(stage, "events.parquet"))
-
-        pf = pq.ParquetFile(src)
         max_ts = _events_footer_max_ts(sf_dir)
-        one = pa.Table.from_batches([next(pf.iter_batches(batch_size=1))])
+        one = pa.Table.from_batches(
+            [next(pq.ParquetFile(src).iter_batches(batch_size=1))]
+        )
         # Footer statistics surface TIMESTAMP columns as datetime.datetime
         # and TIMESTAMP(NANOS)/int64 physical columns as plain ints.
-        import datetime as _dt
-
         if isinstance(max_ts, _dt.datetime):
             flush_val = max_ts + _dt.timedelta(hours=2)
         else:
@@ -170,28 +195,8 @@ def _stage_events_flush(sf_dir: str) -> str:
             pa.array(["__flush__"], type=pa.string()),
         )
         pq.write_table(sentinel, os.path.join(stage, "zz_flush.parquet"))
-        _STAGED[key] = stage
-    return stage
 
-
-def _events_stream(
-    spark: SparkSession, sf_dir: str, with_flush: bool = False
-) -> DataFrame:
-    """events fixture replayed as a stream, ts normalized to micros."""
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    stage = _stage_events_flush(sf_dir) if with_flush else _stage_events(sf_dir)
-    stream = spark.readStream.schema(raw.schema).parquet(stage)
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":  # TIMESTAMP(NANOS) surfaced as int64
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        # isAdjustedToUTC=false parquet reads as TIMESTAMP_NTZ, which
-        # EventTimeWatermark rejects; the session timezone is pinned
-        # UTC (session.py), so the LTZ cast is wall-clock-identical.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return _staged(f"{sf_dir}::flush", fill)
 
 
 #: State partition count for the streaming queries. Stateful operators
@@ -208,38 +213,15 @@ def _events_stream(
 STREAM_STATE_PARTITIONS = 8
 
 
-def _run_to_memory(
-    build,
-    spark: SparkSession,
-    prefix: str,
-    output_mode: str,
-    expect_single_batch: bool = False,
-    await_watermark_flush: bool = False,
-    await_watermark_past: str | None = None,
-) -> DataFrame:
-    """Run a streaming plan to completion into a memory sink; returns
-    the sink contents as a (batch) DataFrame. ``build`` is a
-    ``SparkSession -> streaming DataFrame`` callable — the plan is
-    constructed against a CLONED session (``spark.newSession()``:
-    separate SQLConf and temp-view catalog, shared SparkContext), so
-    the state-partition override below lands on the clone only and a
-    caller planning batch queries on the original session concurrently
-    can never observe the narrowed shuffle width. The memory-sink temp
-    view also registers in the clone's catalog, keeping the caller's
-    catalog clean; the returned DataFrame carries the clone session.
-
-    ``expect_single_batch``: ST03/ST04's oracle-equality holds only if
-    the replay lands in ONE micro-batch (update-mode sinks append each
-    batch's rows; watermark eviction can re-emit keys across batches).
-    The staging layout guarantees it (one file, no maxFilesPerTrigger)
-    — this assertion turns any future violation into a loud error
-    instead of a silent hash mismatch. An empty source runs no data
-    batch; that passes when the sink is empty too (the answer is 0
-    rows).
-    """
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` (``newSession()``: separate SQLConf and
+    temp-view catalog, shared SparkContext) to plan a replay on. The
+    state-partition width lands on the clone only, so a caller planning
+    batch queries on the original session concurrently can never
+    observe the narrowed shuffle width, and a memory sink's temp view
+    registers in the clone's catalog, keeping the caller's clean."""
     from ..session import apply_runtime_confs
 
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
     clone = spark.newSession()
     apply_runtime_confs(clone)
     # The incremental planner reads this at .start(); in a checkpointed
@@ -247,75 +229,82 @@ def _run_to_memory(
     clone.conf.set(
         "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
     )
-    df = build(clone)
+    return clone
+
+
+def _progress(q) -> ProgressLog:
+    return ProgressLog([batch_metrics(p.json) for p in q.recentProgress])
+
+
+def _drive(q, prefix: str, watermark_past: str | None = None) -> ProgressLog:
+    """Run the started query ``q`` until its available input is
+    processed, stop it, and return its progress.
+
+    ``watermark_past``: append-mode window emission and outer-join
+    unmatched-row emission happen in a follow-up NO-DATA micro-batch
+    once the watermark passes them; ``processAllAvailable()`` only
+    guarantees the source offsets are committed. So poll the query's
+    progress for a committed batch whose watermark has passed the given
+    instant — the deterministic "flush happened" signal, with no Spark
+    job per poll — before stopping."""
+    try:
+        q.processAllAvailable()
+        deadline = time.monotonic() + 30.0
+        while watermark_past is not None and not any(
+            m >= watermark_past for m in _progress(q).watermarks()
+        ):
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"{prefix}: watermark never passed {watermark_past}; "
+                    "the final windows or join rows were not flushed"
+                )
+            time.sleep(0.15)
+        return _progress(q)
+    finally:
+        q.stop()
+
+
+def _run_to_memory(
+    build,
+    spark: SparkSession,
+    prefix: str,
+    output_mode: str,
+    expect_single_batch: bool = False,
+    await_watermark_past: str | None = None,
+) -> DataFrame:
+    """Run a streaming plan to completion into a memory sink; returns
+    the sink contents as a (batch) DataFrame on the replay session.
+    ``build`` is a ``SparkSession -> streaming DataFrame`` callable,
+    called with the ``_stream_session`` clone; ``await_watermark_past``
+    is ``_drive``'s ``watermark_past``.
+
+    ``expect_single_batch``: ST03/ST04's oracle-equality holds only if
+    the replay lands in ONE micro-batch (update-mode sinks append each
+    batch's rows; watermark eviction can re-emit keys across batches).
+    The replay layout guarantees it (no maxFilesPerTrigger, so every
+    file lands in the first batch) — this assertion turns any future
+    violation into a loud error instead of a silent hash mismatch. An
+    empty source runs no data batch; that passes when the sink is
+    empty too (the answer is 0 rows).
+    """
+    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    clone = _stream_session(spark)
     q = (
-        df.writeStream.outputMode(output_mode)
+        build(clone)
+        .writeStream.outputMode(output_mode)
         .format("memory")
         .queryName(sink)
         .start()
     )
-    try:
-        q.processAllAvailable()
-        if await_watermark_flush:
-            # Append-mode window emission happens in the NO-DATA
-            # micro-batch that runs after the watermark advances;
-            # processAllAvailable() only guarantees source offsets
-            # are committed, so poll the sink until its row count
-            # is nonzero and stable across two consecutive reads.
-            import time as _time
-
-            deadline = _time.monotonic() + 30.0
-            prev = -1
-            while _time.monotonic() < deadline:
-                cur = clone.table(sink).count()
-                if cur > 0 and cur == prev:
-                    break
-                prev = cur
-                _time.sleep(0.15)
-            else:
-                raise RuntimeError(
-                    f"{prefix}: sink never stabilized after watermark "
-                    "flush (no-data micro-batch did not emit)"
-                )
-        if await_watermark_past is not None:
-            # Outer-join unmatched-row emission happens in a follow-up
-            # micro-batch once the GLOBAL watermark (min across both
-            # inputs) passes the join-state expiry. Sink row counts
-            # can look momentarily stable between the data batch and
-            # that follow-up, so poll the QUERY PROGRESS for a
-            # committed batch whose watermark has advanced past the
-            # given instant — the deterministic "flush happened"
-            # signal — then read the sink.
-            import json as _json
-            import time as _time
-
-            deadline = _time.monotonic() + 30.0
-            while _time.monotonic() < deadline:
-                marks = [
-                    _json.loads(p.json)
-                    .get("eventTime", {})
-                    .get("watermark", "1970-01-01T00:00:00.000Z")
-                    for p in q.recentProgress
-                ]
-                if any(m >= await_watermark_past for m in marks):
-                    break
-                _time.sleep(0.15)
-            else:
-                raise RuntimeError(
-                    f"{prefix}: watermark never passed "
-                    f"{await_watermark_past}; outer-join state not flushed"
-                )
-        if expect_single_batch:
-            n_data_batches = _count_data_batches(q)
-            empty_replay = n_data_batches == 0 and clone.table(sink).isEmpty()
-            if n_data_batches != 1 and not empty_replay:
-                raise RuntimeError(
-                    f"{prefix}: replay split into {n_data_batches} "
-                    "micro-batches; single-batch assumption violated"
-                )
-    finally:
-        q.stop()
-    return clone.table(sink)
+    n_data_batches = _drive(q, prefix, await_watermark_past).data_batches()
+    out = clone.table(sink)
+    if expect_single_batch and n_data_batches != 1:
+        if n_data_batches != 0 or not out.isEmpty():
+            raise RuntimeError(
+                f"{prefix}: replay split into {n_data_batches} "
+                "micro-batches; single-batch assumption violated"
+            )
+    return out
 
 
 ST01_ORACLE = """
@@ -347,7 +336,9 @@ def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final watermark and is therefore never emitted; the batch-side
     # filter on the sink below is insurance for that invariant.
     def build(s: SparkSession) -> DataFrame:
-        stream = _events_stream(s, sf_dir, with_flush=True)
+        stream = _read_fixture(
+            spark, s.readStream, sf_dir, "events", _stage_events_flush(sf_dir)
+        )
         return (
             stream.withWatermark("ts", "1 hour")
             .groupBy(
@@ -374,7 +365,7 @@ def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "st01_out",
         "append",
         expect_single_batch=True,
-        await_watermark_flush=True,
+        await_watermark_past=_events_max_ts_iso(sf_dir),
     )
     return out.filter(F.col("event_type") != "__flush__")
 
@@ -463,7 +454,7 @@ def st03_stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(s: SparkSession) -> DataFrame:
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        stream = _events_stream(s, sf_dir)
+        stream = _read_fixture(spark, s.readStream, sf_dir, "events")
         return stream.groupBy("user_id").applyInPandasWithState(
             update_state,
             outputStructType=output_schema,
@@ -475,6 +466,7 @@ def st03_stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(
         build, spark, "st03_out", "update", expect_single_batch=True
     )
+
 
 # ---------------------------------------------------------------------------
 # ST04 — streaming dedup-on-ingest: dropDuplicatesWithinWatermark.
@@ -498,7 +490,7 @@ SELECT DISTINCT user_id, event_type FROM events
 def st04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(s: SparkSession) -> DataFrame:
         return (
-            _events_stream(s, sf_dir)
+            _read_fixture(spark, s.readStream, sf_dir, "events")
             .withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
@@ -536,7 +528,7 @@ JOIN (SELECT * FROM events WHERE event_type = 'error') e
 def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(s: SparkSession) -> DataFrame:
         purchases = (
-            _events_stream(s, sf_dir)
+            _read_fixture(spark, s.readStream, sf_dir, "events")
             .filter(F.col("event_type") == "purchase")
             .select(
                 F.col("event_id").alias("purchase_event"),
@@ -546,7 +538,7 @@ def st05_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withWatermark("p_ts", "1 hour")
         )
         errors = (
-            _events_stream(s, sf_dir)
+            _read_fixture(spark, s.readStream, sf_dir, "events")
             .filter(F.col("event_type") == "error")
             .select(
                 F.col("event_id").alias("error_event"),
@@ -587,8 +579,8 @@ FROM events JOIN customer ON user_id = c_custkey
 @query("st06_stream_static_enrich", oracle=ST06_ORACLE)
 def st06_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(s: SparkSession) -> DataFrame:
-        ev = _events_stream(s, sf_dir)
-        cust = table(s, sf_dir, "customer")
+        ev = _read_fixture(spark, s.readStream, sf_dir, "events")
+        cust = _read_fixture(spark, s.read, sf_dir, "customer")
         return ev.join(
             F.broadcast(cust), ev.user_id == cust.c_custkey, "inner"
         ).select(
@@ -596,16 +588,6 @@ def st06_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _run_to_memory(build, spark, "st06_out", "append")
-
-
-# NOTE on transformWithStateInPandas (Spark 4's successor to
-# applyInPandasWithState): attempted and verified to fail in this
-# environment — its driver-side runner requires a working
-# google.protobuf ("cannot import name 'descriptor'"), which this
-# container lacks and cannot install. ST03 pins the arbitrary-state
-# contract through the stable applyInPandasWithState API instead;
-# porting it to a StatefulProcessor is mechanical where protobuf is
-# available.
 
 
 # ---------------------------------------------------------------------------
@@ -649,20 +631,18 @@ FROM events GROUP BY user_id
 def _stage_events_split(sf_dir: str, n: int = ST07_SPLITS) -> str:
     """Events fixture rewritten as ``n`` parquet files so
     ``maxFilesPerTrigger=1`` yields ``n`` micro-batches."""
-    key = f"{sf_dir}::split{n}"
-    stage = _STAGED.get(key)
-    if stage is None or not os.path.exists(stage):
+
+    def fill(stage: str) -> None:
         import pyarrow.parquet as pq
 
-        stage = tempfile.mkdtemp(prefix="events_stream_split_")
         t = pq.read_table(os.path.abspath(f"{sf_dir}/events.parquet"))
         step = (t.num_rows + n - 1) // n
         for i in range(n):
             part = t.slice(i * step, step)
             if part.num_rows:
                 pq.write_table(part, os.path.join(stage, f"part{i}.parquet"))
-        _STAGED[key] = stage
-    return stage
+
+    return _staged(f"{sf_dir}::split{n}", fill)
 
 
 @query("st07_stream_foreachbatch_upsert", oracle=ST07_ORACLE)
@@ -670,27 +650,26 @@ def st07_stream_foreachbatch_upsert(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..plans.upsert import upsert_parquet
-    from ..session import apply_runtime_confs
-    from ..sources.parquet import table as load_table
 
-    lake = tempfile.mkdtemp(prefix="st07_lake_") + "/user_totals"
-    _STAGED[f"st07::{uuid.uuid4().hex}"] = os.path.dirname(lake)
-
-    clone = spark.newSession()
-    apply_runtime_confs(clone)
-    clone.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-    )
+    # a fresh dir per call (the returned DataFrame reads its lake),
+    # removed at exit like the staging dirs
+    run_dir = tempfile.mkdtemp(prefix="st07_")
+    _STAGED[run_dir] = run_dir
+    lake = f"{run_dir}/user_totals"
+    clone = _stream_session(spark)
     # bootstrap an empty lake with the final schema (upsert merges
     # into an existing table; the first batch merges into emptiness)
     clone.createDataFrame(
         [], "user_id long, n_events long, sum_value double"
     ).write.parquet(lake)
 
-    raw = clone.read.parquet(f"{sf_dir}/events.parquet")
-    stream = clone.readStream.schema(raw.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(_stage_events_split(sf_dir))
+    stream = _read_fixture(
+        spark,
+        clone.readStream.option("maxFilesPerTrigger", "1"),
+        sf_dir,
+        "events",
+        _stage_events_split(sf_dir),
+    )
     agg = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(12,2)")).alias("sum_dec"),
@@ -707,20 +686,16 @@ def st07_stream_foreachbatch_upsert(
     q = (
         agg.writeStream.outputMode("update")
         .foreachBatch(merge_batch)
-        .option("checkpointLocation", f"{os.path.dirname(lake)}/_ckpt")
+        .option("checkpointLocation", f"{run_dir}/_ckpt")
         .start()
     )
-    try:
-        q.processAllAvailable()
-        n_batches = _count_data_batches(q)
-        if n_batches < 2:
-            raise RuntimeError(
-                f"st07: expected a multi-batch replay, got {n_batches} "
-                "data micro-batches — the cross-batch upsert path was "
-                "not exercised"
-            )
-    finally:
-        q.stop()
+    n_batches = _drive(q, "st07").data_batches()
+    if n_batches < 2:
+        raise RuntimeError(
+            f"st07: expected a multi-batch replay, got {n_batches} "
+            "data micro-batches — the cross-batch upsert path was "
+            "not exercised"
+        )
     return clone.read.parquet(lake)
 
 
@@ -760,28 +735,14 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') e
 """
 
 
-def _events_max_ts_iso(sf_dir: str) -> str:
-    """Max real event time (shared footer walk, _events_footer_max_ts)
-    as the ISO-millis string Spark's progress JSON uses."""
-    import datetime as _dt
-
-    max_ts = _events_footer_max_ts(sf_dir)
-    if not isinstance(max_ts, _dt.datetime):  # TIMESTAMP(NANOS) as int
-        max_ts = _dt.datetime(1970, 1, 1) + _dt.timedelta(
-            microseconds=int(max_ts) // 1000
-        )
-    return max_ts.strftime("%Y-%m-%dT%H:%M:%S.") + (
-        f"{max_ts.microsecond // 1000:03d}Z"
-    )
-
-
 @query("st08_stream_stream_left_outer", oracle=ST08_ORACLE)
 def st08_stream_stream_left_outer(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     def build(s: SparkSession) -> DataFrame:
+        flush = _stage_events_flush(sf_dir)
         purchases = (
-            _events_stream(s, sf_dir, with_flush=True)
+            _read_fixture(spark, s.readStream, sf_dir, "events", flush)
             .filter(F.col("event_type").isin("purchase", "__flush__"))
             .select(
                 F.col("event_id").alias("purchase_event"),
@@ -792,7 +753,7 @@ def st08_stream_stream_left_outer(
             .withWatermark("p_ts", "1 hour")
         )
         errors = (
-            _events_stream(s, sf_dir, with_flush=True)
+            _read_fixture(spark, s.readStream, sf_dir, "events", flush)
             .filter(F.col("event_type").isin("error", "__flush__"))
             .select(
                 F.col("event_id").alias("error_event"),
@@ -854,7 +815,9 @@ def st09_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     st02's batch ``session_window``."""
 
     def build(s: SparkSession) -> DataFrame:
-        stream = _events_stream(s, sf_dir, with_flush=True)
+        stream = _read_fixture(
+            spark, s.readStream, sf_dir, "events", _stage_events_flush(sf_dir)
+        )
         return (
             stream.withWatermark("ts", "1 hour")
             .groupBy(
@@ -879,7 +842,7 @@ def st09_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         "st09_out",
         "append",
         expect_single_batch=True,
-        await_watermark_flush=True,
+        await_watermark_past=_events_max_ts_iso(sf_dir),
     )
     return out.filter(F.col("n_events") > 0)
 
@@ -904,22 +867,6 @@ def st09_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _stage_documents(sf_dir: str) -> str:
-    """Staging dir symlinking the documents fixture for
-    FileStreamSource replay (the _stage_events recipe, documents
-    table)."""
-    key = f"{sf_dir}::documents"
-    stage = _STAGED.get(key)
-    if stage is None or not os.path.exists(stage):
-        stage = tempfile.mkdtemp(prefix="documents_stream_")
-        os.symlink(
-            os.path.abspath(f"{sf_dir}/documents.parquet"),
-            os.path.join(stage, "documents.parquet"),
-        )
-        _STAGED[key] = stage
-    return stage
-
-
 from ..operators.text import T21_ORACLE as _T21_ORACLE
 from ..operators.text import chunk_documents as _chunk_documents
 
@@ -931,11 +878,9 @@ def st10_stream_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch≡stream statement."""
 
     def build(s: SparkSession) -> DataFrame:
-        raw = s.read.parquet(f"{sf_dir}/documents.parquet")
-        stream = s.readStream.schema(raw.schema).parquet(
-            _stage_documents(sf_dir)
+        return _chunk_documents(
+            _read_fixture(spark, s.readStream, sf_dir, "documents")
         )
-        return _chunk_documents(stream)
 
     return _run_to_memory(
         build, spark, "st10_out", "append", expect_single_batch=True
@@ -994,70 +939,72 @@ def st11_stream_decontamination(
     """ST11 — p09 with the corpus streaming and the benchmark static
     (see block comment; stateless per-row re-expression, P09's oracle
     verbatim)."""
+    is_eval = F.col("doc_id") % _P09_EVAL_MOD == 0
+    w = _P09_NGRAM
+    # static side, built once on the DRIVER: the benchmark's
+    # distinct gram strings (~52 docs at sf0.1 — bounded by the
+    # benchmark, never the corpus; see block comment). The collect
+    # is EXPLICITLY bounded: limit(N+1) caps what
+    # can ever reach the driver, and row N+1 arriving means the
+    # "benchmark" outgrew the stateless shape — fail loud and name
+    # the batch fallback rather than OOM the driver.
+    ev_texts = [
+        r["text"]
+        for r in table(spark, sf_dir, "documents")
+        .filter(is_eval)
+        .select("text")
+        .limit(ST11_MAX_EVAL_DOCS + 1)
+        .collect()
+    ]
+    if len(ev_texts) > ST11_MAX_EVAL_DOCS:
+        raise ValueError(
+            f"st11: eval split exceeds ST11_MAX_EVAL_DOCS="
+            f"{ST11_MAX_EVAL_DOCS} documents; the driver-built "
+            "gram set no longer qualifies as 'benchmark-sized' — "
+            "run the batch p09 path (broadcast join) or a stateful "
+            "streaming join instead"
+        )
+    eval_grams = frozenset(
+        " ".join(ts[i : i + w])
+        for t in ev_texts
+        if t is not None
+        for ts in (t.split(" "),)
+        for i in range(len(ts) - w + 1)
+    )
+    # one SPARK BROADCAST, not a closure capture: a
+    # closure-captured set is re-serialized into every task binary
+    # and re-shipped per micro-batch; the broadcast ships once per
+    # executor and the kernel reads bc.value.
+    bc = spark.sparkContext.broadcast(eval_grams)
+
+    def score(text):
+        # the doc's distinct w-gram STRING set intersected with the
+        # eval frozenset; docs with no hit yield no row
+        if text is None:
+            # NULL text drops the row, as the batch p09 plan does
+            # (split(NULL) → no grams, no hit).
+            return []
+        ts = text.split(" ")
+        gs = {" ".join(ts[i : i + w]) for i in range(len(ts) - w + 1)}
+        hits = len(gs & bc.value)
+        return [(len(gs), hits)] if hits > 0 else []
 
     def build(s: SparkSession) -> DataFrame:
-        raw = s.read.parquet(f"{sf_dir}/documents.parquet")
-        is_eval = F.col("doc_id") % _P09_EVAL_MOD == 0
-        w = _P09_NGRAM
-        # static side, built once on the DRIVER: the benchmark's
-        # distinct gram strings (~52 docs at sf0.1 — bounded by the
-        # benchmark, never the corpus; see block comment). The collect
-        # is EXPLICITLY bounded: limit(N+1) caps what
-        # can ever reach the driver, and row N+1 arriving means the
-        # "benchmark" outgrew the stateless shape — fail loud and name
-        # the batch fallback rather than OOM the driver.
-        ev_texts = [
-            r["text"]
-            for r in raw.filter(is_eval)
-            .select("text")
-            .limit(ST11_MAX_EVAL_DOCS + 1)
-            .collect()
-        ]
-        if len(ev_texts) > ST11_MAX_EVAL_DOCS:
-            raise ValueError(
-                f"st11: eval split exceeds ST11_MAX_EVAL_DOCS="
-                f"{ST11_MAX_EVAL_DOCS} documents; the driver-built "
-                "gram set no longer qualifies as 'benchmark-sized' — "
-                "run the batch p09 path (broadcast join) or a stateful "
-                "streaming join instead"
-            )
-        eval_grams = frozenset(
-            " ".join(ts[i : i + w])
-            for t in ev_texts
-            if t is not None
-            for ts in (t.split(" "),)
-            for i in range(len(ts) - w + 1)
-        )
-        # one SPARK BROADCAST, not a closure capture: a
-        # closure-captured set is re-serialized into every task binary
-        # and re-shipped per micro-batch; the broadcast ships once per
-        # executor and the kernel reads bc.value.
-        bc = s.sparkContext.broadcast(eval_grams)
-
-        def score(text):
-            # the doc's distinct w-gram STRING set intersected with the
-            # eval frozenset; docs with no hit yield no row
-            if text is None:
-                # NULL text drops the row, as the batch p09 plan does
-                # (split(NULL) → no grams, no hit).
-                return []
-            ts = text.split(" ")
-            gs = {" ".join(ts[i : i + w]) for i in range(len(ts) - w + 1)}
-            hits = len(gs & bc.value)
-            return [(len(gs), hits)] if hits > 0 else []
-
-        stream = s.readStream.schema(raw.schema).parquet(
-            _stage_documents(sf_dir)
-        )
+        stream = _read_fixture(spark, s.readStream, sf_dir, "documents")
         return map_rows(
             stream.filter(~is_eval).select("doc_id", "text"),
             score,
             "n_doc_grams long, n_contaminated long",
         )
 
-    return _run_to_memory(
-        build, spark, "st11_out", "append", expect_single_batch=True
-    )
+    # The memory sink holds the scored rows, so reading the returned
+    # table never runs the kernel again: the broadcast can go now.
+    try:
+        return _run_to_memory(
+            build, spark, "st11_out", "append", expect_single_batch=True
+        )
+    finally:
+        bc.destroy()
 
 
 # ---------------------------------------------------------------------------
@@ -1095,11 +1042,10 @@ def st12_stream_quality_classifier(
     certificate for the model-based quality-filter stage)."""
 
     def build(s: SparkSession) -> DataFrame:
-        raw = s.read.parquet(f"{sf_dir}/documents.parquet")
-        stream = s.readStream.schema(raw.schema).parquet(
-            _stage_documents(sf_dir)
+        return _classifier_score(
+            _read_fixture(spark, s.readStream, sf_dir, "documents"),
+            _t24_weights(),
         )
-        return _classifier_score(stream, _t24_weights())
 
     return _run_to_memory(
         build, spark, "st12_out", "append", expect_single_batch=True
@@ -1142,12 +1088,12 @@ def st13_stream_fuzzy_decontamination(
     the screen-on-arrival shape)."""
 
     def build(s: SparkSession) -> DataFrame:
-        raw = s.read.parquet(f"{sf_dir}/documents.parquet")
-        ev = raw.filter(F.col("doc_id") % _D15_EVAL_MOD == 0)
-        stream = s.readStream.schema(raw.schema).parquet(
-            _stage_documents(sf_dir)
+        ev = _read_fixture(spark, s.read, sf_dir, "documents").filter(
+            F.col("doc_id") % _D15_EVAL_MOD == 0
         )
-        train = stream.filter(F.col("doc_id") % _D15_EVAL_MOD != 0)
+        train = _read_fixture(spark, s.readStream, sf_dir, "documents").filter(
+            F.col("doc_id") % _D15_EVAL_MOD != 0
+        )
         return _cross_corpus_neardup(train, ev)
 
     return _run_to_memory(

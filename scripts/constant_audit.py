@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Catalog-wide compile-constant audit (r11 method, committed in r12).
+"""Catalog-wide compile-constant audit.
 
 Times every catalog id at sf0.001 on one warm session. At that size
 the DATA cost of every operator is negligible, so the wall time IS
@@ -8,8 +8,7 @@ Catalyst analysis/optimization, codegen, and job-scheduling floor.
 A large constant is invisible in the ×10 rehearsal exponents (it
 divides out of the slope — s13's ~15s Catalyst blowup measured
 α=0.06) but dominates interactive use, which is why this probe found
-both r11 pathologies (s13 CollapseProject blowup, s07's 64-column
-decimal agg).
+the s13 CollapseProject blowup and s07's 64-column decimal agg.
 
 Two timed reps per id AFTER a throwaway warmup rep; the MIN is
 reported (we are measuring a constant, not a distribution — any

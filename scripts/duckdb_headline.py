@@ -6,10 +6,10 @@ Runs the ORACLE SQL of every headline catalog query (bench.py's
 HEADLINE list — the byte-identical answers the differential gate
 pins) on DuckDB with one thread per host CPU (or SPARK_GRAFT_CPUS)
 against the same sf0.1 parquet, with
-the same median-of-REPS methodology as bench.py, so each round's
+the same median-of-REPS methodology as bench.py, so each
 BENCH artifact can be read against a SAME-DAY baseline number
-instead of a stale one (host speed drifts round to round; r7's box
-ran the identical Spark plans ~25% slower than r6's).
+instead of a stale one (host speed drifts: one box ran the identical
+Spark plans ~25% slower than another).
 
 Usage: python scripts/duckdb_headline.py  (env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_CPUS)
@@ -52,10 +52,10 @@ def main() -> None:
         # SYMMETRIC evaluation contract with bench.py's Spark side
         # (count + sum-of-row-hash reduced ENGINE-side, one row out):
         # a fetchall() here would charge DuckDB ~0.4s of pure Python
-        # tuple conversion on d04's 965k rows that Spark never pays
-        # (r7 review finding), while a bare count(*) would let DuckDB
-        # prune unreferenced result columns that Spark's hash(*)
-        # forces — hash(t) over the row struct forces every column.
+        # tuple conversion on d04's 965k rows that Spark never pays,
+        # while a bare count(*) would let DuckDB prune unreferenced
+        # result columns that Spark's hash(*) forces — hash(t) over
+        # the row struct forces every column.
         wrapped = (
             f"SELECT count(*) AS n, sum(hash(t)) AS h FROM ({sql}) t"
         )
@@ -81,7 +81,7 @@ def main() -> None:
         "queries": timings,
         "raw_timings": raw,
         "sf_dir": sf_dir,
-        # r15 advice: a partial run (some headline ids lacking oracles)
+        # A partial run (some headline ids lacking oracles)
         # must be self-describing IN the artifact, not only on stderr —
         # otherwise a partial total can silently overwrite a committed
         # full one. Empty list == every headline id was timed.
@@ -89,8 +89,8 @@ def main() -> None:
     }
     # Persist the artifact alongside bench_detail.json so every pair
     # BASELINE.md quotes has BOTH sides committable at the quoting
-    # commit (r13 verdict hygiene finding; until r14 this script only
-    # PRINTED the JSON and the repo-root file silently went stale).
+    # commit (a script that only PRINTS the JSON lets the repo-root
+    # file silently go stale).
     out = os.path.join(
         os.path.dirname(__file__), "..", "DUCKDB_HEADLINE.json"
     )

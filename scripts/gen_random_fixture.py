@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Seeded RANDOM variant of the full 10-table driver fixture (r9).
+"""Seeded RANDOM variant of the full 10-table driver fixture.
 
 Why: the driver's correctness gate and the full differential sweep
 both run against the one deterministic seed-42 fixture set. A catalog
@@ -254,7 +254,7 @@ def gen_all(out_dir: str, seed: int) -> dict[str, int]:
     )
     gaps_us = rng.integers(1, 120 * 1_000_000, size=n_ev)
     ts_us = base_us + np.cumsum(gaps_us)
-    # The donor's ts physical layout drifts round to round (µs
+    # The donor's ts physical layout drifts between fixtures (µs
     # timestamp, ns timestamp, int64-nanos — FIXTURES.md). pa.array
     # interprets raw ints in the TARGET type's unit, so convert the
     # µs epoch values to whatever unit the donor ships; writing µs
@@ -324,7 +324,7 @@ def gen_all(out_dir: str, seed: int) -> dict[str, int]:
                 rng.choice(vocab)
             )
         texts[int(i)] = " ".join(words)
-    # t22/t23 domain invariant (r15 advice): '|' is the BPE encode's
+    # t22/t23 domain invariant: '|' is the BPE encode's
     # word-boundary sentinel — the Spark side raise_errors on it while
     # the DuckDB oracle would silently treat it as a word boundary, so
     # the generator must keep both engines in the same domain. The

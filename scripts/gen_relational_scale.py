@@ -1,7 +1,6 @@
 #!/usr/bin/env python
-"""10× relational fixture for the headline-bench scale run (r7,
-verdict ask #7: the relational headline queries had never been timed
-above sf0.1).
+"""10× relational fixture for the headline-bench scale run, so the
+relational headline queries are timed above sf0.1 too.
 
 The driver ships nothing above sf0.1, so scale is manufactured by
 KEY-SHIFTED REPLICATION: each of FACTOR copies of the sf0.1 fact/dim

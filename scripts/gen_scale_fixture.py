@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Deterministic ≥10× scale-rehearsal fixtures (r6 verdict ask #1).
+"""Deterministic ≥10× scale-rehearsal fixtures.
 
 Generates ``documents.parquet`` + ``embeddings.parquet`` at 1×/3×/10×
 the sf0.1 row counts into ``.scale/x{1,3,10}/`` so the d04 family's
@@ -127,7 +127,7 @@ def gen_part(
     n_parts: int, rng: np.random.Generator, scale: int
 ) -> pa.Table:
     """Scaled ``part`` fixture for the d13 linkage rehearsal
-    (r10 verdict task 3: measured candidate-pair growth).
+    (measured candidate-pair growth).
 
     Key-shifted replication of the sf0.1 table would be WRONG here:
     each copy repeats every p_name verbatim, so cross-copy
@@ -214,7 +214,7 @@ def main(
         os.makedirs(out, exist_ok=True)
         # independent stream per scale: reproducible regardless of
         # which scales are (re)generated
-        # (seed layout unchanged for the default mode so the r6
+        # (seed layout unchanged for the default mode so the
         # fixed-vocab fixtures stay byte-identical)
         rng = np.random.default_rng([SEED, scale] + ([1] if heaps else []))
         # Heaps' law: vocabulary grows ∝ (corpus tokens)^β, β ≈ 0.5
@@ -222,8 +222,8 @@ def main(
         # stresses the df² join product (every token's document
         # frequency grows linearly with the corpus); the heaps
         # variant is the realistic-corpus regime the 100 TB playbook
-        # argument assumes — r7 measures that argument instead of
-        # arguing it (SCALING.md "Heaps-law sweep").
+        # argument assumes — heaps_sweep.py measures that argument
+        # instead of arguing it (SCALING.md "Heaps-law sweep").
         vocab_size = (
             int(VOCAB_SIZE * scale**0.5) if heaps else VOCAB_SIZE
         )
@@ -231,9 +231,9 @@ def main(
         emb = gen_embeddings(BASE_EMB * scale, rng)
         pq.write_table(docs, os.path.join(out, "documents.parquet"))
         pq.write_table(emb, os.path.join(out, "embeddings.parquet"))
-        # part: independent RNG stream so the r6/r7 docs+embeddings
+        # part: independent RNG stream so the docs+embeddings
         # fixtures above stay byte-identical to their committed
-        # measurements regardless of this r10 addition
+        # measurements
         part = gen_part(
             BASE_PARTS * scale, np.random.default_rng([SEED, scale, 2]),
             scale,

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Heaps-law candidate-growth sweep (r7, verdict ask #3).
+"""Heaps-law candidate-growth sweep.
 
-The r6 x30 rehearsal found exact-Jaccard candidate generation
+The x30 rehearsal found exact-Jaccard candidate generation
 superlinear on the FIXED-2,000-word-vocabulary fixture and fixed the
 worst of it with the PPJoin position filter; SCALING.md then ARGUED
 the residual superlinear candidate growth is a fixed-vocab artifact —
@@ -10,7 +10,7 @@ frequencies stay bounded, so the df_full × df_prefix join product
 should track corpus size. This script MEASURES that claim:
 
 - fixtures: ``gen_scale_fixture.py --heaps`` → ``.scale/heaps/x{N}``,
-  identical statistics to the r6 rehearsal fixtures except vocabulary
+  identical statistics to the rehearsal fixtures except vocabulary
   = 2000·scale^0.5 (x1: 2000, x10: 6324, x30: 10954);
 - per scale, the g01/d06 candidate config (Jaccard ≥ 0.6, blocked on
   (lang, source), word tokens): RAW join emissions
@@ -30,13 +30,12 @@ import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-REPS = 3  # median-of-3, the r7 bench.py methodology (review finding:
-# min-of-2 here contradicted the stat switch this same round made)
+REPS = 3  # median-of-3, bench.py's methodology
 SCALES = (
     tuple(int(s) for s in sys.argv[1].split(","))
     if len(sys.argv) > 1
     else (1, 10, 30)
-)  # r12: argv-selectable so an x100 extension reuses the x1-x30 rows
+)  # argv-selectable so an x100 extension reuses the x1-x30 rows
 
 
 def main() -> None:
@@ -93,8 +92,7 @@ def main() -> None:
             lambda: queries["g01_pagerank"](spark, sf_dir).count()
         )
         # d04 on the SAME fixture: the other side of the playbook's
-        # exact-vs-MinHash crossover (r12 — previously an ad-hoc r7
-        # run quoted in SCALING.md but absent from this artifact)
+        # exact-vs-MinHash crossover, recorded in this artifact
         d04_sec, d04_runs, d04_n = timed(
             lambda: queries["d04_dedup_minhash_lsh"](spark, sf_dir).count()
         )
@@ -122,7 +120,7 @@ def main() -> None:
     def marginal(a: str, b: str, key: str, lo: int, hi: int) -> float:
         # a zero/negative operand means the measurement itself broke
         # (empty candidate set, clock error) — fail loudly instead of
-        # masking it into a plausible-looking exponent (advisor r7)
+        # masking it into a plausible-looking exponent
         assert results[a][key] > 0 and results[b][key] > 0, (
             key, results[a][key], results[b][key],
         )
@@ -133,8 +131,8 @@ def main() -> None:
         )
 
     # merge per-scale with the prior file so a partial refresh (e.g.
-    # `heaps_sweep.py 10,100`) keeps the unlisted scales' rows — the
-    # r12 lesson from scale_rehearsal's rel-op merge bug
+    # `heaps_sweep.py 10,100`) keeps the unlisted scales' rows instead
+    # of erasing them
     out = os.path.join(os.path.dirname(__file__), "..", "HEAPS_SWEEP.json")
     if os.path.exists(out):
         with open(out) as fh:

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Partitioning/AQE-determinism sweep (committed in r9; run ad hoc
-since r5): every catalog query executed at 32 vs 7 shuffle partitions,
-then at AQE-on vs AQE-off, results compared Spark-vs-Spark each time.
+"""Partitioning/AQE-determinism sweep: every catalog query executed
+at 32 vs 7 shuffle partitions, then at AQE-on vs AQE-off, results
+compared Spark-vs-Spark each time.
 
 Pass = results are independent of partitioning/summation order AND of
 adaptive runtime re-planning (coalesced partitions, runtime join-
@@ -102,7 +102,7 @@ def main() -> int:
             "AQE on-vs-off",
             session(WIDE, "true"), session(WIDE, "false"),
         ),
-        # Arrow batch-boundary independence (r11, third axis): a tiny
+        # Arrow batch-boundary independence (third axis): a tiny
         # maxRecordsPerBatch re-slices every mapInArrow kernel's
         # input into many small batches — a kernel that accumulates
         # state ACROSS batch boundaries (or emits batch-relative
@@ -115,7 +115,7 @@ def main() -> int:
             "arrow-batch default-vs-7",
             session(WIDE, "true"), session(WIDE, "true", arrow_batch="7"),
         ),
-        # Codegen-vs-interpreted (r13, fourth axis): wholeStage=false
+        # Codegen-vs-interpreted (fourth axis): wholeStage=false
         # routes every expression through the interpreted (Volcano)
         # evaluation path instead of generated Java — the two
         # implementations are distinct code, and subtle semantics
@@ -130,7 +130,7 @@ def main() -> int:
             session(WIDE, "true"),
             session(WIDE, "true", codegen="false"),
         ),
-        # Join-strategy independence (r14, fifth axis): threshold -1
+        # Join-strategy independence (fifth axis): threshold -1
         # forces sort-merge/shuffled-hash everywhere the planner (or
         # AQE at runtime) would have AUTO-chosen broadcast; explicit
         # F.broadcast hints survive by design. A catalog stable here
@@ -145,7 +145,7 @@ def main() -> int:
             session(WIDE, "true"),
             session(WIDE, "true", auto_bcast="-1"),
         ),
-        # Leaf-parallelism independence (r14, sixth axis): driver-built
+        # Leaf-parallelism independence (sixth axis): driver-built
         # DataFrames (createDataFrame of centroids, quota tables,
         # learned merges, boundary buckets) slice by
         # leafNodeDefaultParallelism, which shuffle.partitions does NOT

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Randomized-fixture differential sweep (r9): the full catalog vs
+"""Randomized-fixture differential sweep: the full catalog vs
 its DuckDB oracles on N freshly-generated random fixture sets
 (``gen_random_fixture.py`` — same schemas/domains as the driver
 fixture, fresh seeded draws, harsher edge distributions: planted
@@ -40,7 +40,7 @@ def main() -> int:
 
     seeds = [int(s) for s in sys.argv[1:]] or [1, 2, 3]
     # cores resolve inside get_spark (env SPARK_GRAFT_CPUS or the host) —
-    # one default for the whole fleet, not per-script copies (r10)
+    # one default for the whole fleet, not per-script copies
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     queries, oracles = load_catalog()
@@ -51,7 +51,7 @@ def main() -> int:
         sf_dir = tempfile.mkdtemp(prefix=f"randfix_s{seed}_")
         try:
             # a generation/view failure on THIS seed must not discard
-            # the completed seeds' results (r10 review): record the
+            # the completed seeds' results: record the
             # error and keep going; the merge below still writes.
             try:
                 rows = gen_all(sf_dir, seed)

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Scale rehearsal: measure wall-time-vs-size exponents (r6 ask #1).
+"""Scale rehearsal: measure wall-time-vs-size exponents.
 
 Runs the five ops the 100 TB arguments lean on hardest — d04 (MinHash
 LSH near-dedup), d06 (pair→cluster connected components), g01
@@ -15,9 +15,9 @@ cost tracks data size (the claim SCALING.md argues analytically);
 alpha ≫ 1 flags a hidden quadratic. Emits SCALE_REHEARSAL.json and a
 markdown table for SCALING.md.
 
-Methodology matches bench.py (median-of-3 since r7 — min-of-reps let
-one lucky rep flip an exponent, the exact failure mode that retired
-it for the headline bench) on one warm session, ops run
+Methodology matches bench.py (median-of-3 — min-of-reps let one
+lucky rep flip an exponent, the exact failure mode that retired it
+for the headline bench) on one warm session, ops run
 largest-scale-last so JVM warmup cannot flatter the big runs.
 """
 from __future__ import annotations
@@ -42,10 +42,9 @@ OPS = (
     "s05_ann_ivf",
     "d10_semdedup",
     "d08_embedding_dedup_clusters",
-    # r10 additions (verdict task 3): the round-9 ids without prior
-    # ×10 rows, plus the PassJoin-rewritten d13 (part fixture:
-    # x1/x3/x10 = 20k/60k/200k rows, Heaps-scaled name vocabulary,
-    # linear planted twins — gen_scale_fixture.gen_part)
+    # ids without earlier ×10 rows, plus the PassJoin d13 (part
+    # fixture: x1/x3/x10 = 20k/60k/200k rows, Heaps-scaled name
+    # vocabulary, linear planted twins — gen_scale_fixture.gen_part)
     "d13_edit_distance_linkage",
     "g03_triangle_count",
     "s13_mmr_diversified",
@@ -54,43 +53,40 @@ OPS = (
     "m09_bmp_decode_resize",
     "m10_wav_decode_features",
     "m11_png_decode_roundtrip",
-    # r11 refresh (verdict task 2): the r10 review wave rewrote the
-    # s04/d08/d10 GEMM kernels (prefilter + exact sequential-fold
+    # the s04/d08/d10 GEMM kernels (prefilter + exact sequential-fold
     # refine), s05's NULL-cosine ranking, and t13's DECIMAL-mean
-    # scoring AFTER the r10 rehearsal commit — s04 and t13 get their
-    # own rows so every rewritten kernel has post-rewrite evidence
-    # (d08/d10/s05 are re-measured by the same run).
+    # scoring were rewritten — s04 and t13 get their own rows so
+    # every rewritten kernel has post-rewrite evidence (d08/d10/s05
+    # are re-measured by the same run).
     "s04_dedup_embedding",
     "t13_unigram_logprob",
-    # r12: the s07 update step was rewritten (posexplode single
-    # decimal agg replacing the 64-column wide agg) — standing rule:
-    # a plan change gets fresh ×10 rows alongside its driver pin.
+    # the s07 update step (posexplode single decimal agg replacing
+    # the 64-column wide agg) — standing rule: a plan change gets
+    # fresh ×10 rows alongside its driver pin.
     "s07_kmeans_clusters",
-    # r13: the three new catalog ids (standing rule: new plan-bearing
-    # code gets ×10 rows alongside its driver pin) — d14 k-means
-    # SemDeDup, p06/p07 mixture sampling/upsampling.
+    # standing rule: new plan-bearing code gets ×10 rows alongside
+    # its driver pin — d14 k-means SemDeDup, p06/p07 mixture
+    # sampling/upsampling.
     "d14_semdedup_kmeans",
     "p06_temperature_mixture_sample",
     "p07_mixture_upsample",
-    # r13 late additions: t21 chunking (map-side, expansion bounded
-    # by max_doc_tokens/stride), t22 BPE learning (one corpus scan +
+    # t21 chunking (map-side, expansion bounded by
+    # max_doc_tokens/stride), t22 BPE learning (one corpus scan +
     # Heaps-vocab-sized iterations), t23 BPE encode (t22's learn +
     # one extra map-side encode scan).
     "t21_context_chunking",
     "t22_bpe_merges",
     "t23_bpe_encode",
-    # r14: the two new catalog ids (standing rule) — p08 skew-robust
-    # threshold draw, p09 decontamination: x1/x3/x10 base rows on
-    # the standard fixtures.
+    # (standing rule) p08 skew-robust threshold draw, p09
+    # decontamination: x1/x3/x10 base rows on the standard fixtures.
     "p08_mixture_skew_draw",
     "p09_decontamination",
-    # r16: the two new catalog ids (standing rule) — d16 exact-
-    # substring dedup output (gram-index keeper agg is the only
-    # corpus shuffle), t25 HTML extraction (zero-shuffle Arrow
-    # kernel).
+    # (standing rule) d16 exact-substring dedup output (gram-index
+    # keeper agg is the only corpus shuffle), t25 HTML extraction
+    # (zero-shuffle Arrow kernel).
     "d16_exact_substring_rewrite",
     "t25_html_extract",
-    # r17: plan-changed ids not already above (standing rule) — g02's
+    # plan-changed ids not already above (standing rule) — g02's
     # LPA loop (SHUFFLE_HASH + struct-min argmax) and s09's PQ path
     # (merged collect + checkpointed input). d06/g01/g03/d08/s07/d14/
     # t22/t23 were changed too and already have rows above.
@@ -99,12 +95,12 @@ OPS = (
 )
 SCALES = (1, 3, 10)
 
-# Relational ids touched by the r10/r11 contract fixes (floor-on-both-
+# Relational ids touched by the contract fixes (floor-on-both-
 # sides q31, coalesced-empty-input q48): their tables (lineitem,
 # events) are not in the .scale embedding fixtures, so they are
 # measured as an sf0.1 → rel_x10 step pair on the key-shifted
 # replication fixture (gen_relational_scale.py — same workload shape,
-# 10× rows), the r7 headline-at-10× methodology.
+# 10× rows), the headline-at-10× methodology.
 REL_OPS = ("q31_array_map_funcs", "q48_theta_error_bound")
 REL_X1 = "/root/testdata/sf0.1"
 
@@ -112,7 +108,7 @@ REL_X1 = "/root/testdata/sf0.1"
 def _d13_candidate_counts(spark, sf_dir: str) -> dict:
     """Measured PassJoin candidates vs the analytic candidate counts
     of the two fixed-cardinality blocking schemes on the same data —
-    the r10 verdict's 'sub-quadratic candidate growth' evidence.
+    the 'sub-quadratic candidate growth' evidence.
     Banded/brand-only counts are computed from per-block populations
     (Σ C(n,2) + Σ n_i·n_{i+1}), not materialized: at x10 the banded
     scheme's ~10⁸ candidates are exactly what d13 no longer builds."""
@@ -156,7 +152,7 @@ def _merged_rel_ops(prior_path: str, rel: dict) -> dict:
     An op-filtered refresh (e.g. ``scale_rehearsal.py q31_...``)
     measures only the listed rel ops; the unlisted ops' step-pair
     rows must survive from the existing SCALE_REHEARSAL.json instead
-    of being erased by the rebuilt block (r11 advice)."""
+    of being erased by the rebuilt block."""
     prior_rel: dict[str, dict] = {}
     if os.path.exists(prior_path):
         with open(prior_path) as fh:
@@ -272,7 +268,7 @@ def main() -> None:
     # REL_OPS empty (an op-filtered refresh that listed no rel ops) ⇒
     # skip the section entirely: rebuilding the block with empty 'ops'
     # would shadow the prior file's rows and the setdefault merge
-    # below could never restore them (r11 advice).
+    # below could never restore them.
     rel_x10 = os.path.join(
         os.path.dirname(__file__), "..", ".scale", "rel_x10"
     )
@@ -304,7 +300,7 @@ def main() -> None:
             )
         results["relational_x10_extension"] = {
             "note": (
-                "r11: q31/q48 post-contract-fix step pair, sf0.1 vs "
+                "q31/q48 post-contract-fix step pair, sf0.1 vs "
                 "gen_relational_scale rel_x10 (key-shifted replication, "
                 "same workload shape, 10x rows); two-point log-slope"
             ),

@@ -30,7 +30,7 @@ def test_capture_progress_sees_batches_watermark_and_state(spark, sf_small):
     from omop_dump_to_parquet_spark.session import apply_runtime_confs
     from omop_dump_to_parquet_spark.streaming.observe import capture_progress
     from omop_dump_to_parquet_spark.streaming.stream_queries import (
-        _events_stream,
+        _read_fixture,
     )
 
     session = spark.newSession()
@@ -39,7 +39,7 @@ def test_capture_progress_sees_batches_watermark_and_state(spark, sf_small):
 
     with capture_progress(session) as log:
         agg = (
-            _events_stream(session, sf_small)
+            _read_fixture(session, session.readStream, sf_small, "events")
             .withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))

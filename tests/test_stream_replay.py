@@ -1,10 +1,12 @@
-"""Stream replays of the stateless catalog ids.
+"""Stream replays of the catalog ids, through the one replay harness.
 
 The single-batch contract of ``stream_queries._run_to_memory``: a
 replay must land in one micro-batch, and an empty source, which runs
 none, answers with 0 rows instead of an error. Because st11-st13 are
 stateless, replaying the corpus as one micro-batch IS the batch
-computation, so each must equal its batch twin set-exactly.
+computation, so each must equal its batch twin set-exactly. A warm
+replay runs no driver-thread job, st11 releases its broadcast, and
+the replay source reads only its own ``sf_dir``.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ from __future__ import annotations
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import count_jobs
 
 from omop_dump_to_parquet_spark import load_catalog
 from omop_dump_to_parquet_spark.streaming import stream_queries as SQ
@@ -83,3 +86,49 @@ def test_st13_stream_equals_d15_batch(spark, sf_small):
     stream = _rows("st13_stream_fuzzy_decontamination", spark, sf_small)
     assert batch == stream
     assert batch
+
+
+def test_st11_destroys_its_broadcast(spark, sf_small, monkeypatch):
+    """st11's eval-gram broadcast goes once the replay has landed in
+    the memory sink; reading the returned table does not need it."""
+    from pyspark import SparkContext
+
+    made = []
+    broadcast = SparkContext.broadcast
+
+    def spy(self, value):
+        made.append(broadcast(self, value))
+        return made[-1]
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    out = SQ.st11_stream_decontamination(spark, sf_small)
+    assert len(made) == 1
+    assert not made[0]._jbroadcast.isValid()
+    assert out.count() == len(_rows("p09_decontamination", spark, sf_small))
+
+
+@pytest.mark.parametrize(
+    "qid", ["st01_stream_tumbling", "st10_stream_chunking"]
+)
+def test_warm_replay_runs_no_driver_job(spark, sf_small, qid):
+    """A warm replay reads its schema from the caller's memo and waits
+    for the flush on query progress, so the driver thread runs no job;
+    the micro-batches run in the stream's own job group."""
+    QUERIES[qid](spark, sf_small)
+    _, jobs = count_jobs(
+        spark, lambda: QUERIES[qid](spark, sf_small), f"warm_{qid}"
+    )
+    assert jobs == 0
+
+
+def test_replay_escapes_glob_characters_in_sf_dir(spark, sf_small, tmp_path):
+    """The file-stream glob matches only ``sf_dir``'s own file, even
+    when ``sf_dir`` holds glob characters that match a sibling."""
+    import shutil
+
+    for d in ("sf*", "sf_sibling"):
+        (tmp_path / d).mkdir()
+        shutil.copy(f"{sf_small}/documents.parquet", tmp_path / d)
+    st10 = QUERIES["st10_stream_chunking"]
+    got = st10(spark, str(tmp_path / "sf*")).count()
+    assert got == st10(spark, sf_small).count() > 0

@@ -24,7 +24,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from omop_dump_to_parquet_spark.session import apply_runtime_confs
-from omop_dump_to_parquet_spark.sources.parquet import table
+from omop_dump_to_parquet_spark.sources.parquet import canonical_ts, table
 
 
 def _write_half(src_table: pa.Table, mask, path: str) -> None:
@@ -78,9 +78,9 @@ def test_windowed_agg_survives_checkpoint_restart(
     src = os.path.join(sf_small, "events.parquet")
     if layout == "int64_nanos":
         # Re-materialize the fixture in the TIMESTAMP(NANOS)-as-int64
-        # physical layout the driver has shipped in past rounds, so
-        # build()'s bigint branch is permanently exercised instead of
-        # dormant until the next fixture drift. Fixture ts is µs
+        # physical layout earlier fixtures used, so canonical_ts's
+        # bigint branch is exercised on a stream instead of dormant
+        # until the next fixture drift. Fixture ts is µs
         # precision, so ns = µs·1000 is lossless.
         import pyarrow.compute as pc
 
@@ -117,16 +117,10 @@ def test_windowed_agg_survives_checkpoint_restart(
     schema = clone.read.parquet(src).schema
 
     def build():
-        stream = clone.readStream.schema(schema).parquet(str(stage))
-        # mirror table()'s layout canonicalization (sources/parquet.py)
-        # so the test is layout-agnostic across driver fixture drift
-        ts_dtype = dict(clone.read.parquet(src).dtypes).get("ts")
-        if ts_dtype == "timestamp_ntz":
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        elif ts_dtype == "bigint":  # TIMESTAMP(NANOS) as int64 nanos
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+        # the package's layout rule, applied to a stream
+        stream = canonical_ts(
+            clone.readStream.schema(schema).parquet(str(stage))
+        )
         return (
             stream.withWatermark("ts", "1 hour")
             .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
