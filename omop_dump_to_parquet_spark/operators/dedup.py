@@ -188,10 +188,7 @@ def _distinct_tokens(
 
 
 def _ranked_tokens(
-    docs: DataFrame,
-    *block_cols: str,
-    tok: DataFrame | None = None,
-    sizes: DataFrame | None = None,
+    docs: DataFrame, *block_cols: str, tok: DataFrame | None = None
 ) -> DataFrame:
     """Per-doc tokens with their rank ``rn`` under the global
     (document-frequency ASC, token ASC) order and the doc's distinct
@@ -218,8 +215,6 @@ def _ranked_tokens(
             wdoc.orderBy(F.col("df").asc(), F.col("w").asc())
         ),
     )
-    if sizes is not None:
-        return ranked.join(sizes, "doc_id")
     return ranked.withColumn("nw", F.count(F.lit(1)).over(wdoc))
 
 

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .parquet_sink import PARQUET_CODEC
+from .parquet_sink import parquet_options
 
 
 def write_bucketed(
@@ -44,7 +44,8 @@ def write_bucketed(
     mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (optionally per-bucket-sorted)
-    ``PARQUET_CODEC`` parquet table registered in the session catalog.
+    parquet table registered in the session catalog, written with the
+    sinks' ``parquet_options``.
 
     ``path`` makes it an external table at that location; otherwise it
     lands under ``spark.sql.warehouse.dir``.
@@ -52,7 +53,7 @@ def write_bucketed(
     writer = (
         df.write.format("parquet")
         .mode(mode)
-        .option("compression", PARQUET_CODEC)
+        .options(**parquet_options(df.schema))
         .bucketBy(n_buckets, *bucket_cols)
     )
     if sort_cols:

@@ -621,6 +621,10 @@ def st06_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ST07_SPLITS = 4
 
+#: The lake's schema: the bootstrap write lands it and the returned
+#: read states it, so no call infers it.
+ST07_LAKE_SCHEMA = "user_id long, n_events long, sum_value double"
+
 ST07_ORACLE = """
 SELECT user_id, COUNT(*) AS n_events,
        CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
@@ -659,9 +663,7 @@ def st07_stream_foreachbatch_upsert(
     clone = _stream_session(spark)
     # bootstrap an empty lake with the final schema (upsert merges
     # into an existing table; the first batch merges into emptiness)
-    clone.createDataFrame(
-        [], "user_id long, n_events long, sum_value double"
-    ).write.parquet(lake)
+    clone.createDataFrame([], ST07_LAKE_SCHEMA).write.parquet(lake)
 
     stream = _read_fixture(
         spark,
@@ -696,7 +698,7 @@ def st07_stream_foreachbatch_upsert(
             "data micro-batches — the cross-batch upsert path was "
             "not exercised"
         )
-    return clone.read.parquet(lake)
+    return clone.read.schema(ST07_LAKE_SCHEMA).parquet(lake)
 
 
 # ---------------------------------------------------------------------------

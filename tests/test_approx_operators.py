@@ -2345,17 +2345,14 @@ def test_ranked_tokens_window_nw_matches_sizes_join(spark, sf_small):
     docs = table(spark, sf_small, "documents")
     tok = D._distinct_tokens(docs, "lang", "source")
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nw"))
-    new = {
-        (r["doc_id"], r["w"], r["df"], r["rn"], r["nw"])
-        for r in D._ranked_tokens(docs, "lang", "source", tok=tok).collect()
+    ranked = D._ranked_tokens(docs, "lang", "source", tok=tok)
+    cols = ["doc_id", "w", "df", "rn", "nw"]
+    via_window = {tuple(r) for r in ranked.select(cols).collect()}
+    via_join = {
+        tuple(r)
+        for r in ranked.drop("nw").join(sizes, "doc_id").select(cols).collect()
     }
-    old = {
-        (r["doc_id"], r["w"], r["df"], r["rn"], r["nw"])
-        for r in D._ranked_tokens(
-            docs, "lang", "source", tok=tok, sizes=sizes
-        ).collect()
-    }
-    assert new == old and len(new) > 0
+    assert via_window == via_join and len(via_window) > 0
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ import collections
 
 import pytest
 
-from conftest import count_jobs, package_calls, parquet_codecs
+from conftest import SINKS, count_jobs, package_calls, parquet_codecs
 
 from omop_dump_to_parquet_spark.plans import dump_table
 from omop_dump_to_parquet_spark.sources.parquet import table
@@ -314,51 +314,19 @@ def test_parquet_lands_only_through_dump_table():
     assert write_calls == ALLOWED_WRITE_CALLS
 
 
-def _land_dump(spark, src, out):
-    dump_table(spark, src, out)
-
-
-def _land_compaction(spark, src, out):
-    from omop_dump_to_parquet_spark.sinks import compact_parquet_dir
-
-    src.repartition(8).write.option("compression", "snappy").parquet(out)
-    assert compact_parquet_dir(spark, out, target_file_bytes=1 << 30) == 1
-
-
-def _land_upsert(spark, src, out):
-    from omop_dump_to_parquet_spark.plans import upsert_parquet
-
-    src.write.option("compression", "snappy").parquet(out)
-    upsert_parquet(spark, out, src.limit(5), ["l_orderkey", "l_linenumber"])
-
-
-def _land_resume(spark, src, out):
-    from omop_dump_to_parquet_spark.plans.resume import dump_table_resumable
-
-    assert dump_table_resumable(spark, src, out, "l_orderkey", 0, 1499, 3).ok
-
-
-def _land_bucketed(spark, src, out):
-    from omop_dump_to_parquet_spark.sinks import write_bucketed
-
-    try:
-        write_bucketed(src, "codec_b", ["l_orderkey"], 4, path=out)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS codec_b")
-
-
-@pytest.mark.parametrize(
-    "land",
-    [_land_dump, _land_compaction, _land_upsert, _land_resume, _land_bucketed],
-    ids=["dump_table", "compaction", "upsert", "resume", "bucketed"],
-)
+@pytest.mark.parametrize("land", list(SINKS.values()), ids=list(SINKS))
 def test_every_writer_lands_the_one_codec(spark, sf_small, tmp_path, land):
     """Every column chunk of every file a writer lands is
     ``PARQUET_CODEC`` (zstd), whatever codec its input was."""
     from omop_dump_to_parquet_spark.sinks import PARQUET_CODEC
 
     out = str(tmp_path / "lake")
-    land(spark, table(spark, sf_small, "lineitem"), out)
+    land(
+        spark,
+        table(spark, sf_small, "lineitem"),
+        out,
+        ["l_orderkey", "l_linenumber"],
+    )
     codecs = parquet_codecs(out)
     assert set(codecs) == {PARQUET_CODEC.upper()}, codecs
 

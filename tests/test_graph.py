@@ -198,12 +198,15 @@ def test_cc_lazy_default_matches_eager_checkpoint(spark, sf_small):
 
 
 def test_g02_struct_min_argmax_matches_window_argmax(spark):
-    """The LPA argmax (min of the (-cnt, community) struct) must pick
-    the identical (cnt DESC, community ASC) winner as a row_number
-    window — including on ties, which this synthetic vote table plants
-    deliberately (equal counts → smallest community)."""
+    """g02's LPA argmax (``_lpa_argmax``, min of the (-cnt, community)
+    struct) must pick the identical (cnt DESC, community ASC) winner
+    as a row_number window — including on ties, which this synthetic
+    vote table plants deliberately (equal counts → smallest
+    community)."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
+
+    from omop_dump_to_parquet_spark.operators.graph import _lpa_argmax
 
     votes = spark.createDataFrame(
         [
@@ -224,14 +227,7 @@ def test_g02_struct_min_argmax_matches_window_argmax(spark):
         .select(F.col("n2").alias("node"), "community")
         .collect()
     }
-    best = F.min(
-        F.struct((-F.col("cnt")).alias("neg"), F.col("community"))
-    ).alias("b")
     via_agg = {
-        (r["node"], r["community"])
-        for r in votes.groupBy(F.col("n2").alias("node"))
-        .agg(best)
-        .select("node", F.col("b.community").alias("community"))
-        .collect()
+        (r["node"], r["community"]) for r in _lpa_argmax(votes).collect()
     }
     assert via_window == via_agg == {(1, 10), (2, 5), (3, 9)}

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import SINKS, parquet_encodings
+
 from omop_dump_to_parquet_spark.plans import dump_table
 from omop_dump_to_parquet_spark.sources.jdbc import normalize, read_jdbc_table
 
@@ -33,7 +35,9 @@ def derby_url(spark, tmp_path_factory):
             ps.setNull(2, jvm.java.sql.Types.INTEGER)
         else:
             ps.setInt(2, i * 10)
-        ps.setString(3, f"clinical note {i} " + "lorem " * 20)
+        # ten templated notes: without the LOB rule, parquet-mr would
+        # keep a dictionary for this CLOB column
+        ps.setString(3, f"clinical note {i % 10} " + "lorem " * 20)
         ps.addBatch()
     ps.executeBatch()
     conn.commit()
@@ -197,3 +201,40 @@ def test_decimal_custom_schema_pinning(spark, derby_url, tmp_path):
 
     got = {r["M_ID"]: r["AMOUNT"] for r in back.collect()}
     assert got == {i: Decimal(v) for i, v in enumerate(vals)}
+
+
+@pytest.mark.parametrize("land", list(SINKS.values()), ids=list(SINKS))
+def test_lob_columns_land_without_dictionary(spark, derby_url, tmp_path, land):
+    """A CLOB column (``jdbcClientType`` metadata, which also survives a
+    Parquet round trip) lands with no dictionary page through every
+    sink; every other column lands with the encodings the same rows
+    get with the metadata stripped."""
+    from pyspark.sql import functions as F
+
+    src = normalize(
+        read_jdbc_table(spark, derby_url, "notes"), {"PROVIDER_ID": "long"}
+    )
+    bare = src.select([F.col(c).alias(c, metadata={}) for c in src.columns])
+    assert bare.schema["NOTE_TEXT"].metadata == {}
+    land(spark, src, str(tmp_path / "lob"), ["NOTE_ID"])
+    land(spark, bare, str(tmp_path / "bare"), ["NOTE_ID"])
+    lob = parquet_encodings(tmp_path / "lob")
+    plain = parquet_encodings(tmp_path / "bare")
+    assert not any(has_dict for _, has_dict in lob.pop("NOTE_TEXT"))
+    # the fixture's notes repeat, so without the rule they take a
+    # dictionary
+    assert any(has_dict for _, has_dict in plain.pop("NOTE_TEXT"))
+    assert lob == plain and len(lob) == 2
+
+
+def test_string_without_jdbc_metadata_keeps_its_dictionary(
+    spark, sf_small, tmp_path
+):
+    """A string column read from Parquet carries no ``jdbcClientType``,
+    so it still lands dictionary-encoded."""
+    from omop_dump_to_parquet_spark.sources.parquet import table
+
+    src = table(spark, sf_small, "lineitem").select("l_orderkey", "l_returnflag")
+    assert dump_table(spark, src, str(tmp_path / "lake")).ok
+    flags = parquet_encodings(tmp_path / "lake")["l_returnflag"]
+    assert flags and all(has_dict for _, has_dict in flags)

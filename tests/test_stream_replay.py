@@ -121,6 +121,16 @@ def test_warm_replay_runs_no_driver_job(spark, sf_small, qid):
     assert jobs == 0
 
 
+def test_st07_warm_call_runs_one_driver_job(spark, sf_small):
+    """st07's only driver-thread job is the bootstrap write of its
+    empty lake: the upserted lake is read back with its stated schema,
+    not inferred."""
+    st07 = QUERIES["st07_stream_foreachbatch_upsert"]
+    st07(spark, sf_small)
+    _, jobs = count_jobs(spark, lambda: st07(spark, sf_small), "warm_st07")
+    assert jobs == 1
+
+
 def test_replay_escapes_glob_characters_in_sf_dir(spark, sf_small, tmp_path):
     """The file-stream glob matches only ``sf_dir``'s own file, even
     when ``sf_dir`` holds glob characters that match a sibling."""
