@@ -1132,12 +1132,11 @@ def d10_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles this data produces — the same argument s04's hash-parity
     rests on, not a claim the rounding MODES match.
     """
-    from ..functions.vectors import to_double_array
+    from .similarity import embeddings
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
+    return semdedup_prune(
+        embeddings(spark, sf_dir), SEMDEDUP_PLANES, SEMDEDUP_TAU
     )
-    return semdedup_prune(emb, SEMDEDUP_PLANES, SEMDEDUP_TAU)
 
 
 def semdedup_prune(
@@ -1251,13 +1250,9 @@ def _d14_oracle() -> str:
 
 @query("d14_semdedup_kmeans", oracle=_d14_oracle())
 def d14_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import to_double_array
-    from .similarity import kmeans_exact
+    from .similarity import embeddings, kmeans_exact
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    assigned, _ = kmeans_exact(emb, D14_K, D14_ITERS)
+    assigned, _ = kmeans_exact(embeddings(spark, sf_dir), D14_K, D14_ITERS)
     return semdedup_prune_bucketed(
         assigned.withColumnRenamed("cluster", "bucket"), SEMDEDUP_TAU
     )

@@ -299,7 +299,7 @@ def d06_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # D08 — embedding near-dup CLUSTERS: s04's exact cosine-threshold pair
-# graph (cogrouped block-pair GEMM, similarity.py:208) collapsed to
+# graph (cogrouped block-pair GEMM, similarity.cosine_pair_gemm) collapsed to
 # connected components — the embedding-space twin of d06. Same scale
 # story: pair generation is blocked (O(n·B) shuffle), clustering is
 # O(log n) rounds of uniform-key shuffles on a shrinking edge set.

@@ -685,11 +685,10 @@ FROM pairs p JOIN v ON p.pair_id = v.vec_id
 
 @query("m06_contrastive_pairs", oracle=M06_ORACLE)
 def m06_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.vectors import cosine_d, to_double_array
+    from ..functions.vectors import cosine_d
+    from .similarity import embeddings
 
-    v = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
+    v = embeddings(spark, sf_dir)
     docs = table(spark, sf_dir, "documents").select("doc_id")
     anchors = docs.join(
         v.select(

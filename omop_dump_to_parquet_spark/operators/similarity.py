@@ -2,22 +2,40 @@
 (``array<float>``, dim 64). [EXT] operators per SURVEY.md §2.3 —
 absent from the reference (§2.2), mandated by the north-star brief:
 
-- S01 brute-force cosine top-k (the exactness baseline),
-- S02 random-hyperplane LSH bucketed ANN (the scale path),
-- S03 per-label vector statistics,
-- S04 embedding-cosine near-dup pairs (the embedding member of the
-  dedup family).
+- s01 brute-force cosine top-k (the exactness baseline);
+- s02 LSH, s05 IVF, s06 SQ8 and s09 PQ approximate top-k (s10 gates
+  s09's recall against s01);
+- s03 per-label vector statistics, s07 k-means clusters;
+- s04 embedding-cosine near-dup pairs (the embedding member of the
+  dedup family);
+- s08 radius search, s11 MaxSim late interaction, s12 BM25 + vector
+  reciprocal-rank fusion, s13 MMR diversified re-ranking.
 
-Scale story: brute force is O(|Q|·|C|) — correct only when one side is
-small (broadcast the queries). The LSH variant hashes both sides into
-sign-pattern buckets so each probe compares against |C|/2^planes
-candidates in expectation; recall is tunable by multi-probing /
-OR-ing several hash tables. All vector math is built-in column
-expressions over double arrays (functions/vectors.py) — JVM codegen,
-no Python.
+One ranking contract makes every ranked id hash-exact against DuckDB:
+each score is rounded to 6 dp, then ranked per ``query_id`` by
+(score desc, id), so FP noise below the quantum never reorders a
+result. One owner each holds its parts:
 
-Determinism: ranking orders by ROUND(cos, 6) with vec_id tie-break so
-both engines select identical top-k sets regardless of FP noise.
+- ``embeddings`` — the read, ``(vec_id, emb array<double>)``, also
+  used by d10, d14 and m06;
+- ``probes`` — the probe rule, ``vec_id < N_QUERIES`` as
+  ``(query_id, qemb, ...)``;
+- ``exact_topk`` — broadcasts the probes onto the corpus (a cross
+  join, or an equi-join on s02's bucket or s05's cell), drops each
+  probe from its own results, rounds the score, then cuts the top k
+  or applies s08's radius (s01, s02, s05, s08, s11, s12's vector
+  side, s13's shortlist);
+- ``top_k`` — the ``(score desc, id)`` row-number cut itself, also the
+  final window of s06 and s09 and s12's lexical and fused ranks.
+
+Most of the family is built-in column expressions over double arrays
+(functions/vectors.py): JVM codegen, no Python. Three ids run NumPy
+kernels instead, where a GEMM or a table lookup beats per-pair
+expressions: s04's block-pair GEMM (cogrouped ``applyInArrow``), and
+s06's int8 GEMM and s09's PQ encode + ADC scan (``map_batches``),
+each emitting a per-batch top-k under the contract's total order. The
+``kmeans_bucket_assign`` utilities that bucket d-ops' corpora run
+NumPy kernels too.
 """
 
 from __future__ import annotations
@@ -34,6 +52,71 @@ from ..sources.parquet import table
 
 N_QUERIES = 5  # vec_id < 5 are the probe vectors
 TOP_K = 5
+
+
+def embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``embeddings`` table as ``(vec_id, emb)``, with ``emb``
+    cast element-wise to ``array<double>``."""
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array("embedding").alias("emb")
+    )
+
+
+def probes(vecs: DataFrame, *extra: F.Column) -> DataFrame:
+    """The probe vectors of ``vecs`` (``vec_id < N_QUERIES``) as
+    ``(query_id, qemb, *extra)``."""
+    return vecs.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"), *extra
+    )
+
+
+def top_k(
+    df: DataFrame, score: str, key: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """Append ``rank``, each row's number within its ``query_id`` under
+    (``score`` desc, ``key``), and keep the rows ranked ``k`` or
+    better."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col(key))
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def exact_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    name: str,
+    k: int | None = None,
+    *,
+    score: F.Column | None = None,
+    radius: float | None = None,
+    on: F.Column | None = None,
+    key: str = "neighbor_id",
+    rank: str = "rank",
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Score every ``queries`` probe against the ``corpus`` rows it
+    meets and rank them: ``(query_id, key, name, *keep, rank)``.
+
+    The probes are broadcast: crossed with the corpus, or joined on
+    ``on``. A probe never meets its own row. ``score`` (cosine of
+    ``qemb`` and ``emb`` by default) is rounded to 6 dp as ``name``;
+    then ``top_k`` keeps each probe's best ``k``, or, given a
+    ``radius``, every row scoring at least that, unranked."""
+    pairs = (
+        corpus.crossJoin(F.broadcast(queries))
+        if on is None
+        else corpus.join(F.broadcast(queries), on)
+    )
+    if score is None:
+        score = cosine_d(F.col("qemb"), F.col("emb"))
+    scored = pairs.filter(F.col("vec_id") != F.col("query_id")).select(
+        "query_id",
+        F.col("vec_id").alias(key),
+        F.round(score, 6).alias(name),
+        *keep,
+    )
+    if radius is not None:
+        return scored.filter(F.col(name) >= radius)
+    return top_k(scored, name, key, k, rank)
 
 # ---------------------------------------------------------------------------
 # S01 — brute-force cosine top-k.
@@ -62,29 +145,8 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM (
 
 @query("s01_knn_bruteforce", oracle=S01_ORACLE)
 def s01_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_d(F.col("qemb"), F.col("emb")), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    emb = embeddings(spark, sf_dir)
+    return exact_topk(emb, probes(emb), "cos_sim", TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -164,34 +226,13 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM (
 
 @query("s02_ann_lsh", oracle=S02_ORACLE)
 def s02_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
+    bucketed = embeddings(spark, sf_dir).withColumn(
+        "bucket", bucket_id(F.col("emb"))
     )
-    bucketed = emb.withColumn("bucket", bucket_id(F.col("emb")))
-    queries = bucketed.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("qemb"),
-        F.col("bucket").alias("qbucket"),
-    )
+    queries = probes(bucketed, F.col("bucket").alias("qbucket"))
     # Probe only the query's own bucket: |C|/2^planes candidates each.
-    scored = (
-        bucketed.join(
-            F.broadcast(queries), F.col("bucket") == F.col("qbucket")
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_d(F.col("qemb"), F.col("emb")), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return exact_topk(
+        bucketed, queries, "cos_sim", TOP_K, on=F.col("bucket") == F.col("qbucket")
     )
 
 
@@ -282,10 +323,9 @@ def s04_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the scale-B-with-corpus rule, now a parameter
     (``cosine_pair_gemm``) instead of prose.
     """
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
+    return cosine_pair_gemm(
+        embeddings(spark, sf_dir), COS_DUP_THRESHOLD, GEMM_BLOCKS
     )
-    return cosine_pair_gemm(emb, COS_DUP_THRESHOLD, GEMM_BLOCKS)
 
 
 def cosine_pairs(A, B, a_ids, b_ids, threshold: float, same_set: bool):
@@ -477,9 +517,7 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM (
 
 @query("s05_ann_ivf", oracle=S05_ORACLE)
 def s05_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
+    emb = embeddings(spark, sf_dir)
     cents = [
         (r["vec_id"], r["emb"])
         for r in emb.filter(F.col("vec_id") < IVF_NLIST).collect()
@@ -505,33 +543,11 @@ def s05_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     ranked_cells = F.sort_array(F.array(*scored))
     assigned = emb.withColumn("cell", ranked_cells[0]["cell"])
-    queries = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("qemb"),
-            F.explode(
-                F.slice(ranked_cells, 1, IVF_NPROBE)
-            ).alias("probe"),
-        )
-        .select("query_id", "qemb", F.col("probe.cell").alias("qcell"))
-    )
-    scored_pairs = (
-        assigned.join(F.broadcast(queries), F.col("cell") == F.col("qcell"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_d(F.col("qemb"), F.col("emb")), 6).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored_pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    queries = probes(
+        assigned, F.explode(F.slice(ranked_cells, 1, IVF_NPROBE)).alias("probe")
+    ).select("query_id", "qemb", F.col("probe.cell").alias("qcell"))
+    return exact_topk(
+        assigned, queries, "cos_sim", TOP_K, on=F.col("cell") == F.col("qcell")
     )
 
 
@@ -594,33 +610,29 @@ SELECT query_id, neighbor_id, cos_sim_q, rank FROM (
 def s06_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 top-k ANN: the N_QUERIES probe vectors are quantized on the
     driver (bounded collect — N_QUERIES rows, same class as S05's
-    NLIST centroids) and broadcast; the corpus NEVER leaves the
-    executors. Each Arrow batch quantizes its slice, runs the int8
-    GEMM probe × batch, and emits only a per-batch local top-k
-    (rounded score desc, id asc — the same total order the final
+    NLIST centroids) and ride in the kernel's closure; the corpus
+    NEVER leaves the executors. Each Arrow batch quantizes its slice,
+    runs the int8 GEMM probe × batch, and emits only a per-batch local
+    top-k (rounded score desc, id asc — the same total order the final
     global window ranks by, so the local prune is lossless). The
     reduce is top_k × n_batches candidate rows, not the corpus.
     """
     import numpy as np
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    probe_rows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    p_ids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
-    P = np.array([r["emb"] for r in probe_rows], dtype=np.float64)
+    emb = embeddings(spark, sf_dir)
+    probe_rows = probes(emb).collect()
+    ids_p = np.array([r["query_id"] for r in probe_rows], dtype=np.int64)
+    P = np.array([r["qemb"] for r in probe_rows], dtype=np.float64)
     p_scales = np.abs(P).max(axis=1)
     p_scales[p_scales == 0] = 1.0
     Pq = np.rint(P / p_scales[:, None] * 127).astype(np.int8)
-    pn = np.sqrt((Pq.astype(np.float64) ** 2).sum(axis=1))
-    pn[pn == 0] = 1.0
-    bc = spark.sparkContext.broadcast((p_ids, Pq.astype(np.int32), pn))
-    top_k = TOP_K
+    Pi = Pq.astype(np.int32)
+    pn_p = np.sqrt((Pq.astype(np.float64) ** 2).sum(axis=1))
+    pn_p[pn_p == 0] = 1.0
 
     def kernel(b_ids, B):
         import numpy as _np
 
-        ids_p, Pi, pn_p = bc.value
         out = ([], [], [])
         scales = _np.abs(B).max(axis=1)
         scales[scales == 0] = 1.0
@@ -634,7 +646,7 @@ def s06_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
             keep = b_ids != ids_p[i]  # exclude self
             cand = _np.nonzero(keep)[0]
             s = S[i][cand]
-            order = _np.lexsort((b_ids[cand], -s))[:top_k]
+            order = _np.lexsort((b_ids[cand], -s))[:TOP_K]
             out[0].extend([ids_p[i]] * len(order))
             out[1].extend(b_ids[cand[order]])
             out[2].extend(s[order])
@@ -643,14 +655,7 @@ def s06_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = map_batches(
         emb, kernel, "query_id long, neighbor_id long, cos_sim_q double"
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "cos_sim_q", "rank")
-    )
+    return top_k(cand, "cos_sim_q", "neighbor_id", TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -894,10 +899,9 @@ def kmeans_exact(
 
 @query("s07_kmeans_clusters", oracle=S07_ORACLE)
 def s07_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
+    final, cents = kmeans_exact(
+        embeddings(spark, sf_dir), KMEANS_K, LLOYD_ITERS, S07_DIM
     )
-    final, cents = kmeans_exact(emb, KMEANS_K, LLOYD_ITERS, S07_DIM)
     norms = spark.createDataFrame(
         [(c, list(v)) for c, v in enumerate(cents)],
         "cluster long, cent array<double>",
@@ -1127,22 +1131,8 @@ WHERE v.vec_id <> q.query_id
 
 @query("s08_range_search", oracle=S08_ORACLE)
 def s08_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    return (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_d(F.col("qemb"), F.col("emb")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= RANGE_RADIUS)
-    )
+    emb = embeddings(spark, sf_dir)
+    return exact_topk(emb, probes(emb), "cos_sim", radius=RANGE_RADIUS)
 
 
 # ---------------------------------------------------------------------------
@@ -1412,9 +1402,7 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pinned in tests + the s10 gate)."""
     import numpy as np
 
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    ).localCheckpoint(eager=False)
+    emb = embeddings(spark, sf_dir).localCheckpoint(eager=False)
     # Lazy within-run materialization (the d04/d11 pattern): the
     # collect below materializes it; the kernel scan and the two
     # re-rank sides then read checkpointed rows instead of re-running
@@ -1450,24 +1438,22 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         np.array([r["emb"] for r in seed_rows], dtype=np.float64)
     ).reshape(-1, PQ_M, sub)
     C = _pq_train_np(Utr)  # (M, K, sub) int64 lattice codebook
-    p_ids = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
+    ids_p = np.array([r["vec_id"] for r in probe_rows], dtype=np.int64)
     Pu = _pq_unit_lattice_np(
         np.array([r["emb"] for r in probe_rows], dtype=np.float64)
     ).reshape(len(probe_rows), PQ_M, sub)
     # ADC tables: exact int64 squared lattice distance probe→codeword
-    tables = ((Pu[:, :, None, :] * lattice - C[None]) ** 2).sum(-1)
-    bc = spark.sparkContext.broadcast((p_ids, tables, C))
+    tabs = ((Pu[:, :, None, :] * lattice - C[None]) ** 2).sum(-1)
     refine = PQ_REFINE
 
     def kernel(b_ids, X):
         import numpy as _np
 
-        ids_p, tabs, cbk = bc.value
-        m, k, s = cbk.shape
+        m, k, s = C.shape
         out = ([], [], [])
         U = _pq_unit_lattice_np(X).reshape(len(X), m, s)
         # encode: nearest codeword per subspace, exact int64
-        d = ((U[:, :, None, :] * lattice - cbk[None]) ** 2).sum(-1)
+        d = ((U[:, :, None, :] * lattice - C[None]) ** 2).sum(-1)
         codes = d.argmin(-1)  # (n, M); first min ⇒ smallest k
         mi = _np.arange(m)
         for i in range(len(ids_p)):
@@ -1494,15 +1480,12 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact re-rank of the bounded shortlist: broadcast the Q×R rows
     # against the corpus to fetch true vectors (one map-side join),
     # then score with exact cosine under s01's total order.
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
     rescored = (
         emb.select(
             F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("nemb")
         )
         .join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(probes), "query_id")
+        .join(F.broadcast(probes(emb)), "query_id")
         .select(
             "query_id",
             "neighbor_id",
@@ -1512,14 +1495,7 @@ def s09_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "approx_dist", "cos_sim", "rank")
-    )
+    return top_k(rescored, "cos_sim", "neighbor_id", TOP_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1639,12 +1615,7 @@ SELECT query_id, neighbor_id, maxsim, rank FROM (
 
 @query("s11_maxsim_late_interaction", oracle=S11_ORACLE)
 def s11_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
+    emb = embeddings(spark, sf_dir)
 
     def sub(col, i):
         return F.slice(col, i * _SUB + 1, _SUB)
@@ -1663,23 +1634,7 @@ def s11_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = terms[0]
     for t in terms[1:]:
         score = score + t
-    scored = (
-        emb.crossJoin(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(score, 6).alias("maxsim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("maxsim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "maxsim", "rank")
-    )
+    return exact_topk(emb, probes(emb), "maxsim", TOP_K, score=score)
 
 
 # ---------------------------------------------------------------------------
@@ -1838,37 +1793,16 @@ def s12_rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c"),
         )
     )
-    wl = W.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id")
+    scores = contrib.groupBy("query_id", "doc_id").agg(
+        F.round(dsum("c", 38, 18), 6).alias("score")
     )
-    lex = (
-        contrib.groupBy("query_id", "doc_id")
-        .agg(F.round(dsum("c", 38, 18), 6).alias("score"))
-        .withColumn("lex_rank", F.row_number().over(wl))
-        .filter(F.col("lex_rank") <= S12_K_EACH)
-        .select("query_id", "doc_id", "lex_rank")
+    lex = top_k(scores, "score", "doc_id", S12_K_EACH, "lex_rank").select(
+        "query_id", "doc_id", "lex_rank"
     )
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    probes = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    wv = W.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("doc_id")
-    )
-    vec = (
-        emb.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("doc_id"),
-            F.round(cosine_d(F.col("qemb"), F.col("emb")), 6).alias("cos"),
-        )
-        .withColumn("vec_rank", F.row_number().over(wv))
-        .filter(F.col("vec_rank") <= S12_K_EACH)
-        .select("query_id", "doc_id", "vec_rank")
-    )
+    emb = embeddings(spark, sf_dir)
+    vec = exact_topk(
+        emb, probes(emb), "cos", S12_K_EACH, key="doc_id", rank="vec_rank"
+    ).select("query_id", "doc_id", "vec_rank")
     fused = (
         lex.join(vec, ["query_id", "doc_id"], "full_outer")
         .select(
@@ -1887,11 +1821,8 @@ def s12_rrf_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rrf"),
         )
     )
-    wf = W.partitionBy("query_id").orderBy(F.col("rrf").desc(), F.col("doc_id"))
-    return (
-        fused.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= S12_TOP)
-        .select("query_id", "doc_id", "lex_rank", "vec_rank", "rrf")
+    return top_k(fused, "rrf", "doc_id", S12_TOP, "rn").select(
+        "query_id", "doc_id", "lex_rank", "vec_rank", "rrf"
     )
 
 
@@ -2007,28 +1938,9 @@ def s13_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist: K greedy argmax steps unrolled as JVM higher-order
     array expressions (transform/array_sort/filter), zero Python;
     oracle unrolls the identical greedy as MATERIALIZED CTEs."""
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    qs = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb")
-    )
-    scored = (
-        emb.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(cosine_d(F.col("qemb"), F.col("emb")), 6).alias("rel"),
-            "emb",
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("neighbor_id")
-    )
+    emb = embeddings(spark, sf_dir)
     cands = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= MMR_M)
+        exact_topk(emb, probes(emb), "rel", MMR_M, rank="rk", keep=("emb",))
         .groupBy("query_id")
         .agg(
             F.collect_list(

@@ -375,10 +375,13 @@ def test_stratified_sample_rates_and_determinism(spark, sf_small):
 
 
 def test_gemm_operators_never_collect_the_corpus(spark, sf_small, monkeypatch):
-    """Scale invariant for the GEMM family: plan construction must not
-    pull the corpus to the driver. S04 collects nothing; S06 may only
-    collect the bounded probe set (N_QUERIES rows, same class as
-    S05's NLIST centroids)."""
+    """Scale invariant for the kernel family: plan construction must
+    not pull the corpus to the driver. S04 collects nothing; S06 may
+    only collect the bounded probe set (N_QUERIES rows, same class as
+    S05's NLIST centroids), S09 the probes plus its PQ_TRAIN_N
+    codebook seeds. The driver-built arrays ride in the kernels'
+    closures: no plan build creates a Spark broadcast, whose handle
+    would outlive the query."""
     from omop_dump_to_parquet_spark.operators import similarity as S
 
     # patch the concrete runtime class (Spark 4: classic.dataframe
@@ -392,11 +395,20 @@ def test_gemm_operators_never_collect_the_corpus(spark, sf_small, monkeypatch):
         collected.append(len(rows))
         return rows
 
+    def no_broadcast(self, value):
+        raise AssertionError("plan build created a Spark broadcast")
+
     monkeypatch.setattr(df_cls, "collect", spy)
+    monkeypatch.setattr(type(spark.sparkContext), "broadcast", no_broadcast)
     S.s04_dedup_embedding(spark, sf_small)
     assert collected == [], "s04 plan build must not collect"
     S.s06_ann_int8(spark, sf_small)
     assert collected and all(n <= S.N_QUERIES for n in collected), collected
+    collected.clear()
+    S.s09_ann_pq(spark, sf_small)
+    assert collected and all(
+        n <= S.N_QUERIES + S.PQ_TRAIN_N for n in collected
+    ), collected
 
 
 def test_blocked_gemm_matches_oracle_pairs(spark, sf_small, duck):
@@ -520,16 +532,9 @@ def test_int8_ann_matches_numpy_reference_exactly(spark, sf_small):
     test above cannot see."""
     import numpy as np
 
-    from omop_dump_to_parquet_spark.functions.vectors import to_double_array
     from omop_dump_to_parquet_spark.operators import similarity as S
-    from omop_dump_to_parquet_spark.sources.parquet import table
-    from pyspark.sql import functions as F
 
-    emb = (
-        table(spark, sf_small, "embeddings")
-        .select("vec_id", to_double_array("embedding").alias("emb"))
-        .collect()
-    )
+    emb = S.embeddings(spark, sf_small).collect()
     ids = np.array([r["vec_id"] for r in emb], dtype=np.int64)
     M = np.array([r["emb"] for r in emb], dtype=np.float64)
 
@@ -2170,15 +2175,12 @@ def test_d14_buckets_match_s07_contract_and_prune_is_within_bucket(
     oracle derives them independently via unrolled CTEs), and every
     (keeper, removed) pair must be a same-bucket pair with
     keeper < removed — the SemDeDup within-cluster contract."""
-    from omop_dump_to_parquet_spark.functions.vectors import to_double_array
-
     out = QUERIES["d14_semdedup_kmeans"](spark, sf_small).collect()
     assert out, "fixture should produce at least one pruned vector"
 
-    emb = table(spark, sf_small, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
+    assigned, _ = S.kmeans_exact(
+        S.embeddings(spark, sf_small), D.D14_K, D.D14_ITERS
     )
-    assigned, _ = S.kmeans_exact(emb, D.D14_K, D.D14_ITERS)
     bucket_of = {
         r["vec_id"]: r["cluster"]
         for r in assigned.select("vec_id", "cluster").collect()
@@ -2186,37 +2188,6 @@ def test_d14_buckets_match_s07_contract_and_prune_is_within_bucket(
     for r in out:
         assert r["keeper_id"] < r["removed_id"]
         assert bucket_of[r["keeper_id"]] == bucket_of[r["removed_id"]]
-
-
-def test_s09_merged_collect_rows_match_filtered_collects(spark, sf_small):
-    """s09's single bounded head collect must recover exactly the two
-    row sets separate probe and codebook-seed filters would collect."""
-    from omop_dump_to_parquet_spark.functions.vectors import to_double_array
-
-    emb = table(spark, sf_small, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("emb")
-    )
-    head = emb.filter(
-        F.col("vec_id") < S.N_QUERIES + S.PQ_TRAIN_N
-    ).collect()
-    seed_new = sorted(
-        (r["vec_id"] for r in head if r["vec_id"] >= S.N_QUERIES)
-    )
-    probe_new = sorted(
-        (r["vec_id"] for r in head if r["vec_id"] < S.N_QUERIES)
-    )
-    seed_old = sorted(
-        r["vec_id"]
-        for r in emb.filter(
-            (F.col("vec_id") >= S.N_QUERIES)
-            & (F.col("vec_id") < S.N_QUERIES + S.PQ_TRAIN_N)
-        ).collect()
-    )
-    probe_old = sorted(
-        r["vec_id"]
-        for r in emb.filter(F.col("vec_id") < S.N_QUERIES).collect()
-    )
-    assert seed_new == seed_old and probe_new == probe_old
 
 
 # ---------------------------------------------------------------------------

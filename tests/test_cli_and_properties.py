@@ -554,3 +554,24 @@ def test_no_round_named_tests_or_scripts():
         if named_by_round.search(f.name)
     )
     assert not offenders, offenders
+
+
+def test_catalog_md_matches_gen_catalog():
+    """CATALOG.md is generated: ``python gen_catalog.py`` run from the
+    repo root reproduces it byte for byte. A moved operator or a new
+    id fails here until the file is regenerated."""
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).parent.parent
+    out = subprocess.run(
+        [sys.executable, "gen_catalog.py"],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert out == (root / "CATALOG.md").read_text(), (
+        "CATALOG.md is stale: run `python gen_catalog.py > CATALOG.md`"
+    )

@@ -20,10 +20,12 @@ QUERIES, _ = load_catalog()
 
 
 def formatted_plan(spark, name, sf_dir) -> str:
-    df = QUERIES[name](spark, sf_dir)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
+    return explained(QUERIES[name](spark, sf_dir))
+
+
+def explained(df) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return df._jdf.queryExecution().explainString(mode)
 
 
@@ -67,9 +69,40 @@ def test_aggregation_is_partial(spark, sf_small):
     assert "Exchange" in plan
 
 
-def test_knn_broadcasts_queries(spark, sf_small):
-    plan = formatted_plan(spark, "s01_knn_bruteforce", sf_small)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+@pytest.mark.parametrize(
+    "name",
+    [
+        "s01_knn_bruteforce",
+        "s02_ann_lsh",
+        "s05_ann_ivf",
+        "s08_range_search",
+        "s11_maxsim_late_interaction",
+        "s12_rrf_hybrid_search",
+        "s13_mmr_diversified",
+    ],
+)
+def test_probe_scoring_broadcasts_probes(spark, sf_small, name, monkeypatch):
+    """Every id that scores probes through ``similarity.exact_topk``
+    broadcasts the probe set onto the corpus (never a cartesian) and
+    scores it JVM-side. The helper's own result is checked as well as
+    the id's plan: s13 ranks its shortlist behind a checkpoint."""
+    from omop_dump_to_parquet_spark.operators import similarity as S
+
+    ranked = []
+    exact_topk = S.exact_topk
+
+    def spy(*args, **kwargs):
+        ranked.append(exact_topk(*args, **kwargs))
+        return ranked[-1]
+
+    monkeypatch.setattr(S, "exact_topk", spy)
+    plan = formatted_plan(spark, name, sf_small)
+    assert len(ranked) == 1, name
+    scoring = explained(ranked[0])
+    assert "BroadcastNestedLoopJoin" in scoring or "BroadcastHashJoin" in scoring
+    for p in (plan, scoring):
+        assert "CartesianProduct" not in p
+        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
 @pytest.mark.parametrize(
@@ -340,12 +373,6 @@ def test_domain_mixture_scans_corpus_once(spark, sf_small):
     # formatted mode prints each node once in the tree and once in the
     # detail list — count distinct numbered scan nodes.
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-
-
-def test_range_search_broadcasts_probes(spark, sf_small):
-    plan = formatted_plan(spark, "s08_range_search", sf_small)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_semdedup_joins_on_bucket(spark, sf_small):
