@@ -24,8 +24,15 @@ from dataclasses import dataclass
 from pyspark.sql import SparkSession
 
 
+def _jpath(spark: SparkSession, path: str):
+    """A Hadoop ``Path``, its class looked up by its fully qualified
+    name: a ``jvm.org.apache…`` walk sends one py4j lookup per package
+    segment."""
+    return getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+
+
 def _fs_path(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = _jpath(spark, path)
     fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
     return fs, jpath
 
@@ -48,7 +55,7 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
     best-effort (TOCTOU window remains), but it converts the common
     failure into a loud one."""
     fs, jsrc = _fs_path(spark, src)
-    jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
+    jdst = _jpath(spark, dst)
     if fs.exists(jdst):
         raise OSError(f"rename refused: destination exists: {dst}")
     if not fs.rename(jsrc, jdst):
@@ -124,8 +131,8 @@ def read_text(spark: SparkSession, path: str) -> str:
     jvm = spark._jvm
     ins = fs.open(jpath)
     try:
-        out = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(ins, out, 8192, False)
+        out = getattr(jvm, "java.io.ByteArrayOutputStream")()
+        getattr(jvm, "org.apache.hadoop.io.IOUtils").copyBytes(ins, out, 8192, False)
         return bytes(out.toByteArray()).decode("utf-8")
     finally:
         ins.close()

@@ -258,8 +258,12 @@ FROM v GROUP BY label
 
 @query("s03_vector_stats", oracle=S03_ORACLE)
 def s03_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings").select(
-        "label", l2norm_d(to_double_array("embedding")).alias("nrm")
+    # The cast gets its own select, as in ``embeddings()``: inlined
+    # into the norm it would run once per argument of the dot product.
+    emb = (
+        table(spark, sf_dir, "embeddings")
+        .select("label", to_double_array("embedding").alias("emb"))
+        .select("label", l2norm_d(F.col("emb")).alias("nrm"))
     )
     return emb.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vectors"),

@@ -111,7 +111,7 @@ def codegen_compilations(spark: SparkSession) -> int:
     ``CodegenMetrics`` compilation-time histogram count). The difference
     across a call is the number of classes it compiled, i.e. its misses
     in the generated-code cache."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    metrics = getattr(spark._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 

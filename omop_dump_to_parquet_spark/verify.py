@@ -119,18 +119,19 @@ def verify_parquet(
     """
     jvm = spark._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    parquet = jvm.org.apache.parquet
-    read_footer = parquet.hadoop.ParquetFileReader.readFooter
-    input_file = parquet.hadoop.util.HadoopInputFile.fromStatus
-    no_filter = parquet.format.converter.ParquetMetadataConverter.NO_FILTER
-    footer = parquet.hadoop.Footer
-    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    read_schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter
-    converter = spark_parquet.ParquetToSparkSchemaConverter(
+    read_footer = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader").readFooter
+    input_file = getattr(jvm, "org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus
+    no_filter = getattr(
+        jvm, "org.apache.parquet.format.converter.ParquetMetadataConverter"
+    ).NO_FILTER
+    footer = getattr(jvm, "org.apache.parquet.hadoop.Footer")
+    spark_parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    read_schema = getattr(jvm, spark_parquet + "ParquetFileFormat").readSchemaFromFooter
+    converter = getattr(jvm, spark_parquet + "ParquetToSparkSchemaConverter")(
         spark._jsparkSession.sessionState().conf()
     )
 
-    root = jvm.org.apache.hadoop.fs.Path(path)
+    root = getattr(jvm, "org.apache.hadoop.fs.Path")(path)
     per_file: dict[str, int] = {}
     schemas: set[str] = set()
     total_bytes = 0

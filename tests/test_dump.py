@@ -111,6 +111,34 @@ def test_verify_handles_uri_escapable_paths_and_zero_row_shards(
     assert 0 in rep2.per_file_rows.values()
 
 
+def test_verify_looks_classes_up_by_full_name(spark, sf_small, tmp_path, monkeypatch):
+    """``verify_parquet`` names each JVM class by its fully qualified
+    name: py4j answers a ``jvm.org.apache…`` walk with one lookup per
+    package segment, each a failed class search over every jar."""
+    from omop_dump_to_parquet_spark.verify import verify_parquet
+
+    out = str(tmp_path / "orders")
+    df = table(spark, sf_small, "orders")
+    df.repartition(3).write.parquet(out)
+    rows, schema = df.count(), df.schema
+    client = spark.sparkContext._gateway._gateway_client
+    looked_up = []
+    send = client.send_command
+
+    def spy(command, *args, **kwargs):
+        parts = command.split("\n")
+        if parts[:2] == ["r", "u"]:
+            looked_up.append(parts[2])
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", spy)
+    rep = verify_parquet(spark, out, expected_count=rows, expected_schema=schema)
+    monkeypatch.undo()
+    assert rep.ok and rep.n_files == 3
+    packages = [n for n in looked_up if not n.rsplit(".", 1)[-1][:1].isupper()]
+    assert looked_up and not packages, looked_up
+
+
 def test_verify_footer_counts_match_groupby_scan(spark, sf_small, tmp_path):
     """Footer row counts agree file by file with a
     ``groupBy(input_file_name())`` count over the data, under a path

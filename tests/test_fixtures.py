@@ -257,6 +257,137 @@ def test_memo_nanos_as_long_toggle_reinfers(spark, sf_small, tmp_path):
     assert jobs > 0
 
 
+# -- relation memo: a hit reuses the relation the first read resolved,
+#    only while the listing it scans is the listing on disk.
+
+
+@pytest.fixture
+def reads(monkeypatch):
+    """The paths of every ``DataFrameReader.parquet`` call, i.e. of
+    every read the memo did not serve."""
+    from pyspark.sql import DataFrameReader
+
+    calls = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        calls.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    return calls
+
+
+def _parts(tmp_path, *columns):
+    """A table directory of one pyarrow file per column list:
+    ``part-<i>.parquet`` holding ``a``, with no ``_SUCCESS`` or
+    ``.crc`` files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    for i, values in enumerate(columns):
+        pq.write_table(pa.table({"a": values}), d / f"part-{i}.parquet")
+    return d
+
+
+def test_memo_hit_builds_no_reader_on_a_single_file_table(spark, sf_small, monkeypatch):
+    """The driver's fixture tables are single files; a repeat read of
+    one is served from the memo without a reader or a job."""
+    from pyspark.sql import DataFrameReader
+
+    def refuse(self, *paths, **options):
+        raise AssertionError(f"memo miss: {paths}")
+
+    first = table(spark, sf_small, "lineitem")
+    monkeypatch.setattr(DataFrameReader, "parquet", refuse)
+    again, jobs = count_jobs(spark, lambda: table(spark, sf_small, "lineitem"), "memo-hit")
+    assert jobs == 0
+    assert again.schema == first.schema
+
+
+def test_memo_hits_self_join(spark, sf_small, reads):
+    """Each hit gets fresh attribute ids, so two hits join on
+    ``a[c] == b[c]`` like two independent reads."""
+    from pyspark.sql import functions as F
+
+    want = (
+        table(spark, sf_small, "lineitem")
+        .groupBy("l_orderkey")
+        .count()
+        .agg(F.sum(F.col("count") * F.col("count")))
+        .first()[0]
+    )
+    reads.clear()
+    a = table(spark, sf_small, "lineitem")
+    b = table(spark, sf_small, "lineitem")
+    assert reads == []
+    assert a.join(b, a["l_orderkey"] == b["l_orderkey"]).count() == want
+
+
+def test_memo_hidden_files_keep_the_hit(spark, tmp_path, reads):
+    """``_SUCCESS``, ``.crc`` and other hidden names are not data files
+    by Spark's listing rule, so adding them keeps the hit."""
+    d = _parts(tmp_path, [1, 2], [3])
+    assert table(spark, str(tmp_path), "t").count() == 3
+    (d / "_SUCCESS").write_bytes(b"")
+    (d / "._SUCCESS.crc").write_bytes(b"crc")
+    (d / "_temporary").mkdir()
+    (d / "_temporary" / "part-9.parquet").write_bytes(b"not parquet")
+    reads.clear()
+    assert sorted(r.a for r in table(spark, str(tmp_path), "t").collect()) == [1, 2, 3]
+    assert reads == []
+
+
+@pytest.mark.parametrize(
+    "change, want",
+    [("add", [1, 2, 3, 4, 5]), ("remove", [1, 2]), ("rewrite", [1, 2, 7, 8, 9])],
+)
+def test_memo_data_file_change_reinfers(spark, tmp_path, reads, change, want):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = _parts(tmp_path, [1, 2], [3])
+    assert table(spark, str(tmp_path), "t").count() == 3
+    if change == "add":
+        pq.write_table(pa.table({"a": [4, 5]}), d / "part-2.parquet")
+    elif change == "remove":
+        (d / "part-1.parquet").unlink()
+    else:
+        pq.write_table(pa.table({"a": [7, 8, 9]}), d / "part-1.parquet")
+    reads.clear()
+    got, jobs = count_jobs(spark, lambda: table(spark, str(tmp_path), "t"), "memo-change")
+    assert len(reads) == 1 and jobs > 0
+    assert sorted(r.a for r in got.collect()) == want
+
+
+def test_memo_partitioned_lake_is_never_stale(spark, tmp_path, reads):
+    """A hive-partitioned directory through ``read_lake``: an unchanged
+    one hits, and a new or dropped partition re-infers, with the
+    partition column kept."""
+    import shutil
+
+    from omop_dump_to_parquet_spark.sources.parquet import read_lake
+
+    path = str(tmp_path / "p")
+    spark.range(6).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(path)
+
+    def rows():
+        return sorted((r.id, r.k) for r in read_lake(spark, path).collect())
+
+    assert rows() == [(i, i % 2) for i in range(6)]
+    reads.clear()
+    assert rows() == [(i, i % 2) for i in range(6)]
+    assert reads == []
+    spark.range(6, 8).selectExpr("id", "2 AS k").write.mode("append").partitionBy("k").parquet(path)
+    assert rows() == [(i, i % 2) for i in range(6)] + [(6, 2), (7, 2)]
+    assert len(reads) == 1
+    shutil.rmtree(tmp_path / "p" / "k=0")
+    assert rows() == [(1, 1), (3, 1), (5, 1), (6, 2), (7, 2)]
+    assert len(reads) == 2
+
+
 @pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_MEDIUM])
 def test_driver_fixture_texts_contain_no_pipe_sentinel(sf_dir):
     """The t22/t23 contracts assume documents.text never contains '|'
